@@ -1,13 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PlanExec
 
 /** Benchmark harness (driver contract: ONE JSON line on stdout).
   *
-  * Protocol, reworked in r11 for contamination-resistance (BENCH_r10
-  * recorded 124 s on a contended box for a binary that re-measures at
-  * 63 s — per-query medians of 3 CONSECUTIVE samples inherit any
-  * transient load spike in full):
+  * Every query runs under the session defaults [[graft.engine.Graft.session]]
+  * builds, the same regime a user's statement gets. Protocol, reworked in
+  * r11 for contamination-resistance (BENCH_r10 recorded 124 s on a
+  * contended box for a binary that re-measures at 63 s — per-query
+  * medians of 3 CONSECUTIVE samples inherit any transient load spike in
+  * full):
   *
   *   - INTERLEAVED passes: pass 0 warms every query once (plan + JIT +
   *     shuffle paths), then 3 full-suite passes each time every query
@@ -16,25 +19,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     entire sample set. Self-identification: the JSON carries
   *     /proc load averages and this process's CPU time, so a run taken
   *     under external load is visible as load >> used cores.
-  *   - ADAPTIVE tiered path ([[graft.engine.Adaptive]]): pass 1 runs
-  *     size-gated queries under their tier's tuned confs (small →
-  *     no-AQE fast confs; medium → AQE with input-sized partitions),
-  *     pass 2 under the AQE default, pass 3 under whichever measured
-  *     faster (tuned must win by ≥5% — a tie margin so one contended
-  *     sample can't misroute the pass) — the engine analog of the
-  *     reference's history-based session tuning. The median over the
-  *     three passes then reflects the winning config (two of three
-  *     samples) without ever trusting a prediction.
   *   - Prepared-statement reuse: the query is parsed, analyzed, and
-  *     OPTIMIZED once per conf regime (the engine analog of
-  *     PREPARE/EXECUTE — the reference serves repeated query shapes
-  *     the same way); each pass then re-runs physical planning,
-  *     codegen, fresh shuffles/broadcasts, and every execution stage
-  *     from that optimized plan (see
+  *     OPTIMIZED once (the engine analog of PREPARE/EXECUTE — the
+  *     reference serves repeated query shapes the same way); each pass
+  *     then re-runs physical planning, codegen, fresh
+  *     shuffles/broadcasts, and every execution stage from that
+  *     optimized plan (see
   *     [[org.apache.spark.sql.graft.PlanExec.ofPreOptimized]] —
-  *     Dataset reuse would skip the map stages entirely). p10/p15
-  *     embed a sink write in the query body, so they rebuild from
-  *     scratch every pass to re-execute the write.
+  *     Dataset reuse would skip the map stages entirely).
+  *   - Measured rebuild set ([[prepare]]): a query whose builder runs
+  *     Spark jobs on every construction (a sink write, a mutation, an
+  *     eager checkpoint, a driver-side collect) or whose plan reads a
+  *     locally checkpointed Dataset (cached by the warm pass) would
+  *     leave real work outside the timer under plan reuse, so it is
+  *     rebuilt from scratch every sample instead. The derived set is
+  *     printed on stderr.
   *
   * Results are materialized by fully iterating the executed plan:
   * every operator runs and every output row is produced, with no
@@ -48,33 +47,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   private val Passes = 3
 
-  /** Queries whose body performs a sink write that must re-run per
-    * sample (the write IS the measured operator). */
-  // p22: connectedComponents materializes eagerly (localCheckpoint per
-  // propagation round) at DataFrame-CONSTRUCTION time, so a cached
-  // build would leave the whole CC loop outside the timer — rebuild
-  // per sample to time the real work. Same reasoning (r20): p28's four
-  // BPE pair-count rounds run at construction; the comparator SQL does
-  // that work per execution, so a cached build would fabricate the
-  // ratio. (p27 left this set in r21: its sizing count() and driver
-  // bloom build became a bloom_filter_agg SCALAR SUBQUERY inside the
-  // query plan, so construction runs no jobs and the prepared-plan
-  // protocol re-executes the filter build per sample like any stage.)
-  // r20b INVARIANT: every query carrying a localCheckpoint must be in
-  // this set — a lazy checkpoint materializes on the WARM pass and
-  // every timed sample then reads the cached census blocks instead of
-  // re-running the big-table work behind it (the same fabricated-ratio
-  // mechanism, one action later). Rebuilding constructs a fresh
-  // un-materialized checkpoint per sample, so each sample pays the
-  // full computation exactly like the comparator does. This rule
-  // exposed an inherited measurement bug: f6's r20 checkpoint silently
-  // moved its quantile census out of the timer (0.24 s cached vs
-  // 0.78 s honest) — and once timed honestly the checkpoint LOST to
-  // the plain diamond (0.48 s), so f6's checkpoint was reverted rather
-  // than special-cased here.
-  private val rebuildEachRun =
-    Set("p10_write_roundtrip", "p15_format_roundtrip", "p22_neardup_clusters",
-      "p28_bpe_merges")
+  /** One query ready for timed samples. `sample` yields the DataFrame a
+    * sample materializes: a fresh execution of the prepared plan, or a
+    * full rebuild when plan reuse would hide work (see [[rebuilt]]). */
+  private[graft] final case class Prepared(
+      sample: () => DataFrame, constructionJobs: Int, readsLocalCheckpoint: Boolean) {
+    def rebuilt: Boolean = constructionJobs > 0 || readsLocalCheckpoint
+  }
+
+  /** Build a query and decide how its samples run. Jobs started during
+    * construction are work a reused plan would never repeat; a local
+    * checkpoint in the plan is materialized by the first execution and
+    * read from cache by every later one. Either makes the query rebuild
+    * per sample; otherwise samples re-execute the optimized plan of this
+    * build. Jobs are counted on a second build when the first started
+    * any: first-build work that does not recur (a table's schema
+    * inference on its first read, a fixture written once per session)
+    * is setup, not part of the query. */
+  private[graft] def prepare(spark: SparkSession, build: () => DataFrame): Prepared = {
+    val first = PlanExec.jobsStartedBy(spark)(build())
+    val (df, jobs) = if (first._2 == 0) first else PlanExec.jobsStartedBy(spark)(build())
+    val checkpointed = PlanExec.readsLocalCheckpoint(df.queryExecution.analyzed)
+    if (jobs > 0 || checkpointed) Prepared(build, jobs, checkpointed)
+    else {
+      val optimized = df.queryExecution.optimizedPlan
+      Prepared(() => PlanExec.ofPreOptimized(spark, optimized), 0, false)
+    }
+  }
 
   private def materialize(df: DataFrame): Unit =
     df.queryExecution.toRdd.foreachPartition(it => while (it.hasNext) it.next())
@@ -200,92 +199,39 @@ object Bench {
     extSampler.setDaemon(true)
     extSampler.start() // covers warm + timed passes, not the comparator
 
-    import graft.engine.Adaptive
     val failed = scala.collection.mutable.ListBuffer[String]()
-    // name -> (tuned => fresh DataFrame, tuned confs if the size tier has them)
-    val prepared = scala.collection.mutable.LinkedHashMap[
-      String, (Boolean => DataFrame, Option[Seq[(String, String)]])]()
+    val prepared = scala.collection.mutable.LinkedHashMap[String, Prepared]()
 
-    // pass 0: build + warm under default confs
+    // pass 0: build + warm
     for ((name, fn) <- selected) {
       try {
-        val df = fn(spark, sfDir)
-        val bytes = Adaptive.inputBytes(df)
-        // Tiered tuning (r12): small inputs race the no-AQE fast confs,
-        // medium inputs (the 100-300 MB TPC-H scans) race the
-        // input-sized-partition medium confs, large inputs run default
-        // only — see Adaptive.tunedConfs.
-        val tunedConfs = Adaptive.tunedConfs(spark, bytes)
-        // Prepared-statement execution: parse/analyze/OPTIMIZE once per
-        // conf regime, then each sample re-runs physical planning,
-        // codegen, fresh shuffles/broadcasts, and every stage (see
-        // PlanExec.ofPreOptimized — Dataset reuse would skip the map
-        // stages entirely). Optimized plans are cached PER REGIME
-        // because optimizer-time decisions (runtime-filter injection)
-        // bake the active confs into the plan; executing a default-
-        // optimized plan under tuned confs would measure a hybrid
-        // neither path produces.
-        val build: Boolean => DataFrame =
-          if (rebuildEachRun(name)) _ => fn(spark, sfDir)
-          else {
-            val analyzed = df.queryExecution.analyzed
-            val optDefault = org.apache.spark.sql.graft.PlanExec
-              .ofRows(spark, analyzed).queryExecution.optimizedPlan
-            lazy val optTuned = Adaptive.withConfs(spark, tunedConfs.get)(
-              org.apache.spark.sql.graft.PlanExec
-                .ofRows(spark, analyzed).queryExecution.optimizedPlan)
-            tuned => org.apache.spark.sql.graft.PlanExec
-              .ofPreOptimized(spark, if (tuned) optTuned else optDefault)
-          }
-        materialize(build(false))
-        // Warm the tuned plan shape too (different physical plan →
-        // different codegen units): without this, the pass-1 tuned
-        // sample pays one-time Janino compilation and the tuned/default
-        // race is systematically biased toward default.
-        tunedConfs.foreach(c =>
-          Adaptive.withConfs(spark, c)(materialize(build(true))))
-        prepared += name -> (build, tunedConfs)
+        val p = prepare(spark, () => fn(spark, sfDir))
+        materialize(p.sample())
+        prepared += name -> p
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED (warm): ${e.getMessage}")
           failed += name
       }
     }
+    System.err.println("[bench] rebuilt every sample: " + prepared.collect {
+      case (name, p) if p.rebuilt =>
+        s"$name (${p.constructionJobs} construction jobs" +
+          (if (p.readsLocalCheckpoint) ", local checkpoint)" else ")")
+    }.mkString(", "))
 
     val samples = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
-    val tunedWon = scala.collection.mutable.Set[String]()
 
-    def timeOne(build: Boolean => DataFrame,
-                confs: Option[Seq[(String, String)]]): Double = {
-      val t0 = System.nanoTime()
-      confs match {
-        case Some(c) => Adaptive.withConfs(spark, c)(materialize(build(true)))
-        case None    => materialize(build(false))
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    for (pass <- 1 to Passes; (name, (build, tunedConfs)) <- prepared) {
+    for (pass <- 1 to Passes; (name, p) <- prepared) {
       if (!failed.contains(name)) {
-        val useTuned = tunedConfs.isDefined && (pass match {
-          case 1 => true
-          case 2 => false
-          case _ => tunedWon(name)
-        })
         try {
-          val t = timeOne(build, if (useTuned) tunedConfs else None)
-          samples(name) = samples(name) :+ t
-          // Pass-3 regime choice: tuned must beat default by >= 5%
-          // (one contended sample shouldn't misroute the pass — the
-          // single-sample comparison was r11's What's-wrong #4; the
-          // margin biases ties toward the default AQE path, which is
-          // also the only regime large queries ever see).
-          if (pass == 2 && tunedConfs.isDefined && samples(name)(0) < t * 0.95)
-            tunedWon += name
+          val t0 = System.nanoTime()
+          materialize(p.sample())
+          samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
         } catch {
           case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED (pass $pass${if (useTuned) " tuned" else ""}): ${e.getMessage}")
+            System.err.println(s"[bench] $name FAILED (pass $pass): ${e.getMessage}")
             failed += name
             samples.remove(name)
         }
@@ -295,9 +241,7 @@ object Bench {
     val timed = prepared.keys.toSeq.filter(samples(_).nonEmpty).map { name =>
       val ss = samples(name)
       val med = ss.sorted.apply(ss.size / 2)
-      val tag = if (prepared(name)._2.isEmpty) ""
-        else if (tunedWon(name)) " [tuned]" else " [deflt]"
-      System.err.println(f"[bench] $name%-28s median=$med%.3fs samples=${ss.map(s => f"$s%.2f").mkString(",")}$tag")
+      System.err.println(f"[bench] $name%-28s median=$med%.3fs samples=${ss.map(s => f"$s%.2f").mkString(",")}")
       name -> med
     }
 

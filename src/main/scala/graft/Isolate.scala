@@ -1,14 +1,13 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.PlanExec
 
 /** Isolation re-bench for one query (the q9/q19 protocol from r14-r16,
   * now a reusable main instead of ad-hoc scratch runs): decomposes a
-  * bench median into plan-time vs row-work and races the Adaptive conf
-  * tiers under identical, interleaved conditions.
+  * bench median into plan-time vs row-work under the session defaults.
   *
-  * For each selected query it reports, per conf regime (default AQE /
-  * fast / medium where the size gate admits them):
+  * For each selected query it reports:
   *
   *   - `exec`  — samples of executing a PRE-OPTIMIZED plan
   *     (physical planning + codegen + all stages, like Bench's
@@ -17,8 +16,8 @@ import org.apache.spark.sql.DataFrame
   *     optimize + execute), whose delta against `exec` is the
   *     per-query session overhead that dominates sub-0.5 s ratios.
   *
-  * Samples interleave regimes round-robin so host-load drift hits all
-  * regimes equally (the r15 drift lesson). Usage:
+  * The two kinds of sample alternate so host-load drift hits both
+  * equally (the r15 drift lesson). Usage:
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *     sbt -batch 'runMain graft.Isolate x5_channel_rollup [samples]'
@@ -30,6 +29,12 @@ object Isolate {
 
   private def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
+  private def secs(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val pattern = args.headOption.getOrElse("x5_channel_rollup").r
     val samplesN = args.lift(1).map(_.toInt).getOrElse(5)
@@ -37,58 +42,24 @@ object Isolate {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.engine.Graft.session("graft-isolate", cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    import graft.engine.Adaptive
 
     val selected = SparkEntry.queries.filter(e =>
       pattern.pattern.matcher(e._1).matches()).toSeq.sortBy(_._1)
     require(selected.nonEmpty, s"no query matches ${pattern.pattern}")
 
     for ((name, fn) <- selected) {
-      val df = fn(spark, sfDir)
-      val bytes = Adaptive.inputBytes(df)
-      val analyzed = df.queryExecution.analyzed
-      val regimes: Seq[(String, Option[Seq[(String, String)]])] =
-        Seq("default" -> None) ++
-          (if (bytes < BigInt(Adaptive.DefaultMaxBytes))
-            Seq("fast" -> Some(Adaptive.fastConfs(bytes))) else Nil) ++
-          (if (bytes < BigInt(Adaptive.DefaultMediumMaxBytes))
-            Seq("medium" -> Some(Adaptive.mediumConfs(bytes))) else Nil)
-      println(f"== $name  inputBytes=${bytes.toLong / 1e6}%.1f MB  " +
-        s"regimes=${regimes.map(_._1).mkString(",")}")
-
-      def withRegime[T](confs: Option[Seq[(String, String)]])(body: => T): T =
-        confs match {
-          case Some(c) => Adaptive.withConfs(spark, c)(body)
-          case None => body
-        }
-      // pre-optimize per regime (optimizer-time decisions bake the
-      // active confs into the plan) and warm codegen once per regime
-      val opt = regimes.map { case (rn, confs) =>
-        val p = withRegime(confs)(org.apache.spark.sql.graft.PlanExec
-          .ofRows(spark, analyzed).queryExecution.optimizedPlan)
-        withRegime(confs)(materialize(
-          org.apache.spark.sql.graft.PlanExec.ofPreOptimized(spark, p)))
-        rn -> p
-      }.toMap
-
-      val exec = scala.collection.mutable.Map[String, Vector[Double]]()
-        .withDefaultValue(Vector.empty)
-      val fresh = scala.collection.mutable.Map[String, Vector[Double]]()
-        .withDefaultValue(Vector.empty)
-      for (_ <- 1 to samplesN; (rn, confs) <- regimes) {
-        val t0 = System.nanoTime()
-        withRegime(confs)(materialize(
-          org.apache.spark.sql.graft.PlanExec.ofPreOptimized(spark, opt(rn))))
-        exec(rn) = exec(rn) :+ (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        withRegime(confs)(materialize(fn(spark, sfDir)))
-        fresh(rn) = fresh(rn) :+ (System.nanoTime() - t1) / 1e9
+      // pre-optimize once and warm codegen once
+      val opt = fn(spark, sfDir).queryExecution.optimizedPlan
+      materialize(PlanExec.ofPreOptimized(spark, opt))
+      val samples = (1 to samplesN).map { _ =>
+        (secs(materialize(PlanExec.ofPreOptimized(spark, opt))),
+          secs(materialize(fn(spark, sfDir))))
       }
-      for ((rn, _) <- regimes)
-        println(f"   $rn%-8s exec median=${med(exec(rn))}%.3fs " +
-          f"(${exec(rn).map(s => f"$s%.2f").mkString(",")})  " +
-          f"fresh median=${med(fresh(rn))}%.3fs " +
-          f"(${fresh(rn).map(s => f"$s%.2f").mkString(",")})")
+      val (exec, fresh) = samples.unzip
+      println(f"== $name  exec median=${med(exec)}%.3fs " +
+        f"(${exec.map(s => f"$s%.2f").mkString(",")})  " +
+        f"fresh median=${med(fresh)}%.3fs " +
+        f"(${fresh.map(s => f"$s%.2f").mkString(",")})")
     }
     spark.stop()
   }

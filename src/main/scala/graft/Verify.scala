@@ -1,35 +1,12 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, MapType}
-
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare
+  * (`tools/local_oracle.py`). Each query runs once, under the session
+  * defaults a user's statement gets, so the oracle checks the plan
+  * users actually run. */
 object Verify {
-  /** Order-independent result fingerprint: (row count, sum of per-row
-    * xxhash64 over a canonical JSON rendering). Map columns are
-    * canonicalized to sorted entry arrays first — map iteration order
-    * is not part of result equality and can differ between plans. The
-    * hash sum runs as DECIMAL(38,0) so it cannot overflow under ANSI
-    * arithmetic; everything stays distributed (one aggregate row). */
-  private def fingerprint(d: DataFrame): (Long, java.math.BigDecimal) = {
-    val canon = d.select(d.schema.fields.toSeq.map { f =>
-      f.dataType match {
-        case _: MapType => array_sort(map_entries(col(f.name))).as(f.name)
-        case _          => col(f.name)
-      }
-    }: _*)
-    val row = canon
-      .select(
-        count(lit(1)).as("n"),
-        coalesce(sum(xxhash64(to_json(struct(canon.columns.toSeq.map(col): _*)))
-          .cast(DecimalType(38, 0))), lit(0).cast(DecimalType(38, 0))).as("h"))
-      .head()
-    (row.getLong(0), row.getDecimal(1))
-  }
-
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Local-iteration aid (driver passes 2 args): an optional regex
@@ -39,52 +16,24 @@ object Verify {
     val only = args.lift(2).map(_.r)
     def keep(name: String): Boolean =
       only.forall(_.pattern.matcher(name).matches())
+    val selected = SparkEntry.queries.filter(e => keep(e._1))
+    // An empty selection would write an empty dump whose replay passes
+    // vacuously: refuse it.
+    if (selected.isEmpty) {
+      System.err.println(s"[verify] no query matches '${args(2)}' — " +
+        s"known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = graft.engine.Graft.session("graft-verify", cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(e => keep(e._1)).foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        val bytes = graft.engine.Adaptive.inputBytes(df)
-        val tuned = graft.engine.Adaptive.tunedConfs(spark, bytes)
-        // repartition(1) (not coalesce) keeps the single-file write
-        // behind an exchange, so the query itself still runs at full
-        // parallelism; coalesce(1) propagated up the plan and
-        // single-threaded every verify query's final stage.
-        // Size-gated queries are written under the tuned confs the
-        // bench uses, so the DuckDB hash gate re-proves every round
-        // that the tuned path is result-identical.
-        tuned match {
-          case Some(confs) =>
-            val replanned = graft.engine.Adaptive.withConfs(spark, confs) {
-              val r = graft.engine.Adaptive.replan(spark, df)
-              r.repartition(1).write.mode("overwrite").parquet(s"$outDir/$name")
-              r
-            }
-            // Cross-regime re-proof (r11 advisor): the bench may select
-            // EITHER regime per pass, but the DuckDB gate only sees the
-            // tuned output above — so prove here that the default-AQE
-            // plan produces the identical row multiset. The tuned side
-            // is fingerprinted from the parquet just written (the same
-            // rows, one file read) instead of re-executing the tuned
-            // plan — same guarantee, one execution fewer per gated
-            // query (r12 What's-wrong #4). Skipped for queries without
-            // oracle SQL: those are rows-only by design (RNG sampling
-            // is partition-layout-dependent).
-            if (SparkEntry.oracleSql.contains(name)) {
-              val fpTuned = fingerprint(spark.read.parquet(s"$outDir/$name"))
-              val fpDefault = fingerprint(df)
-              if (fpTuned != fpDefault)
-                throw new IllegalStateException(
-                  s"regime divergence: tuned=$fpTuned default=$fpDefault — " +
-                    "tuned and default plans must produce identical rows")
-            }
-            replanned
-          case None =>
-            df.repartition(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        }
-      }
+    selected.foreach { case (name, fn) =>
+      // repartition(1) (not coalesce) keeps the single-file write
+      // behind an exchange, so the query itself still runs at full
+      // parallelism; coalesce(1) propagated up the plan and
+      // single-threaded every verify query's final stage.
+      try fn(spark, sfDir).repartition(1).write.mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         e.printStackTrace()

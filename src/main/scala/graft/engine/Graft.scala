@@ -103,6 +103,17 @@ object Graft {
     spark
   }
 
+  /** Run `body` with `confs` set, restoring prior values after. */
+  def withConfs[T](spark: SparkSession, confs: Seq[(String, String)])(body: => T): T = {
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   /** Per-session relation cache: `spark.read.parquet` lists files and
     * reads footers to infer the schema on EVERY call, and the query
     * builders call load() afresh per query per execution — ~1000

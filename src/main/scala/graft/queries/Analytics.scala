@@ -80,8 +80,8 @@ object Analytics {
     * so the per-key array never grows with scale factor, and the
     * heavy-hitter pairs come out of one partial/final count.
     *
-    * Raced three ways at sf0.1 under the bench protocol (r10 + r13
-    * X2Race): relational DISTINCT-self-join 1.35 s, collect+explode
+    * Raced three ways at sf0.1 under the bench protocol (r10 + r13):
+    * relational DISTINCT-self-join 1.35 s, collect+explode
     * over ObjectHashAggregate 1.15 s, sorted-stream 0.66 s — the
     * shipped form. The per-order array never passes through an
     * aggregation buffer at all: one shuffle on the order key, a local

@@ -40,6 +40,35 @@ object PlanExec {
       org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(qe.analyzed.schema))
   }
 
+  /** Run `body` and count the Spark jobs it started. The listener bus is
+    * flushed before the listener is added (so an earlier job's queued
+    * start event is not charged to `body`) and again before the count
+    * is read (so a job `body` started is not missed). */
+  def jobsStartedBy[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.listenerBus.waitUntilEmpty()
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      sc.listenerBus.waitUntilEmpty()
+      (result, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** True when `plan` (subqueries included) reads a locally checkpointed
+    * Dataset. The checkpoint's blocks are cached by the first execution,
+    * so every later execution of the same plan skips the work behind
+    * it. */
+  def readsLocalCheckpoint(plan: LogicalPlan): Boolean =
+    plan.collectWithSubqueries {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.checkpointData
+    }.exists(_.exists(_.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]]))
+
   /** BATCH execution of `transformWithState` loads per-partition state
     * stores, and store loading asks the driver for its
     * StateStoreCoordinator RPC endpoint — which is otherwise created

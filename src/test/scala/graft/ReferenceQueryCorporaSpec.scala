@@ -538,7 +538,7 @@ class ReferenceQueryCorporaSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fallback = Seq(
       "spark.sql.TungstenAggregate.testFallbackStartsAt" -> "1,3",
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2")
-    graft.engine.Adaptive.withConfs(spark, fallback) {
+    graft.engine.Graft.withConfs(spark, fallback) {
       v("SELECT count(DISTINCT x) FROM (VALUES 1, 1, 2, 3) t(x)", "VALUES BIGINT '3'")
       v("SELECT count(DISTINCT x), sum(DISTINCT x) FROM (VALUES 1, 1, 2, 3) t(x)",
         "VALUES (BIGINT '3', BIGINT '6')")

@@ -28,9 +28,31 @@ class SpillSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sfDir = "/root/testdata/sf0.001"
   private var spark: SparkSession = _
 
+  // Core (SparkContext) confs for the spill session. The fallback knob
+  // below spills every 3 input rows, so one lineitem aggregate task
+  // merges ~2000 spill files, and every reader stays referenced until its
+  // task ends. Each reader holds a fixed 1 MiB record buffer; the default
+  // read-ahead stream adds two more 1 MiB heap buffers per reader. With
+  // read-ahead, q11 outgrew a 7 GiB heap; without it the peak (q21) fits
+  // a 6 GiB heap. Only the read buffering changes: the spill write, sort
+  // and merge paths run as before. A task OutOfMemoryError still fails
+  // this test, but no longer exits the forked JVM that the suites queued
+  // behind this one share.
+  private val coreConfs = Seq(
+    "spark.unsafe.sorter.spill.read.ahead.enabled" -> "false",
+    "spark.executor.killOnFatalError.depth" -> "0")
+
   override def beforeAll(): Unit = {
-    spark = graft.engine.Graft.session("graft-spill-test", 4)
+    // core confs reach Graft.session only as system properties set
+    // before the context starts
+    val prior = coreConfs.map { case (k, _) => k -> Option(System.getProperty(k)) }
+    coreConfs.foreach { case (k, v) => System.setProperty(k, v) }
+    try spark = graft.engine.Graft.session("graft-spill-test", 4)
+    finally prior.foreach { case (k, p) => p.fold(System.clearProperty(k))(System.setProperty(k, _)) }
     spark.sparkContext.setLogLevel("ERROR")
+    for ((k, v) <- coreConfs)
+      assert(spark.sparkContext.getConf.get(k) == v,
+        s"spill session reused a SparkContext started without $k=$v")
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -86,7 +108,7 @@ class SpillSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prevMrCap = graft.operators.MatchRecognize.SpillAfterRows
     graft.operators.MatchRecognize.SpillAfterRows = 8
     try {
-      graft.engine.Adaptive.withConfs(spark, spillConfs) {
+      graft.engine.Graft.withConfs(spark, spillConfs) {
         for (name <- available) {
           val spilled = contentHash(SparkEntry.queries(name)(spark, sfDir))
           assert(spilled == baseline(name),

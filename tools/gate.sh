@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Pre-commit gate: the minimum proof that HEAD is shippable.
 # Usage: tools/gate.sh [--full]
-#   default: Test/compile + EntrySmoke (~30 s)
+#   default: Test/compile + benchmark compile + EntrySmoke (~1 min)
 #   --full : also runs the whole ScalaTest suite (~2.5 min)
 # Rounds 6 and 7 shipped a non-compiling HEAD; nothing in the round
 # protocol ran the compiler before snapshot. This script is that gate —
@@ -12,6 +12,13 @@ cd "$(dirname "$0")/.."
 echo "[gate] sbt Test/compile"
 sbt -batch "Test/compile" > /tmp/gate_compile.log 2>&1 || {
   echo "[gate] COMPILE FAILED"; tail -30 /tmp/gate_compile.log; exit 1; }
+
+# perfbench/build.sbt compiles ../src/main/scala with the benchmark's
+# own sources, so a main-code change can break the benchmark build
+# while the engine build stays green.
+echo "[gate] perfbench compile"
+(cd perfbench && sbt -batch compile) > /tmp/gate_perfbench.log 2>&1 || {
+  echo "[gate] PERFBENCH COMPILE FAILED"; tail -30 /tmp/gate_perfbench.log; exit 1; }
 
 echo "[gate] EntrySmoke"
 rows=$(sbt -batch 'runMain graft.EntrySmoke' 2>&1 | grep -oP 'ENTRY_ROWS=\K\d+' || echo 0)

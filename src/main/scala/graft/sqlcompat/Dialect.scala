@@ -2,6 +2,8 @@ package graft.sqlcompat
 
 import scala.util.chaining._
 
+import SqlLex.{LitIdx, LitP, closeParen, cre, openParen, repAll, splitTopLevel}
+
 /** Reference-dialect → Spark SQL translation (SURVEY §7.1 `sqlcompat`):
   * lets a user of the reference engine run their existing SQL against
   * this engine. Covers the mechanical dialect gaps — function renames,
@@ -96,7 +98,7 @@ object Dialect {
     "time" -> "bigint") // TIME emulated as nanos-of-day
 
   /** Rename a single reference type spelling to its Spark type —
-    * passes that emit CAST text AFTER the per-segment rename stage
+    * passes that emit CAST text AFTER the rename pass
     * (SQL/JSON clauses, constructor RETURNING) call this to stay
     * consistent with it. Length parameters drop with the rename
     * (`string(255)` does not parse; Spark's string is unbounded). */
@@ -108,28 +110,6 @@ object Dialect {
     }
     t
   }
-
-  // ---- compiled-regex cache ----------------------------------------
-  // translate() chains ~20 passes, many of which used to compile their
-  // patterns per CALL (`"...".r` is Pattern.compile every time) — the
-  // dominant share of the ~0.6 ms/query translate floor the Isolate
-  // pins kept hitting. Every `.r` in this file routes through this
-  // process-wide cache; a nested object delays the map's own
-  // initialization past the enclosing object's val-order.
-  private object ReCache {
-    val m = new java.util.concurrent.ConcurrentHashMap[
-      String, scala.util.matching.Regex]()
-  }
-  private def cre(p: String): scala.util.matching.Regex = {
-    var r = ReCache.m.get(p)
-    if (r == null) { r = new scala.util.matching.Regex(p); ReCache.m.put(p, r) }
-    r
-  }
-
-  /** `s.replaceAll(p, r)` with the compiled pattern cached — identical
-    * Matcher.replaceAll semantics ($-group references, \\ escapes). */
-  private def repAll(s: String, p: String, r: String): String =
-    cre(p).replaceAllIn(s, r)
 
   // ---- CHAR comparison semantics (PAD SPACE) -----------------------
   // The reference compares CHAR values padded to the common length
@@ -150,9 +130,8 @@ object Dialect {
   // matched the CAST(...) suffix INSIDE TRY_CAST(...), leaving a
   // dangling `TRY_` outside the rpad() wrap — invalid SQL
   private val charCastP =
-    "(?<![A-Za-z0-9_])(?:TRY_)?CAST\\s*\\(\\s*(?:[^()']|'(?:[^']|'')*')+?\\s+AS\\s+CHAR(?:\\s*\\(\\s*\\d+\\s*\\))?\\s*\\)"
-  private val charLitP = "CHAR\\s*'(?:[^']|'')*'"
-  private val strLitP = "'(?:[^']|'')*'"
+    "(?<![A-Za-z0-9_])(?:TRY_)?CAST\\s*\\(\\s*[^()]+?\\s+AS\\s+CHAR(?:\\s*\\(\\s*\\d+\\s*\\))?\\s*\\)"
+  private val charLitP = s"CHAR\\s*$LitP"
   // bare column identifier — keyword-guarded so CASE ... END or a
   // boolean keyword can never be mistaken for a comparison operand
   private val identP =
@@ -160,8 +139,8 @@ object Dialect {
       "IN|LIKE|SELECT|FROM|WHERE|GROUP|ORDER|HAVING|ON|JOIN|UNION|ALL|" +
       "DISTINCT|AS|CAST|CHAR)\\b)[A-Za-z_][A-Za-z0-9_.]*"
   private val charOperandRe = cre(s"(?i)^(?:$charCastP|$charLitP)$$")
-  private val anyOperandP = s"(?:$charCastP|$charLitP|$strLitP|NULL|$identP)"
-  private val charGuardRe = cre("(?i)AS\\s+CHAR\\b|\\bCHAR\\s*'")
+  private val anyOperandP = s"(?:$charCastP|$charLitP|$LitP|NULL|$identP)"
+  private val charGuardRe = cre(s"(?i)AS\\s+CHAR\\b|\\bCHAR\\s*$LitP")
   // adjacency guards: an operand that is itself part of a larger
   // expression (`'p' || CAST(… AS CHAR(2)) = x`) must not be wrapped —
   // `||`/arithmetic bind tighter than comparison
@@ -176,33 +155,6 @@ object Dialect {
 
   private def charComparePass(sql: String): String = {
     if (charGuardRe.findFirstIn(sql).isEmpty) return sql
-    // Mask string-literal CONTENT first so SQL-looking text inside a
-    // quoted string (`'CAST(q AS CHAR(2)) = z'`) can never be
-    // rewritten. The masked token keeps its surrounding quotes, so
-    // strLitP/charLitP still see it as a literal operand; originals
-    // are restored verbatim after the rewrites.
-    val lits = new scala.collection.mutable.ArrayBuffer[String]
-    val masked = new StringBuilder
-    var mi = 0
-    var litStart = -1
-    while (mi < sql.length) {
-      val c = sql.charAt(mi)
-      if (c == '\'') {
-        if (litStart < 0) { litStart = mi; mi += 1 }
-        else if (mi + 1 < sql.length && sql.charAt(mi + 1) == '\'') mi += 2
-        else {
-          lits += sql.substring(litStart + 1, mi)
-          masked.append('\'').append('\u0004').append(lits.length - 1)
-            .append('\u0004').append('\'')
-          litStart = -1
-          mi += 1
-        }
-      } else {
-        if (litStart < 0) masked += c
-        mi += 1
-      }
-    }
-    if (litStart >= 0) masked.append(sql.substring(litStart))
     def isChar(s: String) = charOperandRe.findFirstIn(s.trim).isDefined
     // coalesce(char_length, 0): this pass runs BEFORE the rename stage,
     // so the emitted greatest becomes graft_greatest (reference NULL
@@ -211,8 +163,7 @@ object Dialect {
     // null-sensitive; rpad(NULL, …) is NULL regardless)
     def pad(a: String, b: String) =
       s"rpad($a, greatest(coalesce(char_length($a), 0), coalesce(char_length($b), 0)))"
-    def q(s: String) = java.util.regex.Matcher.quoteReplacement(s)
-    var out = masked.toString
+    var out = sql
     out = charBetweenRe.replaceAllIn(out, m => {
       val (v, lo, hi) = (m.group(1), m.group(3), m.group(4))
       val not = Option(m.group(2)).getOrElse("")
@@ -228,186 +179,122 @@ object Dialect {
       if (!(isChar(a) || isChar(b))) q(m.matched)
       else q(s"(${pad(a, b)} IS ${not}DISTINCT FROM ${pad(b, a)})")
     })
-    out = charCmpRe.replaceAllIn(out, m => {
+    charCmpRe.replaceAllIn(out, m => {
       val (a, op, b) = (m.group(1), m.group(2), m.group(3))
       if (!(isChar(a) || isChar(b))) q(m.matched)
       else q(s"(${pad(a, b)} $op ${pad(b, a)})")
     })
-    cre("\u0004(\\d+)\u0004")
-      .replaceAllIn(out, m => q(lits(m.group(1).toInt)))
   }
+
+  private def q(s: String): String = java.util.regex.Matcher.quoteReplacement(s)
+
+  /** Trim spaces, tabs and line breaks only. */
+  private def ws(x: String): String = repAll(x, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", "")
 
   /** Translate a reference-dialect SQL string to Spark SQL. String
     * literals are preserved verbatim; identifiers are rewritten only
     * on whole-word match (case-insensitive) when followed by `(` for
     * functions, or inside CAST(... AS <type>) for types.
     *
-    * Shared lex-and-mask substrate (r20): double-quoted identifiers
-    * are masked to U+E005 <n> U+E006 sentinels BEFORE any pass runs —
-    * a pass can no more rewrite text inside `"a quoted column"` than
-    * inside a string literal (which the segment machinery already
-    * isolates). The sentinels restore as Spark backtick identifiers,
-    * content verbatim, after the last pass. The lexer is
-    * single-quote aware, so a `"` INSIDE a string literal is literal
-    * content, never an identifier delimiter. A ScalaCheck property
-    * (DialectPropertiesSpec) pins that translate() never alters
-    * literal or quoted-identifier content for arbitrary queries. */
+    * One lexer ([[SqlLex]]): the statement is lexed ONCE into
+    * canonical text, where every string literal, double-quoted
+    * identifier and comment is a sentinel, and every pass below runs
+    * over that text — no pass re-lexes the statement or guards quotes
+    * on its own, so none can read or rewrite a literal's, an
+    * identifier's or a comment's content. Passes that need a literal's
+    * value look it up by the sentinel's index, and passes that emit a
+    * literal mint a new sentinel. After the last pass every sentinel
+    * restores verbatim: literals with each backslash doubled,
+    * identifiers as Spark backtick identifiers, comments as written.
+    * A ScalaCheck property (PropertiesSpec) pins that translate()
+    * never alters literal or quoted-identifier content for arbitrary
+    * queries, with comments anywhere between them. */
   def translate(sql: String): String = {
-    val idents = new scala.collection.mutable.ArrayBuffer[String]
-    val masked = {
-      val sb = new StringBuilder(sql.length)
-      var i = 0
-      var inStr = false
-      while (i < sql.length) {
-        val c = sql.charAt(i)
-        if (c == '\'') {
-          if (inStr && i + 1 < sql.length && sql.charAt(i + 1) == '\'') {
-            sb ++= "''"; i += 2
-          } else { inStr = !inStr; sb += c; i += 1 }
-        } else if (c == '"' && !inStr) {
-          val close = sql.indexOf('"', i + 1)
-          if (close < 0) { sb += c; i += 1 } // unbalanced: Spark rejects
-          else {
-            idents += sql.substring(i + 1, close)
-            sb ++= "\uE005"; sb ++= (idents.length - 1).toString; sb ++= "\uE006"
-            i = close + 1
-          }
-        } else { sb += c; i += 1 }
-      }
-      sb.toString
-    }
-    // restore runs INSIDE constructorPass, just before the SQL/JSON
-    // clause parser \u2014 SqlJsonClauses binds PASSING/path variable
-    // NAMES, so it needs the real identifiers (it is a structured
-    // parser with its own quote handling, not a regex pass); every
-    // regex pass before that point sees only sentinels. The outer
-    // replaceAllIn is a no-op safety net for texts that bypass the
-    // constructor tail.
-    val restore: String => String = s =>
-      cre("\uE005(\\d+)\uE006").replaceAllIn(s, m =>
-        java.util.regex.Matcher.quoteReplacement(
-          "`" + idents(m.group(1).toInt) + "`"))
-    restore(translateMasked(masked, restore))
+    val lex = SqlLex.mask(sql)
+    lex.restore(constructorPass(renamePass(literalPass(
+      charComparePass(normalizePass(lex.text, lex)), lex)), lex))
   }
 
-  private def translateMasked(sql: String,
-      restoreIdents: String => String): String = {
-    // normalize(): the standard's form argument is a BARE keyword
-    // (normalize(x, NFD)) and the one-arg form defaults to NFC — quote
-    // / supply it for the registered (string, form) UDF. Runs on the
-    // full text BEFORE literal masking (the first argument is usually
-    // a string literal), with a quote-tolerant non-nesting arg group;
-    // literal content is only ever copied through, never altered.
-    val sql0 = sql
-      .pipe(repAll(_, 
-        "(?i)\\bnormalize\\s*\\(((?:[^()']|'[^']*')*?),\\s*(NFC|NFD|NFKC|NFKD)\\s*\\)",
-        "normalize($1, '$2')"))
-      .pipe(repAll(_, 
-        "(?i)\\bnormalize\\s*\\(((?:[^(),']|'[^']*')*)\\)",
-        "normalize($1, 'NFC')"))
-    val sql0c = charComparePass(sql0)
-    // split into literal and non-literal segments so quoted strings
-    // are never rewritten
-    val parts = new scala.collection.mutable.ArrayBuffer[(String, Boolean)]
-    val sb = new StringBuilder
-    var inStr = false
-    var i = 0
-    while (i < sql0c.length) {
-      val c = sql0c.charAt(i)
-      if (c == '\'') {
-        if (inStr && i + 1 < sql0c.length && sql0c.charAt(i + 1) == '\'') {
-          sb += '\''; sb += '\''; i += 2
-        } else {
-          if (inStr) { sb += c; parts += ((sb.toString, true)); sb.clear() }
-          else { parts += ((sb.toString, false)); sb.clear(); sb += c }
-          inStr = !inStr
-          i += 1
-        }
-      } else { sb += c; i += 1 }
-    }
-    parts += ((sb.toString, inStr))
+  /** normalize(): the standard's form argument is a BARE keyword
+    * (normalize(x, NFD)) and the one-arg form defaults to NFC — quote
+    * / supply it for the registered (string, form) UDF. */
+  private def normalizePass(sql: String, lex: SqlLex.Lexed): String = {
+    val two = cre("(?i)\\bnormalize\\s*\\(([^()]*?),\\s*(NFC|NFD|NFKC|NFKD)\\s*\\)")
+    val one = cre("(?i)\\bnormalize\\s*\\(([^(),]*)\\)")
+    one.replaceAllIn(
+      two.replaceAllIn(sql, m => q(s"normalize(${m.group(1)}, ${lex.lit(m.group(2))})")),
+      m => q(s"normalize(${m.group(1)}, ${lex.lit("NFC")})"))
+  }
 
-    // Cross-segment pass: reference datetime calls whose FIRST argument
-    // is a quoted unit literal — date_diff('day', a, b) → end-start in
-    // units ≡ Spark timestampdiff(DAY, a, b). date_add('hour', n, ts) ≡
+  private val units = Set("millisecond", "second", "minute", "hour",
+    "day", "week", "month", "quarter", "year")
+  private val dayOrCoarser = Set("day", "week", "month", "quarter", "year")
+  // operand of `x AT TIME ZONE 'zone'`: a call, an identifier, or one
+  // parenthesized group — none reaching across a string literal
+  private val atTzRe = cre(("(?i)([A-Za-z_][A-Za-z0-9_.]*\\s*\\([^()\uE001]*\\)|" +
+    s"[A-Za-z_][A-Za-z0-9_.]*|\\([^()\uE001]*\\))\\s+AT\\s+TIME\\s+ZONE\\s*($LitP)"))
+  // \b anchor: without it an identifier ending in ...timestamp (e.g.
+  // `my_timestamp TIMESTAMP '…' AT TIME ZONE …`) would match and be
+  // mangled into `my_from_utc_timestamp(timestamp …`.
+  private val atTzLitRe = cre(s"(?i)\\b(TIMESTAMP|DATE)\\s*($LitP)\\s*AT\\s+TIME\\s+ZONE\\s*($LitP)")
+  private val zonedLitRe = cre(("^'(\\d{4}-\\d{2}-\\d{2}[ T]\\d{2}:\\d{2}(:\\d{2}(\\.\\d+)?)?)\\s+" +
+    "([A-Za-z][A-Za-z0-9_+\\-]*(?:/[A-Za-z0-9_+\\-]+)+|UTC|[+-]\\d{2}:\\d{2})'$"))
+  // group 1: the type keyword and its spacing, 2: the keyword, 3: the
+  // literal's index. The one-letter lookahead rejects most word starts
+  // before the keyword alternation is tried.
+  private val typedLitRe = cre(("(?i)\\b(?=[bcdijrstuv])((REAL|DECIMAL|VARCHAR|CHAR|TINYINT|" +
+    s"SMALLINT|INTEGER|BIGINT|DOUBLE|BOOLEAN|TIME|DATE|UUID|IPADDRESS|JSON)\\s*)$LitIdx"))
+  private val uuidBinCastRe = cre(("(?i)\\b(?:TRY_)?CAST\\s*\\(\\s*(UUID|IPADDRESS)\\s*" +
+    s"$LitIdx\\s*AS\\s+VARBINARY\\s*\\)"))
+  private val returningRe = cre(("(?i)\\b(json_value|json_query)(\\s*\\(\\s*[^()]*" +
+    s"$LitP)\\s*RETURNING\\s+([A-Za-z0-9_]+(?:\\s*\\(\\s*\\d+(?:\\s*,\\s*\\d+)?" +
+    "\\s*\\))?)\\s*\\)"))
+
+  /** Rewrites that read or replace a string literal, each a regex over
+    * canonical text that names the literal's sentinel. */
+  private def literalPass(sql: String, lex: SqlLex.Lexed): String = {
+    if (sql.indexOf(SqlLex.Lit) < 0) return sql
+    def body(idx: String): String = {
+      val t = lex.token(idx.toInt)
+      t.substring(1, t.length - 1)
+    }
+    // each rewrite runs only when its keyword is in the statement
+    val lower = sql.toLowerCase
+    var out = sql
+    def when(kw: String)(rewrite: String => String): Unit =
+      if (lower.contains(kw)) out = rewrite(out)
+    // Reference datetime calls whose FIRST argument is a quoted unit
+    // literal — date_diff('day', a, b) → end-start in units ≡ Spark
+    // timestampdiff(DAY, a, b). date_add('hour', n, ts) ≡
     // timestampadd(HOUR, n, ts) for sub-day units; day-or-coarser units
     // route to our graft_date_add expression instead, because the
     // reference returns DATE for DATE inputs while Spark's timestampadd
     // always widens to TIMESTAMP (graft_date_add preserves the input
-    // type — functions/TrinoDateAdd.scala). The unit literal is its own
-    // segment, so this must run before the per-segment renames.
-    val units = Set("millisecond", "second", "minute", "hour",
-      "day", "week", "month", "quarter", "year")
-    val dayOrCoarser = Set("day", "week", "month", "quarter", "year")
-    val callRe = cre("(?i)\\b(date_diff|date_add)(\\s*\\(\\s*)$")
-    var j = 0
-    while (j + 1 < parts.length) {
-      val (seg, isLit) = parts(j)
-      val (lit, nextIsLit) = parts(j + 1)
-      if (!isLit && nextIsLit && lit.length > 2) {
-        val unit = lit.substring(1, lit.length - 1).toLowerCase
-        callRe.findFirstMatchIn(seg).foreach { m =>
-          val fn = m.group(1).toLowerCase
-          if (units(unit)) {
-            if (fn == "date_add" && dayOrCoarser(unit)) {
-              // keep the unit as a string literal; graft_date_add takes it
-              parts(j) = (seg.substring(0, m.start) + "graft_date_add" +
-                m.group(2), false)
-            } else {
-              val to = if (fn == "date_diff") "timestampdiff" else "timestampadd"
-              parts(j) = (seg.substring(0, m.start) + to + m.group(2), false)
-              parts(j + 1) = (unit.toUpperCase, false) // bare unit identifier
-            }
-          }
-        }
-      }
-      j += 1
-    }
+    // type — functions/TrinoDateAdd.scala).
+    when("date_")(cre(s"(?i)\\b(date_diff|date_add)(\\s*\\(\\s*)$LitIdx").replaceAllIn(_, m => {
+      val fn = m.group(1).toLowerCase
+      val unit = body(m.group(3)).toLowerCase
+      q(if (!units(unit)) m.matched
+        else if (fn == "date_add" && dayOrCoarser(unit))
+          // keep the unit as a string literal; graft_date_add takes it
+          "graft_date_add" + m.matched.substring(fn.length)
+        else (if (fn == "date_diff") "timestampdiff" else "timestampadd") +
+          m.group(2) + unit.toUpperCase) // bare unit identifier
+    }))
 
     // `expr AT TIME ZONE 'zone'` (reference grammar `SqlBase.g4:482`
-    // AT_TIMEZONE): the zone is its own literal segment, so this is a
-    // cross-segment rewrite — from_utc_timestamp(expr, 'zone') renders
+    // AT_TIMEZONE) → from_utc_timestamp(expr, 'zone'), which renders
     // the instant on the zone's wall clock (the session zone is UTC);
     // the zone id itself is not carried (SURVEY §1.3 type-loss note).
-    // The operand may be a bare column/identifier, a function call, or
-    // one parenthesized group. Documented limitation: operands with
-    // nested parens or embedded string literals (e.g.
-    // `date_trunc('day', ts) AT TIME ZONE 'X'`) do NOT match — the
-    // expression passes through untranslated and Spark rejects the
-    // AT TIME ZONE syntax loudly (asserted in DialectSpec), which is
-    // safe-by-failure rather than a silent mistranslation.
-    val atTzRe = cre(("(?i)([A-Za-z_][A-Za-z0-9_.]*\\s*\\([^()]*\\)|" +
-      "[A-Za-z_][A-Za-z0-9_.]*|\\([^()]*\\))\\s+AT\\s+TIME\\s+ZONE\\s*$"))
-    // operand is itself a datetime literal (`TIMESTAMP '…' AT TIME
-    // ZONE '…'`): the operand's literal is its own segment too, so the
-    // AT TIME ZONE keywords sit alone in a segment between two literals
-    val atTzLitRe = cre("(?i)^\\s*AT\\s+TIME\\s+ZONE\\s*$")
-    // \b anchor: without it an identifier ending in ...timestamp (e.g.
-    // `my_timestamp TIMESTAMP '…' AT TIME ZONE …`) would match and be
-    // mangled into `my_from_utc_timestamp(timestamp …`.
-    val tsKeywordRe = cre("(?i)\\b(TIMESTAMP|DATE)\\s*$")
-    var k = 0
-    while (k + 2 < parts.length) {
-      val (seg, isLit) = parts(k)
-      if (!isLit && parts(k + 1)._2) {
-        atTzRe.findFirstMatchIn(seg).foreach { m =>
-          parts(k) = (seg.substring(0, m.start) +
-            "from_utc_timestamp(" + m.group(1) + ", ", false)
-          val (after, afterLit) = parts(k + 2)
-          parts(k + 2) = (")" + after, afterLit)
-        }
-        if (k >= 2 && parts(k - 1)._2 && atTzLitRe.findFirstIn(seg).isDefined) {
-          tsKeywordRe.findFirstMatchIn(parts(k - 2)._1).foreach { m =>
-            parts(k - 2) = (parts(k - 2)._1.substring(0, m.start) +
-              "from_utc_timestamp(" + m.group(1) + " ", false)
-            parts(k) = (", ", false)
-            val (after, afterLit) = parts(k + 2)
-            parts(k + 2) = (")" + after, afterLit)
-          }
-        }
-      }
-      k += 1
-    }
+    // Documented limitation: operands with nested parens or embedded
+    // string literals (e.g. `date_trunc('day', ts) AT TIME ZONE 'X'`)
+    // do NOT match — the expression passes through untranslated and
+    // Spark rejects the AT TIME ZONE syntax loudly (asserted in
+    // DialectSpec), which is safe-by-failure rather than a silent
+    // mistranslation. A datetime-literal operand (`TIMESTAMP '…' AT
+    // TIME ZONE '…'`) has its own form.
+    when("zone")(atTzRe.replaceAllIn(_, "from_utc_timestamp($1, $2)"))
+    when("zone")(atTzLitRe.replaceAllIn(_, "from_utc_timestamp($1 $2, $3)"))
 
     // Zone-suffixed TIMESTAMP literals (the reference's TIMESTAMP WITH
     // TIME ZONE literal form, `TIMESTAMP '2017-01-02 09:12:34.123
@@ -417,318 +304,236 @@ object Dialect {
     // with_timezone's documented instant-only degradation (SURVEY
     // §1.3), the literal denotes its INSTANT —
     // to_utc_timestamp(TIMESTAMP '<dt>', '<zone>'); zone-PRESERVING
-    // values use the TimestampTz struct emulation explicitly. The zone
-    // re-enters as its own literal segment so the canonical-text
-    // invariant (no quotes outside literal segments) holds for every
-    // later pass.
-    val zonedLitRe = cre(("^'(\\d{4}-\\d{2}-\\d{2}[ T]\\d{2}:\\d{2}(:\\d{2}(\\.\\d+)?)?)\\s+" +
-      "([A-Za-z][A-Za-z0-9_+\\-]*(?:/[A-Za-z0-9_+\\-]+)+|UTC|[+-]\\d{2}:\\d{2})'$"))
-    var z = 1
-    while (z < parts.length) {
-      val (lit, isLit) = parts(z)
-      if (isLit && !parts(z - 1)._2) {
-        val prevSeg = parts(z - 1)._1
-        for (m <- cre("(?i)\\bTIMESTAMP\\s*$").findFirstMatchIn(prevSeg);
-             zm <- zonedLitRe.findFirstMatchIn(lit)) {
-          parts(z - 1) = (prevSeg.substring(0, m.start) +
-            "to_utc_timestamp(TIMESTAMP ", false)
-          parts(z) = (s"'${zm.group(1)}'", true)
-          parts.insert(z + 1, (", ", false))
-          parts.insert(z + 2, (s"'${zm.group(4)}'", true))
-          if (z + 3 < parts.length) {
-            val (after, afterLit) = parts(z + 3)
-            parts(z + 3) = (")" + after, afterLit)
-          } else parts += ((")", false))
-          z += 2
-        }
-      }
-      z += 1
-    }
+    // values use the TimestampTz struct emulation explicitly.
+    when("timestamp")(cre(s"(?i)\\bTIMESTAMP\\s*$LitIdx").replaceAllIn(_, m =>
+      q(zonedLitRe.findFirstMatchIn(lex.token(m.group(1).toInt)) match {
+        case Some(zm) =>
+          s"to_utc_timestamp(TIMESTAMP ${lex.lit(zm.group(1))}, ${lex.lit(zm.group(4))})"
+        case None => m.matched
+      })))
 
     // Typed literals Spark lacks (grammar `SqlBase.g4` typeConstructor;
     // reference types REAL and DECIMAL): `REAL '1.0'` →
     // `CAST('1.0' AS FLOAT)`; `DECIMAL '2.0'` → CAST to the
     // decimal type the reference infers FROM THE LITERAL — precision =
     // digit count, scale = digits after the point (SqlBase: decimal
-    // literal typing). The literal is its own segment, so this is a
-    // cross-segment wrap. `VARCHAR 'x'` → CAST AS STRING; the integer
+    // literal typing). `VARCHAR 'x'` → CAST AS STRING; the integer
     // family (`SMALLINT '3'` etc.) → CAST to the named type. DOUBLE
     // 'x' too: Spark's typed-literal grammar only covers
     // date/time/interval/binary, not numerics.
-    val typedLitRe =
-      cre(("(?i)\\b(REAL|DECIMAL|VARCHAR|CHAR|TINYINT|SMALLINT|INTEGER|BIGINT|" +
-        "DOUBLE|BOOLEAN|TIME|DATE|UUID|IPADDRESS|JSON)\\s*$"))
-    var tl = 0
-    while (tl + 2 < parts.length) {
-      val (seg, isLit) = parts(tl)
-      if (!isLit && parts(tl + 1)._2) {
-        typedLitRe.findFirstMatchIn(seg).foreach { m =>
-          val lit = parts(tl + 1)._1
-          val body = lit.substring(1, lit.length - 1)
-          if (m.group(1).equalsIgnoreCase("JSON")) {
-            // JSON 'x' literal → validated canonical JSON text on the
-            // JSON↦VARCHAR mapping (invalid literals raise, like the
-            // reference's INVALID_LITERAL); folded at runtime by
-            // ConstantFolding since json_parse is deterministic
-            parts(tl) = (seg.substring(0, m.start) + "json_parse(", false)
-            val (after2, afterLit2) = parts(tl + 2)
-            parts(tl + 2) = (")" + after2, afterLit2)
-          } else if (m.group(1).equalsIgnoreCase("TIME")) {
-            // TIME 'H:mm:ss[.f…]' literal → the engine's nanos-of-day
-            // BIGINT convention, folded here (it is a constant).
-            // Zoned forms (TIME '… +05:00') pass through untouched for
-            // the TimestampTz emulation layer / fail-loud path.
-            val tm = cre("^(\\d{1,2}):(\\d{2})(?::(\\d{2}))?(\\.\\d+)?$")
-              .findFirstMatchIn(body.trim)
-            tm.foreach { g =>
+    // value-form VARBINARY cast of a UUID / IPADDRESS typed literal
+    // folds to the 16-byte hex literal here (constant, VALUES-safe) —
+    // reference TestUuidOperators/TestIpAddressOperators varbinary
+    // rows expect the value bytes, not text bytes
+    when("varbinary")(uuidBinCastRe.replaceAllIn(_, m => {
+      val b = body(m.group(2))
+      val bytes =
+        if (m.group(1).equalsIgnoreCase("UUID"))
+          graft.functions.UuidIpCompat.uuidBytes(graft.functions.UuidIpCompat.uuidCanon(b))
+        else graft.functions.UuidIpCompat.ipBytes(graft.functions.UuidIpCompat.ipCanon(b))
+      q("X" + lex.lit(bytes.map(x => f"${x & 0xff}%02X").mkString))
+    }))
+    out = typedLitRe.replaceAllIn(out, m => {
+      val lit = m.matched.substring(m.group(1).length)
+      val b = body(m.group(3))
+      val rewritten: String = m.group(2).toUpperCase match {
+        case "JSON" =>
+          // JSON 'x' literal → validated canonical JSON text on the
+          // JSON↦VARCHAR mapping (invalid literals raise, like the
+          // reference's INVALID_LITERAL); folded at runtime by
+          // ConstantFolding since json_parse is deterministic
+          s"json_parse($lit)"
+        case "TIME" =>
+          // TIME 'H:mm:ss[.f…]' literal → the engine's nanos-of-day
+          // BIGINT convention, folded here (it is a constant).
+          // Zoned forms (TIME '… +05:00') pass through untouched for
+          // the TimestampTz emulation layer / fail-loud path.
+          cre("^(\\d{1,2}):(\\d{2})(?::(\\d{2}))?(\\.\\d+)?$").findFirstMatchIn(b.trim) match {
+            case Some(g) =>
               val h = g.group(1).toLong; val mi = g.group(2).toLong
               val s = Option(g.group(3)).map(_.toLong).getOrElse(0L)
               val frac = Option(g.group(4))
                 .map(f => (f.drop(1).padTo(9, '0').take(9)).toLong).getOrElse(0L)
               val nanos = ((h * 3600 + mi * 60 + s) * 1000000000L) + frac
-              parts(tl) = (seg.substring(0, m.start), false)
-              parts(tl + 1) = (s"CAST($nanos AS BIGINT)", false)
-            }
-            // not a plain time body: leave the segment untouched
-          } else if (m.group(1).equalsIgnoreCase("DATE")) {
-            // reference DATE literals allow 1+ year digits with
-            // leading zeros (type/TestDate.java: DATE '13-2-2' →
-            // 0013-02-02, '02013-02-02' → 2013) and surrounding
-            // whitespace; Spark's parser requires a 4-digit year, so
-            // canonicalize here. Invalid calendar dates raise at
-            // translate time like the reference's INVALID_LITERAL.
-            // Shapes outside the y-m-d form (3-digit months, intra
-            // whitespace, huge years) pass through for Spark to judge.
-            val dre = cre("^(\\d{1,5})-(\\d{1,2})-(\\d{1,2})$")
-            dre.findFirstMatchIn(body.trim).foreach { g =>
-              val y = g.group(1).replaceFirst("^0+(?=\\d)", "")
-              if (y.length <= 4) {
-                val (yi, mo, dy) = (y.toInt, g.group(2).toInt, g.group(3).toInt)
-                try java.time.LocalDate.of(yi, mo, dy)
-                catch {
-                  case _: java.time.DateTimeException =>
-                    throw new IllegalArgumentException(
-                      s"'$body' is not a valid date literal")
-                }
-                parts(tl + 1) = (f"'$yi%04d-$mo%02d-$dy%02d'", true)
+              s"CAST($nanos AS BIGINT)"
+            case None => m.matched
+          }
+        case "DATE" =>
+          // reference DATE literals allow 1+ year digits with
+          // leading zeros (type/TestDate.java: DATE '13-2-2' →
+          // 0013-02-02, '02013-02-02' → 2013) and surrounding
+          // whitespace; Spark's parser requires a 4-digit year, so
+          // canonicalize here. Invalid calendar dates raise at
+          // translate time like the reference's INVALID_LITERAL.
+          // Shapes outside the y-m-d form (3-digit months, intra
+          // whitespace, huge years) pass through for Spark to judge.
+          cre("^(\\d{1,5})-(\\d{1,2})-(\\d{1,2})$").findFirstMatchIn(b.trim)
+            .map(g => (g.group(1).replaceFirst("^0+(?=\\d)", ""), g))
+            .filter(_._1.length <= 4) match {
+            case Some((y, g)) =>
+              val (yi, mo, dy) = (y.toInt, g.group(2).toInt, g.group(3).toInt)
+              try java.time.LocalDate.of(yi, mo, dy)
+              catch {
+                case _: java.time.DateTimeException =>
+                  throw new IllegalArgumentException(
+                    s"'$b' is not a valid date literal")
               }
-            }
-          } else if (m.group(1).equalsIgnoreCase("UUID") ||
-              m.group(1).equalsIgnoreCase("IPADDRESS")) {
-            // string-emulated types canonicalize AT TRANSLATE TIME
-            // (lowercase UUID / RFC 5952 IPADDRESS — UuidIpCompat):
-            // the operand IS a literal, and folding it here keeps the
-            // result usable inside VALUES inline tables, where UDF
-            // calls are not evaluable. Invalid literals raise like the
-            // reference's INVALID_LITERAL.
-            val isUuid = m.group(1).equalsIgnoreCase("UUID")
-            val canon =
-              if (isUuid) graft.functions.UuidIpCompat.uuidCanon(body)
-              else graft.functions.UuidIpCompat.ipCanon(body)
-            val pre = seg.substring(0, m.start)
-            // value-form VARBINARY cast of the typed literal folds to
-            // the 16-byte hex literal here (constant, VALUES-safe) —
-            // reference TestUuidOperators/TestIpAddressOperators
-            // varbinary rows expect the value bytes, not text bytes
-            val castM = cre("(?i)\\b(?:TRY_)?CAST\\s*\\(\\s*$").findFirstMatchIn(pre)
-            val afterM =
-              if (tl + 2 < parts.length && !parts(tl + 2)._2)
-                cre("(?i)^\\s*AS\\s+VARBINARY\\s*\\)")
-                  .findFirstMatchIn(parts(tl + 2)._1)
-              else None
-            if (castM.isDefined && afterM.isDefined) {
-              val bytes =
-                if (isUuid) graft.functions.UuidIpCompat.uuidBytes(canon)
-                else graft.functions.UuidIpCompat.ipBytes(canon)
-              val hex = bytes.map(b => f"${b & 0xff}%02X").mkString
-              parts(tl) = (pre.substring(0, castM.get.start) + "X", false)
-              parts(tl + 1) = ("'" + hex + "'", true)
-              val (after2, afterLit2) = parts(tl + 2)
-              parts(tl + 2) = (after2.substring(afterM.get.end), afterLit2)
-            } else {
-              parts(tl) = (pre, false)
-              parts(tl + 1) = ("'" + canon.replace("'", "''") + "'", true)
-            }
-          } else {
-          val target = m.group(1).toUpperCase match {
+              m.group(1) + lex.lit(f"$yi%04d-$mo%02d-$dy%02d")
+            case None => m.matched
+          }
+        case kw @ ("UUID" | "IPADDRESS") =>
+          // string-emulated types canonicalize AT TRANSLATE TIME
+          // (lowercase UUID / RFC 5952 IPADDRESS — UuidIpCompat):
+          // the operand IS a literal, and folding it here keeps the
+          // result usable inside VALUES inline tables, where UDF
+          // calls are not evaluable. Invalid literals raise like the
+          // reference's INVALID_LITERAL.
+          lex.lit(
+            if (kw == "UUID") graft.functions.UuidIpCompat.uuidCanon(b)
+            else graft.functions.UuidIpCompat.ipCanon(b))
+        case kw =>
+          val target = kw match {
             case "REAL" => "FLOAT"
-            // UUID/IPADDRESS: the engine's mapping for these reference
-            // types is STRING (typeRenames) — the literal text carries
-            // the value verbatim
-            case "VARCHAR" | "CHAR" | "UUID" | "IPADDRESS" => "STRING"
-            case t @ ("TINYINT" | "SMALLINT" | "INTEGER" | "BIGINT" | "DOUBLE" |
-                      "BOOLEAN") => t
+            case "VARCHAR" | "CHAR" => "STRING"
+            case "TINYINT" | "SMALLINT" | "INTEGER" | "BIGINT" | "DOUBLE" |
+                 "BOOLEAN" => kw
             case _ =>
-              val digits = body.count(_.isDigit)
-              val dot = body.indexOf('.')
-              val scale = if (dot < 0) 0 else body.length - dot - 1
+              val digits = b.count(_.isDigit)
+              val dot = b.indexOf('.')
+              val scale = if (dot < 0) 0 else b.length - dot - 1
               s"DECIMAL(${math.max(digits, 1)}, $scale)"
           }
-          parts(tl) = (seg.substring(0, m.start) + "CAST(", false)
-          val (after, afterLit) = parts(tl + 2)
-          parts(tl + 2) = (s" AS $target)" + after, afterLit)
-          }
-        }
+          s"CAST($lit AS $target)"
       }
-      tl += 1
-    }
+      q(rewritten)
+    })
 
     // SQL/JSON 2016 RETURNING clause (grammar `SqlBase.g4:540-563`):
-    // json_value(x, 'path' RETURNING t) → CAST(json_value(x, 'path')
-    // AS t); the per-segment type-rename pass below then maps reference
-    // type spellings (varchar→string …). Only the simple
-    // trailing-RETURNING form is handled; ON EMPTY / ON ERROR clauses
-    // pass through for Spark to reject loudly rather than mistranslate.
-    val jsonFnRe = cre("(?i)\\b(json_value|json_query)(\\s*\\(\\s*[^()]*)$")
-    val returningRe = cre("(?i)^\\s*RETURNING\\s+([A-Za-z0-9_]+(?:\\s*\\(\\s*\\d+(?:\\s*,\\s*\\d+)?\\s*\\))?)\\s*\\)")
-    var m = 2
-    while (m < parts.length) {
-      val (after, afterIsLit) = parts(m)
-      if (!afterIsLit && parts(m - 1)._2) {
-        returningRe.findFirstMatchIn(after).foreach { rm =>
-          // walk back to the segment holding the still-open
-          // json_value(/json_query( call; intervening segments must be
-          // string literals (the json/path arguments) or paren-free
-          // glue (", ") so the parens we bracket are really this call's
-          var j = m - 1
-          while (j >= 0 && (parts(j)._2 ||
-            (!parts(j)._1.contains("(") && !parts(j)._1.contains(")") &&
-              jsonFnRe.findFirstMatchIn(parts(j)._1).isEmpty))) j -= 1
-          if (j >= 0 && !parts(j)._2) {
-            jsonFnRe.findFirstMatchIn(parts(j)._1).foreach { fm =>
-              // TRY_CAST, not CAST: a RETURNING cast failure is the
-              // reference's ON ERROR condition, whose default is NULL
-              // (TestJsonValueFunction: 'lax 1000' RETURNING tinyint
-              // → NULL, never a wrapped value or an ANSI error)
-              parts(j) = (parts(j)._1.substring(0, fm.start) + "TRY_CAST(" +
-                fm.group(1).toLowerCase + fm.group(2), false)
-              parts(m) = (") AS " + rm.group(1) + ")" +
-                after.substring(rm.end), false)
-            }
-          }
-        }
-      }
-      m += 1
-    }
+    // json_value(x, 'path' RETURNING t) → TRY_CAST(json_value(x,
+    // 'path') AS t); the rename pass below then maps reference type
+    // spellings (varchar→string …). Only the simple trailing-RETURNING
+    // form is handled; ON EMPTY / ON ERROR clauses pass through for
+    // SqlJsonClauses. TRY_CAST, not CAST: a RETURNING cast failure is
+    // the reference's ON ERROR condition, whose default is NULL
+    // (TestJsonValueFunction: 'lax 1000' RETURNING tinyint → NULL,
+    // never a wrapped value or an ANSI error)
+    when("returning")(returningRe.replaceAllIn(_, m =>
+      q(s"TRY_CAST(${m.group(1).toLowerCase}${m.group(2)}) AS ${m.group(3)})")))
+    out
+  }
 
-    val rendered = parts.map {
-      // String literals: the reference dialect has NO backslash-escape
-      // processing (standard SQL — only '' escapes a quote), but
-      // Spark's parser eats backslash escapes ('\b' → backspace, '\d'
-      // → d), silently corrupting every regex literal. Double each
-      // backslash so the literal reaches Spark character-for-character.
-      case (seg, true) => (seg.replace("\\", "\\\\"), true)
-      case (seg, false) =>
-        var out = seg
-        // cheap lowercase containment precheck before each rename
-        // regex — queries use a handful of the ~60 renamable names, so
-        // skipping the misses cuts most of the per-segment regex
-        // executions; the lowered view refreshes only when a rename
-        // actually fires (a fired rename can introduce later names)
-        var lowered = out.toLowerCase
-        for ((from, to) <- renames if from != to)
-          if (lowered.contains(from)) {
-            out = repAll(out, s"(?i)\\b$from\\s*\\(", s"$to(")
-            lowered = out.toLowerCase
-          }
-        // zero-arg constants: consume the parens entirely
-        out = repAll(out, "(?i)\\bnan\\s*\\(\\s*\\)", "double('NaN')")
-        out = repAll(out, "(?i)\\binfinity\\s*\\(\\s*\\)", "double('Infinity')")
-        // utf8 codecs: Spark's decode/encode require an explicit charset.
-        // Conservative single-argument form (no nested parens/literals/
-        // commas — the reference's two-arg from_utf8(x, repl) form passes
-        // through untouched rather than mistranslating).
-        out = repAll(out, 
-          "(?i)\\bfrom_utf8\\s*\\(([^(),']*)\\)", "decode($1, 'UTF-8')")
-        out = repAll(out, 
-          "(?i)\\bto_utf8\\s*\\(([^(),']*)\\)", "encode($1, 'UTF-8')")
-        // bitwise scalar fns → Spark's infix operators; operand groups
-        // exclude commas so a malformed extra-arg call passes through
-        // for Spark to reject instead of silently dropping arguments
-        out = repAll(out, 
-          "(?i)\\bbitwise_and\\s*\\(([^(),']+),([^(),']+)\\)", "($1 & $2)")
-        out = repAll(out, 
-          "(?i)\\bbitwise_or\\s*\\(([^(),']+),([^(),']+)\\)", "($1 | $2)")
-        out = repAll(out, 
-          "(?i)\\bbitwise_xor\\s*\\(([^(),']+),([^(),']+)\\)", "($1 ^ $2)")
-        out = repAll(out, 
-          "(?i)\\bbitwise_not\\s*\\(([^(),']+)\\)", "~($1)")
-        // EXTRACT field spellings: the reference's DOW/DAY_OF_WEEK are
-        // ISO (Monday=1); Spark's DOW is Sunday=0, so both route to
-        // DOW_ISO. Underscore spellings map onto Spark's field names.
-        out = repAll(out, 
-          "(?i)\\bextract\\s*\\(\\s*(?:dow|day_of_week)\\s+from\\b",
-          "extract(DOW_ISO FROM")
-        out = repAll(out, 
-          "(?i)\\bextract\\s*\\(\\s*(?:doy|day_of_year)\\s+from\\b",
-          "extract(DOY FROM")
-        out = repAll(out, 
-          "(?i)\\bextract\\s*\\(\\s*day_of_month\\s+from\\b",
-          "extract(DAY FROM")
-        out = repAll(out, 
-          "(?i)\\bextract\\s*\\(\\s*(?:yow|year_of_week)\\s+from\\b",
-          "extract(YEAROFWEEK FROM")
-        // standard empty grouping set `GROUP BY ()` (reference grammar
-        // groupingSet): Spark parses only the GROUPING SETS spelling
-        out = repAll(out, 
-          "(?i)\\bGROUP\\s+BY\\s*\\(\\s*\\)", "GROUP BY GROUPING SETS (())")
-        // bare NULL as a predicate (`WHERE NULL`): the reference types
-        // it UNKNOWN and drops every row; Spark refuses the VOID
-        // filter, so type it explicitly
-        out = repAll(out, 
-          "(?i)\\b(WHERE|HAVING)\\s+NULL\\b(?!\\s*(IN|NOT|IS|=|<|>|\\+|-))",
-          "$1 CAST(NULL AS BOOLEAN)")
-        // CAST(x AS JSON) renders the VALUE as JSON text (see
-        // castAsJsonPass) — shield it from the json→string rename
-        // with a sentinel the pass consumes
-        out = repAll(out, "(?i)\\bAS\\s+JSON\\s*\\)", "AS GRAFT_JSON_CAST)")
-        // CAST(x AS UUID / IPADDRESS) canonicalize + validate on the
-        // string emulation (castAsUuidIpPass) — shield from the
-        // uuid/ipaddress→string renames with sentinels the pass eats
-        out = repAll(out, "(?i)\\bAS\\s+UUID\\s*\\)", "AS GRAFT_UUID_CAST)")
-        out = repAll(out, "(?i)\\bAS\\s+IPADDRESS\\s*\\)", "AS GRAFT_IP_CAST)")
-        // length-parametric character casts carry VALUE semantics in
-        // the reference (TestCharacterStringCasts): CAST AS VARCHAR(n)
-        // truncates to n, CAST AS CHAR(n) truncates AND pads to n,
-        // bare CHAR is CHAR(1) — materialized by castCharLenPass;
-        // sentinels shield the length from the plain-erasure renames
-        out = repAll(out, "(?i)\\bAS\\s+VARCHAR\\s*\\(\\s*(\\d+)\\s*\\)\\s*\\)",
-          "AS GRAFT_VCAST_$1)")
-        out = repAll(out, "(?i)\\bAS\\s+CHAR\\s*\\(\\s*(\\d+)\\s*\\)\\s*\\)",
-          "AS GRAFT_CCAST_$1)")
-        out = repAll(out, "(?i)\\bAS\\s+CHAR\\s*\\)", "AS GRAFT_CCAST_1)")
+  /** Function renames, operator sugar and type spellings: whole-word
+    * regexes over canonical text. A character class that must not
+    * reach across a string literal excludes its sentinel mark. */
+  private def renamePass(sql: String): String = {
+    var out = sql
+    // cheap lowercase containment precheck before each rename
+    // regex — queries use a handful of the ~60 renamable names, so
+    // skipping the misses cuts most of the regex
+    // executions; the lowered view refreshes only when a rename
+    // actually fires (a fired rename can introduce later names)
+    var lowered = out.toLowerCase
+    for ((from, to) <- renames if from != to)
+      if (lowered.contains(from)) {
+        out = repAll(out, s"(?i)\\b$from\\s*\\(", s"$to(")
         lowered = out.toLowerCase
-        for ((from, to) <- typeRenames if from != to)
-          if (lowered.contains(from)) {
-            // a length/precision parameter is dropped with the rename:
-            // CAST(x AS VARCHAR(255)) → CAST(x AS string) — Spark's
-            // string is unbounded, and `string(255)` does not parse
-            out = repAll(out, s"(?i)\\bAS\\s+$from\\s*\\(\\s*\\d+\\s*\\)", s"AS $to")
-            out = repAll(out, s"(?i)\\bAS\\s+$from\\b", s"AS $to")
-            out = repAll(out, s"(?i)\\b$from\\s*'", s"$to '") // typed literals
-            lowered = out.toLowerCase
-          }
-        // TRY(expr) → try_(...) has no direct generic form; map the
-        // common arithmetic case TRY(a / b) → try_divide(a, b). The
-        // denominator may be a single parenthesized group. Documented
-        // divergence: on DOUBLE operands the reference's TRY is a
-        // no-op (IEEE division never errors, so x/0e0 → ±Infinity/
-        // NaN) while try_divide yields NULL; plain `/` on doubles DOES
-        // carry the IEEE contract (plans/IeeeDoubleDivide.scala).
-        out = repAll(out, 
-          "(?i)\\bTRY\\s*\\(\\s*([^()/,]+)/\\s*(\\([^()]*\\)|[^(),]+)\\s*\\)",
-          "try_divide($1,$2)")
-        // Quantified comparison predicates are handled whole-text by
-        // quantifiedPass (constructorPass below): the r13 shortcuts
-        // `= ANY` → IN and `<> ALL` → NOT IN were REMOVED because
-        // Spark's IN/NOT IN (subquery) in a PROJECTION context yields
-        // FALSE where the standard (and the reference) yield NULL —
-        // the reference's own quantified-comparison corner-case
-        // vectors caught this (ReferenceSqlVectorsSpec). The generic
-        // CASE rewrite is null-correct in every context.
-        (out, false)
-    }
-    constructorPass(rendered.toSeq, restoreIdents)
+      }
+    // zero-arg constants: consume the parens entirely
+    out = repAll(out, "(?i)\\bnan\\s*\\(\\s*\\)", "double('NaN')")
+    out = repAll(out, "(?i)\\binfinity\\s*\\(\\s*\\)", "double('Infinity')")
+    // utf8 codecs: Spark's decode/encode require an explicit charset.
+    // Conservative single-argument form (no nested parens/literals/
+    // commas — the reference's two-arg from_utf8(x, repl) form passes
+    // through untouched rather than mistranslating).
+    out = repAll(out,
+      "(?i)\\bfrom_utf8\\s*\\(([^(),'\uE001]*)\\)", "decode($1, 'UTF-8')")
+    out = repAll(out,
+      "(?i)\\bto_utf8\\s*\\(([^(),'\uE001]*)\\)", "encode($1, 'UTF-8')")
+    // bitwise scalar fns → Spark's infix operators; operand groups
+    // exclude commas so a malformed extra-arg call passes through
+    // for Spark to reject instead of silently dropping arguments
+    out = repAll(out,
+      "(?i)\\bbitwise_and\\s*\\(([^(),'\uE001]+),([^(),'\uE001]+)\\)", "($1 & $2)")
+    out = repAll(out,
+      "(?i)\\bbitwise_or\\s*\\(([^(),'\uE001]+),([^(),'\uE001]+)\\)", "($1 | $2)")
+    out = repAll(out,
+      "(?i)\\bbitwise_xor\\s*\\(([^(),'\uE001]+),([^(),'\uE001]+)\\)", "($1 ^ $2)")
+    out = repAll(out,
+      "(?i)\\bbitwise_not\\s*\\(([^(),'\uE001]+)\\)", "~($1)")
+    // EXTRACT field spellings: the reference's DOW/DAY_OF_WEEK are
+    // ISO (Monday=1); Spark's DOW is Sunday=0, so both route to
+    // DOW_ISO. Underscore spellings map onto Spark's field names.
+    out = repAll(out,
+      "(?i)\\bextract\\s*\\(\\s*(?:dow|day_of_week)\\s+from\\b",
+      "extract(DOW_ISO FROM")
+    out = repAll(out,
+      "(?i)\\bextract\\s*\\(\\s*(?:doy|day_of_year)\\s+from\\b",
+      "extract(DOY FROM")
+    out = repAll(out,
+      "(?i)\\bextract\\s*\\(\\s*day_of_month\\s+from\\b",
+      "extract(DAY FROM")
+    out = repAll(out,
+      "(?i)\\bextract\\s*\\(\\s*(?:yow|year_of_week)\\s+from\\b",
+      "extract(YEAROFWEEK FROM")
+    // standard empty grouping set `GROUP BY ()` (reference grammar
+    // groupingSet): Spark parses only the GROUPING SETS spelling
+    out = repAll(out,
+      "(?i)\\bGROUP\\s+BY\\s*\\(\\s*\\)", "GROUP BY GROUPING SETS (())")
+    // bare NULL as a predicate (`WHERE NULL`): the reference types
+    // it UNKNOWN and drops every row; Spark refuses the VOID
+    // filter, so type it explicitly
+    out = repAll(out,
+      "(?i)\\b(WHERE|HAVING)\\s+NULL\\b(?!\\s*(IN|NOT|IS|=|<|>|\\+|-))",
+      "$1 CAST(NULL AS BOOLEAN)")
+    // CAST(x AS JSON) renders the VALUE as JSON text (see
+    // castAsJsonPass) — shield it from the json→string rename
+    // with a sentinel the pass consumes
+    out = repAll(out, "(?i)\\bAS\\s+JSON\\s*\\)", "AS GRAFT_JSON_CAST)")
+    // CAST(x AS UUID / IPADDRESS) canonicalize + validate on the
+    // string emulation (castAsUuidIpPass) — shield from the
+    // uuid/ipaddress→string renames with sentinels the pass eats
+    out = repAll(out, "(?i)\\bAS\\s+UUID\\s*\\)", "AS GRAFT_UUID_CAST)")
+    out = repAll(out, "(?i)\\bAS\\s+IPADDRESS\\s*\\)", "AS GRAFT_IP_CAST)")
+    // length-parametric character casts carry VALUE semantics in
+    // the reference (TestCharacterStringCasts): CAST AS VARCHAR(n)
+    // truncates to n, CAST AS CHAR(n) truncates AND pads to n,
+    // bare CHAR is CHAR(1) — materialized by castCharLenPass;
+    // sentinels shield the length from the plain-erasure renames
+    out = repAll(out, "(?i)\\bAS\\s+VARCHAR\\s*\\(\\s*(\\d+)\\s*\\)\\s*\\)",
+      "AS GRAFT_VCAST_$1)")
+    out = repAll(out, "(?i)\\bAS\\s+CHAR\\s*\\(\\s*(\\d+)\\s*\\)\\s*\\)",
+      "AS GRAFT_CCAST_$1)")
+    out = repAll(out, "(?i)\\bAS\\s+CHAR\\s*\\)", "AS GRAFT_CCAST_1)")
+    lowered = out.toLowerCase
+    for ((from, to) <- typeRenames if from != to)
+      if (lowered.contains(from)) {
+        // a length/precision parameter is dropped with the rename:
+        // CAST(x AS VARCHAR(255)) → CAST(x AS string) — Spark's
+        // string is unbounded, and `string(255)` does not parse
+        out = repAll(out, s"(?i)\\bAS\\s+$from\\s*\\(\\s*\\d+\\s*\\)", s"AS $to")
+        out = repAll(out, s"(?i)\\bAS\\s+$from\\b", s"AS $to")
+        out = repAll(out, s"(?i)\\b$from\\s*'", s"$to '") // typed literals
+        lowered = out.toLowerCase
+      }
+    // TRY(expr) → try_(...) has no direct generic form; map the
+    // common arithmetic case TRY(a / b) → try_divide(a, b). The
+    // denominator may be a single parenthesized group. Documented
+    // divergence: on DOUBLE operands the reference's TRY is a
+    // no-op (IEEE division never errors, so x/0e0 → ±Infinity/
+    // NaN) while try_divide yields NULL; plain `/` on doubles DOES
+    // carry the IEEE contract (plans/IeeeDoubleDivide.scala).
+    out = repAll(out,
+      "(?i)\\bTRY\\s*\\(\\s*([^()/,\uE001]+)/\\s*(\\([^()\uE001]*\\)|[^(),\uE001]+)\\s*\\)",
+      "try_divide($1,$2)")
+    // Quantified comparison predicates are handled whole-text by
+    // quantifiedPass (constructorPass below): the r13 shortcuts
+    // `= ANY` → IN and `<> ALL` → NOT IN were REMOVED because
+    // Spark's IN/NOT IN (subquery) in a PROJECTION context yields
+    // FALSE where the standard (and the reference) yield NULL —
+    // the reference's own quantified-comparison corner-case
+    // vectors caught this (ReferenceSqlVectorsSpec). The generic
+    // CASE rewrite is null-correct in every context.
+    out
   }
 
   /** Collection-constructor sugar (grammar `SqlBase.g4` primaryExpression
@@ -738,22 +543,16 @@ object Dialect {
     * comparison semantics), and the two-array-literal map constructor
     * `MAP(ARRAY[…], ARRAY[…])` → `map_from_arrays(array(…), array(…))`.
     *
-    * ARRAY brackets nest and may span string-literal segments
-    * (`ARRAY['a', 'b']`), so the pass collapses the segment list into
-    * one string with literals swapped for bracket-free sentinels, runs
-    * a bracket-matching scan (a stack distinguishes ARRAY-literal `[`
-    * from subscript `[`, which is left alone — both engines index
-    * arrays 1-based… Spark does NOT, so subscripts deliberately pass
-    * through for Spark to evaluate 0-based and the user to write
-    * element_at, which IS 1-based in both), then re-expands the
-    * sentinels. `CAST(x AS ROW(…))` targets translate to Spark
+    * ARRAY brackets nest and may hold string literals (`ARRAY['a',
+    * 'b']`), which are bracket-free sentinels on canonical text, so one
+    * bracket-matching scan does it (a stack distinguishes ARRAY-literal
+    * `[` from subscript `[`, which subscriptPass lowers onto
+    * element_at). `CAST(x AS ROW(…))` targets translate to Spark
     * `STRUCT<…>` spellings via rowTypePass/sparkType (r14; the
     * pre-r14 posture was fail-loud). */
   /** General quantified comparison predicates `x op ALL|ANY|SOME
-    * (subquery)` (grammar `SqlBase.g4` comparisonQuantifier) beyond
-    * the two IN-rewritable spellings the segment pass already handled
-    * (`= ANY` → IN, `<> ALL` → NOT IN). Spark has no quantified
-    * syntax, so each remaining form lowers onto a three-valued CASE
+    * (subquery)` (grammar `SqlBase.g4` comparisonQuantifier). Spark
+    * has no quantified syntax, so each form lowers onto a three-valued CASE
     * over counting scalar subqueries, reproducing SQL:2016 §8.9
     * exactly (replayed against the reference's own 72
     * quantified-comparison corner-case vectors in
@@ -791,19 +590,10 @@ object Dialect {
       guard += 1
       val mm = m.get
       val outer = mm.group(1).toUpperCase.startsWith("LEFT")
-      var depth = 1
-      var i = mm.end
-      var topComma = false
-      while (i < out.length && depth > 0) {
-        val c = out.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (c == ',' && depth == 1) topComma = true
-        i += 1
-      }
-      require(depth == 0, s"unbalanced UNNEST in: $canon0")
-      val args = out.substring(mm.end, i - 1)
-      val tail = out.substring(i)
+      val close = closeParen(out, mm.end - 1)
+      val args = out.substring(mm.end, close)
+      val topComma = splitTopLevel(args, ',').length > 1
+      val tail = out.substring(close + 1)
       val aliasRe = cre("(?is)^\\s*(?:AS\\s+)?([A-Za-z_]\\w*)\\s*\\(([^)]*)\\)")
       val am = aliasRe.findFirstMatchIn(tail)
       val ordinality = cre("(?is)^\\s*WITH\\s+ORDINALITY").findFirstIn(tail).isDefined
@@ -863,6 +653,9 @@ object Dialect {
     * backward from the IN at its own paren depth to the nearest clause
     * keyword; SELECT and (GROUP/ORDER) BY are value contexts, WHERE/
     * HAVING/ON/WHEN are filter contexts. */
+  private val clauseKwRe =
+    cre("(?i)(SELECT|BY|WHERE|HAVING|ON|WHEN|FROM|JOIN|THEN|ELSE)\\b")
+
   private def projectedInPass(canon0: String): String = {
     val re = cre("(?i)\\b(NOT\\s+)?IN\\s*\\(\\s*SELECT\\b")
     var out = canon0
@@ -874,23 +667,10 @@ object Dialect {
       if (m.isEmpty) return out
       val start = from + m.get.start
       // nearest preceding clause keyword at the SAME paren depth
-      var depth = 0
-      var i = start - 1
-      var clause: String = null
-      while (i >= 0 && clause == null) {
-        val c = out.charAt(i)
-        if (c == ')') depth += 1
-        else if (c == '(') depth -= 1
-        else if (depth == 0 && c.isLetter) {
-          var s = i
-          while (s > 0 && out.charAt(s - 1).isLetter) s -= 1
-          val word = out.substring(s, i + 1).toUpperCase
-          if (Set("SELECT", "BY", "WHERE", "HAVING", "ON", "WHEN",
-              "FROM", "JOIN", "THEN", "ELSE")(word)) clause = word
-          i = s
-        }
-        i -= 1
-      }
+      val at = SqlLex.lastTopLevelIndexOf(out, clauseKwRe, openParen(out, start) + 1, start)
+      val clause =
+        if (at < 0) null
+        else clauseKwRe.findPrefixMatchOf(out.substring(at)).get.group(1).toUpperCase
       // THEN/ELSE are VALUE positions: the CASE result carries the IN's
       // NULL through (unlike WHEN, where NULL and FALSE both skip the
       // branch). The quantified rewrite is 3-valued-correct in every
@@ -908,6 +688,10 @@ object Dialect {
     out
   }
 
+  /** A character of an identifier, qualified name or sentinel. */
+  private def operandChar(c: Char): Boolean =
+    c.isLetterOrDigit || c == '_' || c == '.' || SqlLex.isSentinel(c)
+
   private def quantifiedPass(canon0: String): String = {
     val re = cre("(?i)(<=|>=|<>|!=|=|<|>)\\s*(ALL|ANY|SOME)\\s*\\(")
     var out = canon0
@@ -920,41 +704,18 @@ object Dialect {
       val quant = mm.group(2).toUpperCase match {
         case "SOME" => "ANY"; case q => q
       }
-      // matching close paren of the subquery (sentinels hide literals,
-      // so every paren in sight is structural)
-      var depth = 1
-      var i = mm.end
-      while (i < out.length && depth > 0) {
-        val c = out.charAt(i)
-        if (c == '(') depth += 1 else if (c == ')') depth -= 1
-        i += 1
-      }
-      require(depth == 0, s"unbalanced quantified subquery in: $canon0")
+      val i = closeParen(out, mm.end - 1) + 1
       val sub = out.substring(mm.end, i - 1)
       // LHS operand: backward scan
       var e = mm.start
       while (e > 0 && out.charAt(e - 1).isWhitespace) e -= 1
       var s0 = e
       if (e > 0 && out.charAt(e - 1) == ')') {
-        var d = 0
-        var k = e - 1
-        var done = false
-        while (k >= 0 && !done) {
-          val c = out.charAt(k)
-          if (c == ')') d += 1
-          else if (c == '(') { d -= 1; if (d == 0) done = true }
-          if (!done) k -= 1
-        }
-        s0 = k
+        s0 = openParen(out, e - 1)
         while (s0 > 0 && (out.charAt(s0 - 1).isLetterOrDigit ||
           out.charAt(s0 - 1) == '_')) s0 -= 1
       } else {
-        while (s0 > 0 && {
-          val c = out.charAt(s0 - 1)
-          c.isLetterOrDigit || c == '_' || c == '.' ||
-            c == '\u0001' || c == '\u0002' ||
-            c == '\uE005' || c == '\uE006'
-        }) s0 -= 1
+        while (s0 > 0 && operandChar(out.charAt(s0 - 1))) s0 -= 1
       }
       // extend the captured operand left over an arithmetic chain
       // (`t.x + u.x > ALL (...)` — reference TestJoin
@@ -972,30 +733,16 @@ object Dialect {
           var p2 = p - 1
           while (p2 > 0 && out.charAt(p2 - 1).isWhitespace) p2 -= 1
           if (p2 > 0 && out.charAt(p2 - 1) == ')') {
-            var dp = 0
-            var k2 = p2 - 1
-            var done2 = false
-            while (k2 >= 0 && !done2) {
-              val c = out.charAt(k2)
-              if (c == ')') dp += 1
-              else if (c == '(') { dp -= 1; if (dp == 0) done2 = true }
-              if (!done2) k2 -= 1
-            }
-            var s1 = k2
+            var s1 = openParen(out, p2 - 1)
             while (s1 > 0 && (out.charAt(s1 - 1).isLetterOrDigit ||
               out.charAt(s1 - 1) == '_')) s1 -= 1
             s0 = s1; extend = true
           } else if (p2 > 0 && {
             val c = out.charAt(p2 - 1)
-            c.isLetterOrDigit || c == '_' || c == '.' || c == '\u0002' || c == '\uE006'
+            c.isLetterOrDigit || c == '_' || c == '.' || c == SqlLex.End
           }) {
             var s1 = p2
-            while (s1 > 0 && {
-              val c = out.charAt(s1 - 1)
-              c.isLetterOrDigit || c == '_' || c == '.' ||
-                c == '\u0001' || c == '\u0002' ||
-                c == '\uE005' || c == '\uE006'
-            }) s1 -= 1
+            while (s1 > 0 && operandChar(out.charAt(s1 - 1))) s1 -= 1
             val tok = out.substring(s1, p2).toUpperCase
             if (!kwStop(tok)) { s0 = s1; extend = true }
           }
@@ -1013,10 +760,10 @@ object Dialect {
       // where correlated scalar subqueries are not, e.g. inside a JOIN
       // condition (reference TestJoin
       // testQuantifiedComparisonInJoinCriteria)
-      val litTok = "(?:-?\\d+(?:\\.\\d+)?(?:[eE][+-]?\\d+)?|\\u0001\\d+\\u0002|\\uE005\\d+\\uE006)"
+      val litTok = "(?:-?\\d+(?:\\.\\d+)?(?:[eE][+-]?\\d+)?|[\uE001\uE002]\\d+\uE004)"
       val constList: Option[Seq[String]] =
         if (sub.matches(s"(?is)^\\s*VALUES\\s+$litTok(\\s*,\\s*$litTok)*\\s*$$"))
-          Some(MatchRecognizeSql.splitTopLevel(
+          Some(splitTopLevel(
             repAll(sub, "(?is)^\\s*VALUES", ""), ',').map(_.trim))
         else None
       val rep = constList match {
@@ -1044,20 +791,6 @@ object Dialect {
     out
   }
 
-  /** Matching ')' for the '(' at `open` (canonical text — literals are
-    * sentinels, so every paren is structural). */
-  private def closeParen(s: String, open: Int): Int = {
-    var depth = 1
-    var i = open + 1
-    while (i < s.length && depth > 0) {
-      val c = s.charAt(i)
-      if (c == '(') depth += 1 else if (c == ')') depth -= 1
-      i += 1
-    }
-    require(depth == 0, s"unbalanced parentheses in: $s")
-    i - 1
-  }
-
   /** INNER-join ON conditions carrying an `IN (SELECT …)` subquery
     * (reference TestJoin testInPredicateInJoinCriteria — the subquery
     * may correlate to BOTH join inputs, which Spark's
@@ -1083,78 +816,31 @@ object Dialect {
       val m = joinRe.findFirstMatchIn(out.substring(searchFrom))
       if (m.isEmpty) return out
       val jPos = searchFrom + m.get.start
-      // depth of this JOIN's query block
-      var d = 0
-      var q = 0
-      while (q < jPos) {
-        val c = out.charAt(q)
-        if (c == '(') d += 1 else if (c == ')') d -= 1
-        q += 1
-      }
       // outer/cross joins keep their ON
       val before = out.substring(0, jPos)
       val prevWord = cre("(?is)([A-Za-z_]+)\\s*$").findFirstMatchIn(before)
         .map(_.group(1).toUpperCase).getOrElse("")
       val isInner = !Set("LEFT", "RIGHT", "FULL", "CROSS", "OUTER")(prevWord)
-      // find this join's ON at the same depth (before any stop keyword)
-      var i = jPos + 4
-      var dd = d
-      var onPos = -1
-      while (i < out.length && onPos < 0) {
-        val c = out.charAt(i)
-        if (c == '(') dd += 1
-        else if (c == ')') { dd -= 1; if (dd < d) i = out.length }
-        else if (dd == d && c.isLetter &&
-          (!out.charAt(i - 1).isLetterOrDigit && out.charAt(i - 1) != '_')) {
-          stopRe.findPrefixMatchOf(out.substring(i)).foreach { sm =>
-            if (sm.group(1).equalsIgnoreCase("ON")) onPos = i
-            else i = out.length
-          }
-        }
-        i += 1
+      // the next same-depth stop keyword, or the block's closing paren
+      def stopAt(from: Int): (Int, String) = {
+        val i = SqlLex.clauseEnd(out, stopRe, from)
+        (i, stopRe.findPrefixMatchOf(out.substring(i)).fold("")(_.group(1).toUpperCase))
       }
+      // this join's ON at the same depth (before any other stop keyword)
+      val onPos = stopAt(jPos + 4) match { case (i, "ON") => i; case _ => -1 }
       if (!isInner || onPos < 0) searchFrom = jPos + 4
       else {
-        // condition extent: up to the next same-depth stop keyword or
-        // the block's closing paren
-        var j = onPos + 2
-        var d2 = d
-        var condEnd = out.length
-        while (j < out.length && condEnd == out.length) {
-          val c = out.charAt(j)
-          if (c == '(') d2 += 1
-          else if (c == ')') { d2 -= 1; if (d2 < d) condEnd = j }
-          else if (d2 == d && c.isLetter &&
-            (!out.charAt(j - 1).isLetterOrDigit && out.charAt(j - 1) != '_')) {
-            if (stopRe.findPrefixMatchOf(out.substring(j)).isDefined) condEnd = j
-          }
-          j += 1
-        }
+        val condEnd = stopAt(onPos + 2)._1
         val cond = out.substring(onPos + 2, condEnd)
         if (inSubRe.findFirstIn(cond).isEmpty) searchFrom = condEnd
         else {
           // locate (or create) the block's WHERE after the FROM clause
-          var k = condEnd
-          var d3 = d
-          var wherePos = -1
-          var insertAt = out.length
-          while (k < out.length && wherePos < 0 && insertAt == out.length) {
-            val c = out.charAt(k)
-            if (c == '(') d3 += 1
-            else if (c == ')') { d3 -= 1; if (d3 < d) insertAt = k }
-            else if (d3 == d && c.isLetter &&
-              (!out.charAt(k - 1).isLetterOrDigit && out.charAt(k - 1) != '_')) {
-              stopRe.findPrefixMatchOf(out.substring(k)).foreach { sm =>
-                sm.group(1).toUpperCase match {
-                  case "WHERE" => wherePos = k
-                  case "INNER" | "LEFT" | "RIGHT" | "FULL" | "CROSS" |
-                       "JOIN" | "ON" => () // still in the FROM clause
-                  case _ => insertAt = k
-                }
-              }
-            }
-            k += 1
+          var (k, kw) = stopAt(condEnd)
+          while (Set("INNER", "LEFT", "RIGHT", "FULL", "CROSS", "JOIN", "ON")(kw)) {
+            val next = stopAt(k + 1); k = next._1; kw = next._2
           }
+          val wherePos = if (kw == "WHERE") k else -1
+          val insertAt = k
           out =
             if (wherePos >= 0)
               out.substring(0, onPos) + "ON true " +
@@ -1208,7 +894,7 @@ object Dialect {
       guard += 1
       val open = out.indexOf('(', m.get.start)
       val close = closeParen(out, open)
-      val args = MatchRecognizeSql.splitTopLevel(out.substring(open + 1, close), ',')
+      val args = splitTopLevel(out.substring(open + 1, close), ',')
         .map(_.trim)
       require(args.length == 4,
         s"reduce_agg takes (value, initialState, inputFn, combineFn), got ${args.length} args")
@@ -1247,7 +933,7 @@ object Dialect {
       t.substring(open + 1, closeParen(t, open))
     }
     if (lower.matches("(?s)row\\s*\\(.*")) {
-      val fields = MatchRecognizeSql.splitTopLevel(inner(), ',').map(_.trim)
+      val fields = splitTopLevel(inner(), ',').map(_.trim)
       val fs = fields.zipWithIndex.map { case (f, i) =>
         val sp = f.indexWhere(_.isWhitespace)
         val paren = f.indexOf('(')
@@ -1264,7 +950,7 @@ object Dialect {
     } else if (lower.matches("(?s)array\\s*\\(.*")) {
       s"ARRAY<${sparkType(inner())}>"
     } else if (lower.matches("(?s)map\\s*\\(.*")) {
-      val kv = MatchRecognizeSql.splitTopLevel(inner(), ',').map(_.trim)
+      val kv = splitTopLevel(inner(), ',').map(_.trim)
       require(kv.length == 2, s"MAP type takes (K, V): $t")
       s"MAP<${sparkType(kv(0))}, ${sparkType(kv(1))}>"
     } else {
@@ -1312,22 +998,10 @@ object Dialect {
       guard += 1
       val open = out.indexOf('(', m.get.start(1))
       val close = closeParen(out, open)
-      // bracket-AND-paren-aware top-level split: ARRAY[...] literals
-      // still carry brackets at this point in the chain
-      val bodyTxt = out.substring(open + 1, close)
-      val args = {
-        val acc = scala.collection.mutable.ArrayBuffer[String]()
-        val sb2 = new StringBuilder
-        var d = 0
-        bodyTxt.foreach { c =>
-          if (c == '(' || c == '[') d += 1
-          else if (c == ')' || c == ']') d -= 1
-          if (c == ',' && d == 0) { acc += sb2.toString; sb2.clear() }
-          else sb2 += c
-        }
-        acc += sb2.toString
-        acc.toSeq.map(repAll(_, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", ""))
-      }
+      // the split is bracket-aware: ARRAY[...] literals still carry
+      // brackets at this point in the chain
+      val args = splitTopLevel(out.substring(open + 1, close), ',')
+        .map(ws)
       val ord = cre("(?is)^\\s*WITH\\s+ORDINALITY")
         .findFirstIn(out.substring(close + 1)).isDefined
       if (ord) return out
@@ -1412,28 +1086,12 @@ object Dialect {
     val re = cre("(?i)\\bORDER\\s+BY\\b")
     // right-to-left so inserted suffixes never shift unprocessed spans
     for (m <- re.findAllMatchIn(out).toList.reverse) {
-      var i = m.end
-      var depth = 0
-      var itemStart = i
-      var done = false
+      val end = SqlLex.clauseEnd(out, obTermRe, m.end)
       var items = List.empty[(Int, Int)] // [start, end), built right-to-left
-      while (!done) {
-        if (i >= out.length) { items ::= (itemStart -> i); done = true }
-        else {
-          val c = out.charAt(i)
-          val wordStart = !Character.isLetterOrDigit(out.charAt(i - 1)) &&
-            out.charAt(i - 1) != '_'
-          if (c == '(') { depth += 1; i += 1 }
-          else if (c == ')') {
-            if (depth == 0) { items ::= (itemStart -> i); done = true }
-            else { depth -= 1; i += 1 }
-          } else if (c == ',' && depth == 0) {
-            items ::= (itemStart -> i); i += 1; itemStart = i
-          } else if (depth == 0 && c.isLetter && wordStart &&
-            obTermRe.findFirstIn(out.substring(i)).isDefined) {
-            items ::= (itemStart -> i); done = true
-          } else i += 1
-        }
+      var itemStart = m.end
+      for (it <- splitTopLevel(out.substring(m.end, end), ',')) {
+        items ::= (itemStart -> (itemStart + it.length))
+        itemStart += it.length + 1
       }
       for ((s, e) <- items) { // right-to-left within the clause too
         val item = out.substring(s, e)
@@ -1466,29 +1124,11 @@ object Dialect {
     // reverse order: the pass only deletes characters AFTER each
     // VALUES position, so earlier positions stay valid
     for (vm <- vre.findAllMatchIn(canon0).toList.reverse) {
-      // walk the item list: items separated by depth-0 commas, list
-      // ends when depth would drop below 0 or at end of text
-      val sb = new StringBuilder(out.substring(0, vm.end))
-      var i = vm.end
-      var depth = 0
-      var atItemStart = true
-      var done = false
-      while (i < out.length && !done) {
-        if (atItemStart) {
-          rowRe.findFirstMatchIn(out.substring(i)).foreach { rm =>
-            sb.append(rm.group(1)) // keep the whitespace, drop ROW
-            i += rm.end
-          }
-          atItemStart = false
-        }
-        val c = out.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth < 0) done = true }
-        else if (c == ',' && depth == 0) atItemStart = true
-        if (!done) { sb.append(c); i += 1 }
-      }
-      sb.append(out.substring(i))
-      out = sb.toString
+      // the item list: top-level commas up to the enclosing ')'
+      val end = SqlLex.groupEnd(out, vm.end)
+      val items = splitTopLevel(out.substring(vm.end, end), ',')
+        .map(rowRe.replaceFirstIn(_, "$1")) // keep the whitespace, drop ROW
+      out = out.substring(0, vm.end) + items.mkString(",") + out.substring(end)
     }
     out
   }
@@ -1514,7 +1154,7 @@ object Dialect {
       val body = out.substring(from + m.get.end, close)
       if (!body.contains("->")) { from = open + 1 }
       else {
-        val rows = MatchRecognizeSql.splitTopLevel(body, ',').map(_.trim)
+        val rows = splitTopLevel(body, ',').map(_.trim)
         val selects = rows.map { r =>
           val exprs =
             if (r.startsWith("(") && closeParen(r, 0) == r.length - 1)
@@ -1548,7 +1188,7 @@ object Dialect {
       guard += 1
       val open = out.indexOf('(', m.get.start)
       val close = closeParen(out, open)
-      val args = MatchRecognizeSql.splitTopLevel(out.substring(open + 1, close), ',')
+      val args = splitTopLevel(out.substring(open + 1, close), ',')
         .map(_.trim)
       require(args.length == 2,
         s"apply takes (input, lambda), got ${args.length} args")
@@ -1606,47 +1246,48 @@ object Dialect {
     * (json_parse output) re-encodes as a quoted JSON string — the
     * reference's identity cast is untypeable once JSON ≡ varchar. */
   private def castAsJsonPass(canon0: String): String = {
-    val re = cre("(?is)\\bAS\\s+GRAFT_JSON_CAST\\s*\\)")
-    var out = canon0
-    var from = 0
-    var guard = 0
-    var m = re.findFirstMatchIn(out.substring(from))
-      .map(x => (x.start + from, x.end + from))
-    while (m.isDefined && guard < 64) {
-      guard += 1
-      val (mStart, mEnd) = m.get
-      var depth = 0
-      var i = mEnd - 1
-      var open = -1
-      while (i >= 0 && open < 0) {
-        val c = out.charAt(i)
-        if (c == ')') depth += 1
-        else if (c == '(') { depth -= 1; if (depth == 0) open = i }
-        i -= 1
-      }
-      val pre =
-        (if (open > 0) out.substring(0, open) else "")
-          .pipe(repAll(_, "[ \\t\\r\\n]+$", ""))
-      val kind =
-        if (pre.toUpperCase.endsWith("TRY_CAST")) 8
-        else if (pre.toUpperCase.endsWith("CAST")) 4
-        else 0
-      if (open >= 0 && kind > 0) {
-        val castStart = pre.length - kind
-        val expr = "(" +
-          repAll(out.substring(open + 1, mStart), "[ \\t\\r\\n]+$", "") + ")"
-        val frag =
-          s"substr(to_json(array($expr)), 2, length(to_json(array($expr))) - 2)"
-        val repl = s"IF($expr IS NULL, CAST(NULL AS STRING), $frag)"
-        out = out.substring(0, castStart) + repl + out.substring(mEnd)
-        from = 0
-      } else from = mEnd
-      m = re.findFirstMatchIn(out.substring(from))
-        .map(x => (x.start + from, x.end + from))
+    if (!canon0.toLowerCase.contains("graft_json_cast")) return canon0
+    val out = castSites(canon0, cre("(?is)\\bAS\\s+GRAFT_JSON_CAST\\s*\\)")) { (_, e, _) =>
+      val expr = "(" + repAll(e, "[ \\t\\r\\n]+$", "") + ")"
+      val frag =
+        s"substr(to_json(array($expr)), 2, length(to_json(array($expr))) - 2)"
+      s"IF($expr IS NULL, CAST(NULL AS STRING), $frag)"
     }
     // leftover sentinels were NOT cast positions (e.g. an alias
     // literally named json) — restore the original spelling
     repAll(out, "(?i)\\bAS\\s+GRAFT_JSON_CAST\\b", "AS json")
+  }
+
+  /** Rewrite every `CAST(e AS …)` / `TRY_CAST(e AS …)` whose type
+    * position matches `re` (a match ending at the cast's ')'):
+    * `f(isTry, e, match)` replaces the whole cast. Sites that are not
+    * a cast's type position are left for the caller's fallback. */
+  private def castSites(canon0: String, re: scala.util.matching.Regex)(
+      f: (Boolean, String, scala.util.matching.Regex.Match) => String): String = {
+    var out = canon0
+    var from = 0
+    var guard = 0
+    var m = re.findFirstMatchIn(out)
+    // generous bound: conformance batteries legitimately pack hundreds
+    // of casts into ONE statement; an exhausted guard would silently
+    // fall back to Spark's native cast semantics for the tail
+    while (m.isDefined && guard < 100000) {
+      guard += 1
+      val (mStart, mEnd) = (from + m.get.start, from + m.get.end)
+      val open = openParen(out, mEnd - 1)
+      // the word before the open paren, spaces skipped
+      var pre = open
+      while (pre > 0 && " \t\r\n".indexOf(out.charAt(pre - 1)) >= 0) pre -= 1
+      def endsWith(w: String) = out.regionMatches(true, pre - w.length, w, 0, w.length)
+      val kind = if (endsWith("TRY_CAST")) 8 else if (endsWith("CAST")) 4 else 0
+      if (open > 0 && kind > 0) {
+        val rep = f(kind == 8, out.substring(open + 1, mStart), m.get)
+        out = out.substring(0, pre - kind) + rep + out.substring(mEnd)
+        from = 0
+      } else from = mEnd
+      m = re.findFirstMatchIn(out.substring(from))
+    }
+    out
   }
 
   /** `CAST(x AS UUID)` / `CAST(x AS IPADDRESS)` (+ TRY_CAST forms) on
@@ -1659,51 +1300,17 @@ object Dialect {
     * (`X'…'` — an X followed by a literal sentinel on canonical
     * text) routes to the 4/16-byte decoder. */
   private def castAsUuidIpPass(canon0: String): String = {
+    val lower = canon0.toLowerCase
+    if (!lower.contains("graft_uuid") && !lower.contains("graft_ip")) return canon0
     var out = canon0
     for ((sentinel, fn) <- Seq(
       "GRAFT_UUID_CAST" -> "graft_uuid",
       "GRAFT_IP_CAST" -> "graft_ipaddress")) {
-      val re = cre(s"(?is)\\bAS\\s+$sentinel\\s*\\)")
-      var from = 0
-      var guard = 0
-      var m = re.findFirstMatchIn(out.substring(from))
-        .map(x => (x.start + from, x.end + from))
-      while (m.isDefined && guard < 10000) {
-        guard += 1
-        val (mStart, mEnd) = m.get
-        var depth = 0
-        var i = mEnd - 1
-        var open = -1
-        while (i >= 0 && open < 0) {
-          val c = out.charAt(i)
-          if (c == ')') depth += 1
-          else if (c == '(') { depth -= 1; if (depth == 0) open = i }
-          i -= 1
-        }
-        val pre =
-          (if (open > 0) out.substring(0, open) else "")
-            .pipe(repAll(_, "[ \\t\\r\\n]+$", ""))
-        val kind =
-          if (pre.toUpperCase.endsWith("TRY_CAST")) 8
-          else if (pre.toUpperCase.endsWith("CAST")) 4
-          else 0
-        if (open >= 0 && kind > 0) {
-          val castStart = pre.length - kind
-          // NOT String.trim: it strips every char <= U+0020, which
-          // eats the U+0001/U+0002 literal sentinels
-          val expr = out.substring(open + 1, mStart)
-            .pipe(repAll(_, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", ""))
-          val isBinLit =
-            cre("(?i)^X\\u0001\\d+\\u0002$").findFirstIn(expr).isDefined
-          val call =
-            if (isBinLit) s"${fn}_bin($expr)"
-            else if (kind == 8) s"${fn}_try($expr)"
-            else s"$fn($expr)"
-          out = out.substring(0, castStart) + call + out.substring(mEnd)
-          from = 0
-        } else from = mEnd
-        m = re.findFirstMatchIn(out.substring(from))
-          .map(x => (x.start + from, x.end + from))
+      out = castSites(out, cre(s"(?is)\\bAS\\s+$sentinel\\s*\\)")) { (isTry, e, _) =>
+        val expr = ws(e)
+        if (cre(s"(?i)^X$LitP$$").findFirstIn(expr).isDefined) s"${fn}_bin($expr)"
+        else if (isTry) s"${fn}_try($expr)"
+        else s"$fn($expr)"
       }
       out = repAll(out, s"(?i)\\bAS\\s+$sentinel\\b",
         "AS " + (if (sentinel.contains("UUID")) "uuid" else "ipaddress"))
@@ -1723,16 +1330,10 @@ object Dialect {
       val mStart = m.start + vfrom
       val innerStart = m.start(2) + vfrom
       // balanced close of the inner graft_* call
-      var depth = 1
-      var i = m.end + vfrom
-      while (i < out.length && depth > 0) {
-        val c = out.charAt(i)
-        if (c == '(') depth += 1 else if (c == ')') depth -= 1
-        i += 1
-      }
+      val i = closeParen(out, m.end + vfrom - 1) + 1
       val tailM = cre("(?i)^\\s*AS\\s+binary\\s*\\)")
         .findFirstMatchIn(out.substring(i))
-      if (depth == 0 && tailM.isDefined) {
+      if (tailM.isDefined) {
         val innerCall = out.substring(innerStart, i)
         val toBin =
           if (m.group(2).toLowerCase.startsWith("graft_uuid")) "graft_uuid_to_bin"
@@ -1755,53 +1356,18 @@ object Dialect {
     * show); bare `AS CHAR` is CHAR(1). TRY_CAST keeps its NULL-on-
     * failure inner cast. NULL propagates through substr/rpad. */
   private def castCharLenPass(canon0: String): String = {
-    var out = canon0
-    val re = cre("(?is)\\bAS\\s+GRAFT_(V|C)CAST_(\\d+)\\s*\\)")
-    var from = 0
-    var guard = 0
-    var m = re.findFirstMatchIn(out.substring(from))
-      .map(x => (x.start + from, x.end + from, x.group(1).toUpperCase, x.group(2)))
-    // generous bound: conformance batteries legitimately pack hundreds
-    // of casts into ONE statement; an exhausted guard would silently
-    // fall back to Spark's native char semantics for the tail
-    while (m.isDefined && guard < 100000) {
-      guard += 1
-      val (mStart, mEnd, kindVC, n) = m.get
-      var depth = 0
-      var i = mEnd - 1
-      var open = -1
-      while (i >= 0 && open < 0) {
-        val c = out.charAt(i)
-        if (c == ')') depth += 1
-        else if (c == '(') { depth -= 1; if (depth == 0) open = i }
-        i -= 1
-      }
-      val pre =
-        (if (open > 0) out.substring(0, open) else "")
-          .pipe(repAll(_, "[ \\t\\r\\n]+$", ""))
-      val kind =
-        if (pre.toUpperCase.endsWith("TRY_CAST")) 8
-        else if (pre.toUpperCase.endsWith("CAST")) 4
-        else 0
-      if (open >= 0 && kind > 0) {
-        val castStart = pre.length - kind
-        val castWord = if (kind == 8) "TRY_CAST" else "CAST"
-        // NOT String.trim: it strips every char <= U+0020, which eats
-        // the U+0001/U+0002 literal sentinels
-        val expr = out.substring(open + 1, mStart)
-          .pipe(repAll(_, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", ""))
+    val lower = canon0.toLowerCase
+    if (!lower.contains("graft_vcast_") && !lower.contains("graft_ccast_")) return canon0
+    var out = castSites(canon0, cre("(?is)\\bAS\\s+GRAFT_(V|C)CAST_(\\d+)\\s*\\)")) {
+      (isTry, e, m) =>
+        val n = m.group(2)
         // left(), not substr(): the dialect renames substr to the
         // reference-semantics UDF on a later translate, which would
         // break idempotence AND foldability inside VALUES
-        val inner = s"$castWord($expr AS STRING)"
-        val repl =
-          if (kindVC == "V") s"left($inner, $n)"
-          else s"rpad(left($inner, $n), $n)"
-        out = out.substring(0, castStart) + repl + out.substring(mEnd)
-        from = 0
-      } else from = mEnd
-      m = re.findFirstMatchIn(out.substring(from))
-        .map(x => (x.start + from, x.end + from, x.group(1).toUpperCase, x.group(2)))
+        val inner = s"${if (isTry) "TRY_CAST" else "CAST"}(" +
+          ws(e) + " AS STRING)"
+        if (m.group(1).equalsIgnoreCase("V")) s"left($inner, $n)"
+        else s"rpad(left($inner, $n), $n)"
     }
     // leftover sentinels were NOT cast positions — restore spellings
     out = repAll(out, "(?i)\\bAS\\s+GRAFT_VCAST_(\\d+)\\b", "AS varchar($1)")
@@ -1815,17 +1381,12 @@ object Dialect {
     var guard = 0
     def frag(x: String): String =
       s"substr(to_json(array($x)), 2, length(to_json(array($x))) - 2)"
-    // NOT String.trim: it strips every char <= U+0020, which eats the
-    // \u0001/\u0002 literal sentinels a bare string-literal argument
-    // is made of
-    def tws(x: String): String =
-      repAll(x, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", "")
     while (m.isDefined && guard < 32) {
       guard += 1
       val isObject = m.get.group(1).equalsIgnoreCase("object")
       val open = out.indexOf('(', m.get.start)
       val close = closeParen(out, open)
-      var body = tws(out.substring(open + 1, close))
+      var body = ws(out.substring(open + 1, close))
       var returning: Option[String] = None
       var retEncoding: Option[String] = None
       val retRe =
@@ -1847,8 +1408,8 @@ object Dialect {
       onNullRe.findFirstMatchIn(body).foreach { r =>
         absent = r.group(1).equalsIgnoreCase("ABSENT")
         body = body.substring(0, r.start) }
-      val rawArgs = if (tws(body).isEmpty) Seq.empty[String]
-        else MatchRecognizeSql.splitTopLevel(body, ',').map(tws)
+      val rawArgs = if (ws(body).isEmpty) Seq.empty[String]
+        else splitTopLevel(body, ',').map(ws)
       val fmtRe =
         cre("(?is)\\s+FORMAT\\s+JSON(\\s+ENCODING\\s+UTF(8|16|32))?\\s*$")
       def encCharset(e: String): String = e match {
@@ -1871,7 +1432,7 @@ object Dialect {
         var enc: Option[String] = None
         fmtRe.findFirstMatchIn(a).foreach { r =>
           fmt = true; enc = Option(r.group(2)); a = a.substring(0, r.start) }
-        (tws(a), fmt, enc)
+        (ws(a), fmt, enc)
       }
       if (uniqueKeys && items.exists(_._2))
         throw new IllegalArgumentException(
@@ -1892,12 +1453,12 @@ object Dialect {
           val kvRe2 = cre("(?is)^(.*?)\\s+VALUE\\s+(.*)$")
           val parsed = items.map { case (kv, fmt, enc) =>
             val (k, v) = kvRe.findFirstMatchIn(kv) match {
-              case Some(r) => (tws(r.group(1)), tws(r.group(2)))
+              case Some(r) => (ws(r.group(1)), ws(r.group(2)))
               case None =>
-                val parts = MatchRecognizeSql.splitTopLevel(kv, ':')
-                if (parts.length == 2) (tws(parts(0)), tws(parts(1)))
+                val parts = splitTopLevel(kv, ':')
+                if (parts.length == 2) (ws(parts(0)), ws(parts(1)))
                 else kvRe2.findFirstMatchIn(kv) match {
-                  case Some(r) => (tws(r.group(1)), tws(r.group(2)))
+                  case Some(r) => (ws(r.group(1)), ws(r.group(2)))
                   case None => throw new IllegalArgumentException(
                     s"json_object pair needs `k : v` or KEY k VALUE v, got: $kv")
                 }
@@ -1974,19 +1535,6 @@ object Dialect {
     * `transform` unwrap around the whole windowed call. Runs on
     * canonical text before orderedAggPass. */
   private def windowedFilterPass(canon0: String): String = {
-    def openParen(s: String, close: Int): Int = {
-      var depth = 0
-      var i = close
-      while (i >= 0) {
-        val c = s.charAt(i)
-        if (c == ')') depth += 1
-        else if (c == '(') { depth -= 1; if (depth == 0) return i }
-        i -= 1
-      }
-      -1
-    }
-    def ws(x: String): String =
-      repAll(x, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", "")
     val re = cre("(?i)\\bFILTER\\s*\\(")
     var out = canon0
     var guard = 0
@@ -2017,19 +1565,8 @@ object Dialect {
           val body = out.substring(callOpen + 1, callClose)
           // top-level ORDER BY inside a FILTERed window agg has no
           // Spark lowering — fail loud rather than silently drop it
-          val hasTopOrderBy = {
-            var depth = 0; var found = false; var i = 0
-            while (i < body.length && !found) {
-              val c = body.charAt(i)
-              if (c == '(') depth += 1 else if (c == ')') depth -= 1
-              else if (depth == 0 && (c == 'O' || c == 'o') &&
-                (i == 0 || !body.charAt(i - 1).isLetterOrDigit) &&
-                cre("(?is)^ORDER\\s+BY\\b").findPrefixMatchOf(body.substring(i)).isDefined)
-                found = true
-              i += 1
-            }
-            found
-          }
+          val hasTopOrderBy =
+            SqlLex.topLevelIndexOf(body, cre("(?is)^ORDER\\s+BY\\b")) >= 0
           require(!hasTopOrderBy,
             "FILTER with an aggregate-level ORDER BY in a window context is unsupported")
           val isDistinct = cre("(?is)^\\s*DISTINCT\\b.*").matches(body)
@@ -2065,7 +1602,7 @@ object Dialect {
           } else {
             val wrapped =
               if (ws(inner) == "*") s"CASE WHEN ($cond) THEN 1 END"
-              else MatchRecognizeSql.splitTopLevel(inner, ',').map(ws)
+              else splitTopLevel(inner, ',').map(ws)
                 .map(a => s"CASE WHEN ($cond) THEN $a END").mkString(", ")
             out = out.substring(0, callOpen + 1) + distinctKw + wrapped +
               ")" + out.substring(fClose + 1)
@@ -2093,6 +1630,7 @@ object Dialect {
     * CTE alias lists on canonical text; lists whose items aren't
     * plain identifiers are skipped. */
   private def cteAliasGuard(canon: String): Unit = {
+    if (cre("(?i)\\bAS\\s*\\(").findFirstIn(canon).isEmpty) return
     val re = cre("(?is)\\b([A-Za-z_][A-Za-z0-9_]*)\\s*\\(([^()]*)\\)\\s*AS\\s*\\(")
     for (m <- re.findAllMatchIn(canon)) {
       val items = m.group(2).split(",").map(_.trim)
@@ -2164,10 +1702,7 @@ object Dialect {
     * with per-group state bounded at ~the 1 MiB cap (the r19 form
     * buffered every entry through array_agg before finishing).
     * Plain LISTAGG without the clause stays native. */
-  private def listaggOverflowPass(canon0: String,
-      newLit: String => String): String = {
-    def ws(x: String): String =
-      repAll(x, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", "")
+  private def listaggOverflowPass(canon0: String, lex: SqlLex.Lexed): String = {
     var out = canon0
     var from = 0
     var guard = 0
@@ -2180,42 +1715,29 @@ object Dialect {
       val open = out.indexOf('(', start)
       val close = closeParen(out, open)
       val body = out.substring(open + 1, close)
-      // top-level "ON OVERFLOW" position
-      var ovPos = -1
-      var depth = 0
-      var i = 0
-      val ovRe = cre("(?is)^ON\\s+OVERFLOW\\b")
-      while (i < body.length && ovPos < 0) {
-        val c = body.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && (c == 'O' || c == 'o') &&
-          (i == 0 || !body.charAt(i - 1).isLetterOrDigit) &&
-          ovRe.findPrefixMatchOf(body.substring(i)).isDefined) ovPos = i
-        i += 1
-      }
+      val ovPos = SqlLex.topLevelIndexOf(body, cre("(?is)^ON\\s+OVERFLOW\\b"))
       if (ovPos < 0) { from = close + 1 }
       else {
         val pre = ws(body.substring(0, ovPos))
         val beh = ws(repAll(body.substring(ovPos), "(?is)^ON\\s+OVERFLOW", ""))
         val (isError, filler, withCount) =
-          if (beh.matches("(?is)^ERROR$")) (true, newLit(""), false)
+          if (beh.matches("(?is)^ERROR$")) (true, lex.lit(""), false)
           else {
-            val tm = cre(("(?is)^TRUNCATE\\s*(\\u0001\\d+\\u0002)?\\s*" +
+            val tm = cre((s"(?is)^TRUNCATE\\s*($LitP)?\\s*" +
               "(WITH|WITHOUT)\\s+COUNT$")).findFirstMatchIn(beh).getOrElse(
               throw new IllegalArgumentException(
                 s"LISTAGG ON OVERFLOW: expected ERROR or TRUNCATE " +
                   s"[filler] WITH|WITHOUT COUNT, got '$beh'"))
-            (false, Option(tm.group(1)).getOrElse(newLit("...")),
+            (false, Option(tm.group(1)).getOrElse(lex.lit("...")),
               tm.group(2).equalsIgnoreCase("WITH"))
           }
         // value [, separator-literal]; the separator (grammar: string)
         // is always a literal sentinel on canonical text
-        val parts = MatchRecognizeSql.splitTopLevel(pre, ',').map(ws)
+        val parts = splitTopLevel(pre, ',').map(ws)
         val (valuePart, sep) =
-          if (parts.length >= 2 && parts.last.matches("^\\u0001\\d+\\u0002$"))
+          if (parts.length >= 2 && parts.last.matches(s"^$LitP$$"))
             (parts.dropRight(1).mkString(", "), parts.last)
-          else (parts.mkString(", "), newLit(""))
+          else (parts.mkString(", "), lex.lit(""))
         // the WITHIN GROUP (ORDER BY ...) tail, when present, moves
         // into the array_agg argument
         val wgM = cre("(?is)^\\s*WITHIN\\s+GROUP\\s*\\(")
@@ -2260,9 +1782,7 @@ object Dialect {
     * default). Shared by the ordered-aggregate and LISTAGG-overflow
     * lowerings. */
   private def parseOrderKeys(keysTxt: String): Seq[(String, Boolean, Boolean)] = {
-    def ws(x: String): String =
-      repAll(x, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", "")
-    MatchRecognizeSql.splitTopLevel(keysTxt, ',').map(ws).map { it0 =>
+    splitTopLevel(keysTxt, ',').map(ws).map { it0 =>
       var it = it0
       var nulls: Option[Boolean] = None // Some(true) = FIRST
       cre("(?is)\\s+NULLS\\s+(FIRST|LAST)\\s*$")
@@ -2283,8 +1803,6 @@ object Dialect {
     val re = cre(("(?i)\\b(array_agg|sum|avg|min|max|count|bool_and|bool_or|" +
       "every|any_value|arbitrary|geometric_mean|stddev|stddev_samp|" +
       "stddev_pop|variance|var_samp|var_pop)\\s*\\("))
-    def ws(x: String): String =
-      repAll(x, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", "")
     var out = canon0
     var from = 0
     var guard = 0
@@ -2298,19 +1816,7 @@ object Dialect {
       val close = closeParen(out, open)
       val body = out.substring(open + 1, close)
       // top-level ORDER BY position within the body
-      val obRe = cre("(?is)\\bORDER\\s+BY\\b")
-      var obPos = -1
-      var depth = 0
-      var i = 0
-      while (i < body.length && obPos < 0) {
-        val c = body.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && (c == 'O' || c == 'o') &&
-          (i == 0 || !body.charAt(i - 1).isLetterOrDigit) &&
-          obRe.findPrefixMatchOf(body.substring(i)).isDefined) obPos = i
-        i += 1
-      }
+      val obPos = SqlLex.topLevelIndexOf(body, cre("(?is)\\bORDER\\s+BY\\b"))
       // a window invocation is NOT rewritten: OVER must attach to the
       // aggregate itself, and Spark's native array_agg window handles
       // it. A FILTER(...) group between the call and OVER can nest
@@ -2411,22 +1917,10 @@ object Dialect {
       val listStart = from + m.get.end
       val distinct = Option(m.get.group(1)).exists(_.trim.equalsIgnoreCase("DISTINCT"))
       // clause extent: to the next top-level stop keyword / ')' / end
-      var i = listStart
-      var depth = 0
-      var end = -1
-      while (i < out.length && end < 0) {
-        val c = out.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') { if (depth == 0) end = i else depth -= 1 }
-        else if (depth == 0 && c.isLetter &&
-          (i == 0 || !out.charAt(i - 1).isLetterOrDigit) &&
-          stopRe.findPrefixMatchOf(out.substring(i)).isDefined) end = i
-        i += 1
-      }
-      if (end < 0) end = out.length
+      val end = SqlLex.clauseEnd(out, stopRe, listStart)
       val listTxt = out.substring(listStart, end)
-      val items = MatchRecognizeSql.splitTopLevel(listTxt, ',')
-        .map(repAll(_, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", ""))
+      val items = splitTopLevel(listTxt, ',')
+        .map(ws)
         .filter(_.nonEmpty)
       def isAnalytics(it: String): Boolean =
         it.matches("(?is)^(ROLLUP|CUBE|GROUPING\\s+SETS)\\s*\\(.*")
@@ -2439,8 +1933,8 @@ object Dialect {
         def innerArgs(it: String): Seq[String] = {
           val open = it.indexOf('(')
           val close = closeParen(it, open)
-          MatchRecognizeSql.splitTopLevel(it.substring(open + 1, close), ',')
-            .map(repAll(_, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", ""))
+          splitTopLevel(it.substring(open + 1, close), ',')
+            .map(ws)
             .filter(_.nonEmpty)
         }
         // a ROLLUP/CUBE inner argument may itself be a parenthesized
@@ -2449,8 +1943,8 @@ object Dialect {
         def units(it: String): Seq[Seq[String]] = innerArgs(it).map { g =>
           if (g.startsWith("(")) {
             val c2 = closeParen(g, 0)
-            MatchRecognizeSql.splitTopLevel(g.substring(1, c2), ',')
-              .map(repAll(_, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", ""))
+            splitTopLevel(g.substring(1, c2), ',')
+              .map(ws)
               .filter(_.nonEmpty)
           } else Seq(g)
         }
@@ -2469,8 +1963,8 @@ object Dialect {
             innerArgs(it).map { g =>
               if (g.startsWith("(")) {
                 val c2 = closeParen(g, 0)
-                MatchRecognizeSql.splitTopLevel(g.substring(1, c2), ',')
-                  .map(repAll(_, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", ""))
+                splitTopLevel(g.substring(1, c2), ',')
+                  .map(ws)
                   .filter(_.nonEmpty)
               } else Seq(g)
             }
@@ -2512,15 +2006,7 @@ object Dialect {
       val idx = out.indexOf(").*")
       if (idx < 0) return out
       // balanced group ending at idx
-      var d = 0
-      var k = idx
-      var open = -1
-      while (k >= 0 && open < 0) {
-        val c = out.charAt(k)
-        if (c == ')') d += 1
-        else if (c == '(') { d -= 1; if (d == 0) open = k }
-        k -= 1
-      }
+      val open = openParen(out, idx)
       if (open < 0) return out
       // optional function head (struct)
       var hs = open
@@ -2536,8 +2022,8 @@ object Dialect {
         val io = inner.indexOf('(')
         inner = inner.substring(io + 1, closeParen(inner, io))
       }
-      val elems = MatchRecognizeSql.splitTopLevel(inner, ',')
-        .map(repAll(_, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", ""))
+      val elems = splitTopLevel(inner, ',')
+        .map(ws)
       val isTuple = head.isEmpty && !parenStruct && elems.length > 1 &&
         !inner.matches("(?is)^\\s*SELECT\\b.*") // a subquery star is not a tuple
       if (!isStruct && !parenStruct && !isTuple) {
@@ -2554,7 +2040,7 @@ object Dialect {
       if (aM.isDefined) {
         val ao = out.indexOf('(', tail + aM.get.end - 1)
         val ac = closeParen(out, ao)
-        val names = MatchRecognizeSql.splitTopLevel(out.substring(ao + 1, ac), ',')
+        val names = splitTopLevel(out.substring(ao + 1, ac), ',')
           .map(_.trim)
         require(names.length == elems.length,
           s"row star alias list arity ${names.length} != ${elems.length}")
@@ -2577,7 +2063,7 @@ object Dialect {
       if (m.isEmpty) return out
       val open = out.indexOf('(', from + m.get.start)
       val close = closeParen(out, open)
-      val args = MatchRecognizeSql.splitTopLevel(out.substring(open + 1, close), ',')
+      val args = splitTopLevel(out.substring(open + 1, close), ',')
       if (args.length == 2)
         out = out.substring(0, close) + ", NULL" + out.substring(close)
       from = open + 1
@@ -2603,10 +2089,9 @@ object Dialect {
     */
   private def trimPass(canon0: String): String = {
     val re = cre("(?i)\\b(trim|ltrim|rtrim)\\s*\\(")
-    def ws2(x: String): String = repAll(x, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", "")
     def isCharCast(src: String): Boolean =
       cre("(?is)^CAST\\s*\\(.*\\bAS\\s+(CHAR\\b|GRAFT_CCAST_\\d+).*\\)$")
-        .matches(ws2(src))
+        .matches(ws(src))
     def charWrap(src: String, expr: String): String =
       if (isCharCast(src)) s"rtrim($expr)" else expr
     var out = canon0
@@ -2621,10 +2106,10 @@ object Dialect {
       val close = closeParen(out, open)
       val start = from + m.get.start
       val inner = out.substring(open + 1, close)
-      val innerT = ws2(inner)
+      val innerT = ws(inner)
       var replacement: Option[String] = None
       if (fn == "ltrim" || fn == "rtrim") {
-        val args = MatchRecognizeSql.splitTopLevel(inner, ',').map(ws2)
+        val args = splitTopLevel(inner, ',').map(ws)
         val u = if (fn == "ltrim") "u_ltrim" else "u_rtrim"
         val spec = if (fn == "ltrim") "LEADING" else "TRAILING"
         if (args.length == 1)
@@ -2635,29 +2120,15 @@ object Dialect {
             s"TRIM($spec ${args(1)} FROM ${args.head})"))
       } else {
         val specM = cre("(?is)^(LEADING|TRAILING|BOTH)\\b").findPrefixMatchOf(innerT)
-        val fromAt = {
-          // top-level FROM inside the trim parens
-          var depth = 0; var i = 0; var at = -1
-          while (i < inner.length && at < 0) {
-            val c = inner.charAt(i)
-            if (c == '(') depth += 1
-            else if (c == ')') depth -= 1
-            else if (depth == 0 && (c == 'F' || c == 'f') &&
-              (i == 0 || (!inner.charAt(i - 1).isLetterOrDigit &&
-                inner.charAt(i - 1) != '_')) &&
-              cre("(?is)^FROM\\b").findPrefixMatchOf(inner.substring(i)).isDefined)
-              at = i
-            i += 1
-          }
-          at
-        }
+        // top-level FROM inside the trim parens
+        val fromAt = SqlLex.topLevelIndexOf(inner, cre("(?is)^FROM\\b"))
         (specM, fromAt) match {
           case (Some(sm), at) if at >= 0 =>
             val spec = sm.group(1).toUpperCase
             val lead = inner.length -
               repAll(inner, "^[ \\t\\r\\n]+", "").length
-            val mid = ws2(inner.substring(lead + sm.end, at))
-            val src = ws2(inner.substring(at + 4))
+            val mid = ws(inner.substring(lead + sm.end, at))
+            val src = ws(inner.substring(at + 4))
             val u = spec match {
               case "LEADING" => "u_ltrim"; case "TRAILING" => "u_rtrim"
               case _ => "u_trim"
@@ -2667,11 +2138,11 @@ object Dialect {
               else charWrap(src, s"TRIM($spec $mid FROM $src)"))
           case (None, at) if at >= 0 =>
             // TRIM(<chars> FROM <x>) — BOTH with an explicit set
-            val chars = ws2(inner.substring(0, at))
-            val src = ws2(inner.substring(at + 4))
+            val chars = ws(inner.substring(0, at))
+            val src = ws(inner.substring(at + 4))
             replacement = Some(charWrap(src, s"TRIM(BOTH $chars FROM $src)"))
           case _ =>
-            val args = MatchRecognizeSql.splitTopLevel(inner, ',').map(ws2)
+            val args = splitTopLevel(inner, ',').map(ws)
             if (args.length == 1)
               replacement = Some(charWrap(args.head, s"u_trim(${args.head})"))
             else if (args.length == 2)
@@ -2689,27 +2160,7 @@ object Dialect {
     out
   }
 
-  private def constructorPass(segs: Seq[(String, Boolean)],
-      restoreIdents: String => String): String = {
-    // appendable: passes may mint NEW literals (e.g. the LISTAGG
-    // overflow filler default '...') without breaking the no-raw-
-    // quotes-on-canonical-text invariant
-    val lits = scala.collection.mutable.ArrayBuffer[String](
-      segs.collect { case (s, true) => s }: _*)
-    def newLit(raw: String): String = {
-      lits += ("'" + raw.replace("'", "''") + "'")
-      "\u0001" + (lits.length - 1) + "\u0002"
-    }
-    var li = -1
-    val canon = segs.map {
-      case (s, true) => li += 1; "\u0001" + li + "\u0002"
-      case (s, false) => s
-    }.mkString
-
-    // Double-quoted identifiers were masked to U+0005/U+0006
-    // sentinels at translate() entry (the shared lex-and-mask
-    // substrate) and restore as Spark backticks after the last pass —
-    // no pass here can see or rewrite their content.
+  private def constructorPass(canon: String, lex: SqlLex.Lexed): String = {
     var out = canon
     // map constructor first, so its ARRAY args are still spelled ARRAY
     out = repAll(out, "(?i)\\bMAP\\s*\\(\\s*(?=ARRAY\\s*\\[)",
@@ -2744,9 +2195,9 @@ object Dialect {
     // listaggOverflowPass consumes the WITHIN GROUP (ORDER BY …)
     // tail itself, so it must run BEFORE orderedAggPass (which would
     // otherwise rewrite the inner value expression)
-    out = listaggOverflowPass(out, newLit)
+    out = listaggOverflowPass(out, lex)
     out = orderedAggPass(out)
-    out = WindowFrameSql.pass(out, lits.toIndexedSeq)
+    out = WindowFrameSql.pass(out, lex)
     out = unorderedRankingPass(out)
     out = orderByNullsPass(out)
     out = castAsJsonPass(out)
@@ -2790,14 +2241,11 @@ object Dialect {
       }
     }
 
-    val litRe = cre("\u0001(\\d+)\u0002")
     // jsonConstructorPass runs LAST (after the bracket scan and
     // subscript lowering): it emits '[' / ']' STRING LITERALS, which
     // the subscript pass would otherwise read as raw subscript
     // brackets
-    litRe.replaceAllIn(jsonConstructorPass(SqlJsonClauses.pass(
-      restoreIdents(subscriptPass(sb.toString)))),
-      m => java.util.regex.Matcher.quoteReplacement(lits(m.group(1).toInt)))
+    jsonConstructorPass(SqlJsonClauses.pass(subscriptPass(sb.toString), lex))
   }
 
   /** Reference subscript semantics: `expr[i]` is 1-BASED for arrays
@@ -2838,25 +2286,11 @@ object Dialect {
       while (extend) {
         extend = false
         if (s0 > 0 && out.charAt(s0 - 1) == ')') {
-          var d = 0
-          var k = s0 - 1
-          var done = false
-          while (k >= 0 && !done) {
-            val c = out.charAt(k)
-            if (c == ')') d += 1
-            else if (c == '(') { d -= 1; if (d == 0) done = true }
-            if (!done) k -= 1
-          }
-          s0 = k
+          s0 = openParen(out, s0 - 1)
           while (s0 > 0 && (out.charAt(s0 - 1).isLetterOrDigit ||
             out.charAt(s0 - 1) == '_')) s0 -= 1
         } else {
-          while (s0 > 0 && {
-            val c = out.charAt(s0 - 1)
-            c.isLetterOrDigit || c == '_' || c == '.' ||
-              c == '\u0001' || c == '\u0002' ||
-              c == '\uE005' || c == '\uE006'
-          }) s0 -= 1
+          while (s0 > 0 && operandChar(out.charAt(s0 - 1))) s0 -= 1
           if (s0 > 0 && s0 < e && out.charAt(s0) == '.' &&
             out.charAt(s0 - 1) == ')') extend = true
         }

@@ -71,7 +71,7 @@ object MatchRecognizeSql {
     val m = outer.findFirstMatchIn(sql).getOrElse(fail(
       "expected SELECT * FROM <table> MATCH_RECOGNIZE ("))
     val bodyStart = m.end
-    val bodyEnd = matchParen(sql, bodyStart - 1)
+    val bodyEnd = SqlLex.closeParen(sql, bodyStart - 1)
     val tail = sql.substring(bodyEnd + 1).trim
     if (!(tail.isEmpty || tail.matches("(?i)AS\\s+[A-Za-z_][A-Za-z0-9_]*")))
       fail(s"unsupported trailing clause after MATCH_RECOGNIZE: '$tail'")
@@ -79,7 +79,7 @@ object MatchRecognizeSql {
     val table = m.group(1)
 
     def colList(txt: String, what: String): Seq[String] =
-      splitTopLevel(txt, ',').map(_.trim).filter(_.nonEmpty).map {
+      SqlLex.splitTopLevel(txt, ',').map(_.trim).filter(_.nonEmpty).map {
         case c if c.matches("[A-Za-z_][A-Za-z0-9_]*") => c
         case c if c.matches("(?i)[A-Za-z_][A-Za-z0-9_]*\\s+ASC") =>
           c.split("\\s+")(0) // explicit ASC ≡ the engine's sort order
@@ -164,7 +164,7 @@ object MatchRecognizeSql {
     val pattern = {
       val open = patternTxt.indexOf('(')
       require(open >= 0, "PATTERN requires parentheses")
-      val close = matchParen(patternTxt, open)
+      val close = SqlLex.closeParen(patternTxt, open)
       patternTxt.substring(open + 1, close)
     }
     val subsets: Map[String, Set[String]] =
@@ -183,7 +183,7 @@ object MatchRecognizeSql {
     var anyHistory = false
     val rowFree = scala.collection.mutable.Set[String]()
     val define: Map[String, MatchCtx => Boolean] =
-      splitTopLevel(defineTxt, ',').map(_.trim).filter(_.nonEmpty).map { d =>
+      SqlLex.splitTopLevel(defineTxt, ',').map(_.trim).filter(_.nonEmpty).map { d =>
         val asRe = "(?is)^([A-Za-z_][A-Za-z0-9_]*)\\s+AS\\s+(.*)$".r
         d match {
           case asRe(v, pred) =>
@@ -260,7 +260,7 @@ object MatchRecognizeSql {
       "(?:CLASSIFIER\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)?\\s*\\)|" +
       "(?:([A-Za-z_][A-Za-z0-9_]*)\\s*\\.\\s*)?([A-Za-z_][A-Za-z0-9_]*))" +
       "\\s*\\)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)$").r
-    splitTopLevel(measuresTxt, ',').map(_.trim).filter(_.nonEmpty).foreach { mtxt =>
+    SqlLex.splitTopLevel(measuresTxt, ',').map(_.trim).filter(_.nonEmpty).foreach { mtxt =>
       (measRe.findFirstMatchIn(mtxt), arrayAggRe.findFirstMatchIn(mtxt)) match {
         case (Some(mm), _) =>
           direct += primitiveOf(mm, mtxt) -> mm.group(8)
@@ -314,7 +314,7 @@ object MatchRecognizeSql {
                 .replaceAll("'[^']*'", "")
                 .replaceAll("(?i)\\b(COALESCE|ARRAY_MAX|ARRAY_MIN|ARRAY|IF|" +
                   "LIKE|OR|AND|NOT|TRUE|FALSE|CASE|WHEN|THEN|ELSE|END)\\b", "")
-              if (!leftover.matches("[\\s0-9+\\-*/().,<>=!\\u0001\\u0002]*")) fail(
+              if (!leftover.matches("[\\s0-9+\\-*/().,<>=!]*")) fail(
                 s"unsupported measure expression: '$mtxt' (scalar expressions " +
                   "over primitives, literals, and the documented function set)")
               computed += alias -> rewritten
@@ -389,87 +389,18 @@ object MatchRecognizeSql {
     txt
   }
 
-  /** Index of the ')' matching the '(' at `open` (string-literal aware).
-    * Shared with the other sqlcompat front-ends. */
-  private[sqlcompat] def matchParen(s: String, open: Int): Int = {
-    require(s.charAt(open) == '(', s"expected '(' at $open")
-    var depth = 0
-    var i = open
-    var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    fail(s"unbalanced parentheses from $open")
-  }
-
   /** Clause starter keywords, used to delimit each clause's extent. */
-  private val starters = Seq(
-    "PARTITION\\s+BY", "ORDER\\s+BY", "MEASURES",
-    "(?:ONE|ALL)\\s+ROWS?\\s+PER\\s+MATCH", "AFTER\\s+MATCH\\s+SKIP",
-    "PATTERN", "SUBSET", "DEFINE")
+  private val starters = ("(?is)(?:PARTITION\\s+BY|ORDER\\s+BY|MEASURES|" +
+    "(?:ONE|ALL)\\s+ROWS?\\s+PER\\s+MATCH|AFTER\\s+MATCH\\s+SKIP|" +
+    "PATTERN|SUBSET|DEFINE)\\b").r
 
   /** Extract the text of the clause introduced by `kw` (regex), up to
     * the next clause starter at paren depth 0. */
-  private def clause(body: String, kw: String, keepKeyword: Boolean = false): Option[String] = {
-    val re = s"(?is)\\b$kw\\b".r
-    re.findFirstMatchIn(body).map { m =>
+  private def clause(body: String, kw: String, keepKeyword: Boolean = false): Option[String] =
+    s"(?is)\\b$kw\\b".r.findFirstMatchIn(body).map { m =>
       val from = if (keepKeyword) m.start else m.end
-      // scan forward to the next starter at depth 0
-      var i = m.end
-      var depth = 0
-      var inStr = false
-      var end = body.length
-      while (i < body.length && end == body.length) {
-        val c = body.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false }
-        else c match {
-          case '\'' => inStr = true
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ if depth == 0 =>
-            val rest = body.substring(i)
-            if (starters.exists(s0 => s"(?is)^\\s*$s0\\b".r.findFirstIn(rest).isDefined)
-                && body.charAt(math.max(i - 1, 0)).isWhitespace)
-              end = i
-          case _ =>
-        }
-        i += 1
-      }
-      body.substring(from, end).trim
+      body.substring(from, SqlLex.clauseEnd(body, starters, m.end)).trim
     }
-  }
-
-  /** Split on `sep` at paren depth 0, outside string literals. Shared
-    * with the other sqlcompat front-ends. */
-  private[sqlcompat] def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var inStr = false
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' | '[' => depth += 1 // brackets: ARRAY[...] / subscripts
-        case ')' | ']' => depth -= 1
-        case `sep` if depth == 0 => out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.result()
-  }
 }
 
 /** Recursive-descent compiler for DEFINE predicates → `MatchCtx =>

@@ -66,14 +66,10 @@ object MutationSql {
       Mutations.delete(s, resolvePath(table), pred)
 
     case updateRe(table, setList, whereOrNull) =>
-      val assignments = MatchRecognizeSql.splitTopLevel(setList, ',').map { a =>
-        val eq = a.indexOf('=')
-        require(eq > 0, s"UPDATE: bad assignment '$a'")
-        a.substring(0, eq).trim -> expr(Dialect.translate(a.substring(eq + 1).trim))
-      }.toMap
+      val assigned = assignments(setList, "UPDATE")(v => expr(Dialect.translate(v)))
       val pred = Option(whereOrNull).map(w => expr(Dialect.translate(w)))
         .getOrElse(lit(true))
-      Mutations.update(s, resolvePath(table), assignments, pred)
+      Mutations.update(s, resolvePath(table), assigned, pred)
 
     case mergeRe(table, tAliasOrNull, usingTxt, onTxt, casesTxt) =>
       mergeStatement(s, table, Option(tAliasOrNull), usingTxt.trim,
@@ -82,6 +78,16 @@ object MutationSql {
     case other => throw new IllegalArgumentException(
       s"not a supported mutation statement: ${other.take(120)}")
   }
+
+  /** `col = expr, …` → column name (a quoted identifier unquoted) →
+    * value. */
+  private def assignments(setList: String, what: String)(
+      value: String => Column): Map[String, Column] =
+    SqlLex.splitTopLevel(setList, ',').map { a =>
+      val eq = a.indexOf('=')
+      require(eq > 0, s"$what: bad assignment '$a'")
+      SqlLex.identName(a.substring(0, eq)) -> value(a.substring(eq + 1).trim)
+    }.toMap
 
   private def mergeStatement(s: SparkSession, table: String,
       tAlias: Option[String], usingTxt: String, onTxt: String,
@@ -155,12 +161,8 @@ object MutationSql {
             "the condition into the DELETE case or pre-filter the source)")
         require(updateSet.isEmpty, "MERGE: at most one UPDATE case")
         sawUpdate = true
-        updateSet = MatchRecognizeSql.splitTopLevel(m.group(4), ',').map { a =>
-          val eq = a.indexOf('=')
-          require(eq > 0, s"MERGE UPDATE: bad assignment '$a'")
-          a.substring(0, eq).trim ->
-            expr(Dialect.translate(strip(a.substring(eq + 1).trim)))
-        }.toMap
+        updateSet = assignments(m.group(4), "MERGE UPDATE")(
+          v => expr(Dialect.translate(strip(v))))
       } else { // INSERT
         require(notMatched, "MERGE: WHEN MATCHED THEN INSERT is not valid")
         require(cond.isEmpty, "MERGE: conditional INSERT cases are not supported")
@@ -168,7 +170,7 @@ object MutationSql {
         require(m.group(5) == null,
           "MERGE: INSERT with a column subset is not supported — list " +
             "VALUES for the full target schema in order")
-        insertValues = Some(MatchRecognizeSql.splitTopLevel(m.group(6), ',')
+        insertValues = Some(SqlLex.splitTopLevel(m.group(6), ',')
           .map(v => expr(Dialect.translate(strip(v.trim)))))
       }
     }

@@ -47,7 +47,7 @@ object RelationSql {
     val head = "(?is)^\\s*SELECT\\s+(.*?)\\s+FROM\\s+([A-Za-z_][A-Za-z0-9_]*)\\s+".r
     val m = head.findFirstMatchIn(sql).getOrElse(fail(
       "expected SELECT <exprs> FROM <table> <UNNEST or TABLESAMPLE clause>"))
-    val selectList = MatchRecognizeSql.splitTopLevel(m.group(1), ',')
+    val selectList = SqlLex.splitTopLevel(m.group(1), ',')
       .map(_.trim).filter(_.nonEmpty)
     val table = m.group(2)
     var rest = sql.substring(m.end)
@@ -66,12 +66,12 @@ object RelationSql {
         // analogs.
         val outer = um.group(1).equalsIgnoreCase("LEFT")
         val open = um.end - 1
-        val close = MatchRecognizeSql.matchParen(rest, open)
+        val close = SqlLex.closeParen(rest, open)
         // Translate FIRST (ARRAY[…] sugar becomes array(…)), then
         // split: the splitter tracks parens, not brackets, so a
         // bracketed array literal's commas must already be inside
         // parens when the argument list is divided.
-        val argExprs = MatchRecognizeSql
+        val argExprs = SqlLex
           .splitTopLevel(Dialect.translate(rest.substring(open + 1, close)), ',')
           .map(_.trim).filter(_.nonEmpty)
           .map(expr)
@@ -217,7 +217,7 @@ object RelationSql {
     // the grammar). The WHERE predicate must not swallow the ORDER BY,
     // so split the trailing clauses first.
     rest = rest.trim
-    val orderIdx = topLevelIndexOf(rest, "ORDER")
+    val orderIdx = SqlLex.topLevelIndexOf(rest, "(?i)ORDER\\b".r)
     val (beforeOrder, orderAndAfter) =
       if (orderIdx < 0) (rest, "") else rest.splitAt(orderIdx)
 
@@ -236,10 +236,10 @@ object RelationSql {
       s"unsupported trailing clause: '${orderAndAfter.take(60)}'"))
     var tail = orderAndAfter.substring(obm.end)
     // Sort keys run until OFFSET/FETCH (top-level scan).
-    val offIdx = topLevelIndexOf(tail, "OFFSET")
-    val fetIdx = topLevelIndexOf(tail, "FETCH")
+    val offIdx = SqlLex.topLevelIndexOf(tail, "(?i)OFFSET\\b".r)
+    val fetIdx = SqlLex.topLevelIndexOf(tail, "(?i)FETCH\\b".r)
     val cut = Seq(offIdx, fetIdx).filter(_ >= 0).sorted.headOption.getOrElse(tail.length)
-    val keys = MatchRecognizeSql.splitTopLevel(tail.substring(0, cut), ',')
+    val keys = SqlLex.splitTopLevel(tail.substring(0, cut), ',')
       .map(_.trim).filter(_.nonEmpty).map(sortKey)
     if (keys.isEmpty) fail("ORDER BY requires at least one sort key")
     tail = tail.substring(cut).trim
@@ -286,31 +286,6 @@ object RelationSql {
       case (true, false)  => c.desc_nulls_last
       case (true, true)   => c.desc_nulls_first
     }
-  }
-
-  /** Index of keyword `kw` at paren depth 0 (outside quotes), or -1. */
-  private def topLevelIndexOf(s: String, kw: String): Int = {
-    var depth = 0; var inQ = false; var i = 0
-    val upper = s.toUpperCase(java.util.Locale.ROOT)
-    val kwU = kw.toUpperCase(java.util.Locale.ROOT)
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (inQ) { if (ch == '\'') inQ = false }
-      else ch match {
-        case '\'' => inQ = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          def identChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-          if (depth == 0 && upper.startsWith(kwU, i) &&
-              (i == 0 || !identChar(s.charAt(i - 1))) &&
-              (i + kwU.length >= s.length ||
-                !identChar(s.charAt(i + kwU.length))))
-            return i
-      }
-      i += 1
-    }
-    -1
   }
 
   private def fail(msg: String): Nothing =

@@ -41,7 +41,7 @@ object SqlJsonClauses {
     ("(?is).*\\b(PASSING|RETURNING|DEFAULT|ON\\s+EMPTY|ON\\s+ERROR|" +
       "WRAPPER|QUOTES|FORMAT\\s+JSON)\\b.*").r
 
-  def pass(canon0: String): String = {
+  def pass(canon0: String, lex: SqlLex.Lexed): String = {
     val sb = new StringBuilder
     var rest = canon0
     var guard = 0
@@ -53,11 +53,11 @@ object SqlJsonClauses {
           return sb.toString
         case Some(m) =>
           val open = rest.indexOf('(', m.start)
-          val close = closeParen(rest, open)
+          val close = SqlLex.closeParen(rest, open)
           val body = rest.substring(open + 1, close)
           val rewritten =
             if (clauseKw.pattern.matcher(body).matches())
-              try Some(rewrite(m.group(1).toLowerCase, body))
+              try Some(rewrite(m.group(1).toLowerCase, body, lex))
               catch { case _: UnsupportedClauseError => None }
             else None
           rewritten match {
@@ -82,20 +82,7 @@ object SqlJsonClauses {
 
   private def bail(msg: String): Nothing = throw new UnsupportedClauseError(msg)
 
-  private def closeParen(s: String, open: Int): Int = {
-    var d = 0
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '(') d += 1
-      else if (c == ')') { d -= 1; if (d == 0) return i }
-      i += 1
-    }
-    bail(s"unbalanced parens")
-  }
-
-  // whitespace-only trim: String.trim would eat the U+0001/U+0002
-  // literal sentinels
+  // whitespace-only trim: spaces, tabs and line breaks
   private def tws(x: String): String =
     x.replaceAll("^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", "")
 
@@ -128,40 +115,26 @@ object SqlJsonClauses {
     }
     private def isWord(c: Char): Boolean = c.isLetterOrDigit || c == '_'
     /** Text up to the next top-level occurrence of any stop word /
-      * char; cursor lands on the stop. */
+      * comma; cursor lands on the stop. */
     def until(stopWords: Seq[String], stopComma: Boolean): String = {
       skipWs()
       val start = pos
-      var depth = 0
-      while (pos < src.length) {
-        val c = src.charAt(pos)
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0) {
-          if (stopComma && c == ',') return src.substring(start, pos)
-          if (!isWord(c) || pos == start || !isWord(src.charAt(pos - 1))) {
-            // word boundary: try stops
-            for (w <- stopWords) {
-              val end = pos + w.length
-              if (end <= src.length &&
-                src.substring(pos, end).equalsIgnoreCase(w) &&
-                (end == src.length || !isWord(src.charAt(end))) &&
-                (pos == 0 || !isWord(src.charAt(pos - 1))))
-                return src.substring(start, pos)
-            }
-          }
-        }
-        pos += 1
-      }
+      val kw =
+        if (stopWords.isEmpty) src.length
+        else SqlLex.clauseEnd(src, s"(?i)(?:${stopWords.mkString("|")})\\b".r, start)
+      val comma =
+        if (stopComma) start + SqlLex.splitTopLevel(src.substring(start), ',').head.length
+        else src.length
+      pos = math.min(kw, comma)
       src.substring(start, pos)
     }
     def expectKw(w: String): Unit =
       if (!eatKw(w)) bail(s"expected $w at $pos in: $src")
   }
 
-  private val sentinelRe = "^\u0001\\d+\u0002".r
+  private val sentinelRe = s"^${SqlLex.LitP}".r
 
-  private def rewrite(fn: String, body: String): String = {
+  private def rewrite(fn: String, body: String, lex: SqlLex.Lexed): String = {
     val cur = new Cursor(body)
     // input argument (optionally FORMAT JSON [ENCODING UTF8|16|32])
     var input = tws(cur.until(Seq.empty, stopComma = true))
@@ -199,16 +172,16 @@ object SqlJsonClauses {
           val expr0 = cur.until(Seq("AS"), stopComma = false)
           cur.expectKw("AS")
           cur.skipWs()
-          // "quoted", `backticked` (the dialect converts double-quoted
-          // identifiers to backticks before this pass), or bare
+          // "quoted" (an identifier sentinel on canonical text),
+          // `backticked`, or bare
           val rest = body.substring(cur.pos)
-          val nameM = ("^\"([^\"]+)\"|^`([^`]+)`|" +
+          val nameM = (s"^${SqlLex.IdentIdx}|^`([^`]+)`|" +
             "^([A-Za-z_][A-Za-z0-9_]*)").r
             .findFirstMatchIn(rest).getOrElse(bail("expected PASSING name"))
           // bare names canonicalize to UPPER CASE per the standard
           // (reference: PASSING 2 AS number does NOT bind $number —
           // "Try quoting to match case"); quoted names stay exact
-          val name = Option(nameM.group(1))
+          val name = Option(nameM.group(1)).map(i => lex.value(i.toInt))
             .orElse(Option(nameM.group(2)))
             .getOrElse(nameM.group(3).toUpperCase)
           cur.pos += nameM.end
@@ -278,7 +251,7 @@ object SqlJsonClauses {
         val fragment =
           if (isJson) s"($expr)"
           else s"CASE WHEN ($expr) IS NULL THEN 'null' ELSE ${frag(s"($expr)")} END"
-        s"'$name', $fragment"
+        s"${lex.lit(name)}, $fragment"
       }.mkString(", ") + ")"
 
     def castR(x: String): String = returning match {
@@ -370,7 +343,7 @@ object SqlJsonClauses {
         s"CAST((${tws(e0.substring(0, m.start))}) AS STRING)"
       case None =>
         // bare binary (X'..' hex literal) defaults to FORMAT JSON UTF-8
-        if (e0.matches("(?s)^[Xx]\\s*\\d+$"))
+        if (e0.matches(s"(?s)^[Xx]\\s*${SqlLex.LitP}$$"))
           s"CAST(($e0) AS STRING)"
         else e0
     }

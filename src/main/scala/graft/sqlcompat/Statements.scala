@@ -47,7 +47,7 @@ object Statements {
 
   private def preparedKey(name: String) = s"graft.prepared.$name"
 
-  /** Substitute `?` positional parameters (outside string literals)
+  /** Substitute `?` positional parameters ([[SqlLex.paramPositions]])
     * with the USING expressions, each parenthesized. Textual binding —
     * one documented divergence from the reference: binding happens
     * BEFORE analysis, so a query the reference rejects for using the
@@ -55,26 +55,20 @@ object Statements {
     * here once the values are equal. Count mismatches fail loudly in
     * both directions. */
   private def bindParams(sql: String, values: Seq[String]): String = {
+    val positions = SqlLex.paramPositions(sql)
+    require(!values.take(positions.length).exists(_.contains("?")),
+      "No value provided for parameter (a USING value may not itself be '?')")
+    require(values.length >= positions.length,
+      s"No value provided for parameter ${values.length + 1}")
+    require(values.length == positions.length,
+      s"too many USING values: query has ${positions.length} parameter(s), got ${values.length}")
     val out = new StringBuilder
-    var inStr = false
-    var i = 0
-    var used = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') { inStr = !inStr; out += c }
-      else if (c == '?' && !inStr) {
-        require(used < values.length,
-          s"No value provided for parameter ${used + 1}")
-        require(!values(used).contains("?"),
-          "No value provided for parameter (a USING value may not itself be '?')")
-        out ++= s"(${values(used)})"
-        used += 1
-      } else out += c
-      i += 1
+    var last = 0
+    for ((pos, v) <- positions.zip(values)) {
+      out ++= sql.substring(last, pos) ++= s"($v)"
+      last = pos + 1
     }
-    require(used == values.length,
-      s"too many USING values: query has $used parameter(s), got ${values.length}")
-    out.toString
+    (out ++= sql.substring(last)).toString
   }
 
   private def unquote(v: String): String = {
@@ -104,7 +98,7 @@ object Statements {
       val body = s.conf.getOption(preparedKey(name)).getOrElse(
         throw new IllegalArgumentException(s"Prepared statement not found: $name"))
       val values = Option(usingOrNull)
-        .map(u => MatchRecognizeSql.splitTopLevel(u, ',').map(_.trim))
+        .map(u => SqlLex.splitTopLevel(u, ',').map(_.trim))
         .getOrElse(Seq.empty)
       execute(s, bindParams(body, values))
     case setRe(key, value) =>
@@ -212,20 +206,6 @@ object Statements {
   private val showCreateRe =
     "(?is)^\\s*SHOW\\s+CREATE\\s+(TABLE|VIEW)\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s*$".r
 
-  /** Positions of `?` parameter markers outside string literals. */
-  private def paramPositions(sql: String): Seq[Int] = {
-    val b = Seq.newBuilder[Int]
-    var inStr = false
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') inStr = !inStr
-      else if (c == '?' && !inStr) b += i
-      i += 1
-    }
-    b.result()
-  }
-
   /** DESCRIBE INPUT (grammar `SqlBase.g4` DESCRIBE INPUT; reference
     * `AbstractTestEngineOnlyQueries.testDescribeInput`): one row per
     * positional parameter with its inferred type. Inference is the
@@ -240,7 +220,7 @@ object Statements {
     import s.implicits._
     val body = s.conf.getOption(preparedKey(name)).getOrElse(
       throw new IllegalArgumentException(s"Prepared statement not found: $name"))
-    val positions = paramPositions(body)
+    val positions = SqlLex.paramPositions(body)
     def limitish(pos: Int): Boolean =
       "(?is)(LIMIT|OFFSET|FIRST|NEXT)\\s*$".r
         .findFirstMatchIn(body.substring(0, pos)).isDefined
@@ -284,7 +264,7 @@ object Statements {
     import s.implicits._
     val body = s.conf.getOption(preparedKey(name)).getOrElse(
       throw new IllegalArgumentException(s"Prepared statement not found: $name"))
-    val probe = bindParams(body, paramPositions(body).map(_ => "NULL"))
+    val probe = bindParams(body, SqlLex.paramPositions(body).map(_ => "NULL"))
     val schema = s.sql(Dialect.translate(probe)).queryExecution.analyzed.schema
     schema.fields.toSeq.map { f =>
       import org.apache.spark.sql.types._

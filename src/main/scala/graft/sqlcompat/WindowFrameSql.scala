@@ -59,6 +59,7 @@ import scala.collection.mutable.ArrayBuffer
   * outright while the reference returns empty frames.
   */
 private[sqlcompat] object WindowFrameSql {
+  import SqlLex.{cre, repAll}
 
   // ------------------------------------------------------------ model
   private sealed trait BKind
@@ -80,61 +81,20 @@ private[sqlcompat] object WindowFrameSql {
       frameEnd: Int)
 
   private def ws(x: String): String =
-    x.replaceAll("^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", "")
-
-  private def closeParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    s.length - 1
-  }
-
-  private def openParen(s: String, close: Int): Int = {
-    var depth = 0
-    var i = close
-    while (i >= 0) {
-      val c = s.charAt(i)
-      if (c == ')') depth += 1
-      else if (c == '(') { depth -= 1; if (depth == 0) return i }
-      i -= 1
-    }
-    0
-  }
-
-  /** First depth-0 position in s(from..) where `kwRe` matches at a word
-    * start; -1 if none. */
-  private def kwPos(s: String, from: Int, kwRe: scala.util.matching.Regex): Int = {
-    var depth = 0
-    var i = from
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth < 0) return -1 }
-      else if (depth == 0 && c.isLetter &&
-        (i == 0 || (!s.charAt(i - 1).isLetterOrDigit && s.charAt(i - 1) != '_')) &&
-        kwRe.findPrefixMatchOf(s.substring(i)).isDefined) return i
-      i += 1
-    }
-    -1
-  }
+    repAll(x, "^[ \\t\\r\\n]+|[ \\t\\r\\n]+$", "")
 
   private val castBoundRe =
-    ("(?is)^CAST\\(\\s*(\\d+)\\s+AS\\s+(TINYINT|SMALLINT|INT|INTEGER|" +
+    (s"(?is)^CAST\\(\\s*${SqlLex.LitIdx}\\s+AS\\s+(TINYINT|SMALLINT|INT|INTEGER|" +
       "BIGINT|DOUBLE|FLOAT|DECIMAL\\s*\\(\\s*\\d+\\s*,\\s*\\d+\\s*\\))\\s*\\)$").r
-  /** Inline numeric CAST bound (no literal placeholder): the digits in
+  /** Inline numeric CAST bound (no literal sentinel): the digits in
     * the text are the offset value itself. */
   private val castInlineBoundRe =
     ("(?is)^CAST\\(\\s*(\\d+(?:\\.\\d+)?)\\s+AS\\s+(TINYINT|SMALLINT|INT|INTEGER|" +
       "BIGINT|DOUBLE|FLOAT|DECIMAL\\s*\\(\\s*\\d+\\s*,\\s*\\d+\\s*\\)|DECIMAL)\\s*\\)$").r
   private val intervalBoundRe =
-    "(?is)^INTERVAL\\s+\\d+\\s+[A-Za-z]+(\\s+TO\\s+[A-Za-z]+)?$".r
+    s"(?is)^INTERVAL\\s+${SqlLex.LitP}\\s+[A-Za-z]+(\\s+TO\\s+[A-Za-z]+)?$$".r
 
-  private def parseOffsetExpr(txt0: String, lits: IndexedSeq[String]): BKind = {
+  private def parseOffsetExpr(txt0: String, lex: SqlLex.Lexed): BKind = {
     val txt = ws(txt0)
     // negative constants keep the dynamic path, whose runtime guard
     // raises the reference's "must not be negative or null" error
@@ -143,13 +103,7 @@ private[sqlcompat] object WindowFrameSql {
       catch { case _: NumberFormatException => BDyn(txt) }
     if (txt.matches("^\\d+(\\.\\d+)?$")) BNum(BigDecimal(txt))
     else castBoundRe.findFirstMatchIn(txt) match {
-      case Some(m) =>
-        val idx = m.group(1).toInt
-        if (idx >= lits.length) BDyn(txt) // malformed index: fail soft
-        else {
-          val body = lits(idx)
-          numOr(ws(body.substring(1, body.length - 1)))
-        }
+      case Some(m) => numOr(ws(lex.value(m.group(1).toInt)))
       case None => castInlineBoundRe.findFirstMatchIn(txt) match {
         // user-written inline numeric CAST bound (CAST(2 AS INTEGER)
         // PRECEDING): the digits ARE the value — constant path
@@ -163,17 +117,17 @@ private[sqlcompat] object WindowFrameSql {
 
   /** Parse one frame bound: "UNBOUNDED PRECEDING", "CURRENT ROW",
     * "<expr> PRECEDING|FOLLOWING". */
-  private def parseBound(txt0: String, lits: IndexedSeq[String]): Bound = {
+  private def parseBound(txt0: String, lex: SqlLex.Lexed): Bound = {
     val txt = ws(txt0)
     if (txt.matches("(?is)^CURRENT\\s+ROW$")) Bound(BCur, following = false)
     else {
-      val m = "(?is)^(.*?)\\s+(PRECEDING|FOLLOWING)$".r.findFirstMatchIn(txt)
+      val m = cre("(?is)^(.*?)\\s+(PRECEDING|FOLLOWING)$").findFirstMatchIn(txt)
         .getOrElse(throw new IllegalArgumentException(
           s"cannot parse window frame bound: $txt"))
       val fol = m.group(2).equalsIgnoreCase("FOLLOWING")
       val e = ws(m.group(1))
       if (e.equalsIgnoreCase("UNBOUNDED")) Bound(BUnb, fol)
-      else Bound(parseOffsetExpr(e, lits), fol)
+      else Bound(parseOffsetExpr(e, lex), fol)
     }
   }
 
@@ -207,39 +161,39 @@ private[sqlcompat] object WindowFrameSql {
     b.kind.isInstanceOf[BDyn]
 
   /** Parse the inside of an OVER(...) / WINDOW def. */
-  private def parseSpec(inner: String, lits: IndexedSeq[String]): Spec = {
-    val frameRe = "(?is)^(ROWS|RANGE|GROUPS)\\b".r
-    val orderRe = "(?is)^ORDER\\s+BY\\b".r
-    val partRe = "(?is)^PARTITION\\s+BY\\b".r
-    val pPos = kwPos(inner, 0, partRe)
-    val oPos = kwPos(inner, 0, orderRe)
-    val fPos = kwPos(inner, 0, frameRe)
+  private def parseSpec(inner: String, lex: SqlLex.Lexed): Spec = {
+    val frameRe = cre("(?is)^(ROWS|RANGE|GROUPS)\\b")
+    val orderRe = cre("(?is)^ORDER\\s+BY\\b")
+    val partRe = cre("(?is)^PARTITION\\s+BY\\b")
+    val pPos = SqlLex.topLevelIndexOf(inner, partRe)
+    val oPos = SqlLex.topLevelIndexOf(inner, orderRe)
+    val fPos = SqlLex.topLevelIndexOf(inner, frameRe)
     val partition =
       if (pPos < 0) ""
       else {
         val end = Seq(oPos, fPos, inner.length).filter(_ > pPos).min
-        ws(inner.substring(pPos, end).replaceAll("(?is)^PARTITION\\s+BY", ""))
+        ws(repAll(inner.substring(pPos, end), "(?is)^PARTITION\\s+BY", ""))
       }
     val orderTxt =
       if (oPos < 0) ""
       else {
         val end = if (fPos > oPos) fPos else inner.length
-        ws(inner.substring(oPos, end).replaceAll("(?is)^ORDER\\s+BY", ""))
+        ws(repAll(inner.substring(oPos, end), "(?is)^ORDER\\s+BY", ""))
       }
     if (fPos < 0) Spec(partition, orderTxt, "", Bound(BUnb, false), Bound(BCur, false), -1, -1)
     else {
       val fm = frameRe.findPrefixMatchOf(inner.substring(fPos)).get
       val fType = fm.group(1).toUpperCase
       val rest = inner.substring(fPos + fm.end)
-      val bm = "(?is)^\\s*BETWEEN\\b".r.findPrefixMatchOf(rest)
+      val bm = cre("(?is)^\\s*BETWEEN\\b").findPrefixMatchOf(rest)
       val (lo, hi) =
         if (bm.isDefined) {
           val body = rest.substring(bm.get.end)
-          val andAt = kwPos(body, 0, "(?is)^AND\\b".r)
+          val andAt = SqlLex.topLevelIndexOf(body, cre("(?is)^AND\\b"))
           require(andAt > 0, s"malformed window frame: $inner")
-          (parseBound(body.substring(0, andAt), lits),
-            parseBound(body.substring(andAt + 3), lits))
-        } else (parseBound(rest, lits), Bound(BCur, following = false))
+          (parseBound(body.substring(0, andAt), lex),
+            parseBound(body.substring(andAt + 3), lex))
+        } else (parseBound(rest, lex), Bound(BCur, following = false))
       Spec(partition, orderTxt, fType, lo, hi, fPos, inner.length)
     }
   }
@@ -248,17 +202,17 @@ private[sqlcompat] object WindowFrameSql {
     * (keyExpr, descending, nullsFirst) with the reference's default
     * null placement (ASC ⇒ NULLS LAST, DESC ⇒ NULLS FIRST). */
   private def parseKey(orderTxt: String): (String, Boolean, Boolean) = {
-    val items = MatchRecognizeSql.splitTopLevel(orderTxt, ',')
+    val items = SqlLex.splitTopLevel(orderTxt, ',')
     require(items.length == 1,
       s"RANGE frame with offset requires exactly one sort key: $orderTxt")
     var it = ws(items.head)
     var nf: Option[Boolean] = None
-    "(?is)\\s+NULLS\\s+(FIRST|LAST)\\s*$".r.findFirstMatchIn(it).foreach { m =>
+    cre("(?is)\\s+NULLS\\s+(FIRST|LAST)\\s*$").findFirstMatchIn(it).foreach { m =>
       nf = Some(m.group(1).equalsIgnoreCase("FIRST"))
       it = it.substring(0, m.start)
     }
     var desc = false
-    "(?is)\\s+(ASC|DESC)\\s*$".r.findFirstMatchIn(it).foreach { m =>
+    cre("(?is)\\s+(ASC|DESC)\\s*$").findFirstMatchIn(it).foreach { m =>
       desc = m.group(1).equalsIgnoreCase("DESC")
       it = it.substring(0, m.start)
     }
@@ -405,13 +359,13 @@ private[sqlcompat] object WindowFrameSql {
     * frame with PER-ROW offsets (same collect+filter machinery on a
     * row_number axis — `ROWS x PRECEDING` with a column offset is
     * legal in the reference, Spark requires literals). */
-  private def groupsPhase(canon0: String, lits: IndexedSeq[String]): String = {
+  private def groupsPhase(canon0: String, lex: SqlLex.Lexed): String = {
     var out = canon0
     var guard = 0
     var gcol = 0
     var wrapN = 0
     var searchFrom = 0
-    val groupsRe = "(?i)\\b(GROUPS|ROWS)\\b".r
+    val groupsRe = cre("(?i)\\b(GROUPS|ROWS)\\b")
     while (guard < 512) {
       guard += 1
       val m = groupsRe.findFirstMatchIn(out.substring(searchFrom))
@@ -419,28 +373,17 @@ private[sqlcompat] object WindowFrameSql {
       val gPos = searchFrom + m.get.start
       val isRows = m.get.group(1).equalsIgnoreCase("ROWS")
       // enclosing spec parens
-      val specOpen = {
-        var depth = 0
-        var i = gPos - 1
-        var found = -1
-        while (i >= 0 && found < 0) {
-          val c = out.charAt(i)
-          if (c == ')') depth += 1
-          else if (c == '(') { if (depth == 0) found = i else depth -= 1 }
-          i -= 1
-        }
-        found
-      }
+      val specOpen = SqlLex.openParen(out, gPos)
       val before = if (specOpen > 0) out.substring(0, specOpen) else ""
-      val isOver = "(?is)OVER\\s*$".r.findFirstMatchIn(before).isDefined
-      val isDef = "(?is)WINDOW\\s+[A-Za-z_][A-Za-z0-9_]*\\s+AS\\s*$".r
+      val isOver = cre("(?is)OVER\\s*$").findFirstMatchIn(before).isDefined
+      val isDef = cre("(?is)WINDOW\\s+[A-Za-z_][A-Za-z0-9_]*\\s+AS\\s*$")
         .findFirstMatchIn(before).isDefined ||
-        "(?is),\\s*[A-Za-z_][A-Za-z0-9_]*\\s+AS\\s*$".r.findFirstMatchIn(before).isDefined
+        cre("(?is),\\s*[A-Za-z_][A-Za-z0-9_]*\\s+AS\\s*$").findFirstMatchIn(before).isDefined
       if (specOpen < 0 || (!isOver && !isDef)) { searchFrom = gPos + 6 }
       else {
-        val specClose = closeParen(out, specOpen)
+        val specClose = SqlLex.closeParen(out, specOpen)
         val inner = out.substring(specOpen + 1, specClose)
-        val spec = parseSpec(inner, lits)
+        val spec = parseSpec(inner, lex)
         if (isRows &&
             !(spec.frameType == "ROWS" && (isDyn(spec.lo) || isDyn(spec.hi)))) {
           // constant/normal ROWS frames belong to framePhase
@@ -550,13 +493,13 @@ private[sqlcompat] object WindowFrameSql {
   /** The function call ending immediately before position `pos`:
     * (startOfFnName, lowercased name, argument text). */
   private def callSiteBefore(out: String, pos: Int): (Int, String, String) = {
-    val beforeTrim = out.substring(0, pos).replaceAll("(?is)OVER\\s*$", "")
-      .replaceAll("[ \\t\\r\\n]+$", "")
+    val beforeTrim =
+      repAll(repAll(out.substring(0, pos), "(?is)OVER\\s*$", ""), "[ \\t\\r\\n]+$", "")
     require(beforeTrim.nonEmpty && beforeTrim.last == ')',
       s"window spec not attached to a function call near: ${out.substring(Math.max(0, pos - 40), pos)}")
     val callClose = beforeTrim.length - 1
-    val callOpen = openParen(out, callClose)
-    val fnM = "(?i)([a-z_][a-z0-9_]*)\\s*$".r
+    val callOpen = math.max(0, SqlLex.openParen(out, callClose))
+    val fnM = cre("(?i)([a-z_][a-z0-9_]*)\\s*$")
       .findFirstMatchIn(out.substring(0, callOpen))
     require(fnM.isDefined, "window function name not found")
     (fnM.get.start(1), fnM.get.group(1).toLowerCase,
@@ -566,58 +509,37 @@ private[sqlcompat] object WindowFrameSql {
   private def foldEmpty(fn: String, argTxt: String): String = fn match {
     case "count" => "CAST(0 AS BIGINT)"
     case "array_agg" =>
-      val a = ws(argTxt).replaceAll("(?is)^DISTINCT\\s+", "")
+      val a = repAll(ws(argTxt), "(?is)^DISTINCT\\s+", "")
       s"IF(false, array($a), NULL)"
     case _ =>
-      val a = ws(argTxt).replaceAll("(?is)^DISTINCT\\s+", "")
+      val a = repAll(ws(argTxt), "(?is)^DISTINCT\\s+", "")
       if (ws(a) == "*") "NULL" else s"IF(false, ($a), NULL)"
   }
 
   /** Wrap the FROM relation of the query block containing `pos` in a
     * subquery that adds `gdef`. */
   private def wrapBlockFrom(out: String, pos: Int, gdef: String, n: Int): String = {
-    // Nearest enclosing SELECT, scanning backward. Depth ≤ 0 accepts
-    // crossing OUT of expression parens that contain the window (e.g.
-    // `CAST(sum(...) OVER (...) AS BIGINT)`): sibling subqueries are
-    // fully balanced (depth > 0 while inside them), and a CONTAINING
-    // subquery's own SELECT is met before its open paren — so the
-    // first SELECT at depth ≤ 0 is this window's query block.
-    var depth = 0
-    var i = pos - 1
+    // Nearest enclosing SELECT: the last top-level SELECT before `pos`
+    // in the paren group holding it, else in the group holding that
+    // group, and so on outward. This crosses OUT of expression parens
+    // that contain the window (e.g. `CAST(sum(...) OVER (...) AS
+    // BIGINT)`) and never into a sibling subquery; a CONTAINING
+    // subquery's own SELECT precedes the window in its group.
     var selPos = -1
-    while (i >= 0 && selPos < 0) {
-      val c = out.charAt(i)
-      if (c == ')') depth += 1
-      else if (c == '(') depth -= 1
-      else if (depth <= 0 && (c == 'T' || c == 't')) {
-        // candidate end of SELECT keyword
-        if (i >= 5 && out.substring(i - 5, i + 1).equalsIgnoreCase("SELECT") &&
-          (i == 5 || (!out.charAt(i - 6).isLetterOrDigit && out.charAt(i - 6) != '_')))
-          selPos = i - 5
-      }
-      i -= 1
+    var end = pos
+    while (selPos < 0 && end >= 0) {
+      val open = SqlLex.openParen(out, end)
+      selPos = SqlLex.lastTopLevelIndexOf(out, cre("(?i)SELECT\\b"), open + 1, end)
+      end = open
     }
     require(selPos >= 0, "enclosing SELECT for GROUPS window not found")
-    val fromPos = kwPos(out, selPos + 6, "(?is)^FROM\\b".r)
+    val fromPos = SqlLex.topLevelIndexOf(out, cre("(?is)^FROM\\b"), selPos + 6)
     require(fromPos > 0, "GROUPS window requires a FROM clause")
-    val stopRe = ("(?is)^(GROUP|HAVING|WINDOW|ORDER|LIMIT|OFFSET|FETCH|" +
-      "UNION|INTERSECT|EXCEPT|QUALIFY)\\b").r
-    var relEnd = out.length
-    var d2 = 0
-    var j = fromPos + 4
-    var stopKw = ""
-    while (j < out.length && relEnd == out.length) {
-      val c = out.charAt(j)
-      if (c == '(') d2 += 1
-      else if (c == ')') { d2 -= 1; if (d2 < 0) relEnd = j }
-      else if (d2 == 0 && c.isLetter &&
-        (!out.charAt(j - 1).isLetterOrDigit && out.charAt(j - 1) != '_')) {
-        stopRe.findPrefixMatchOf(out.substring(j)).foreach { sm =>
-          stopKw = sm.group(1).toUpperCase; relEnd = j
-        }
-      }
-      j += 1
-    }
+    val stopRe = cre("(?is)^(GROUP|HAVING|WINDOW|ORDER|LIMIT|OFFSET|FETCH|" +
+      "UNION|INTERSECT|EXCEPT|QUALIFY)\\b")
+    val relEnd = SqlLex.clauseEnd(out, stopRe, fromPos + 4)
+    val stopKw = stopRe.findPrefixMatchOf(out.substring(relEnd))
+      .fold("")(_.group(1).toUpperCase)
     require(stopKw != "GROUP" && stopKw != "HAVING",
       "GROUPS frame over an aggregated query block is not supported")
     val rel = ws(out.substring(fromPos + 4, relEnd))
@@ -631,24 +553,24 @@ private[sqlcompat] object WindowFrameSql {
   /** Normalize ROWS bounds, fix RANGE null-key semantics, wrap
     * windowed array_agg. Single left-to-right scan; generated text is
     * skipped by advancing past each replacement. */
-  private def framePhase(canon0: String, lits: IndexedSeq[String]): String = {
+  private def framePhase(canon0: String, lex: SqlLex.Lexed): String = {
     var out = canon0
     var from = 0
     var guard = 0
-    val overRe = "(?i)\\bOVER\\b".r
+    val overRe = cre("(?i)\\bOVER\\b")
     while (guard < 256) {
       guard += 1
       val m = overRe.findFirstMatchIn(out.substring(from))
       if (m.isEmpty) return out
       val overStart = from + m.get.start
       val afterOver = out.substring(overStart + 4)
-      val parenM = "(?s)^\\s*\\(".r.findPrefixMatchOf(afterOver)
-      val nameM = "(?s)^\\s*([A-Za-z_][A-Za-z0-9_]*)".r.findPrefixMatchOf(afterOver)
+      val parenM = cre("(?s)^\\s*\\(").findPrefixMatchOf(afterOver)
+      val nameM = cre("(?s)^\\s*([A-Za-z_][A-Za-z0-9_]*)").findPrefixMatchOf(afterOver)
       if (parenM.isDefined) {
         val specOpen = overStart + 4 + parenM.get.end - 1
-        val specClose = closeParen(out, specOpen)
+        val specClose = SqlLex.closeParen(out, specOpen)
         val inner = out.substring(specOpen + 1, specClose)
-        rewriteCallSite(out, overStart, specOpen, specClose, inner, lits) match {
+        rewriteCallSite(out, overStart, specOpen, specClose, inner, lex) match {
           case Some((newOut, resumeAt)) => out = newOut; from = resumeAt
           case None => from = specClose + 1
         }
@@ -663,22 +585,22 @@ private[sqlcompat] object WindowFrameSql {
         val defRe = ("(?is)\\b" + java.util.regex.Pattern.quote(wname) +
           "\\s+AS\\s*\\(").r
         val defM = defRe.findAllMatchIn(out).toList.reverse.find { dm =>
-          val wk = "(?is)\\bWINDOW\\b".r.findAllMatchIn(
+          val wk = cre("(?is)\\bWINDOW\\b").findAllMatchIn(
             out.substring(0, dm.start)).toList.lastOption
           wk.exists { w =>
-            val between = out.substring(w.end, dm.start)
-              .replaceAll("\\([^()]*\\)", "").replaceAll("\\([^()]*\\)", "")
-            !"(?is)\\b(SELECT|FROM|WHERE|JOIN)\\b".r
+            val between = repAll(repAll(out.substring(w.end, dm.start),
+              "\\([^()]*\\)", ""), "\\([^()]*\\)", "")
+            !cre("(?is)\\b(SELECT|FROM|WHERE|JOIN)\\b")
               .findFirstIn(between).isDefined
           }
         }
         defM match {
           case Some(dm) =>
             val dOpen = out.indexOf('(', dm.end - 1)
-            val dClose = closeParen(out, dOpen)
+            val dClose = SqlLex.closeParen(out, dOpen)
             val inner = out.substring(dOpen + 1, dClose)
             val consumed = rewriteNamedCallSite(out, overStart,
-              overStart + 4 + nameM.get.end, wname, inner, lits)
+              overStart + 4 + nameM.get.end, wname, inner, lex)
             consumed match {
               case Some((newOut, resumeAt)) => out = newOut; from = resumeAt
               case None => from = overStart + 4 + nameM.get.end
@@ -692,19 +614,19 @@ private[sqlcompat] object WindowFrameSql {
 
   /** Classification shared by inline and named call sites. Returns the
     * rewritten text and resume offset, or None to leave untouched. */
-  private def classify(inner: String, lits: IndexedSeq[String]): Spec =
-    parseSpec(inner, lits)
+  private def classify(inner: String, lex: SqlLex.Lexed): Spec =
+    parseSpec(inner, lex)
 
   private def alreadyWrapped(argTxt: String): Boolean = {
-    val a = ws(argTxt).replaceAll("(?is)^DISTINCT\\s+", "")
-    a.startsWith("struct(") || "(?is)^CASE\\b.*".r.matches(a)
+    val a = repAll(ws(argTxt), "(?is)^DISTINCT\\s+", "")
+    a.startsWith("struct(") || cre("(?is)^CASE\\b.*").matches(a)
   }
 
   private def rewriteCallSite(out0: String, overStart: Int, specOpen: Int,
       specClose: Int, inner: String,
-      lits: IndexedSeq[String]): Option[(String, Int)] = {
+      lex: SqlLex.Lexed): Option[(String, Int)] = {
     var out = out0
-    val spec = classify(inner, lits)
+    val spec = classify(inner, lex)
     // GROUPS is gone by now; rank-axis RANGE (rewritten GROUPS) is simple
     val rankAxis = spec.orderTxt.matches("__g\\d+")
     val rangeOffset = spec.frameType == "RANGE" &&
@@ -732,7 +654,7 @@ private[sqlcompat] object WindowFrameSql {
           // re-run on the normalized site; COMMIT the normalization
           // even when the recursion has nothing further to do
           return rewriteCallSite(out, overStart, specOpen, newClose,
-            newInner, lits).orElse(Some((out, newClose + 1)))
+            newInner, lex).orElse(Some((out, newClose + 1)))
         }
       }
     }
@@ -777,9 +699,9 @@ private[sqlcompat] object WindowFrameSql {
   }
 
   private def rewriteNamedCallSite(out0: String, overStart: Int, refEnd: Int,
-      wname: String, inner: String, lits: IndexedSeq[String]): Option[(String, Int)] = {
+      wname: String, inner: String, lex: SqlLex.Lexed): Option[(String, Int)] = {
     var out = out0
-    val spec = classify(inner, lits)
+    val spec = classify(inner, lex)
     val rankAxis = spec.orderTxt.matches("__g\\d+")
     val rangeOffset = spec.frameType == "RANGE" &&
       (hasOffset(spec.lo) || hasOffset(spec.hi)) && !rankAxis
@@ -802,8 +724,8 @@ private[sqlcompat] object WindowFrameSql {
 
   private def simpleArrayWrap(argTxt: String, overTxt: String): String = {
     val a0 = ws(argTxt)
-    val isDistinct = "(?is)^DISTINCT\\b.*".r.matches(a0)
-    val a = if (isDistinct) ws(a0.replaceAll("(?is)^DISTINCT", "")) else a0
+    val isDistinct = cre("(?is)^DISTINCT\\b.*").matches(a0)
+    val a = if (isDistinct) ws(repAll(a0, "(?is)^DISTINCT", "")) else a0
     val dk = if (isDistinct) "DISTINCT " else ""
     val t = s"transform(array_agg(${dk}struct(($a) AS __v)) OVER $overTxt, " +
       "__x -> __x.__v)"
@@ -848,7 +770,7 @@ private[sqlcompat] object WindowFrameSql {
 
     if (fn == "array_agg") {
       val a0 = ws(argTxt)
-      if ("(?is)^DISTINCT\\b.*".r.matches(a0)) return None
+      if (cre("(?is)^DISTINCT\\b.*").matches(a0)) return None
       val ngArr = s"transform(array_agg(CASE WHEN ($k) IS NULL THEN " +
         s"struct(($a0) AS __v) END) OVER $partOnly, __x -> __x.__v)"
       val nullRowArr =
@@ -873,20 +795,20 @@ private[sqlcompat] object WindowFrameSql {
     val nullRowAgg = over(nullRowSpec, call)
     if (empty) {
       val elseV = if (fn == "count") "CAST(0 AS BIGINT)"
-      else s"IF(false, (${ws(argTxt).replaceAll("(?is)^DISTINCT\\s+", "")}), NULL)"
+      else s"IF(false, (${repAll(ws(argTxt), "(?is)^DISTINCT\\s+", "")}), NULL)"
       return Some(s"CASE WHEN ($k) IS NULL THEN $nullRowAgg ELSE $elseV END")
     }
     Some(s"CASE WHEN ($k) IS NULL THEN $nullRowAgg ELSE ${over(overTxt, call)} END")
   }
 
   // ============================================================= entry
-  def pass(canon0: String, lits: IndexedSeq[String]): String = {
+  def pass(canon0: String, lex: SqlLex.Lexed): String = {
     // fast path: no window syntax at all
-    if (!"(?i)\\b(OVER|GROUPS)\\b".r.findFirstIn(canon0).isDefined) return canon0
+    if (!cre("(?i)\\b(OVER|GROUPS)\\b").findFirstIn(canon0).isDefined) return canon0
     val afterGroups =
-      if ("(?i)\\b(GROUPS|ROWS)\\b".r.findFirstIn(canon0).isDefined)
-        groupsPhase(canon0, lits)
+      if (cre("(?i)\\b(GROUPS|ROWS)\\b").findFirstIn(canon0).isDefined)
+        groupsPhase(canon0, lex)
       else canon0
-    framePhase(afterGroups, lits)
+    framePhase(afterGroups, lex)
   }
 }

@@ -159,6 +159,10 @@ class DialectSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql(t1).head().getString(0) == "ab000000-0000-0000-0000-000000000001")
     val t2 = Dialect.translate("SELECT IPADDRESS '::ffff:1.2.3.4'")
     assert(t2.contains("'1.2.3.4'"), t2)
+    // a VARBINARY cast of the literal folds to its value bytes
+    val t3 = Dialect.translate("SELECT CAST(IPADDRESS '1.2.3.4' AS VARBINARY) AS b")
+    assert(t3 == "SELECT X'00000000000000000000FFFF01020304' AS b", t3)
+    assert(spark.sql(t3).head().getAs[Array[Byte]](0).length == 16)
     // invalid literals raise at translate time (the reference's
     // INVALID_LITERAL condition)
     intercept[IllegalArgumentException] {
@@ -179,6 +183,41 @@ class DialectSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SELECT instr(name, 'strpos(') FROM t")
     assert(Dialect.translate("SELECT 'approx_distinct(' || x FROM t") ==
       "SELECT 'approx_distinct(' || x FROM t")
+  }
+
+  test("quoted identifiers restore with their escapes; comments are not code") {
+    // "" escapes a quote in the reference spelling; a backtick inside
+    // the identifier doubles in Spark's
+    for ((sql, spark0, name) <- Seq(
+        ("SELECT 1 AS \"a\"\"b\"", "SELECT 1 AS `a\"b`", "a\"b"),
+        ("SELECT 1 AS \"a`b\"", "SELECT 1 AS `a``b`", "a`b"))) {
+      assert(Dialect.translate(sql) == spark0)
+      assert(spark.sql(spark0).columns.toSeq == Seq(name))
+    }
+    // a quote inside a comment does not open a literal: the literal
+    // after it is still a literal, never rewritten
+    assert(Dialect.translate("-- don't\nSELECT 'strpos(x)' AS s") ==
+      "-- don't\nSELECT 'strpos(x)' AS s")
+    assert(Dialect.translate("/* it's */ SELECT 'now()'") ==
+      "/* it's */ SELECT 'now()'")
+  }
+
+  test("passes the rest of the dialect corpus never fires: JSON and bare CHAR casts, session keywords") {
+    // CAST(x AS JSON) renders the value as JSON text
+    val json = Dialect.translate("SELECT CAST(ARRAY[1, 2] AS JSON) AS j")
+    assert(json.startsWith("SELECT IF((array(1, 2)) IS NULL, CAST(NULL AS STRING), "), json)
+    assert(spark.sql(json).head().getString(0) == "[1,2]")
+    // bare CHAR is CHAR(1): truncate, then pad
+    val ch = Dialect.translate("SELECT CAST('ab' AS CHAR) AS c")
+    assert(ch == "SELECT rpad(left(CAST('ab' AS STRING), 1), 1) AS c", ch)
+    assert(spark.sql(ch).head().getString(0) == "a")
+    // the session keyword forms take Spark's function spellings; the
+    // SQL path is the reference's empty default
+    val sess = Dialect.translate(
+      "SELECT CURRENT_CATALOG, CURRENT_SCHEMA, CURRENT_USER, CURRENT_PATH")
+    assert(sess == "SELECT current_catalog(), current_schema(), current_user(), ''", sess)
+    val row = spark.sql(sess).head()
+    assert(row.getString(0).nonEmpty && row.getString(1).nonEmpty && row.getString(3) == "")
   }
 
   test("type renames in CAST and typed literals") {
@@ -598,6 +637,21 @@ class DialectSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(aggOut.map(_.getString(0)).toSeq == Seq("n"))
     assertThrows[IllegalArgumentException](
       Statements.execute(spark, "DESCRIBE INPUT no_such_stmt"))
+    // a quote inside a quoted identifier or a comment, and a '?' inside
+    // a comment, hide no marker and add none
+    spark.sql(
+      "CREATE OR REPLACE TEMPORARY VIEW quoted_dsc AS SELECT * FROM VALUES (1L, 2L) AS quoted_dsc(`it's`, x)")
+    for (body <- Seq(
+        "SELECT \"it's\", ? FROM quoted_dsc /* it's x? */ WHERE x = ?",
+        "SELECT \"it's\", ? FROM quoted_dsc -- what's x?\nWHERE x = ?")) {
+      Statements.execute(spark, s"PREPARE q_query FROM $body")
+      val qin = Statements.execute(spark, "DESCRIBE INPUT q_query").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(qin == Map(0L -> "unknown", 1L -> "bigint"), qin)
+      val got = Statements.execute(spark, "EXECUTE q_query USING 7, 2").collect()
+        .map(r => (r.getLong(0), r.getInt(1))).toSeq
+      assert(got == Seq((1L, 7)), got)
+    }
     // SHOW FUNCTIONS lists the resolvable inventory; LIKE filters with
     // SQL %/_ + ESCAPE semantics (TestShowQueries testShowFunctionLike)
     val fns = Statements.execute(spark, "SHOW FUNCTIONS").collect().map(_.getString(0))
@@ -950,6 +1004,11 @@ class DialectSpec extends AnyFunSuite with BeforeAndAfterAll {
     // loud failures: TIES without usable combination, garbage after FETCH
     def bad(sql: String): Unit =
       assertThrows[IllegalArgumentException](RelationSql.translate(sql, _ => t))
+    // a clause keyword inside a quoted identifier is not a clause
+    val quoted = RelationSql.translate(
+      "SELECT k FROM t WHERE \"v ORDER BY\" IS NOT NULL ORDER BY k DESC",
+      _ => t.withColumn("v ORDER BY", org.apache.spark.sql.functions.col("v")))
+    assert(quoted.collect().map(_.getLong(0)).toSeq == Seq(4L, 3L, 2L, 1L))
     bad("SELECT k FROM t ORDER BY v OFFSET 1 ROWS FETCH FIRST 2 ROWS WITH TIES")
     bad("SELECT k FROM t ORDER BY v FETCH FIRST 2 ROWS")
     bad("SELECT k FROM t ORDER BY FETCH FIRST 2 ROWS ONLY")

@@ -300,13 +300,14 @@ class PropertiesSpec extends AnyFunSuite {
   }
 
   test("translate() never alters string-literal or quoted-identifier content") {
-    // The r20 lex-and-mask substrate contract: every dialect pass runs
-    // over sentinel-masked text, so SQL-looking content inside a
-    // string literal or a double-quoted identifier can never be
-    // rewritten. Literal content survives verbatim modulo the ONE
-    // documented transform (backslash doubling — the reference has no
-    // backslash escapes, Spark does); identifier content restores
-    // verbatim inside backticks. Contents are drawn from the nastiest
+    // The lex-and-mask contract: the statement is lexed once and every
+    // dialect pass runs over sentinel-masked text, so SQL-looking
+    // content inside a string literal, a double-quoted identifier or a
+    // comment can never be rewritten. Literal content survives
+    // verbatim modulo the ONE documented transform (backslash doubling
+    // — the reference has no backslash escapes, Spark does);
+    // identifier content restores unescaped inside backticks, any
+    // inner backtick doubled. Contents are drawn from the nastiest
     // corpus we know: the exact fragments the dialect's passes rewrite.
     val sqlish = Gen.oneOf(
       "CAST(q AS CHAR(2)) = z", "greatest(5, 4, NULL)", "skewness kurtosis",
@@ -322,29 +323,39 @@ class PropertiesSpec extends AnyFunSuite {
         '-', '+', '*', '/', '%', '|', '&', ':', ';', '!', '#', '@'),
       1 -> Gen.const('\\'))).map(_.mkString)
     val litGen = Gen.frequency(3 -> sqlish, 2 -> junk)
-    // identifiers: no double quote (delimiter), no backtick (Spark
-    // delimiter on the restored side), nonempty
-    val identGen = Gen.frequency(3 -> sqlish, 2 -> junk)
-      .map(s => ("c" + s).replace("\"", "").replace("`", "").replace("\\", ""))
-    val templates: Seq[(String, String, String, String) => String] = Seq(
-      (l1, l2, i1, i2) =>
-        s"""SELECT '$l1' AS c1, "$i1" FROM (SELECT 1 AS "$i1", '$l2' AS "$i2") t WHERE "$i2" = '$l2'""",
-      (l1, l2, i1, i2) =>
-        s"""SELECT greatest(length('$l1'), 2), "$i1" "$i2" FROM (VALUES ('$l2', 1)) AS "$i1" ("$i2", c2)""",
-      (l1, l2, i1, i2) =>
-        s"""SELECT CASE WHEN '$l1' = '$l2' THEN "$i1" ELSE "$i2" END FROM (SELECT 1 AS "$i1", 2 AS "$i2") t""")
+    // identifier CONTENT (unescaped): nonempty, no backslash (Spark
+    // reads the restored backtick identifier verbatim anyway); quotes,
+    // apostrophes and backticks included — the SQL spelling doubles
+    // each '"', the restored Spark spelling doubles each '`'
+    val identGen = Gen.frequency(3 -> sqlish, 2 -> junk,
+      1 -> Gen.oneOf("it's", "a`b", "say \"hi\"", "`", "'", "\"\""))
+      .map(s => ("c" + s).replace("\\", ""))
+    def quoted(i: String) = "\"" + i.replace("\"", "\"\"") + "\""
+    // comments holding a quote of each kind, placed before, between and
+    // after the literals
+    val commentGen = Gen.oneOf("", " -- it's\n", " /* it's \"x\" */ ")
+    val templates: Seq[(String, String, String, String, String) => String] = Seq(
+      (l1, l2, i1, i2, c) =>
+        s"""${c}SELECT '$l1' AS c1,$c ${quoted(i1)} FROM (SELECT 1 AS ${quoted(i1)}, '$l2' AS ${quoted(i2)}) t WHERE ${quoted(i2)} = '$l2'$c""",
+      (l1, l2, i1, i2, c) =>
+        s"""SELECT greatest(length('$l1'),$c 2), ${quoted(i1)} ${quoted(i2)} FROM (VALUES ('$l2', 1)) AS ${quoted(i1)} (${quoted(i2)}, c2)$c""",
+      (l1, l2, i1, i2, c) =>
+        s"""SELECT CASE WHEN '$l1' = '$l2'$c THEN ${quoted(i1)} ELSE ${quoted(i2)} END FROM (SELECT 1 AS ${quoted(i1)}, 2 AS ${quoted(i2)}) t""")
     val tmplGen = Gen.oneOf(templates)
     check("translate-preserves-quoted-content",
-      Prop.forAll(litGen, litGen, identGen, identGen, tmplGen) { (l1, l2, i1, i2, t) =>
-        val out = graft.sqlcompat.Dialect.translate(t(l1, l2, i1, i2))
-        val lit1 = "'" + l1.replace("\\", "\\\\") + "'"
-        val lit2 = "'" + l2.replace("\\", "\\\\") + "'"
-        val id1 = "`" + i1 + "`"
-        val id2 = "`" + i2 + "`"
-        val ok = out.contains(lit1) && out.contains(lit2) &&
-          out.contains(id1) && out.contains(id2)
-        if (!ok) println(s"TRANSLATE CORRUPTION:\n  in : ${t(l1, l2, i1, i2)}\n  out: $out")
-        ok
+      Prop.forAll(litGen, litGen, identGen, identGen, commentGen, tmplGen) {
+        (l1, l2, i1, i2, c, t) =>
+          val in = t(l1, l2, i1, i2, c)
+          val out = graft.sqlcompat.Dialect.translate(in)
+          val lit1 = "'" + l1.replace("\\", "\\\\") + "'"
+          val lit2 = "'" + l2.replace("\\", "\\\\") + "'"
+          val id1 = "`" + i1.replace("`", "``") + "`"
+          val id2 = "`" + i2.replace("`", "``") + "`"
+          val ok = out.contains(lit1) && out.contains(lit2) &&
+            out.contains(id1) && out.contains(id2) &&
+            (c.isEmpty || out.contains(c.trim))
+          if (!ok) println(s"TRANSLATE CORRUPTION:\n  in : $in\n  out: $out")
+          ok
       })
   }
 }

@@ -163,6 +163,16 @@ class SinksSpec extends AnyFunSuite with BeforeAndAfterAll {
       (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq ==
       Seq((1L, "A", 20.0), (2L, "b", 20.0), (3L, "C", 60.0)))
 
+    // the SET list splits on its top-level commas only: not on the
+    // comma inside a literal, nor after the quote inside a quoted
+    // identifier
+    val qpath = s"$tmp/mutsql_quoted"
+    Seq((1L, 0L, "a")).toDF("id", "it's", "b").write.mode("overwrite").parquet(qpath)
+    val afterQuoted = MutationSql.translate(spark,
+      "UPDATE t SET \"it's\" = 1, b = 'x,y'", { case "t" => qpath })
+    assert(afterQuoted.collect().map(r => (r.getLong(1), r.getString(2))).toSeq ==
+      Seq((1L, "x,y")))
+
     // MERGE: delete case, update case, insert case, aliased columns
     fresh(path)
     val afterMrg = MutationSql.translate(spark,

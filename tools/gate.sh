@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Pre-commit gate: the minimum proof that HEAD is shippable.
 # Usage: tools/gate.sh [--full]
-#   default: Test/compile + benchmark compile + EntrySmoke (~1 min)
+#   default: Test/compile + benchmark compile + EntrySmoke + the
+#            dialect suites (~1.5 min)
 #   --full : also runs the whole ScalaTest suite (~2.5 min)
 # Rounds 6 and 7 shipped a non-compiling HEAD; nothing in the round
 # protocol ran the compiler before snapshot. This script is that gate —
@@ -26,6 +27,12 @@ if [ "${rows:-0}" -le 0 ]; then
   echo "[gate] ENTRY SMOKE FAILED (rows=$rows)"; exit 1
 fi
 echo "[gate] entry rows=$rows"
+
+# the SQL front end: dialect vectors and the translate() properties
+echo "[gate] dialect suites"
+sbt -batch "testOnly graft.DialectSpec graft.PropertiesSpec" > /tmp/gate_dialect.log 2>&1 || {
+  echo "[gate] DIALECT SUITES FAILED"; grep -E '\*\*\* FAILED' /tmp/gate_dialect.log | head -20
+  tail -20 /tmp/gate_dialect.log; exit 1; }
 
 if [ "${1:-}" = "--full" ]; then
   echo "[gate] sbt test"

@@ -2,124 +2,8 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions.col
-
-/** One emitted row-pattern match.
-  *
-  * Built-in MEASURES (reference `sql/planner/rowpattern/` measures,
-  * RUNNING/FINAL evaluated at FINAL): match_no ≡ MATCH_NUMBER(),
-  * classifier ≡ the concatenated CLASSIFIER() sequence, start/end_ord ≡
-  * FIRST/LAST of the order key, n_rows ≡ COUNT(*), var_counts ≡
-  * COUNT(V.*) per variable as a canonical "V:n" string. */
-case class MatchRow(
-    part_key: Long,
-    match_no: Long,
-    start_ord: Long,
-    end_ord: Long,
-    classifier: String,
-    n_rows: Long,
-    var_counts: String)
-
-/** ONE ROW PER MATCH with numeric MEASURES over a value column — all
-  * evaluated with FINAL semantics (the reference's default for ONE ROW
-  * PER MATCH): FIRST(value), LAST(value), MIN, MAX over the matched
-  * rows. */
-case class MatchMeasures(
-    part_key: Long,
-    match_no: Long,
-    start_ord: Long,
-    end_ord: Long,
-    n_rows: Long,
-    first_val: Double,
-    last_val: Double,
-    min_val: Double,
-    max_val: Double)
-
-/** ALL ROWS PER MATCH row detail, carrying both RUNNING and FINAL
-  * evaluations of the same measures (reference `sql/planner/
-  * rowpattern/` RUNNING vs FINAL): running_cnt ≡ RUNNING COUNT(*),
-  * running_max ≡ RUNNING MAX(value) — the prefix up to and including
-  * this row — while final_cnt / final_last see the whole match. */
-case class MatchDetail(
-    part_key: Long,
-    match_no: Long,
-    ord: Long,
-    classifier: String,
-    running_cnt: Long,
-    final_cnt: Long,
-    running_max: Double,
-    final_last: Double)
-
-/** Per-(match, variable) navigation measures — the reference's
-  * FIRST(V.col, n) / LAST(V.col, n) logical navigation
-  * (`sql/planner/rowpattern/LogicalIndexNavigation.java`): one output
-  * row per pattern variable that matched ≥1 row in the match.
-  * first_val/last_val are offset 0 (≡ FIRST(V.value) / LAST(V.value));
-  * first_off/last_off are at the requested logical offset n — null
-  * when the variable matched ≤ n rows, the reference's out-of-range
-  * semantics. */
-case class MatchVarMeasures(
-    part_key: Long,
-    match_no: Long,
-    start_ord: Long,
-    end_ord: Long,
-    var_name: String,
-    var_rows: Long,
-    first_val: Double,
-    last_val: Double,
-    first_off: Option[Double],
-    last_off: Option[Double])
-
-/** ONE ROW PER MATCH output row under SHOW EMPTY MATCHES (reference
-  * `SqlBase.g4` emptyMatchHandling SHOW EMPTY MATCHES — the ONE ROW
-  * PER MATCH default): a pattern that can match zero rows (e.g. `D*`)
-  * produces an EMPTY match at every position where no row is
-  * consumed. Empty matches get a real MATCH_NUMBER, a null
-  * classifier, zero rows, and anchor at the row where matching was
-  * attempted; the scan resumes at the next row. The engine's default
-  * elsewhere is OMIT EMPTY MATCHES (empty matches dropped). */
-case class EmptyableMatchRow(
-    part_key: Long,
-    match_no: Long,
-    anchor_ord: Long,
-    n_rows: Long,
-    classifier: Option[String])
-
-/** ALL ROWS PER MATCH WITH UNMATCHED ROWS output row (reference
-  * `SqlBase.g4` rowsPerMatch WITH UNMATCHED): every input row appears
-  * exactly once — matched rows carry their match number, classifier,
-  * and RUNNING/FINAL measures; unmatched rows carry nulls for all of
-  * them (the reference's semantics: MATCH_NUMBER() and CLASSIFIER()
-  * are null outside a match). */
-case class MatchRowAll(
-    part_key: Long,
-    ord: Long,
-    match_no: Option[Long],
-    classifier: Option[String],
-    running_cnt: Option[Long],
-    final_cnt: Option[Long],
-    running_max: Option[Double],
-    final_last: Option[Double])
-
-/** Per-(match, variable) AGGREGATE measures — the reference's
-  * arbitrary aggregates over a variable's row set in MEASURES
-  * (`sql/planner/rowpattern/` aggregate value pointers, e.g.
-  * `sum(A.totalprice)`), evaluated with FINAL semantics (the ONE ROW
-  * PER MATCH default). One row per pattern variable that matched ≥ 1
-  * row, plus one universal row (var_name = "*") aggregating over ALL
-  * matched rows — the unqualified `sum(value)` form. */
-case class MatchAggRow(
-    part_key: Long,
-    match_no: Long,
-    start_ord: Long,
-    end_ord: Long,
-    var_name: String,
-    var_rows: Long,
-    sum_val: Double,
-    avg_val: Double,
-    min_val: Double,
-    max_val: Double)
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 
 /** Row-pattern recognition (MATCH_RECOGNIZE) — the reference's hardest
   * engine feature (grammar `SqlBase.g4:360-399`, NFA matcher
@@ -136,16 +20,20 @@ case class MatchAggRow(
   * over a [[MatchCtx]] with full navigation — physical PREV(n)/NEXT(n)
   * and running FIRST/LAST over variables or SUBSET unions (the simple
   * (prev, row) form remains for the common PREV(x) comparison),
-  * FIRST/LAST(V.col, n) navigation measures (see [[MatchVarMeasures]]),
+  * FIRST/LAST(V.col, n) navigation measures (see [[SqlMeasure]]),
   * SUBSET declarations, and AFTER MATCH SKIP PAST LAST ROW / TO NEXT
   * ROW / TO FIRST/LAST(V-or-subset).
   *
-  * Execution shape (100 TB): `repartition(partition key)` +
-  * `sortWithinPartitions(key, order)` + `mapPartitions` — one shuffle,
-  * one local sort, then a streaming scan that buffers only the rows of
-  * the single key currently being matched (the same working set the
-  * reference's WindowOperator PagesIndex holds per partition). No
-  * driver involvement, no global sort.
+  * The one entry point is [[sqlRows]], which the SQL front end
+  * (`sqlcompat/MatchRecognizeSql`) lowers `MATCH_RECOGNIZE` text onto;
+  * [[windowMatches]] is the window-frame form, which has no SQL
+  * spelling yet.
+  *
+  * Execution shape (100 TB): the [[KeyGroups]] scan — one shuffle on
+  * the partition key, one local sort, then a streaming scan that
+  * buffers only the rows of the single key currently being matched
+  * (the same working set the reference's WindowOperator PagesIndex
+  * holds per partition). No driver involvement, no global sort.
   */
 object MatchRecognize {
 
@@ -876,28 +764,17 @@ object MatchRecognize {
     out.toSeq
   }
 
-  /** Generic matching engine: shuffle on the partition key, local
-    * sort, stream key groups through the automaton, and hand each
-    * match (key, match_no, group rows, start index, classifier names)
-    * to `emit` — one row per match, or several for ALL ROWS PER MATCH.
-    */
   /** Adapt the simple (prevRowOrNull, row) DEFINE form to the context
     * form — the common PREV(x) comparison as a physical 1-back. */
-  /** Public adapter for the simple (prevRowOrNull, row) DEFINE form. */
   def wrapSimple(define: Map[String, (Row, Row) => Boolean])
-      : Map[String, MatchCtx => Boolean] = wrapDefine(define)
-
-  private def wrapDefine(define: Map[String, (Row, Row) => Boolean])
       : Map[String, MatchCtx => Boolean] =
     define.map { case (v, f) => v -> ((ctx: MatchCtx) => f(ctx.prev(1), ctx.row)) }
 
-  /** Shared scan core, parameterized on COMPOSITE partition/order keys
-    * (the typed entry points adapt their single-numeric-column contract
-    * onto it; the SQL surface passes multi-column keys directly).
-    * Emit callbacks receive (matchNo, group rows, start index, labels)
-    * and read the key from any group row — all rows of a group share
-    * it by construction. */
-  private def runCore[T](
+  /** Scan core behind [[sqlRows]]: stream each key group of the shared
+    * [[KeyGroups]] scan through the automaton and hand every match
+    * (matchNo, group rows, start index, labels) to `emit` — one row per
+    * match, or several for ALL ROWS PER MATCH. */
+  private def runCore(
       df: DataFrame,
       partCols: Seq[String],
       orderCols: Seq[String],
@@ -905,190 +782,126 @@ object MatchRecognize {
       define: Map[String, MatchCtx => Boolean],
       skip: SkipMode,
       subsets: Map[String, Set[String]],
-      emitUnmatched: (collection.IndexedSeq[Row], Int) => T,
-      emitEmpty: (Long, collection.IndexedSeq[Row], Int) => T,
-      historyFree: Boolean = false,
-      rowFreeVars: Set[String] = Set.empty)(
-      emit: (Long, collection.IndexedSeq[Row], Int, Array[String]) => Seq[T])(
-      implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] = {
-
+      emitUnmatched: (collection.IndexedSeq[Row], Int) => Row,
+      emitEmpty: (Long, collection.IndexedSeq[Row], Int) => Row,
+      historyFree: Boolean,
+      rowFreeVars: Set[String])(
+      emit: (Long, collection.IndexedSeq[Row], Int, Array[String]) => Seq[Row])(
+      implicit enc: org.apache.spark.sql.Encoder[Row]): DataFrame = {
     val pat = parse(pattern)
     val vars = define // serialized into the task closure
     val subs = subsets
-    val pCols = partCols
-    // capture driver-side so a configured cap ships with the closure
-    // (executor JVMs would otherwise see their own default)
-    val maxRowsPerKey = MatchRecognize.MaxRowsPerKey
     val hFree = historyFree
     val rfVars = rowFreeVars
-    val spillAfterRows = MatchRecognize.SpillAfterRows
-
-    df.repartition(partCols.map(col): _*)
-      .sortWithinPartitions((partCols ++ orderCols).map(col): _*)
-      .mapPartitions { it =>
-        new Iterator[T] {
-          private val rows = it.buffered
-          private val out = mutable.Queue[T]()
-
-          // key ordinals resolve once per partition (rows share one
-          // StructType) — keyOf runs twice per input row
-          private var keyIdx: Array[Int] = null
-          private def keyOf(r: Row): Seq[Any] = {
-            if (keyIdx == null) keyIdx = pCols.map(r.fieldIndex).toArray
-            val a = new Array[Any](keyIdx.length)
-            var k = 0
-            while (k < keyIdx.length) { a(k) = r.get(keyIdx(k)); k += 1 }
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
-          }
-
-          private def matchKeyGroup(): Unit = {
-            if (!rows.hasNext) return
-            val key = keyOf(rows.head)
-            // The per-key working set is the reference's PagesIndex
-            // shape: on-heap up to SpillAfterRows, disk-paged beyond
-            // (graceful degradation instead of OOM), with a hard
-            // runaway-key backstop that still fails loudly.
-            val buf = new SpillableRowBuffer(spillAfterRows)
-            try {
-            while (rows.hasNext && keyOf(rows.head) == key) {
-              buf.append(rows.next())
-              if (buf.length > maxRowsPerKey)
-                throw new IllegalStateException(
-                  s"MATCH_RECOGNIZE: partition key ${key.mkString(",")} exceeds " +
-                    s"$maxRowsPerKey buffered rows; " +
-                    "pre-filter or sub-partition the input (e.g. bound the " +
-                    "time range per key), or raise MatchRecognize.MaxRowsPerKey")
-            }
-            val n = buf.length
-            // label-match that resolves SUBSET union names (reference
-            // SqlBase.g4 subsetDefinition): a skip/navigation target may
-            // be a variable or a union of variables
-            def labelHit(label0: String, v: String): Boolean = {
-              val label = realLabel(label0)
-              label == v || subs.getOrElse(v, Set.empty).contains(label)
-            }
-            var i = 0
-            var matchNo = 0L
-            // incremental DEFINE-aggregate memo, one per key group
-            // (MatchCtx.foldIncremental) — list nodes are unique per
-            // match attempt, so one scope safely spans attempts
-            val aggCache = new java.util.IdentityHashMap[
-              List[String], java.util.HashMap[AnyRef, Any]]()
-            // Cross-attempt classification memo for ROW-ONLY DEFINE
-            // predicates (no match history, no MATCH_NUMBER — the
-            // front-end proves it): the verdict depends only on the
-            // physical row, yet greedy-quantifier backtracking re-tests
-            // it once per ATTEMPT — O(attempts × rows) evaluations on a
-            // `(H | L)* X`-style scan. 0 = unevaluated, 1 = T, 2 = F.
-            // Skipped for huge spilled groups (1 byte/row/var).
-            val rowMemo: java.util.HashMap[String, Array[Byte]] =
-              if (rfVars.isEmpty || n > (1 << 24)) null
-              else new java.util.HashMap()
-            // WITH UNMATCHED ROWS: track which rows belong to ANY match
-            val covered =
-              if (emitUnmatched != null) new Array[Boolean](n) else null
-            while (i < n) {
-              val startIdx = i
-              def classify(j: Int, v: String, accRev: List[String]): Boolean =
-                vars.get(v) match {
-                  // A pattern variable with no DEFINE entry is TRUE for
-                  // every row (SQL:2016; reference TestRowPatternMatching
-                  // "A defaults to True, matches any row").
-                  case None => true
-                  case Some(f) =>
-                    if (rowMemo != null && rfVars.contains(v)) {
-                      var arr = rowMemo.get(v)
-                      if (arr == null) {
-                        arr = new Array[Byte](n); rowMemo.put(v, arr)
-                      }
-                      val c = arr(j)
-                      if (c != 0) c == 1
-                      else {
-                        val r = f(new MatchCtx(buf, j, startIdx, accRev,
-                          v, subs, matchNo + 1, aggCache))
-                        arr(j) = if (r) 1 else 2
-                        r
-                      }
-                    } else f(new MatchCtx(buf, j, startIdx, accRev, v, subs,
-                      matchNo + 1, aggCache))
-                }
-              val m = matchFrom(pat, i, n, classify, memoOk = hFree)
-              if (m != null && m.length > 0) {
-                matchNo += 1
-                emit(matchNo, buf, i, m).foreach(out.enqueue(_))
-                if (covered != null)
-                  java.util.Arrays.fill(covered, i, i + m.length, true)
-                i = skip match {
-                  case SkipMode.PastLastRow => i + m.length
-                  case SkipMode.ToNextRow => i + 1
-                  case SkipMode.ToFirst(v) =>
-                    val idx = m.indexWhere(labelHit(_, v))
-                    require(idx > 0, s"AFTER MATCH SKIP TO FIRST($v): " +
-                      "variable absent from match or maps to its first row")
-                    i + idx
-                  case SkipMode.ToLast(v) =>
-                    val idx = m.lastIndexWhere(labelHit(_, v))
-                    require(idx > 0, s"AFTER MATCH SKIP TO LAST($v): " +
-                      "variable absent from match or maps to its first row")
-                    i + idx
-                }
-              } else if (m != null) {
-                // empty match (pattern consumed zero rows): it ALWAYS
-                // consumes a MATCH_NUMBER — the standard numbers empty
-                // matches even when OMIT EMPTY MATCHES hides them
-                // (reference testOutputModes: the B-run after an
-                // omitted empty match is match 2) — and resumes at the
-                // next row
-                matchNo += 1
-                if (emitEmpty != null) out.enqueue(emitEmpty(matchNo, buf, i))
-                i += 1
-              } else i += 1
-            }
-            if (covered != null) {
-              var j = 0
-              while (j < n) {
-                if (!covered(j)) out.enqueue(emitUnmatched(buf, j))
-                j += 1
-              }
-            }
-            } finally buf.dispose() // spill file deleted eagerly
-          }
-
-          override def hasNext: Boolean = {
-            while (out.isEmpty && rows.hasNext) matchKeyGroup()
-            out.nonEmpty
-          }
-          override def next(): T = out.dequeue()
+    KeyGroups.scan(df, partCols, orderCols, "MATCH_RECOGNIZE") { buf =>
+      val out = mutable.ArrayBuffer[Row]()
+      val n = buf.length
+      var i = 0
+      var matchNo = 0L
+      // incremental DEFINE-aggregate memo, one per key group
+      // (MatchCtx.foldIncremental) — list nodes are unique per match
+      // attempt, so one scope safely spans attempts
+      val aggCache = new java.util.IdentityHashMap[
+        List[String], java.util.HashMap[AnyRef, Any]]()
+      val rowMemo = newRowMemo(rfVars, n)
+      // WITH UNMATCHED ROWS: track which rows belong to ANY match
+      val covered = if (emitUnmatched != null) new Array[Boolean](n) else null
+      while (i < n) {
+        val m = matchFrom(pat, i, n,
+          classifier(vars, subs, rfVars, rowMemo, buf, i, matchNo + 1, aggCache),
+          memoOk = hFree)
+        if (m != null && m.length > 0) {
+          matchNo += 1
+          out ++= emit(matchNo, buf, i, m)
+          if (covered != null) java.util.Arrays.fill(covered, i, i + m.length, true)
+          i = skipTo(skip, subs, i, m, i + 1)
+        } else if (m != null) {
+          // empty match (pattern consumed zero rows): it ALWAYS
+          // consumes a MATCH_NUMBER — the standard numbers empty
+          // matches even when OMIT EMPTY MATCHES hides them
+          // (reference testOutputModes: the B-run after an omitted
+          // empty match is match 2) — and resumes at the next row
+          matchNo += 1
+          if (emitEmpty != null) out += emitEmpty(matchNo, buf, i)
+          i += 1
+        } else i += 1
+      }
+      if (covered != null) {
+        var j = 0
+        while (j < n) {
+          if (!covered(j)) out += emitUnmatched(buf, j)
+          j += 1
         }
       }
+      out.iterator
+    }
   }
 
-  /** Single-numeric-key adapter over [[runCore]] — the pre-r13 contract
-    * of the typed entry points (Long part_key, Long ordinals). */
-  private def runEngine[T](
-      df: DataFrame,
-      partCol: String,
-      orderCol: String,
-      pattern: String,
-      define: Map[String, MatchCtx => Boolean],
-      skip: SkipMode,
-      subsets: Map[String, Set[String]] = Map.empty,
-      emitUnmatched: (Long, collection.IndexedSeq[Row], Int, Row => Long) => T = null,
-      emitEmpty: (Long, Long, collection.IndexedSeq[Row], Int, Row => Long) => T = null)(
-      emit: (Long, Long, collection.IndexedSeq[Row], Int, Array[String], Row => Long) => Seq[T])(
-      implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] = {
-    val pc = partCol
-    val oc = orderCol
-    val keyOf: Row => Long = r => r.getAs[Number](r.fieldIndex(pc)).longValue()
-    val ordOf: Row => Long = r => r.getAs[Number](r.fieldIndex(oc)).longValue()
-    runCore(df, Seq(partCol), Seq(orderCol), pattern, define, skip, subsets,
-      if (emitUnmatched == null) null
-      else (buf: collection.IndexedSeq[Row], j: Int) =>
-        emitUnmatched(keyOf(buf(j)), buf, j, ordOf),
-      if (emitEmpty == null) null
-      else (mn: Long, buf: collection.IndexedSeq[Row], i: Int) =>
-        emitEmpty(keyOf(buf(i)), mn, buf, i, ordOf)) {
-      (mn, buf, i, m) => emit(keyOf(buf(i)), mn, buf, i, m, ordOf)
+  /** Cross-attempt classification memo for ROW-ONLY DEFINE predicates
+    * (no match history, no MATCH_NUMBER — the front-end proves it): the
+    * verdict depends only on the physical row, yet greedy-quantifier
+    * backtracking re-tests it once per ATTEMPT — O(attempts × rows)
+    * evaluations on a `(H | L)* X`-style scan. Per variable, one byte
+    * per row: 0 = unevaluated, 1 = T, 2 = F. Skipped for huge spilled
+    * groups. */
+  private def newRowMemo(rfVars: Set[String], n: Int)
+      : java.util.HashMap[String, Array[Byte]] =
+    if (rfVars.isEmpty || n > (1 << 24)) null else new java.util.HashMap()
+
+  /** The NFA's `classify(j, v, labelsRev)` for a match attempt starting
+    * at `startIdx`. A pattern variable with no DEFINE entry is TRUE for
+    * every row (SQL:2016; reference TestRowPatternMatching "A defaults
+    * to True, matches any row"). */
+  private def classifier(
+      vars: Map[String, MatchCtx => Boolean],
+      subs: Map[String, Set[String]],
+      rfVars: Set[String],
+      rowMemo: java.util.HashMap[String, Array[Byte]],
+      buf: collection.IndexedSeq[Row],
+      startIdx: Int,
+      matchNumber: Long,
+      aggCache: java.util.IdentityHashMap[List[String], java.util.HashMap[AnyRef, Any]])
+      : (Int, String, List[String]) => Boolean = (j, v, accRev) =>
+    vars.get(v) match {
+      case None => true
+      case Some(f) =>
+        if (rowMemo != null && rfVars.contains(v)) {
+          var arr = rowMemo.get(v)
+          if (arr == null) { arr = new Array[Byte](buf.length); rowMemo.put(v, arr) }
+          val c = arr(j)
+          if (c != 0) c == 1
+          else {
+            val r = f(new MatchCtx(buf, j, startIdx, accRev, v, subs, matchNumber, aggCache))
+            arr(j) = if (r) 1 else 2
+            r
+          }
+        } else f(new MatchCtx(buf, j, startIdx, accRev, v, subs, matchNumber, aggCache))
+    }
+
+  /** Where the scan resumes after match `m` anchored at `at` (AFTER
+    * MATCH SKIP; `nextRow` is the TO NEXT ROW position — the window
+    * form's anchor may lie ahead of its row). Skip targets may be a
+    * variable or a SUBSET union (reference SqlBase.g4
+    * subsetDefinition). */
+  private def skipTo(skip: SkipMode, subs: Map[String, Set[String]],
+      at: Int, m: Array[String], nextRow: Int): Int = {
+    def hit(label0: String, v: String): Boolean = {
+      val label = realLabel(label0)
+      label == v || subs.getOrElse(v, Set.empty).contains(label)
+    }
+    skip match {
+      case SkipMode.PastLastRow => at + m.length
+      case SkipMode.ToNextRow => nextRow
+      case SkipMode.ToFirst(v) =>
+        val idx = m.indexWhere(hit(_, v))
+        require(idx > 0, s"AFTER MATCH SKIP TO FIRST($v): " +
+          "variable absent from match or maps to its first row")
+        at + idx
+      case SkipMode.ToLast(v) =>
+        val idx = m.lastIndexWhere(hit(_, v))
+        require(idx > 0, s"AFTER MATCH SKIP TO LAST($v): " +
+          "variable absent from match or maps to its first row")
+        at + idx
     }
   }
 
@@ -1298,16 +1111,6 @@ object MatchRecognize {
       }
   }
 
-  /** SQL-shaped MATCH_RECOGNIZE surface (reference `SqlBase.g4:360-399`
-    * patternRecognition): multi-column PARTITION BY / ORDER BY,
-    * measures over arbitrary numeric input columns, and both output
-    * modes — ONE ROW PER MATCH with FINAL measure semantics, or ALL
-    * ROWS PER MATCH with RUNNING semantics (each the standard's default
-    * for its mode). Output schema follows the standard: ONE ROW →
-    * partition columns + measures; ALL ROWS → partition columns + order
-    * columns + measures + remaining input columns. Rows matched inside
-    * `{- ... -}` exclusions feed measures but are omitted from ALL ROWS
-    * output (SQL:2016). */
   /** Row-pattern recognition IN WINDOW FRAMES (reference `SqlBase.g4`
     * windowSpecification with MEASURES/PATTERN; semantics pinned by
     * `TestRowPatternMatchingInWindow` / `testSeek`): every input row
@@ -1359,8 +1162,7 @@ object MatchRecognize {
     val pat = parse(pattern)
     val vars = define
     val subs = subsets
-    val pCols = partCols
-    val vCol = valueCol
+    val vIdx = inSchema.fieldIndex(valueCol)
     val doSeek = seek
     val skipMode = skip
     val rfVars = rowFreeVars
@@ -1369,152 +1171,74 @@ object MatchRecognize {
     // search from row i is limited to rows [i, i + bound(i)]. Variable
     // bounds invalidate the backward seek memo (different n per row),
     // so the bounded form runs one direct matchFrom per row.
-    val frameEnd = frameEndCol
-    require(frameEnd.isEmpty || !seek,
+    val frameEndIdx = frameEndCol.map(inSchema.fieldIndex)
+    require(frameEndIdx.isEmpty || !seek,
       "SEEK with a variable frame bound is not supported")
-    val spillAfter = SpillAfterRows
-    // same captured runaway-key backstop as the table form: spilling
-    // bounds memory, this bounds DISK, failing loudly with a remedy
-    val maxRowsPerKey = MatchRecognize.MaxRowsPerKey
-    df.repartition(partCols.map(col): _*)
-      .sortWithinPartitions((partCols ++ orderCols).map(col): _*)
-      .mapPartitions { it =>
-        val rows = it.buffered
-        def keyOf(r: Row): Seq[Any] = pCols.map(c => r.get(r.fieldIndex(c)))
-        new Iterator[Row] {
-          private val out = mutable.Queue[Row]()
-          private def processGroup(): Unit = {
-            if (!rows.hasNext) return
-            val key = keyOf(rows.head)
-            val buf = new SpillableRowBuffer(spillAfter)
-            try {
-              while (rows.hasNext && keyOf(rows.head) == key) {
-                buf.append(rows.next())
-                if (buf.length > maxRowsPerKey)
-                  throw new IllegalStateException(
-                    s"MATCH_RECOGNIZE (window form): partition key " +
-                      s"${key.mkString(",")} exceeds $maxRowsPerKey buffered " +
-                      "rows; pre-filter or sub-partition the input, or raise " +
-                      "MatchRecognize.MaxRowsPerKey")
-              }
-              val n = buf.length
-              // Backward memo: the SEEK answer for row i is the match
-              // anchored AT i if one exists, else row i+1's answer —
-              // one matchFrom per position, O(n·matchcost) instead of
-              // the naive O(n²·matchcost) forward re-scan per row.
-              val anchors = new Array[Int](math.max(n, 1))
-              val found = new Array[Array[String]](math.max(n, 1))
-              val aggCache = new java.util.IdentityHashMap[
-                List[String], java.util.HashMap[AnyRef, Any]]()
-              // same cross-attempt row memo as the table form: a
-              // window scan attempts a match per ROW, so row-only
-              // DEFINE predicates re-test O(n) times without it
-              val rowMemo: java.util.HashMap[String, Array[Byte]] =
-                if (rfVars.isEmpty || n > (1 << 24)) null
-                else new java.util.HashMap()
-              var p = n - 1
-              while (p >= 0) {
-                val startIdx = p
-                def classify(j: Int, v: String, accRev: List[String]): Boolean =
-                  vars.get(v) match {
-                    case None => true
-                    case Some(f) =>
-                      if (rowMemo != null && rfVars.contains(v)) {
-                        var arr = rowMemo.get(v)
-                        if (arr == null) {
-                          arr = new Array[Byte](n); rowMemo.put(v, arr)
-                        }
-                        val c = arr(j)
-                        if (c != 0) c == 1
-                        else {
-                          val r = f(new MatchCtx(buf, j, startIdx, accRev,
-                            v, subs, 1L, aggCache))
-                          arr(j) = if (r) 1 else 2
-                          r
-                        }
-                      } else f(new MatchCtx(buf, j, startIdx, accRev, v,
-                        subs, 1L, aggCache))
-                  }
-                val bound = frameEnd match {
-                  case Some(c) =>
-                    val r0 = buf(p)
-                    val off = r0.get(r0.fieldIndex(c)) match {
-                      case null => 0L
-                      case x: Number => math.max(0L, x.longValue())
-                    }
-                    math.min(n.toLong, p + 1 + off).toInt
-                  case None => n
-                }
-                val m0 = matchFrom(pat, p, bound, classify)
-                if (m0 != null && m0.length > 0) { anchors(p) = p; found(p) = m0 }
-                else if (doSeek && p + 1 < n) {
-                  anchors(p) = anchors(p + 1); found(p) = found(p + 1)
-                } else { anchors(p) = -1; found(p) = null }
-                p -= 1
-              }
-              // AFTER MATCH SKIP consumption (reference window-MR
-              // semantics: rows inside a prior match's skip range get
-              // NULL measures — they never attempt a match). The range
-              // extends to the skip RESUME position for every mode:
-              // past-last-row consumes the whole match, TO FIRST/LAST v
-              // consume up to that label's row (reference
-              // testAfterMatchSkipToLabel: 'rows 2, 3 are skipped'),
-              // and TO NEXT ROW consumes nothing beyond the anchor.
-              def labelHitW(label0: String, v: String): Boolean = {
-                val l = realLabel(label0)
-                l == v || subs.getOrElse(v, Set.empty).contains(l)
-              }
-              var consumedUntil = 0
-              var i = 0
-              while (i < n) {
-                val r = buf(i)
-                val skippedRow = i < consumedUntil
-                val m = if (skippedRow) null else found(i)
-                val at = anchors(i)
-                if (m != null) consumedUntil = skipMode match {
-                  case SkipMode.PastLastRow => at + m.length
-                  // TO NEXT ROW consumes nothing: every row attempts
-                  // (under SEEK the anchor may be ahead of the row)
-                  case SkipMode.ToNextRow => i + 1
-                  case SkipMode.ToFirst(v) =>
-                    val idx = m.indexWhere(labelHitW(_, v))
-                    require(idx > 0, s"AFTER MATCH SKIP TO FIRST($v): " +
-                      "variable absent from match or maps to its first row")
-                    at + idx
-                  case SkipMode.ToLast(v) =>
-                    val idx = m.lastIndexWhere(labelHitW(_, v))
-                    require(idx > 0, s"AFTER MATCH SKIP TO LAST($v): " +
-                      "variable absent from match or maps to its first row")
-                    at + idx
-                }
-                val (vals, labels) =
-                  if (m == null) (null, null)
-                  else {
-                    val vIdx = r.fieldIndex(vCol)
-                    val vs = new Array[Any](m.length)
-                    val ls = new Array[String](m.length)
-                    var k = 0
-                    while (k < m.length) {
-                      vs(k) = buf(at + k).get(vIdx)
-                      ls(k) = realLabel(m(k))
-                      k += 1
-                    }
-                    (vs.toSeq, ls.toSeq)
-                  }
-                out.enqueue(Row.fromSeq(r.toSeq ++ Seq(vals, labels)))
-                i += 1
-              }
-            } finally buf.dispose()
-          }
-          override def hasNext: Boolean = {
-            while (out.isEmpty && rows.hasNext) processGroup()
-            out.nonEmpty
-          }
-          override def next(): Row = out.dequeue()
+    KeyGroups.scan(df, partCols, orderCols, "MATCH_RECOGNIZE (window form)") { buf =>
+      val n = buf.length
+      // Backward memo: the SEEK answer for row i is the match anchored
+      // AT i if one exists, else row i+1's answer — one matchFrom per
+      // position, O(n·matchcost) instead of the naive O(n²·matchcost)
+      // forward re-scan per row.
+      val anchors = new Array[Int](n)
+      val found = new Array[Array[String]](n)
+      val aggCache = new java.util.IdentityHashMap[
+        List[String], java.util.HashMap[AnyRef, Any]]()
+      // same cross-attempt row memo as the table form: a window scan
+      // attempts a match per ROW, so row-only DEFINE predicates
+      // re-test O(n) times without it
+      val rowMemo = newRowMemo(rfVars, n)
+      var p = n - 1
+      while (p >= 0) {
+        val bound = frameEndIdx match {
+          case Some(c) =>
+            val off = buf(p).get(c) match {
+              case null => 0L
+              case x: Number => math.max(0L, x.longValue())
+            }
+            math.min(n.toLong, p + 1 + off).toInt
+          case None => n
         }
-      }.toDF()
+        val m0 = matchFrom(pat, p, bound,
+          classifier(vars, subs, rfVars, rowMemo, buf, p, 1L, aggCache))
+        if (m0 != null && m0.length > 0) { anchors(p) = p; found(p) = m0 }
+        else if (doSeek && p + 1 < n) {
+          anchors(p) = anchors(p + 1); found(p) = found(p + 1)
+        } else { anchors(p) = -1; found(p) = null }
+        p -= 1
+      }
+      // AFTER MATCH SKIP consumption (reference window-MR semantics:
+      // rows inside a prior match's skip range get NULL measures — they
+      // never attempt a match). The range extends to the skip RESUME
+      // position for every mode: past-last-row consumes the whole
+      // match, TO FIRST/LAST v consume up to that label's row
+      // (reference testAfterMatchSkipToLabel: 'rows 2, 3 are skipped'),
+      // and TO NEXT ROW consumes nothing beyond the row itself (under
+      // SEEK the anchor may be ahead of the row).
+      var consumedUntil = 0
+      Iterator.tabulate(n) { i =>
+        val r = buf(i)
+        val m = if (i < consumedUntil) null else found(i)
+        val at = anchors(i)
+        if (m != null) consumedUntil = skipTo(skipMode, subs, at, m, i + 1)
+        val (vals, labels) =
+          if (m == null) (null, null)
+          else (m.indices.map(k => buf(at + k).get(vIdx)), m.toSeq.map(realLabel))
+        Row.fromSeq(r.toSeq ++ Seq(vals, labels))
+      }
+    }
   }
 
+  /** SQL-shaped MATCH_RECOGNIZE surface (reference `SqlBase.g4:360-399`
+    * patternRecognition): multi-column PARTITION BY / ORDER BY,
+    * measures over arbitrary numeric input columns, and both output
+    * modes — ONE ROW PER MATCH with FINAL measure semantics, or ALL
+    * ROWS PER MATCH with RUNNING semantics (each the standard's default
+    * for its mode). Output schema follows the standard: ONE ROW →
+    * partition columns + measures; ALL ROWS → partition columns + order
+    * columns + measures + remaining input columns. Rows matched inside
+    * `{- ... -}` exclusions feed measures but are omitted from ALL ROWS
+    * output (SQL:2016). */
   def sqlRows(
       df: DataFrame,
       partCols: Seq[String],
@@ -1590,21 +1314,19 @@ object MatchRecognize {
         restCols.map(c => inSchema(inSchema.fieldIndex(c))))
     implicit val enc: org.apache.spark.sql.Encoder[Row] =
       org.apache.spark.sql.Encoders.row(outSchema)
-    val meas = measures
+    val ms: Array[SqlMeasure] = measures.map(_._1).toArray
     // Qualified `fn(VAR.col)` measures: the fed rows are those the NFA
     // labeled VAR (or a member of the VAR subset); None feeds all.
-    val aggVars: IndexedSeq[Option[String]] = measures.toIndexedSeq.map {
-      case (SqlMeasure.Agg(_, _, v, _), _) => v
-      case (SqlMeasure.FinalAgg(_, _, v, _), _) => v
+    val aggVars: Array[Option[String]] = ms.map {
+      case SqlMeasure.Agg(_, _, v, _) => v
+      case SqlMeasure.FinalAgg(_, _, v, _) => v
+      case e: SqlMeasure.AggEval => e.variable
+      case SqlMeasure.ArrayAggCol(_, v, _) => v
+      case SqlMeasure.ClassifierArray(v, _) => v
       case _ => None
     }
-    // computed-argument aggregates (evaluated per fed row)
-    val evFns: IndexedSeq[SqlMeasure.AggEval] = measures.toIndexedSeq.map {
-      case (e: SqlMeasure.AggEval, _) => e
-      case _ => null
-    }
     val subsForVars = subsets
-    // a val lambda, not a def: a local def lifts to a method of this
+    // val lambdas, not defs: a local def lifts to a method of this
     // (non-serializable) object and poisons the task closure.
     val varOk: (Option[String], String) => Boolean = (vOpt, label) => vOpt match {
       case None => true
@@ -1613,148 +1335,108 @@ object MatchRecognize {
         l == v || subsForVars.getOrElse(v, Set.empty).contains(l)
     }
     val integ = integral
-    val kCols = keyCols
-    val rCols = restCols
+    val accumOf: SqlMeasure => RunAccum = {
+      case SqlMeasure.Agg(fn, c, _, o) => new RunAgg(fn, c, integ(c), o)
+      case SqlMeasure.FinalAgg(fn, c, _, o) => new RunAgg(fn, c, integ(c), o)
+      case e: SqlMeasure.AggEval => new RunAggEval(e.fn)
+      case _ => null
+    }
+    // feed the matched row `r` (NFA label `label`) to accumulator `ai`
+    // when the measure's variable filter admits it
+    val feed: (Array[RunAccum], Int, Row, String, Long) => Unit =
+      (accs, ai, r, label, matchNo) =>
+        if (accs(ai) != null && varOk(aggVars(ai), label)) accs(ai) match {
+          case a: RunAgg => a.update(r)
+          case a: RunAggEval => a.update(ms(ai).asInstanceOf[SqlMeasure.AggEval]
+            .eval(r, realLabel(label), matchNo))
+        }
+    // a whole-match array_agg measure (ONE ROW, or FINAL in ALL ROWS)
+    val wholeArray: (SqlMeasure, collection.IndexedSeq[Row], Int, Array[String]) => Any =
+      (msr, buf, i, m) => {
+        val o = (msr: @unchecked) match {
+          case SqlMeasure.ArrayAggCol(c, v, _) => m.indices.collect {
+            case k if varOk(v, m(k)) => val rr = buf(i + k); rr.get(rr.fieldIndex(c))
+          }
+          case SqlMeasure.ClassifierArray(v, _) =>
+            m.filter(l => varOk(v, l)).map(realLabel).toSeq
+        }
+        if (o.isEmpty) null else o
+      }
+    // an empty match's measures: its number, zero counts, nulls
+    val emptyMeasures: Long => Array[Any] = matchNo => ms.map {
+      case SqlMeasure.MatchNum => matchNo
+      case SqlMeasure.CountStar | SqlMeasure.FinalCount | SqlMeasure.VarCount(_, _) => 0L
+      case _ => null
+    }
+    // output row: key columns, measures, remaining input columns
+    val kIdx = keyCols.map(inSchema.fieldIndex).toArray
+    val rIdx = restCols.map(inSchema.fieldIndex).toArray
+    val rowOf: (Row, Array[Any]) => Row = (r, mv) =>
+      new GenericRow(kIdx.map(r.get) ++ mv ++ rIdx.map(r.get))
+    val emitEmpty: (Long, collection.IndexedSeq[Row], Int) => Row =
+      if (!showEmpty) null
+      else (matchNo, buf, i) => rowOf(buf(i), emptyMeasures(matchNo))
 
     if (!allRows) {
       // ONE ROW PER MATCH shows empty matches by default (standard
       // semantics; reference TestRowPatternMatching testOutputModes):
       // an empty match emits one row with its MATCH_NUMBER, COUNT 0,
       // and null classifier/aggregates.
-      val emitEmptyOne: (Long, collection.IndexedSeq[Row], Int) => Row =
-        if (!showEmpty) null
-        else (matchNo, buf, i) => {
-          val r = buf(i)
-          val mv = meas.map {
-            case (SqlMeasure.MatchNum, _) => matchNo
-            case (SqlMeasure.CountStar, _) => 0L
-            case (SqlMeasure.FinalCount, _) => 0L
-            case (SqlMeasure.VarCount(_, _), _) => 0L
-            case _ => null
-          }
-          Row.fromSeq(kCols.map(c => r.get(r.fieldIndex(c))) ++ mv)
-        }
       runCore(df, partCols, orderCols, pattern, define, skip, subsets, null,
-        emitEmptyOne, historyFree, rowFreeVars) {
+        emitEmpty, historyFree, rowFreeVars) {
         (matchNo, buf, i, m) =>
-          val aggs: Seq[RunAccum] = meas.map {
-            case (SqlMeasure.Agg(fn, c, _, o), _) => new RunAgg(fn, c, integ(c), o)
-            case (SqlMeasure.FinalAgg(fn, c, _, o), _) => new RunAgg(fn, c, integ(c), o)
-            case (e: SqlMeasure.AggEval, _) => new RunAggEval(e.fn)
-            case _ => null
-          }
+          val aggs = ms.map(accumOf)
           var k = 0
           while (k < m.length) { // FINAL: feed every matched row first
-            val r = buf(i + k)
             var ai = 0
-            while (ai < aggs.length) {
-              aggs(ai) match {
-                case a: RunAgg if varOk(aggVars(ai), m(k)) => a.update(r)
-                case a: RunAggEval =>
-                  val e = evFns(ai)
-                  if (varOk(e.variable, m(k)))
-                    a.update(e.eval(r, realLabel(m(k)), matchNo))
-                case _ => ()
-              }
-              ai += 1
-            }
+            while (ai < aggs.length) { feed(aggs, ai, buf(i + k), m(k), matchNo); ai += 1 }
             k += 1
           }
-          val r0 = buf(i)
-          val mv = meas.zip(aggs).map {
-            case ((SqlMeasure.MatchNum, _), _) => matchNo
+          val mv = ms.indices.map(mi => ms(mi) match {
+            case SqlMeasure.MatchNum => matchNo
             // ONE ROW PER MATCH evaluates CLASSIFIER() FINAL: the LAST
             // matched row's label (standard; reference testOutputModes
             // expects 'B' for a two-B match, not a concatenation)
-            case ((SqlMeasure.Classifier, _), _) => realLabel(m.last)
-            case ((SqlMeasure.FinalClassifier, _), _) => realLabel(m.last)
-            case ((SqlMeasure.CountStar, _), _) => m.length.toLong
-            case ((SqlMeasure.FinalCount, _), _) => m.length.toLong
-            case ((SqlMeasure.VarCount(v, _), _), _) =>
-              m.count(l => varOk(Some(v), l)).toLong
-            case ((SqlMeasure.ArrayAggCol(c, v, _), _), _) =>
-              val b = Seq.newBuilder[Any]
-              var k2 = 0
-              while (k2 < m.length) {
-                if (varOk(v, m(k2))) {
-                  val rr = buf(i + k2); b += rr.get(rr.fieldIndex(c))
-                }
-                k2 += 1
-              }
-              val out = b.result(); if (out.isEmpty) null else out
-            case ((SqlMeasure.ClassifierArray(v, _), _), _) =>
-              val out = m.filter(l => varOk(v, l)).map(realLabel)
-              if (out.isEmpty) null else out
-            case (_, a) => a.value
-          }
-          Seq(Row.fromSeq(kCols.map(c => r0.get(r0.fieldIndex(c))) ++ mv))
-      }.toDF()
+            case SqlMeasure.Classifier | SqlMeasure.FinalClassifier => realLabel(m.last)
+            case SqlMeasure.CountStar | SqlMeasure.FinalCount => m.length.toLong
+            case SqlMeasure.VarCount(v, _) => m.count(l => varOk(Some(v), l)).toLong
+            case a @ (_: SqlMeasure.ArrayAggCol | _: SqlMeasure.ClassifierArray) =>
+              wholeArray(a, buf, i, m)
+            case _ => aggs(mi).value
+          }).toArray
+          Seq(rowOf(buf(i), mv))
+      }
     } else {
       // SHOW EMPTY MATCHES: a zero-row match at row i emits one row —
       // numbered, null classifier, COUNT 0, null aggregates — carrying
       // row i's input columns. WITH UNMATCHED ROWS: rows in no match
       // emit once with every measure null (the planner's null
       // MATCH_NUMBER contract).
-      val emitEmptyFn: (Long, collection.IndexedSeq[Row], Int) => Row =
-        if (!showEmpty) null
-        else (matchNo, buf, i) => {
-          val r = buf(i)
-          val mv = meas.map {
-            case (SqlMeasure.MatchNum, _) => matchNo
-            case (SqlMeasure.Classifier, _) => null
-            case (SqlMeasure.FinalClassifier, _) => null
-            case (SqlMeasure.CountStar, _) => 0L
-            case (SqlMeasure.FinalCount, _) => 0L
-            case (SqlMeasure.VarCount(_, _), _) => 0L
-            case (SqlMeasure.Agg(_, _, _, _), _) => null
-            case (SqlMeasure.FinalAgg(_, _, _, _), _) => null
-            case (SqlMeasure.ArrayAggCol(_, _, _), _) => null
-            case (SqlMeasure.ClassifierArray(_, _), _) => null
-            case (SqlMeasure.AggEval(_, _, _, _), _) => null
-          }
-          Row.fromSeq(kCols.map(c => r.get(r.fieldIndex(c))) ++ mv ++
-            rCols.map(c => r.get(r.fieldIndex(c))))
-        }
-      val emitUnmatchedFn: (collection.IndexedSeq[Row], Int) => Row =
+      val emitUnmatched: (collection.IndexedSeq[Row], Int) => Row =
         if (!withUnmatched) null
-        else (buf, j) => {
-          val r = buf(j)
-          Row.fromSeq(kCols.map(c => r.get(r.fieldIndex(c))) ++
-            meas.map(_ => null) ++ rCols.map(c => r.get(r.fieldIndex(c))))
-        }
+        else (buf, j) => rowOf(buf(j), new Array[Any](ms.length))
+      val isFinal: SqlMeasure => Boolean = {
+        case _: SqlMeasure.FinalAgg => true
+        case e: SqlMeasure.AggEval => e.isFinal
+        case _ => false
+      }
       runCore(df, partCols, orderCols, pattern, define, skip, subsets,
-        emitUnmatchedFn, emitEmptyFn, historyFree, rowFreeVars) {
+        emitUnmatched, emitEmpty, historyFree, rowFreeVars) {
         (matchNo, buf, i, m) =>
-          val aggs: Seq[RunAccum] = meas.map {
-            case (SqlMeasure.Agg(fn, c, _, o), _) => new RunAgg(fn, c, integ(c), o)
-            case (e: SqlMeasure.AggEval, _) if !e.isFinal => new RunAggEval(e.fn)
-            case _ => null
-          }
+          val running = ms.map(x => if (isFinal(x)) null else accumOf(x))
           // FINAL measures: one whole-match pass up front, every
           // emitted row then carries the same final value.
-          val finals = meas.map {
-            case (SqlMeasure.FinalAgg(fn, c, v, o), _) =>
-              val a = new RunAgg(fn, c, integ(c), o)
-              var k = 0
-              while (k < m.length) {
-                if (varOk(v, m(k))) a.update(buf(i + k))
-                k += 1
-              }
-              a.value
-            case (e: SqlMeasure.AggEval, _) if e.isFinal =>
-              val a = new RunAggEval(e.fn)
-              var k = 0
-              while (k < m.length) {
-                if (varOk(e.variable, m(k)))
-                  a.update(e.eval(buf(i + k), realLabel(m(k)), matchNo))
-                k += 1
-              }
-              a.value
-            case _ => null
+          val finals = ms.map(x => if (isFinal(x)) accumOf(x) else null)
+          var k = 0
+          while (k < m.length) {
+            var ai = 0
+            while (ai < finals.length) { feed(finals, ai, buf(i + k), m(k), matchNo); ai += 1 }
+            k += 1
           }
+          val finalVals = finals.map(a => if (a == null) null else a.value)
           // per-variable prefix counts for count(V.*) measures
-          val varCountPref: Map[String, Array[Int]] = meas.collect {
-            case (SqlMeasure.VarCount(v, _), _) => v
+          val varCountPref: Map[String, Array[Int]] = ms.collect {
+            case SqlMeasure.VarCount(v, _) => v
           }.distinct.map { v =>
             val pref = new Array[Int](m.length + 1)
             var p = 0
@@ -1765,345 +1447,57 @@ object MatchRecognize {
             v -> pref
           }.toMap
           // RUNNING array measures: one growing buffer per measure,
-          // fed in match order (excluded rows feed like RUNNING aggs)
-          val runArr: IndexedSeq[scala.collection.mutable.ArrayBuffer[Any]] =
-            meas.toIndexedSeq.map {
-              case (SqlMeasure.ArrayAggCol(_, _, false), _) |
-                   (SqlMeasure.ClassifierArray(_, false), _) =>
-                scala.collection.mutable.ArrayBuffer[Any]()
-              case _ => null
-            }
-          // FINAL array measures: the whole-match array, computed once
-          val finalArr: IndexedSeq[Any] = meas.toIndexedSeq.map {
-            case (SqlMeasure.ArrayAggCol(c, v, true), _) =>
-              val b = Seq.newBuilder[Any]
-              var k2 = 0
-              while (k2 < m.length) {
-                if (varOk(v, m(k2))) {
-                  val rr = buf(i + k2); b += rr.get(rr.fieldIndex(c))
-                }
-                k2 += 1
-              }
-              val o = b.result(); if (o.isEmpty) null else o
-            case (SqlMeasure.ClassifierArray(v, true), _) =>
-              val o = m.filter(l => varOk(v, l)).map(realLabel)
-              if (o.isEmpty) null else o
+          // fed in match order (excluded rows feed like RUNNING aggs);
+          // FINAL ones: the whole-match array, computed once
+          val runArr = ms.map {
+            case SqlMeasure.ArrayAggCol(_, _, false) | SqlMeasure.ClassifierArray(_, false) =>
+              scala.collection.mutable.ArrayBuffer[Any]()
+            case _ => null
+          }
+          val finalArr: Array[Any] = ms.map {
+            case a @ (SqlMeasure.ArrayAggCol(_, _, true) | SqlMeasure.ClassifierArray(_, true)) =>
+              wholeArray(a, buf, i, m)
             case _ => null
           }
           val out = Seq.newBuilder[Row]
-          var k = 0
+          k = 0
           while (k < m.length) {
             val r = buf(i + k)
             var ai = 0
-            while (ai < aggs.length) { // excluded rows feed RUNNING
-              aggs(ai) match {
-                case a: RunAgg if varOk(aggVars(ai), m(k)) => a.update(r)
-                case a: RunAggEval =>
-                  val e = evFns(ai)
-                  if (varOk(e.variable, m(k)))
-                    a.update(e.eval(r, realLabel(m(k)), matchNo))
-                case _ => ()
-              }
-              if (runArr(ai) != null) meas(ai)._1 match {
-                case SqlMeasure.ArrayAggCol(c, v, _) =>
-                  if (varOk(v, m(k))) runArr(ai) += r.get(r.fieldIndex(c))
-                case SqlMeasure.ClassifierArray(v, _) =>
-                  if (varOk(v, m(k))) runArr(ai) += realLabel(m(k))
-                case _ => ()
+            while (ai < ms.length) { // excluded rows feed RUNNING
+              feed(running, ai, r, m(k), matchNo)
+              if (runArr(ai) != null && varOk(aggVars(ai), m(k))) ms(ai) match {
+                case SqlMeasure.ArrayAggCol(c, _, _) => runArr(ai) += r.get(r.fieldIndex(c))
+                case _ => runArr(ai) += realLabel(m(k))
               }
               ai += 1
             }
             if (!isExcluded(m(k))) {
-              val mv = meas.zip(aggs).zip(finals).zipWithIndex.map {
-                case ((((SqlMeasure.MatchNum, _), _), _), _) => matchNo
-                case ((((SqlMeasure.Classifier, _), _), _), _) => realLabel(m(k))
-                case ((((SqlMeasure.FinalClassifier, _), _), _), _) => realLabel(m.last)
-                case ((((SqlMeasure.CountStar, _), _), _), _) => (k + 1).toLong
-                case ((((SqlMeasure.FinalCount, _), _), _), _) => m.length.toLong
-                case ((((SqlMeasure.VarCount(v, fin), _), _), _), _) =>
-                  (if (fin) varCountPref(v)(m.length) else varCountPref(v)(k + 1)).toLong
-                case ((((SqlMeasure.FinalAgg(_, _, _, _), _), _), fv), _) => fv
-                case ((((e: SqlMeasure.AggEval, _), _), fv), _) if e.isFinal => fv
-                case ((((SqlMeasure.ArrayAggCol(_, _, fin), _), _), _), mi) =>
-                  if (fin) finalArr(mi)
-                  else if (runArr(mi).isEmpty) null else runArr(mi).toList
-                case ((((SqlMeasure.ClassifierArray(_, fin), _), _), _), mi) =>
-                  if (fin) finalArr(mi)
-                  else if (runArr(mi).isEmpty) null else runArr(mi).toList
-                case (((_, a), _), _) => a.value
+              val mv = new Array[Any](ms.length)
+              var mi = 0
+              while (mi < ms.length) {
+                mv(mi) = ms(mi) match {
+                  case SqlMeasure.MatchNum => matchNo
+                  case SqlMeasure.Classifier => realLabel(m(k))
+                  case SqlMeasure.FinalClassifier => realLabel(m.last)
+                  case SqlMeasure.CountStar => (k + 1).toLong
+                  case SqlMeasure.FinalCount => m.length.toLong
+                  case SqlMeasure.VarCount(v, fin) =>
+                    varCountPref(v)(if (fin) m.length else k + 1).toLong
+                  case SqlMeasure.ArrayAggCol(_, _, true) | SqlMeasure.ClassifierArray(_, true) =>
+                    finalArr(mi)
+                  case SqlMeasure.ArrayAggCol(_, _, false) | SqlMeasure.ClassifierArray(_, false) =>
+                    if (runArr(mi).isEmpty) null else runArr(mi).toList
+                  case x => if (isFinal(x)) finalVals(mi) else running(mi).value
+                }
+                mi += 1
               }
-              out += Row.fromSeq(kCols.map(c => r.get(r.fieldIndex(c))) ++ mv ++
-                rCols.map(c => r.get(r.fieldIndex(c))))
+              out += rowOf(r, mv)
             }
             k += 1
           }
           out.result()
-      }.toDF()
-    }
-  }
-
-  /** Run MATCH_RECOGNIZE over `df` (ONE ROW PER MATCH, built-in
-    * measures — see [[MatchRow]]).
-    *
-    * @param partCol  numeric partition key column
-    * @param orderCol numeric ordering column (total order per key)
-    * @param pattern  pattern over identifier variables, e.g. "D+ U+"
-    * @param define   per-variable predicate over (prevRowOrNull, row)
-    * @param skipPastLastRow AFTER MATCH SKIP PAST LAST ROW (true) or
-    *                        TO NEXT ROW (false)
-    */
-  def apply(
-      df: DataFrame,
-      partCol: String,
-      orderCol: String,
-      pattern: String,
-      define: Map[String, (Row, Row) => Boolean],
-      skipPastLastRow: Boolean = true): Dataset[MatchRow] =
-    withSkip(df, partCol, orderCol, pattern, define,
-      if (skipPastLastRow) SkipMode.PastLastRow else SkipMode.ToNextRow)
-
-  /** As [[apply]] but with the full AFTER MATCH SKIP mode surface. */
-  def withSkip(
-      df: DataFrame,
-      partCol: String,
-      orderCol: String,
-      pattern: String,
-      define: Map[String, (Row, Row) => Boolean],
-      skip: SkipMode): Dataset[MatchRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    runEngine(df, partCol, orderCol, pattern, wrapDefine(define), skip) {
-      (key, matchNo, buf, i, m0, ordOf) =>
-        val m = m0.map(realLabel) // ONE ROW PER MATCH ignores exclusions
-        val counts = m.groupBy(identity).toSeq.sortBy(_._1)
-          .map { case (v, cs) => s"$v:${cs.length}" }.mkString(",")
-        Seq(MatchRow(key, matchNo, ordOf(buf(i)), ordOf(buf(i + m.length - 1)),
-          m.mkString, m.length.toLong, counts))
-    }
-  }
-
-  /** ONE ROW PER MATCH with FINAL-semantics numeric measures over
-    * `valueCol`: FIRST/LAST/MIN/MAX of the matched rows' values. */
-  def measures(
-      df: DataFrame,
-      partCol: String,
-      orderCol: String,
-      pattern: String,
-      define: Map[String, (Row, Row) => Boolean],
-      valueCol: String,
-      skipPastLastRow: Boolean = true): Dataset[MatchMeasures] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    runEngine(df, partCol, orderCol, pattern, wrapDefine(define),
-      if (skipPastLastRow) SkipMode.PastLastRow else SkipMode.ToNextRow) {
-      (key, matchNo, buf, i, m, ordOf) =>
-        val vals = (i until i + m.length)
-          .map(j => buf(j).getAs[Number](buf(j).fieldIndex(valueCol)).doubleValue())
-        Seq(MatchMeasures(key, matchNo, ordOf(buf(i)), ordOf(buf(i + m.length - 1)),
-          m.length.toLong, vals.head, vals.last, vals.min, vals.max))
-    }
-  }
-
-  /** As [[measures]] but with context-form DEFINE predicates — full
-    * navigation (PREV/NEXT n, running FIRST/LAST over variables or
-    * SUBSET unions) — plus SUBSET declarations and any [[SkipMode]].
-    * This is the widest engine surface; the simpler entry points all
-    * lower onto it. */
-  def measuresCtx(
-      df: DataFrame,
-      partCol: String,
-      orderCol: String,
-      pattern: String,
-      define: Map[String, MatchCtx => Boolean],
-      valueCol: String,
-      skip: SkipMode = SkipMode.PastLastRow,
-      subsets: Map[String, Set[String]] = Map.empty): Dataset[MatchMeasures] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    runEngine(df, partCol, orderCol, pattern, define, skip, subsets) {
-      (key, matchNo, buf, i, m, ordOf) =>
-        val vals = (i until i + m.length)
-          .map(j => buf(j).getAs[Number](buf(j).fieldIndex(valueCol)).doubleValue())
-        Seq(MatchMeasures(key, matchNo, ordOf(buf(i)), ordOf(buf(i + m.length - 1)),
-          m.length.toLong, vals.head, vals.last, vals.min, vals.max))
-    }
-  }
-
-  /** ONE ROW PER MATCH **per pattern variable** with logical
-    * navigation measures: FIRST(V.value) / LAST(V.value) and their
-    * offset-n forms FIRST(V.value, n) / LAST(V.value, n) — the
-    * reference's LogicalIndexNavigation. The offset counts rows mapped
-    * to V within the match (not physical rows); out-of-range offsets
-    * yield null, as in the reference. Variables that matched zero rows
-    * emit nothing (there is no row to navigate to). */
-  def varMeasures(
-      df: DataFrame,
-      partCol: String,
-      orderCol: String,
-      pattern: String,
-      define: Map[String, (Row, Row) => Boolean],
-      valueCol: String,
-      offset: Int,
-      skipPastLastRow: Boolean = true): Dataset[MatchVarMeasures] = {
-    require(offset >= 0, s"navigation offset must be >= 0, got $offset")
-    val spark = df.sparkSession
-    import spark.implicits._
-    runEngine(df, partCol, orderCol, pattern, wrapDefine(define),
-      if (skipPastLastRow) SkipMode.PastLastRow else SkipMode.ToNextRow) {
-      (key, matchNo, buf, i, m0, ordOf) =>
-        val m = m0.map(realLabel) // measures see excluded rows (SQL:2016)
-        val startOrd = ordOf(buf(i))
-        val endOrd = ordOf(buf(i + m.length - 1))
-        m.zipWithIndex.groupBy(_._1).toSeq.sortBy(_._1).map { case (v, idxs) =>
-          // idxs preserve match order: the variable's rows in sequence
-          val vals = idxs.map { case (_, k) =>
-            buf(i + k).getAs[Number](buf(i + k).fieldIndex(valueCol)).doubleValue()
-          }
-          MatchVarMeasures(key, matchNo, startOrd, endOrd, v, vals.length.toLong,
-            vals.head, vals.last,
-            if (offset < vals.length) Some(vals(offset)) else None,
-            if (offset < vals.length) Some(vals(vals.length - 1 - offset)) else None)
-        }
-    }
-  }
-
-  /** ONE ROW PER MATCH with SHOW EMPTY MATCHES (reference `SqlBase.g4`
-    * emptyMatchHandling; the default for ONE ROW PER MATCH in the
-    * standard): patterns that can match zero rows yield an empty match
-    * — numbered, null-classified, zero-row — at each position where no
-    * row is consumed, and the scan resumes at the next row. Non-empty
-    * matches carry the concatenated classifier sequence. The engine's
-    * other entry points implement OMIT EMPTY MATCHES. */
-  def matchesShowEmpty(
-      df: DataFrame,
-      partCol: String,
-      orderCol: String,
-      pattern: String,
-      define: Map[String, (Row, Row) => Boolean]): Dataset[EmptyableMatchRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    runEngine(df, partCol, orderCol, pattern, wrapDefine(define),
-      SkipMode.PastLastRow,
-      emitEmpty = (key: Long, matchNo: Long, buf: collection.IndexedSeq[Row],
-          i: Int, ordOf: Row => Long) =>
-        EmptyableMatchRow(key, matchNo, ordOf(buf(i)), 0L, None)) {
-      (key, matchNo, buf, i, m, ordOf) =>
-        Seq(EmptyableMatchRow(key, matchNo, ordOf(buf(i)), m.length.toLong,
-          Some(m.map(realLabel).mkString)))
-    }
-  }
-
-  /** ALL ROWS PER MATCH WITH UNMATCHED ROWS (reference `SqlBase.g4`
-    * rowsPerMatch WITH UNMATCHED; planner emits null MATCH_NUMBER/
-    * CLASSIFIER/measures for unmatched rows): every input row appears
-    * exactly once — matched rows carry match_no, classifier, and the
-    * RUNNING/FINAL measures of [[allRows]]; rows in no match carry
-    * nulls. A row is unmatched iff it belongs to NO match under the
-    * given skip mode (coverage is tracked across overlapping matches,
-    * so the definition holds for SKIP TO NEXT ROW too). */
-  def allRowsWithUnmatched(
-      df: DataFrame,
-      partCol: String,
-      orderCol: String,
-      pattern: String,
-      define: Map[String, (Row, Row) => Boolean],
-      valueCol: String,
-      skipPastLastRow: Boolean = true): Dataset[MatchRowAll] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    runEngine(df, partCol, orderCol, pattern, wrapDefine(define),
-      if (skipPastLastRow) SkipMode.PastLastRow else SkipMode.ToNextRow,
-      emitUnmatched = (key: Long, buf: collection.IndexedSeq[Row], j: Int,
-          ordOf: Row => Long) =>
-        MatchRowAll(key, ordOf(buf(j)), None, None, None, None, None, None)) {
-      (key, matchNo, buf, i, m, ordOf) =>
-        val vals = (i until i + m.length)
-          .map(j => buf(j).getAs[Number](buf(j).fieldIndex(valueCol)).doubleValue())
-        val finalLast = vals.last
-        var runMax = Double.NegativeInfinity
-        (0 until m.length).flatMap { k =>
-          runMax = math.max(runMax, vals(k)) // excluded rows still feed RUNNING
-          if (isExcluded(m(k))) None
-          else Some(MatchRowAll(key, ordOf(buf(i + k)), Some(matchNo),
-            Some(m(k)), Some((k + 1).toLong), Some(m.length.toLong),
-            Some(runMax), Some(finalLast)))
-        }
-    }
-  }
-
-  /** Aggregates in MEASURES over variable row sets (reference
-    * `sql/planner/rowpattern/` aggregations): per match, COUNT/SUM/
-    * AVG/MIN/MAX of `valueCol` for each pattern variable's rows and
-    * for the universal row set (var_name "*" ≡ the unqualified
-    * `sum(value)`), all FINAL semantics — ONE ROW PER MATCH evaluates
-    * every measure at the last match row, where RUNNING ≡ FINAL
-    * (the RUNNING distinction is observable in [[allRows]]).
-    *
-    * Determinism contract: values are fixed-point with ≤ `scale`
-    * decimal places (the fixture convention, see engine/Num.scala), so
-    * SUM accumulates exact scaled longs — order-independent across
-    * partitionings and engines — and AVG is the summed double divided
-    * by the count in one IEEE division, mirroring the oracle's
-    * `CAST(sum(CAST(v AS DECIMAL)) AS DOUBLE) / n`. */
-  def aggMeasures(
-      df: DataFrame,
-      partCol: String,
-      orderCol: String,
-      pattern: String,
-      define: Map[String, (Row, Row) => Boolean],
-      valueCol: String,
-      scale: Int = 2,
-      skipPastLastRow: Boolean = true): Dataset[MatchAggRow] = {
-    require(scale >= 0 && scale <= 6, s"scale must be in [0, 6], got $scale")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pow = math.pow(10, scale)
-    runEngine(df, partCol, orderCol, pattern, wrapDefine(define),
-      if (skipPastLastRow) SkipMode.PastLastRow else SkipMode.ToNextRow) {
-      (key, matchNo, buf, i, m, ordOf) =>
-        val startOrd = ordOf(buf(i))
-        val endOrd = ordOf(buf(i + m.length - 1))
-        def aggOf(name: String, idxs: Seq[Int]): MatchAggRow = {
-          val vals = idxs.map(j =>
-            buf(j).getAs[Number](buf(j).fieldIndex(valueCol)).doubleValue())
-          val s = vals.map(v => math.round(v * pow)).sum / pow
-          MatchAggRow(key, matchNo, startOrd, endOrd, name, vals.length.toLong,
-            s, s / vals.length, vals.min, vals.max)
-        }
-        m.zipWithIndex.groupBy(e => realLabel(e._1)).toSeq.sortBy(_._1)
-          .map { case (v, idxs) => aggOf(v, idxs.map(i + _._2)) } :+
-          aggOf("*", i until i + m.length)
-    }
-  }
-
-  /** ALL ROWS PER MATCH: one output row per matched input row, with
-    * RUNNING measures (prefix up to this row) and FINAL measures
-    * (whole match) side by side — the reference's RUNNING/FINAL
-    * distinction made observable. Unmatched rows are excluded (the
-    * reference's ALL ROWS PER MATCH OMIT EMPTY MATCHES default). */
-  def allRows(
-      df: DataFrame,
-      partCol: String,
-      orderCol: String,
-      pattern: String,
-      define: Map[String, (Row, Row) => Boolean],
-      valueCol: String,
-      skipPastLastRow: Boolean = true): Dataset[MatchDetail] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    runEngine(df, partCol, orderCol, pattern, wrapDefine(define),
-      if (skipPastLastRow) SkipMode.PastLastRow else SkipMode.ToNextRow) {
-      (key, matchNo, buf, i, m, ordOf) =>
-        val vals = (i until i + m.length)
-          .map(j => buf(j).getAs[Number](buf(j).fieldIndex(valueCol)).doubleValue())
-        val finalLast = vals.last
-        var runMax = Double.NegativeInfinity
-        (0 until m.length).flatMap { k =>
-          runMax = math.max(runMax, vals(k)) // excluded rows still feed RUNNING
-          if (isExcluded(m(k))) None
-          else Some(MatchDetail(key, matchNo, ordOf(buf(i + k)), m(k),
-            (k + 1).toLong, m.length.toLong, runMax, finalLast))
-        }
+      }
     }
   }
 }

@@ -2,7 +2,8 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
+import org.apache.spark.sql.functions.col
 
 /** Disk-spilling indexed row buffer — [[MatchRecognize]]'s per-key
   * working set, with the same spill-beyond-memory posture as the
@@ -124,4 +125,92 @@ private[graft] final class SpillableRowBuffer(
     pageBuf.clear()
     cPageA = null; cPageB = null; cIdxA = -1; cIdxB = -1
   }
+}
+
+/** The key-group scan shared by every per-key operator
+  * ([[MatchRecognize]]'s table and window forms, [[DynamicFrames]]):
+  * one shuffle on the partition key, a local sort on (partition ++
+  * order) keys, then each run of equal partition keys buffered into a
+  * [[SpillableRowBuffer]] and handed to `perGroup`. The reference's
+  * per-partition PagesIndex shape — no driver involvement, no global
+  * sort, one key group resident at a time.
+  *
+  * Keys compare as Spark's `PARTITION BY` / `GROUP BY` do: NaN equals
+  * NaN (a NaN key is ONE group, not one group per row). The
+  * [[MatchRecognize.MaxRowsPerKey]] backstop and the spill threshold
+  * are read on the driver so a configured value ships with the task
+  * closure. A group's buffer is disposed once its output iterator is
+  * drained (the spill file is deleted eagerly). */
+private[graft] object KeyGroups {
+
+  def scan[T](
+      df: DataFrame,
+      partCols: Seq[String],
+      orderCols: Seq[String],
+      operator: String,
+      spillAfterRows: Int = MatchRecognize.SpillAfterRows)(
+      perGroup: SpillableRowBuffer => Iterator[T])(
+      implicit enc: Encoder[T]): Dataset[T] = {
+    val keyIdx = partCols.map(df.schema.fieldIndex).toArray
+    val maxRowsPerKey = MatchRecognize.MaxRowsPerKey
+    val memCap = spillAfterRows
+    val op = operator
+    df.repartition(partCols.map(col): _*)
+      .sortWithinPartitions((partCols ++ orderCols).map(col): _*)
+      .mapPartitions { it =>
+        val rows = it.buffered
+        new Iterator[T] {
+          private var buf: SpillableRowBuffer = _
+          private var out: Iterator[T] = Iterator.empty
+
+          private def sameKey(a: Row, b: Row): Boolean = {
+            var k = 0
+            while (k < keyIdx.length) {
+              if (!KeyGroups.keyEq(a.get(keyIdx(k)), b.get(keyIdx(k)))) return false
+              k += 1
+            }
+            true
+          }
+
+          private def nextGroup(): SpillableRowBuffer = {
+            val first = rows.next()
+            val b = new SpillableRowBuffer(memCap)
+            b.append(first)
+            while (rows.hasNext && sameKey(rows.head, first)) {
+              b.append(rows.next())
+              if (b.length > maxRowsPerKey) {
+                b.dispose()
+                throw new IllegalStateException(
+                  s"$op: partition key ${keyIdx.map(first.get).mkString(",")} " +
+                    s"exceeds $maxRowsPerKey buffered rows; pre-filter or " +
+                    "sub-partition the input (e.g. bound the time range per " +
+                    "key), or raise MatchRecognize.MaxRowsPerKey")
+              }
+            }
+            b
+          }
+
+          override def hasNext: Boolean = {
+            while (!out.hasNext && rows.hasNext) {
+              if (buf != null) buf.dispose()
+              buf = nextGroup()
+              out = perGroup(buf)
+            }
+            if (!out.hasNext && buf != null) { buf.dispose(); buf = null }
+            out.hasNext
+          }
+
+          override def next(): T =
+            if (hasNext) out.next() else throw new NoSuchElementException
+        }
+      }
+  }
+
+  /** Partition-key equality: `==`, except that NaN equals NaN (boxed
+    * `NaN == NaN` is false). */
+  private def keyEq(a: Any, b: Any): Boolean = a == b || ((a, b) match {
+    case (x: java.lang.Double, y: java.lang.Double) => x.isNaN && y.isNaN
+    case (x: java.lang.Float, y: java.lang.Float) => x.isNaN && y.isNaN
+    case _ => false
+  })
 }

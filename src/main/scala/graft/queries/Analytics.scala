@@ -221,8 +221,9 @@ object Analytics {
     * over sessionized clickstreams, grammar `SqlBase.g4:360-399`):
     * gap-based sessionization (12 h inactivity; the batch
     * gaps-and-islands rewrite of st2's session windows) feeding
-    * [[MatchRecognize.varMeasures]] with pattern `N*? V N*? C N*? P`
-    * — within each session, reluctant fillers skip to the earliest
+    * `MATCH_RECOGNIZE` text with pattern `N*? V N*? C N*? P` and the
+    * per-variable measures FIRST(V.ts_us) / FIRST(P.ts_us) — within
+    * each session, reluctant fillers skip to the earliest
     * view, the first click at-or-after it, and the first purchase
     * at-or-after that click. Rolled up per user: total sessions,
     * converted sessions (first match per session only — MATCH_NUMBER
@@ -242,14 +243,13 @@ object Analytics {
     * The session id packs into `user_id * 100000 + sid` (a month of
     * 12 h-gapped sessions is ≤ 62; the pack documents a 100k/user
     * bound, beyond which the key space would need a struct key).
-    * Timestamps ride as epoch MICROS longs: exact in the operator's
-    * double measures (< 2^53) and identical to the oracle's
-    * epoch_us arithmetic, so the latency sum is integer-exact. */
+    * Timestamps ride as epoch MICROS longs: the measures and the
+    * latency sum stay in Long arithmetic, identical to the oracle's
+    * epoch_us arithmetic. */
   def x4(s: SparkSession, dir: String): DataFrame =
     x4From(s, Graft.events(s, dir))
 
   private[graft] def x4From(s: SparkSession, events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
     val gapUs = 12L * 3600L * 1000000L
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
     val sess = events
@@ -284,24 +284,23 @@ object Analytics {
       .agg(max(coalesce(when(col("event_type").isNotNull, col("sid")),
           col("sid")))
         .as("n_sessions")) // sid is 1-based and dense
-    def isT(t: String): (Row, Row) => Boolean =
-      (_, c) => c.getAs[String]("event_type") == t
-    val conv = graft.operators.MatchRecognize.varMeasures(
-        sess.select(col("part_key"), col("ts_us"), col("event_type")),
-        "part_key", "ts_us", "N*? V N*? C N*? P",
-        Map("N" -> ((_: Row, _: Row) => true),
-          "V" -> isT("view"), "C" -> isT("click"), "P" -> isT("purchase")),
-        "ts_us", 0)
-      .filter(col("match_no") === 1 && col("var_name").isin("V", "P"))
-      .groupBy(col("part_key"))
-      .agg((max(when(col("var_name") === "P", col("first_val"))) -
-            max(when(col("var_name") === "V", col("first_val")))).as("lat_us"))
+    val conv = graft.sqlcompat.MatchRecognizeSql.translate(
+      """SELECT * FROM sessions MATCH_RECOGNIZE (
+        |  PARTITION BY part_key ORDER BY ts_us
+        |  MEASURES MATCH_NUMBER() AS match_no,
+        |           FIRST(V.ts_us) AS v_us, FIRST(P.ts_us) AS p_us
+        |  ONE ROW PER MATCH
+        |  PATTERN (N*? V N*? C N*? P)
+        |  DEFINE V AS event_type = 'view', C AS event_type = 'click',
+        |         P AS event_type = 'purchase')""".stripMargin,
+      _ => sess.select(col("part_key"), col("ts_us"), col("event_type")))
+      .filter(col("match_no") === 1)
       .groupBy(expr("part_key DIV 100000").as("cu"))
-      .agg(count(lit(1)).as("nc"), sum(col("lat_us")).as("lat"))
+      .agg(count(lit(1)).as("nc"), sum(col("p_us") - col("v_us")).as("lat"))
     nSess.join(conv, col("user_id") === col("cu"), "left")
       .select(col("user_id"), col("n_sessions"),
         coalesce(col("nc"), lit(0L)).as("n_converted"),
-        coalesce(col("lat"), lit(0.0)).cast("long").as("total_latency_us"))
+        coalesce(col("lat"), lit(0L)).as("total_latency_us"))
   }
 
   val x4Sql: String =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Graft
 import graft.operators.MatchRecognize
+import graft.sqlcompat.MatchRecognizeSql
 
 /** MATCH_RECOGNIZE fixture queries (reference: grammar
   * `SqlBase.g4:360-399`, `operator/window/matcher/Matcher.java:28`).
@@ -14,20 +15,46 @@ import graft.operators.MatchRecognize
   * relationally: under greedy leftmost matching with AFTER MATCH SKIP
   * PAST LAST ROW, the number of `D+ U+` matches equals the number of
   * D→U direction flips (valleys) — a lag()-based rewrite DuckDB can
-  * run, giving the pattern operator a real cross-engine gate. */
+  * run, giving the pattern operator a real cross-engine gate.
+  *
+  * Every table-form builder (mr1–mr10, mr12, mr13) is `MATCH_RECOGNIZE`
+  * SQL text lowered by [[MatchRecognizeSql.translate]] over the events
+  * columns `user_id`, `event_id`, `value`, partitioned by user and
+  * ordered by event id; mr11 is the window-frame form, which has no SQL
+  * spelling. */
 object Patterns {
 
-  def mr1(s: SparkSession, dir: String): DataFrame = {
-    val ev = Graft.load(s, dir, "events").select(
-      col("user_id"), col("event_id"), col("value"))
-    val down: (Row, Row) => Boolean =
-      (p, c) => p != null && c.getAs[Double]("value") < p.getAs[Double]("value")
-    val up: (Row, Row) => Boolean =
-      (p, c) => p != null && c.getAs[Double]("value") > p.getAs[Double]("value")
-    MatchRecognize(ev, "user_id", "event_id", "D+ U+", Map("D" -> down, "U" -> up))
-      .groupBy(col("part_key").as("user_id"))
-      .agg(count(lit(1)).as("n_matches"))
+  private def events(s: SparkSession, dir: String): DataFrame =
+    Graft.load(s, dir, "events").select(col("user_id"), col("event_id"), col("value"))
+
+  /** `SELECT * FROM events MATCH_RECOGNIZE (PARTITION BY user_id ORDER
+    * BY event_id <clauses>)` over `ev`. */
+  private def matchEvents(ev: DataFrame, clauses: String): DataFrame =
+    MatchRecognizeSql.translate(
+      "SELECT * FROM events MATCH_RECOGNIZE (\n" +
+        "  PARTITION BY user_id ORDER BY event_id\n" + clauses + ")",
+      _ => ev)
+
+  /** Unpivot ONE ROW PER MATCH measures named `<prefix>_<field>` into
+    * one row per pattern variable: `vars` pairs each output `var_name`
+    * with its measure prefix; `keep` columns repeat on every row. */
+  private def perVariable(m: DataFrame, keep: Seq[String],
+      vars: Seq[(String, String)], fields: Seq[String]): DataFrame = {
+    val args = vars.map { case (name, prefix) =>
+      (s"'$name'" +: fields.map(f => s"${prefix}_$f")).mkString(", ")
+    }
+    m.selectExpr(keep :+ s"stack(${vars.size}, ${args.mkString(", ")}) " +
+      s"AS (var_name, ${fields.mkString(", ")})": _*)
   }
+
+  def mr1(s: SparkSession, dir: String): DataFrame =
+    matchEvents(events(s, dir),
+      """  ONE ROW PER MATCH
+        |  AFTER MATCH SKIP PAST LAST ROW
+        |  PATTERN (D+ U+)
+        |  DEFINE D AS value < PREV(value), U AS value > PREV(value)""".stripMargin)
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_matches"))
 
   val mr1Sql: String =
     """WITH d AS (
@@ -55,18 +82,15 @@ object Patterns {
     * LAST ROW makes matches exactly the maximal runs, so the two
     * shapes agree row-for-row. gain = one IEEE subtraction of stored
     * doubles, min/max are exact picks — deterministic cross-engine. */
-  def mr2(s: SparkSession, dir: String): DataFrame = {
-    val ev = Graft.load(s, dir, "events").select(
-      col("user_id"), col("event_id"), col("value"))
-    val up: (Row, Row) => Boolean =
-      (p, c) => p != null && c.getAs[Double]("value") > p.getAs[Double]("value")
-    MatchRecognize.measures(ev, "user_id", "event_id", "U{2,}", Map("U" -> up), "value")
-      .select(col("part_key").as("user_id"),
-        col("start_ord"), col("end_ord"),
-        col("n_rows").as("n_steps"),
-        col("first_val"), col("last_val"), col("max_val").as("peak"),
-        (col("last_val") - col("first_val")).as("gain"))
-  }
+  def mr2(s: SparkSession, dir: String): DataFrame =
+    matchEvents(events(s, dir),
+      """  MEASURES FIRST(event_id) AS start_ord, LAST(event_id) AS end_ord,
+        |           COUNT(*) AS n_steps,
+        |           FIRST(value) AS first_val, LAST(value) AS last_val,
+        |           MAX(value) AS peak, LAST(value) - FIRST(value) AS gain
+        |  ONE ROW PER MATCH
+        |  PATTERN (U{2,})
+        |  DEFINE U AS value > PREV(value)""".stripMargin)
 
   val mr2Sql: String =
     """WITH d AS (
@@ -94,15 +118,16 @@ object Patterns {
     * the RUNNING/FINAL semantics split as observable output. Oracle:
     * per-run window functions (running = ORDER BY frame, final =
     * whole-partition frame) over the relational run reconstruction. */
-  def mr3(s: SparkSession, dir: String): DataFrame = {
-    val ev = Graft.load(s, dir, "events").select(
-      col("user_id"), col("event_id"), col("value"))
-    val up: (Row, Row) => Boolean =
-      (p, c) => p != null && c.getAs[Double]("value") > p.getAs[Double]("value")
-    MatchRecognize.allRows(ev, "user_id", "event_id", "U{2,}", Map("U" -> up), "value")
-      .select(col("part_key").as("user_id"), col("ord"), col("classifier"),
+  def mr3(s: SparkSession, dir: String): DataFrame =
+    matchEvents(events(s, dir),
+      """  MEASURES CLASSIFIER() AS classifier,
+        |           COUNT(*) AS running_cnt, FINAL COUNT(*) AS final_cnt,
+        |           MAX(value) AS running_max, FINAL LAST(value) AS final_last
+        |  ALL ROWS PER MATCH
+        |  PATTERN (U{2,})
+        |  DEFINE U AS value > PREV(value)""".stripMargin)
+      .select(col("user_id"), col("event_id").as("ord"), col("classifier"),
         col("running_cnt"), col("final_cnt"), col("running_max"), col("final_last"))
-  }
 
   val mr3Sql: String =
     """WITH d AS (
@@ -136,17 +161,21 @@ object Patterns {
     * NULL, the same semantics). Values are exact picks of stored
     * doubles — deterministic cross-engine. */
   def mr4(s: SparkSession, dir: String): DataFrame = {
-    val ev = Graft.load(s, dir, "events").select(
-      col("user_id"), col("event_id"), col("value"))
-    val down: (Row, Row) => Boolean =
-      (p, c) => p != null && c.getAs[Double]("value") < p.getAs[Double]("value")
-    val up: (Row, Row) => Boolean =
-      (p, c) => p != null && c.getAs[Double]("value") > p.getAs[Double]("value")
-    MatchRecognize.varMeasures(ev, "user_id", "event_id", "DOWN+ UP+",
-      Map("DOWN" -> down, "UP" -> up), "value", offset = 1)
-      .select(col("part_key").as("user_id"), col("match_no"),
-        col("start_ord"), col("end_ord"), col("var_name"), col("var_rows"),
-        col("first_val"), col("last_val"), col("first_off"), col("last_off"))
+    val navigation = Seq("DOWN", "UP").map { v =>
+      s"COUNT($v.*) AS ${v}_var_rows, FIRST($v.value) AS ${v}_first_val, " +
+        s"LAST($v.value) AS ${v}_last_val, FIRST($v.value, 1) AS ${v}_first_off, " +
+        s"LAST($v.value, 1) AS ${v}_last_off"
+    }
+    val m = matchEvents(events(s, dir),
+      s"""  MEASURES MATCH_NUMBER() AS match_no,
+         |           FIRST(event_id) AS start_ord, LAST(event_id) AS end_ord,
+         |           ${navigation.mkString(",\n           ")}
+         |  ONE ROW PER MATCH
+         |  PATTERN (DOWN+ UP+)
+         |  DEFINE DOWN AS value < PREV(value), UP AS value > PREV(value)""".stripMargin)
+    perVariable(m, Seq("user_id", "match_no", "start_ord", "end_ord"),
+      Seq("DOWN" -> "DOWN", "UP" -> "UP"),
+      Seq("var_rows", "first_val", "last_val", "first_off", "last_off"))
   }
 
   val mr4Sql: String =
@@ -206,22 +235,17 @@ object Patterns {
     * successor iff it rises above rows 1 and 2 back — so the oracle
     * rebuilds matches from direction-run ids with a lag(value, 2)
     * carried per row, no sequential state needed. */
-  def mr5(s: SparkSession, dir: String): DataFrame = {
-    import MatchRecognize.MatchCtx
-    val ev = Graft.load(s, dir, "events").select(
-      col("user_id"), col("event_id"), col("value"))
-    def v(r: Row): Double = r.getAs[Double]("value")
-    val down: MatchCtx => Boolean =
-      ctx => ctx.prev(1) != null && v(ctx.row) < v(ctx.prev(1))
-    val up2: MatchCtx => Boolean =
-      ctx => ctx.prev(1) != null && v(ctx.row) > v(ctx.prev(1)) &&
-        ctx.prev(2) != null && v(ctx.row) > v(ctx.prev(2))
-    MatchRecognize.measuresCtx(ev, "user_id", "event_id", "D+? U",
-      Map("D" -> down, "U" -> up2), "value")
-      .select(col("part_key").as("user_id"), col("match_no"),
-        col("start_ord"), col("end_ord"), col("n_rows"),
-        col("first_val"), col("last_val"), col("min_val"), col("max_val"))
-  }
+  def mr5(s: SparkSession, dir: String): DataFrame =
+    matchEvents(events(s, dir),
+      """  MEASURES MATCH_NUMBER() AS match_no,
+        |           FIRST(event_id) AS start_ord, LAST(event_id) AS end_ord,
+        |           COUNT(*) AS n_rows, FIRST(value) AS first_val,
+        |           LAST(value) AS last_val, MIN(value) AS min_val,
+        |           MAX(value) AS max_val
+        |  ONE ROW PER MATCH
+        |  PATTERN (D+? U)
+        |  DEFINE D AS value < PREV(value),
+        |         U AS value > PREV(value) AND value > PREV(value, 2)""".stripMargin)
 
   val mr5Sql: String =
     """WITH d AS (
@@ -271,23 +295,36 @@ object Patterns {
     * `D+ U+`, one output row per (match, variable) plus the universal
     * `*` row (unqualified aggregate over the whole match), each with
     * FINAL COUNT/SUM/AVG/MIN/MAX of value. Determinism: values are
-    * 2-dp fixed-point, summed exactly (scaled longs engine-side,
-    * DECIMAL(12,2) oracle-side), AVG is one IEEE division of the
-    * exact sum by the count — see MatchRecognize.aggMeasures. Oracle:
+    * 2-dp fixed-point, summed exactly (the measures sum a scaled-long
+    * `value_c` = round(value · 100) column, DECIMAL(12,2) oracle-side),
+    * AVG is one IEEE division of the exact sum by the count. Oracle:
     * the mr4 run-id rebuild, with per-run decimal sums/min/max merged
     * per match (the `*` row merges the two runs' exact partials). */
   def mr6(s: SparkSession, dir: String): DataFrame = {
-    val ev = Graft.load(s, dir, "events").select(
-      col("user_id"), col("event_id"), col("value"))
-    val down: (Row, Row) => Boolean =
-      (p, c) => p != null && c.getAs[Double]("value") < p.getAs[Double]("value")
-    val up: (Row, Row) => Boolean =
-      (p, c) => p != null && c.getAs[Double]("value") > p.getAs[Double]("value")
-    MatchRecognize.aggMeasures(ev, "user_id", "event_id", "D+ U+",
-      Map("D" -> down, "U" -> up), "value")
-      .select(col("part_key").as("user_id"), col("match_no"),
-        col("start_ord"), col("end_ord"), col("var_name"), col("var_rows"),
-        col("sum_val"), col("avg_val"), col("min_val"), col("max_val"))
+    // value · 100 rounded half-up to a long: 2-dp values sit within an
+    // ulp of an integer, so the per-variable sums are exact
+    val ev = events(s, dir)
+      .withColumn("value_c", floor(col("value") * 100.0 + 0.5))
+    val aggs = Seq("D" -> "D.", "U" -> "U.", "ALL" -> "").map { case (p, q) =>
+      val n = if (q.isEmpty) "COUNT(*)" else s"COUNT(${q}*)"
+      s"$n AS ${p}_var_rows, SUM(${q}value_c) AS ${p}_sum_c, " +
+        s"MIN(${q}value) AS ${p}_min_val, MAX(${q}value) AS ${p}_max_val"
+    }
+    val m = matchEvents(ev,
+      s"""  MEASURES MATCH_NUMBER() AS match_no,
+         |           FIRST(event_id) AS start_ord, LAST(event_id) AS end_ord,
+         |           ${aggs.mkString(",\n           ")}
+         |  ONE ROW PER MATCH
+         |  PATTERN (D+ U+)
+         |  DEFINE D AS value < PREV(value), U AS value > PREV(value)""".stripMargin)
+    perVariable(m, Seq("user_id", "match_no", "start_ord", "end_ord"),
+      Seq("D" -> "D", "U" -> "U", "*" -> "ALL"),
+      Seq("var_rows", "sum_c", "min_val", "max_val"))
+      .withColumn("sum_val", col("sum_c").cast("double") / 100.0)
+      .select(col("user_id"), col("match_no"), col("start_ord"), col("end_ord"),
+        col("var_name"), col("var_rows"), col("sum_val"),
+        (col("sum_val") / col("var_rows")).as("avg_val"),
+        col("min_val"), col("max_val"))
   }
 
   val mr6Sql: String =
@@ -348,17 +385,17 @@ object Patterns {
     * nulls throughout, the reference's null MATCH_NUMBER/CLASSIFIER
     * contract. Oracle: mr3's run-id rebuild for the matched side,
     * UNION ALL the complement with NULL-typed columns. */
-  def mr7(s: SparkSession, dir: String): DataFrame = {
-    val ev = Graft.load(s, dir, "events").select(
-      col("user_id"), col("event_id"), col("value"))
-    val up: (Row, Row) => Boolean =
-      (p, c) => p != null && c.getAs[Double]("value") > p.getAs[Double]("value")
-    MatchRecognize.allRowsWithUnmatched(ev, "user_id", "event_id", "U{2,}",
-      Map("U" -> up), "value")
-      .select(col("part_key").as("user_id"), col("ord"), col("match_no"),
+  def mr7(s: SparkSession, dir: String): DataFrame =
+    matchEvents(events(s, dir),
+      """  MEASURES MATCH_NUMBER() AS match_no, CLASSIFIER() AS classifier,
+        |           COUNT(*) AS running_cnt, FINAL COUNT(*) AS final_cnt,
+        |           MAX(value) AS running_max, FINAL LAST(value) AS final_last
+        |  ALL ROWS PER MATCH WITH UNMATCHED ROWS
+        |  PATTERN (U{2,})
+        |  DEFINE U AS value > PREV(value)""".stripMargin)
+      .select(col("user_id"), col("event_id").as("ord"), col("match_no"),
         col("classifier"), col("running_cnt"), col("final_cnt"),
         col("running_max"), col("final_last"))
-  }
 
   val mr7Sql: String =
     """WITH d AS (
@@ -401,17 +438,21 @@ object Patterns {
     * zero rows. Oracle: falling runs from direction run-ids (one
     * anchor at each run start, repeat('D', len) classifier) UNION ALL
     * each non-falling row as an empty anchor, renumbered in anchor
-    * order — exactly the scan the engine performs. */
-  def mr8(s: SparkSession, dir: String): DataFrame = {
-    val ev = Graft.load(s, dir, "events").select(
-      col("user_id"), col("event_id"), col("value"))
-    val down: (Row, Row) => Boolean =
-      (p, c) => p != null && c.getAs[Double]("value") < p.getAs[Double]("value")
-    MatchRecognize.matchesShowEmpty(ev, "user_id", "event_id", "D*",
-      Map("D" -> down))
-      .select(col("part_key").as("user_id"), col("match_no"),
-        col("anchor_ord"), col("n_rows"), col("classifier"))
-  }
+    * order — exactly the scan the engine performs. Engine side: ALL
+    * ROWS PER MATCH SHOW EMPTY MATCHES gives every match — empty ones
+    * included — a row carrying its anchor row's event_id; the match's
+    * first row (RUNNING COUNT(*) ≤ 1) is its one output row. */
+  def mr8(s: SparkSession, dir: String): DataFrame =
+    matchEvents(events(s, dir),
+      """  MEASURES MATCH_NUMBER() AS match_no, COUNT(*) AS pos,
+        |           FINAL COUNT(*) AS n_rows,
+        |           FINAL array_agg(CLASSIFIER()) AS labels
+        |  ALL ROWS PER MATCH SHOW EMPTY MATCHES
+        |  PATTERN (D*)
+        |  DEFINE D AS value < PREV(value)""".stripMargin)
+      .filter(col("pos") <= 1)
+      .select(col("user_id"), col("match_no"), col("event_id").as("anchor_ord"),
+        col("n_rows"), array_join(col("labels"), "").as("classifier"))
 
   val mr8Sql: String =
     """WITH d AS (
@@ -452,17 +493,18 @@ object Patterns {
     * runs from direction run-ids, keep rows ranked first or last in
     * runs of length ≥ 3 — rcnt/rmax computed BEFORE the rank filter,
     * exactly the engine's measure-over-all-rows contract. */
-  def mr9(s: SparkSession, dir: String): DataFrame = {
-    val ev = Graft.load(s, dir, "events").select(
-      col("user_id"), col("event_id"), col("value"))
-    val up: (Row, Row) => Boolean =
-      (p, c) => p != null && c.getAs[Double]("value") > p.getAs[Double]("value")
-    MatchRecognize.allRows(ev, "user_id", "event_id", "A {- B+ -} C",
-      Map("A" -> up, "B" -> up, "C" -> up), "value")
-      .select(col("part_key").as("user_id"), col("ord"), col("match_no"),
+  def mr9(s: SparkSession, dir: String): DataFrame =
+    matchEvents(events(s, dir),
+      """  MEASURES MATCH_NUMBER() AS match_no, CLASSIFIER() AS classifier,
+        |           COUNT(*) AS running_cnt, FINAL COUNT(*) AS final_cnt,
+        |           MAX(value) AS running_max, FINAL LAST(value) AS final_last
+        |  ALL ROWS PER MATCH
+        |  PATTERN (A {- B+ -} C)
+        |  DEFINE A AS value > PREV(value), B AS value > PREV(value),
+        |         C AS value > PREV(value)""".stripMargin)
+      .select(col("user_id"), col("event_id").as("ord"), col("match_no"),
         col("classifier"), col("running_cnt"), col("final_cnt"),
         col("running_max"), col("final_last"))
-  }
 
   val mr9Sql: String =
     """WITH d AS (
@@ -506,21 +548,18 @@ object Patterns {
     * relationally (prefix = rows before the first non-rising step,
     * suffix = rows after the last non-falling step). */
   def mr10(s: SparkSession, dir: String): DataFrame = {
-    val ev = Graft.load(s, dir, "events").select(
-      col("user_id"), col("event_id"), col("value"))
-    val rise: (Row, Row) => Boolean =
-      (p, c) => p == null || c.getAs[Double]("value") > p.getAs[Double]("value")
-    val fall: (Row, Row) => Boolean =
-      (p, c) => p != null && c.getAs[Double]("value") < p.getAs[Double]("value")
-    val pre = MatchRecognize.measures(ev, "user_id", "event_id",
-        "^ U+", Map("U" -> rise), "value")
-      .select(col("part_key").as("user_id"),
-        col("n_rows").as("pre_rows"), col("end_ord").as("pre_end_ord"),
-        col("last_val").as("pre_last"))
-    val suf = MatchRecognize.measures(ev, "user_id", "event_id",
-        "D+ $", Map("D" -> fall), "value")
-      .select(col("part_key").as("user_id"),
-        col("n_rows").as("suf_rows"), col("start_ord").as("suf_start_ord"))
+    val ev = events(s, dir)
+    val pre = matchEvents(ev,
+      """  MEASURES COUNT(*) AS pre_rows, LAST(event_id) AS pre_end_ord,
+        |           LAST(value) AS pre_last
+        |  ONE ROW PER MATCH
+        |  PATTERN (^ U+)
+        |  DEFINE U AS PREV(value) IS NULL OR value > PREV(value)""".stripMargin)
+    val suf = matchEvents(ev,
+      """  MEASURES COUNT(*) AS suf_rows, FIRST(event_id) AS suf_start_ord
+        |  ONE ROW PER MATCH
+        |  PATTERN (D+ $)
+        |  DEFINE D AS value < PREV(value)""".stripMargin)
     pre.join(suf, Seq("user_id"), "left")
       .select(col("user_id"), col("pre_rows"), col("pre_end_ord"),
         col("pre_last"),
@@ -568,8 +607,7 @@ object Patterns {
     * matched event_id); the oracle replays the semantics with
     * IGNORE-NULLS forward window scans over run remainders. */
   def mr11(s: SparkSession, dir: String): DataFrame = {
-    val ev = Graft.load(s, dir, "events").select(
-      col("user_id"), col("event_id"), col("value"))
+    val ev = events(s, dir)
     val high: (Row, Row) => Boolean =
       (_, c) => c.getAs[Double]("value") >= 90.0
     MatchRecognize.windowMatches(ev, Seq("user_id"), Seq("event_id"), "H+",
@@ -617,18 +655,15 @@ object Patterns {
   def mr12(s: SparkSession, dir: String): DataFrame = {
     val ev = Graft.load(s, dir, "events")
       .select(col("user_id"), col("event_id"))
-    graft.sqlcompat.MatchRecognizeSql.translate(
-      """SELECT * FROM events MATCH_RECOGNIZE (
-        |  PARTITION BY user_id ORDER BY event_id
-        |  MEASURES count(*) AS n_rows,
+    matchEvents(ev,
+      """  MEASURES count(*) AS n_rows,
         |           min(event_id) AS first_id,
         |           max(event_id) AS last_id,
         |           array_agg(G.event_id) AS ids_arr
         |  ONE ROW PER MATCH
         |  AFTER MATCH SKIP PAST LAST ROW
         |  PATTERN (G+)
-        |  DEFINE G AS count(G.*) <= 8)""".stripMargin,
-      _ => ev)
+        |  DEFINE G AS count(G.*) <= 8""".stripMargin)
       .select(col("user_id"), col("n_rows"), col("first_id"), col("last_id"),
         concat_ws(",", col("ids_arr")).as("ids"))
   }
@@ -659,10 +694,8 @@ object Patterns {
   def mr13(s: SparkSession, dir: String): DataFrame = {
     val ev = Graft.load(s, dir, "events")
       .select(col("user_id"), col("event_id"))
-    graft.sqlcompat.MatchRecognizeSql.translate(
-      """SELECT * FROM events MATCH_RECOGNIZE (
-        |  PARTITION BY user_id ORDER BY event_id
-        |  MEASURES CLASSIFIER() AS lab
+    matchEvents(ev,
+      """  MEASURES CLASSIFIER() AS lab
         |  ALL ROWS PER MATCH
         |  AFTER MATCH SKIP PAST LAST ROW
         |  PATTERN ((H | L)* X)
@@ -670,8 +703,7 @@ object Patterns {
         |         L AS event_id % 2 = 0,
         |         X AS count(CLASSIFIER()) = 4 AND
         |              element_at(map_agg(event_id, CLASSIFIER()), min(event_id))
-        |                = FIRST(CLASSIFIER()))""".stripMargin,
-      _ => ev)
+        |                = FIRST(CLASSIFIER())""".stripMargin)
       .select(col("user_id"), col("event_id"), col("lab"))
   }
 

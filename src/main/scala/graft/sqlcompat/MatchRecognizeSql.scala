@@ -27,9 +27,10 @@ import graft.operators.MatchRecognize.{MatchCtx, SkipMode}
   *     last label — for ONE ROW), `COUNT(*)` / bare `COUNT()` /
   *     `COUNT(V.*)`, `FIRST/LAST([VAR.]col[, offset])`,
   *     `MIN/MAX/SUM/AVG([VAR.]col)` (string columns allowed for
-  *     first/last/min/max), an optional RUNNING|FINAL prefix, and
-  *     `+ - * /` arithmetic over any of these (computed by Catalyst
-  *     over hidden primitive columns — Long-exact);
+  *     first/last/min/max), `array_agg([VAR.]col)` and
+  *     `array_agg(CLASSIFIER([VAR]))`, an optional RUNNING|FINAL
+  *     prefix, and `+ - * /` arithmetic over any of these (computed by
+  *     Catalyst over hidden primitive columns — Long-exact);
   *   - ONE ROW PER MATCH (default; SHOW EMPTY MATCHES by default per
   *     the standard, OMIT spelling accepted) and ALL ROWS PER MATCH
   *     (SHOW — the default — / OMIT EMPTY MATCHES, WITH UNMATCHED
@@ -59,7 +60,7 @@ import graft.operators.MatchRecognize.{MatchCtx, SkipMode}
   * Known exclusions (fail loudly): quoted/case-normalized identifiers,
   * scalar functions inside measures or DEFINE (beyond arithmetic),
   * nested navigation (`PREV(LAST(...))`), `CLASSIFIER(U)` with an
-  * argument, array_agg measures, and the window-frame (`WINDOW ...
+  * argument outside array_agg, and the window-frame (`WINDOW ...
   * MEASURES ... SEEK`) form of row-pattern recognition.
   */
 object MatchRecognizeSql {

@@ -676,7 +676,8 @@ class DialectSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = "/root/testdata/sf0.001"
     val ev = graft.engine.Graft.load(spark, dir, "events")
       .select(col("user_id"), col("event_id"), col("value"))
-    // SQL-text path ≡ API path, row for row (same query as dx3)
+    // SQL-text path ≡ the operator driven with a Scala DEFINE closure,
+    // row for row (same query as dx3)
     val sqlSide = MatchRecognizeSql.translate(
       """SELECT * FROM events MATCH_RECOGNIZE (
         |  PARTITION BY user_id ORDER BY event_id
@@ -688,10 +689,12 @@ class DialectSpec extends AnyFunSuite with BeforeAndAfterAll {
       _ => ev)
     val up: (org.apache.spark.sql.Row, org.apache.spark.sql.Row) => Boolean =
       (p, c) => p != null && c.getAs[Double]("value") > p.getAs[Double]("value")
-    val apiSide = graft.operators.MatchRecognize
-      .measures(ev, "user_id", "event_id", "U{2,}", Map("U" -> up), "value")
-      .select(col("part_key").as("user_id"), col("match_no").as("mn"),
-        col("n_rows").as("n"), col("first_val").as("fv"), col("last_val").as("lv"))
+    import graft.operators.MatchRecognize.SqlMeasure
+    val apiSide = graft.operators.MatchRecognize.sqlRows(ev, Seq("user_id"),
+      Seq("event_id"), "U{2,}", graft.operators.MatchRecognize.wrapSimple(Map("U" -> up)),
+      Seq(SqlMeasure.MatchNum -> "mn", SqlMeasure.CountStar -> "n",
+        SqlMeasure.Agg("first", "value") -> "fv", SqlMeasure.Agg("last", "value") -> "lv"),
+      allRows = false)
     assert(sqlSide.count() > 0)
     assert(sqlSide.exceptAll(apiSide).isEmpty && apiSide.exceptAll(sqlSide).isEmpty)
   }

@@ -1,13 +1,46 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, floor}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{MatchRecognize, MatchRow}
+import graft.operators.MatchRecognize
+import graft.operators.MatchRecognize.{MatchCtx, SkipMode, SqlMeasure}
 
 /** Seq fixture row for pattern tests. */
 case class Tick(k: Long, ord: Long, v: Double)
+
+/** A ONE ROW PER MATCH result: `classifier` concatenates the matched
+  * labels, `var_counts` is COUNT(V.*) per variable as "V:n". */
+case class MrMatch(part_key: Long, match_no: Long, start_ord: Long,
+    end_ord: Long, classifier: String, n_rows: Long, var_counts: String)
+
+/** ONE ROW PER MATCH FINAL measures over `v`. */
+case class MrMeasures(start_ord: Long, end_ord: Long, n_rows: Long,
+    first_val: Double, last_val: Double, min_val: Double, max_val: Double)
+
+/** ALL ROWS PER MATCH row with RUNNING and FINAL measures. */
+case class MrDetail(ord: Long, match_no: Long, classifier: String,
+    running_cnt: Long, final_cnt: Long, running_max: Double, final_last: Double)
+
+/** Per-(match, variable) navigation measures: FIRST/LAST(V.v) and
+  * FIRST/LAST(V.v, 1) (None past the variable's rows). */
+case class MrVarRow(match_no: Long, start_ord: Long, end_ord: Long,
+    var_name: String, var_rows: Long, first_val: Double, last_val: Double,
+    first_off: Option[Double], last_off: Option[Double])
+
+/** Per-(match, variable) FINAL aggregates; var_name "*" is the whole
+  * match. */
+case class MrAggRow(var_name: String, var_rows: Long, sum_val: Double,
+    avg_val: Double, min_val: Double, max_val: Double, start_ord: Long,
+    end_ord: Long)
+
+/** ALL ROWS PER MATCH WITH UNMATCHED ROWS row (nulls outside matches). */
+case class MrDetailOrNull(ord: Long, match_no: Option[Long],
+    classifier: Option[String], running_cnt: Option[Long],
+    final_cnt: Option[Long], running_max: Option[Double],
+    final_last: Option[Double])
 
 /** Unit semantics for the MATCH_RECOGNIZE operator: quantifier
   * greediness, alternation preference, bounded repeats, skip modes,
@@ -24,21 +57,137 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  private def ticks(values: Seq[Double]): DataFrame = {
+    val spk = spark
+    import spk.implicits._
+    values.zipWithIndex.map { case (v, i) => Tick(1L, i.toLong, v) }.toDF()
+  }
+
+  /** [[MatchRecognize.sqlRows]] over a Tick frame: PARTITION BY k
+    * ORDER BY ord. */
+  private def run(df: DataFrame, pattern: String,
+      define: Map[String, MatchCtx => Boolean],
+      measures: Seq[(SqlMeasure, String)],
+      allRows: Boolean = false,
+      skip: SkipMode = SkipMode.PastLastRow,
+      subsets: Map[String, Set[String]] = Map.empty,
+      showEmpty: Boolean = false,
+      withUnmatched: Boolean = false): DataFrame =
+    MatchRecognize.sqlRows(df, Seq("k"), Seq("ord"), pattern, define, measures,
+      allRows, skip, subsets, showEmpty, withUnmatched)
+
+  private def oneRow(df: DataFrame, pattern: String,
+      define: Map[String, MatchCtx => Boolean],
+      skip: SkipMode = SkipMode.PastLastRow): Seq[MrMatch] =
+    run(df, pattern, define, Seq(
+      SqlMeasure.MatchNum -> "match_no",
+      SqlMeasure.Agg("first", "ord") -> "start_ord",
+      SqlMeasure.Agg("last", "ord") -> "end_ord",
+      SqlMeasure.CountStar -> "n_rows",
+      SqlMeasure.ClassifierArray(isFinal = true) -> "labels"), skip = skip)
+      .collect().toSeq.map { r =>
+        val labels = r.getSeq[String](5)
+        val counts = labels.groupBy(identity).toSeq.sortBy(_._1)
+          .map { case (v, cs) => s"$v:${cs.length}" }.mkString(",")
+        MrMatch(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          labels.mkString, r.getLong(4), counts)
+      }
+
+  private def measuresOf(df: DataFrame, pattern: String,
+      define: Map[String, MatchCtx => Boolean],
+      skip: SkipMode = SkipMode.PastLastRow,
+      subsets: Map[String, Set[String]] = Map.empty): Seq[MrMeasures] = {
+    val spk = spark
+    import spk.implicits._
+    run(df, pattern, define, Seq(
+      SqlMeasure.Agg("first", "ord") -> "start_ord",
+      SqlMeasure.Agg("last", "ord") -> "end_ord",
+      SqlMeasure.CountStar -> "n_rows",
+      SqlMeasure.Agg("first", "v") -> "first_val",
+      SqlMeasure.Agg("last", "v") -> "last_val",
+      SqlMeasure.Agg("min", "v") -> "min_val",
+      SqlMeasure.Agg("max", "v") -> "max_val"), skip = skip, subsets = subsets)
+      .drop("k").as[MrMeasures].collect().toSeq
+  }
+
+  /** ALL ROWS PER MATCH: RUNNING COUNT(*)/MAX(v) beside FINAL
+    * COUNT(*)/LAST(v). */
+  private def allRowsOf(df: DataFrame, pattern: String,
+      define: Map[String, MatchCtx => Boolean],
+      withUnmatched: Boolean = false): DataFrame =
+    run(df, pattern, define, Seq(
+      SqlMeasure.MatchNum -> "match_no",
+      SqlMeasure.Classifier -> "classifier",
+      SqlMeasure.CountStar -> "running_cnt",
+      SqlMeasure.FinalCount -> "final_cnt",
+      SqlMeasure.Agg("max", "v") -> "running_max",
+      SqlMeasure.FinalAgg("last", "v") -> "final_last"),
+      allRows = true, withUnmatched = withUnmatched).drop("k", "v")
+
+  private def details(df: DataFrame, pattern: String,
+      define: Map[String, (Row, Row) => Boolean]): Seq[MrDetail] = {
+    val spk = spark
+    import spk.implicits._
+    allRowsOf(df, pattern, MatchRecognize.wrapSimple(define))
+      .as[MrDetail].collect().toSeq.sortBy(_.ord)
+  }
+
+  /** ALL ROWS PER MATCH SHOW EMPTY MATCHES reduced to one row per match
+    * (its first row, or the empty match's anchor row): (match_no,
+    * anchor_ord, n_rows, concatenated classifier). */
+  private def shownMatches(df: DataFrame, pattern: String,
+      define: Map[String, (Row, Row) => Boolean]): Seq[(Long, Long, Long, Option[String])] =
+    run(df, pattern, MatchRecognize.wrapSimple(define), Seq(
+      SqlMeasure.MatchNum -> "match_no",
+      SqlMeasure.CountStar -> "pos",
+      SqlMeasure.FinalCount -> "n_rows",
+      SqlMeasure.ClassifierArray(isFinal = true) -> "labels"),
+      allRows = true, showEmpty = true)
+      .filter(col("pos") <= 1)
+      .collect().toSeq.map { r =>
+        (r.getAs[Long]("match_no"), r.getAs[Long]("ord"), r.getAs[Long]("n_rows"),
+          Option(r.getAs[collection.Seq[String]]("labels")).map(_.mkString))
+      }.sortBy(_._1)
+
+  /** Per-variable and whole-match FINAL count/sum/avg/min/max of v.
+    * Sums are exact: they add a scaled-long `v_c` = round(v · 100)
+    * column and divide once. */
+  private def aggRows(df: DataFrame, pattern: String,
+      define: Map[String, (Row, Row) => Boolean], vars: Seq[String]): Seq[MrAggRow] = {
+    val all = vars.map(v => (v, Some(v))) :+ ("*" -> None)
+    run(df.withColumn("v_c", floor(col("v") * 100.0 + 0.5)), pattern,
+      MatchRecognize.wrapSimple(define),
+      Seq(SqlMeasure.Agg("first", "ord") -> "start_ord",
+        SqlMeasure.Agg("last", "ord") -> "end_ord") ++
+        all.zipWithIndex.flatMap { case ((_, q), i) => Seq(
+          q.fold[SqlMeasure](SqlMeasure.CountStar)(SqlMeasure.VarCount(_, isFinal = false)) -> s"n$i",
+          SqlMeasure.Agg("sum", "v_c", q) -> s"s$i",
+          SqlMeasure.Agg("min", "v", q) -> s"mn$i",
+          SqlMeasure.Agg("max", "v", q) -> s"mx$i") })
+      .collect().toSeq.flatMap { r =>
+        all.indices.filter(i => r.getAs[Long](s"n$i") > 0).map { i =>
+          val n = r.getAs[Long](s"n$i")
+          val sum = r.getAs[Long](s"s$i") / 100.0
+          MrAggRow(all(i)._1, n, sum, sum / n, r.getAs[Double](s"mn$i"),
+            r.getAs[Double](s"mx$i"), r.getAs[Long]("start_ord"), r.getAs[Long]("end_ord"))
+        }
+      }
+  }
+
   private def runPat(
       values: Seq[Double],
       pattern: String,
-      skipPastLast: Boolean = true): Seq[MatchRow] = {
-    val spk = spark
-    import spk.implicits._
-    val df = values.zipWithIndex.map { case (v, i) => Tick(1L, i.toLong, v) }.toDF()
+      skipPastLast: Boolean = true): Seq[MrMatch] = {
+    val df = ticks(values)
     val down: (Row, Row) => Boolean =
       (p, c) => p != null && c.getAs[Double]("v") < p.getAs[Double]("v")
     val up: (Row, Row) => Boolean =
       (p, c) => p != null && c.getAs[Double]("v") > p.getAs[Double]("v")
     val high: (Row, Row) => Boolean = (_, c) => c.getAs[Double]("v") >= 10
-    MatchRecognize(df, "k", "ord", pattern,
-      Map("D" -> down, "U" -> up, "H" -> high), skipPastLast)
-      .collect().toSeq.sortBy(_.start_ord)
+    oneRow(df, pattern,
+      MatchRecognize.wrapSimple(Map("D" -> down, "U" -> up, "H" -> high)),
+      if (skipPastLast) SkipMode.PastLastRow else SkipMode.ToNextRow)
+      .sortBy(_.start_ord)
   }
 
   test("per-key buffer cap fails loudly with a remedy, not an OOM") {
@@ -158,8 +307,7 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map { case (v, i) => Tick(1L, i.toLong, v) }.toDF()
     val up: (Row, Row) => Boolean =
       (p, c) => p != null && c.getAs[Double]("v") > p.getAs[Double]("v")
-    val ms = MatchRecognize.measures(df, "k", "ord", "U{2,}", Map("U" -> up), "v")
-      .collect().toSeq
+    val ms = measuresOf(df, "U{2,}", MatchRecognize.wrapSimple(Map("U" -> up)))
     assert(ms.size == 1)
     val m = ms.head
     assert(m.start_ord == 2 && m.end_ord == 3 && m.n_rows == 2)
@@ -175,8 +323,7 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map { case (v, i) => Tick(1L, i.toLong, v) }.toDF()
     val up: (Row, Row) => Boolean =
       (p, c) => p != null && c.getAs[Double]("v") > p.getAs[Double]("v")
-    val rows = MatchRecognize.allRows(df, "k", "ord", "U{2,}", Map("U" -> up), "v")
-      .collect().toSeq.sortBy(_.ord)
+    val rows = details(df, "U{2,}", Map("U" -> up))
     assert(rows.map(_.ord) == Seq(1L, 2L))
     assert(rows.map(_.running_cnt) == Seq(1L, 2L)) // RUNNING COUNT(*)
     assert(rows.map(_.final_cnt) == Seq(2L, 2L)) // FINAL COUNT(*)
@@ -198,8 +345,7 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (p, c) => p != null && c.getAs[Double]("v") > p.getAs[Double]("v")
     val defs = Map("D" -> down, "U" -> up)
 
-    val all = MatchRecognize.allRows(df, "k", "ord", "D {- D+ -} U+", defs, "v")
-      .collect().toSeq.sortBy(_.ord)
+    val all = details(df, "D {- D+ -} U+", defs)
     // excluded rows 1-2 vanish from the output...
     assert(all.map(_.ord) == Seq(0L, 3L, 4L))
     assert(all.map(_.classifier) == Seq("D", "U", "U"))
@@ -210,14 +356,13 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // ONE ROW PER MATCH ignores exclusions entirely: full classifier,
     // full span, full count
-    val one = MatchRecognize(df, "k", "ord", "D {- D+ -} U+", defs)
-      .collect().toSeq
+    val one = oneRow(df, "D {- D+ -} U+", MatchRecognize.wrapSimple(defs))
     assert(one.map(_.classifier) == Seq("DDDUU"))
     assert(one.map(_.n_rows) == Seq(5L))
 
     // exclusion-free equivalent matches the same span (exclusion never
     // changes WHAT matches, only what ALL ROWS emits)
-    val plain = MatchRecognize(df, "k", "ord", "D D+ U+", defs).collect().toSeq
+    val plain = oneRow(df, "D D+ U+", MatchRecognize.wrapSimple(defs))
     assert(plain.map(_.start_ord) == one.map(_.start_ord))
     assert(plain.map(_.end_ord) == one.map(_.end_ord))
   }
@@ -231,8 +376,7 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (p, c) => p == null || c.getAs[Double]("v") > p.getAs[Double]("v")
     // U{2} quantifier and an exclusion in one pattern: brace
     // disambiguation ('{' + '-' = exclusion, else quantifier)
-    val all = MatchRecognize.allRows(df, "k", "ord", "{- U{2} -} U+",
-      Map("U" -> up), "v").collect().toSeq.sortBy(_.ord)
+    val all = details(df, "{- U{2} -} U+", Map("U" -> up))
     assert(all.map(_.ord) == Seq(2L, 3L))
     assert(all.map(_.final_cnt).distinct == Seq(4L))
     // running max at first visible row includes the excluded prefix
@@ -253,7 +397,6 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("AFTER MATCH SKIP modes: past-last vs to-next vs to-last(var)") {
-    import graft.operators.MatchRecognize.SkipMode
     val spk = spark
     import spk.implicits._
     // 5 high rows; pattern H{3}
@@ -261,15 +404,14 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map { case (v, i) => Tick(1L, i.toLong, v) }.toDF()
     val high: (Row, Row) => Boolean = (_, c) => c.getAs[Double]("v") >= 10
     def count(skip: SkipMode): Int =
-      MatchRecognize.withSkip(df, "k", "ord", "H{3}", Map("H" -> high), skip)
-        .collect().length
+      oneRow(df, "H{3}", MatchRecognize.wrapSimple(Map("H" -> high)), skip).length
     assert(count(SkipMode.PastLastRow) == 1) // (0-2); rows 3-4 too short
     assert(count(SkipMode.ToNextRow) == 3) // starts 0, 1, 2
     assert(count(SkipMode.ToLast("H")) == 2) // (0-2) then resume AT row 2: (2-4)
     // skipping to the first row of the match would loop forever -> error
     val e = intercept[org.apache.spark.SparkException] {
-      MatchRecognize.withSkip(df, "k", "ord", "H{3}",
-        Map("H" -> high), SkipMode.ToFirst("H")).collect()
+      oneRow(df, "H{3}", MatchRecognize.wrapSimple(Map("H" -> high)),
+        SkipMode.ToFirst("H"))
     }
     assert(e.getMessage.contains("SKIP TO FIRST") ||
       e.getCause.getMessage.contains("SKIP TO FIRST"))
@@ -284,16 +426,16 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (p, c) => p != null && c.getAs[Double]("v") < p.getAs[Double]("v")
     val up: (Row, Row) => Boolean =
       (p, c) => p != null && c.getAs[Double]("v") > p.getAs[Double]("v")
-    val ms = MatchRecognize(df, "k", "ord", "DOWN+ UP+",
-      Map("DOWN" -> down, "UP" -> up)).collect().toSeq
+    val ms = oneRow(df, "DOWN+ UP+",
+      MatchRecognize.wrapSimple(Map("DOWN" -> down, "UP" -> up)))
     assert(ms.size == 1)
     assert(ms.head.var_counts == "DOWN:2,UP:2")
     // "DOWNUP" (no whitespace) is ONE variable named DOWNUP — undefined
     // here, and an undefined variable is TRUE for every row (SQL:2016;
     // reference TestRowPatternMatching.java:68 "A defaults to True"),
     // so every row is its own one-variable match.
-    val all = MatchRecognize(df, "k", "ord", "DOWNUP",
-      Map("DOWN" -> down, "UP" -> up)).collect().toSeq
+    val all = oneRow(df, "DOWNUP",
+      MatchRecognize.wrapSimple(Map("DOWN" -> down, "UP" -> up)))
     assert(all.size == 5 && all.forall(_.var_counts == "DOWNUP:1"))
     // quantifiers and grouping compose with identifiers
     MatchRecognize.parse("(DOWN | UP){2,3} FLAT_ROW?")
@@ -309,9 +451,28 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (p, c) => p != null && c.getAs[Double]("v") < p.getAs[Double]("v")
     val up: (Row, Row) => Boolean =
       (p, c) => p != null && c.getAs[Double]("v") > p.getAs[Double]("v")
-    val rows = MatchRecognize.varMeasures(df, "k", "ord", "DOWN+ UP+",
-      Map("DOWN" -> down, "UP" -> up), "v", offset = 1)
-      .collect().toSeq.sortBy(r => (r.match_no, r.var_name))
+    // ONE ROW PER MATCH measures per variable, unpivoted: the
+    // variable's row count, FIRST/LAST(V.v) and FIRST/LAST(V.v, 1)
+    val vars = Seq("DOWN", "UP")
+    val rows = run(df, "DOWN+ UP+",
+      MatchRecognize.wrapSimple(Map("DOWN" -> down, "UP" -> up)),
+      Seq(SqlMeasure.MatchNum -> "match_no",
+        SqlMeasure.Agg("first", "ord") -> "start_ord",
+        SqlMeasure.Agg("last", "ord") -> "end_ord") ++
+        vars.flatMap(v => Seq(
+          SqlMeasure.VarCount(v, isFinal = false) -> s"${v}_rows",
+          SqlMeasure.Agg("first", "v", Some(v)) -> s"${v}_first",
+          SqlMeasure.Agg("last", "v", Some(v)) -> s"${v}_last",
+          SqlMeasure.Agg("first", "v", Some(v), 1) -> s"${v}_first_off",
+          SqlMeasure.Agg("last", "v", Some(v), 1) -> s"${v}_last_off")))
+      .collect().toSeq.flatMap { r =>
+        vars.filter(v => r.getAs[Long](s"${v}_rows") > 0).map(v => MrVarRow(
+          r.getAs[Long]("match_no"), r.getAs[Long]("start_ord"),
+          r.getAs[Long]("end_ord"), v, r.getAs[Long](s"${v}_rows"),
+          r.getAs[Double](s"${v}_first"), r.getAs[Double](s"${v}_last"),
+          Option(r.getAs[java.lang.Double](s"${v}_first_off")).map(_.doubleValue),
+          Option(r.getAs[java.lang.Double](s"${v}_last_off")).map(_.doubleValue)))
+      }.sortBy(r => (r.match_no, r.var_name))
     assert(rows.map(r => (r.match_no, r.var_name, r.var_rows)) ==
       Seq((1L, "DOWN", 2L), (1L, "UP", 2L), (2L, "DOWN", 1L), (2L, "UP", 1L)))
     val m1d = rows(0)
@@ -338,9 +499,28 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (p, c) => p != null && c.getAs[Double]("v") < p.getAs[Double]("v")
     val up: (Row, Row) => Boolean =
       (p, c) => p != null && c.getAs[Double]("v") > p.getAs[Double]("v")
-    val ms = MatchRecognize(df, "k", "ord", "D U", Map("D" -> down, "U" -> up))
-      .collect().toSeq
+    val ms = oneRow(df, "D U", MatchRecognize.wrapSimple(Map("D" -> down, "U" -> up)))
     assert(ms.map(_.part_key).sorted == Seq(1L, 2L))
+  }
+
+  test("NaN partition keys form one group, as PARTITION BY does") {
+    val spk = spark
+    import spk.implicits._
+    // a rising series whose DOUBLE key is NaN on every row (boxed
+    // NaN == NaN is false, which once split it into one-row groups),
+    // beside a falling key-1.0 series that must stay its own group
+    val df = Seq((Double.NaN, 0L, 1.0), (Double.NaN, 1L, 2.0),
+      (Double.NaN, 2L, 3.0), (1.0, 0L, 9.0), (1.0, 1L, 8.0))
+      .toDF("k", "ord", "v")
+    val out = graft.sqlcompat.MatchRecognizeSql.translate(
+      """SELECT * FROM t MATCH_RECOGNIZE (
+        |  PARTITION BY k ORDER BY ord
+        |  MEASURES COUNT(*) AS n_rows, FIRST(ord) AS start_ord
+        |  ONE ROW PER MATCH
+        |  PATTERN (U{2,})
+        |  DEFINE U AS v > PREV(v))""".stripMargin, _ => df).collect()
+    assert(out.map(r => (r.getDouble(0).isNaN, r.getLong(1), r.getLong(2))).toSeq ==
+      Seq((true, 2L, 1L)))
   }
 
   test("reluctant +? stops at the FIRST viable continuation, greedy at the last") {
@@ -353,38 +533,34 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (p, c) => p != null && c.getAs[Double]("v") > p.getAs[Double]("v")
     val defs = Map("A" -> any, "U" -> up)
     // greedy: A+ backtracks from the end → U is the LAST rise (ord 3)
-    val g = MatchRecognize(df, "k", "ord", "A+ U", defs).collect().toSeq
+    val g = oneRow(df, "A+ U", MatchRecognize.wrapSimple(defs))
     assert(g.map(m => (m.start_ord, m.end_ord, m.n_rows)) == Seq((0L, 3L, 4L)))
     // reluctant: A+? takes the FEWEST A rows → U is the FIRST rise (ord 2)
-    val r = MatchRecognize(df, "k", "ord", "A+? U", defs).collect().toSeq
+    val r = oneRow(df, "A+? U", MatchRecognize.wrapSimple(defs))
     assert(r.map(m => (m.start_ord, m.end_ord, m.n_rows)) == Seq((0L, 2L, 3L)))
   }
 
   test("ctx DEFINE: physical PREV(n)/NEXT navigation") {
     val spk = spark
     import spk.implicits._
-    import MatchRecognize.MatchCtx
     val df = Seq[Double](1, 2, 3, 4, 1, 1).zipWithIndex
       .map { case (v, i) => Tick(1L, i.toLong, v) }.toDF()
     def v(r: Row): Double = if (r == null) Double.NaN else r.getAs[Double]("v")
     // X: two-back rise (PREV(v, 2) comparison), null-rejecting
     val x: MatchCtx => Boolean =
       ctx => ctx.prev(2) != null && v(ctx.row) > v(ctx.prev(2))
-    val xs = MatchRecognize.measuresCtx(df, "k", "ord", "X{2,}", Map("X" -> x), "v")
-      .collect().toSeq
+    val xs = measuresOf(df, "X{2,}", Map("X" -> x))
     assert(xs.map(m => (m.start_ord, m.end_ord, m.n_rows)) == Seq((2L, 3L, 2L)))
     // Y: the NEXT row falls below the current one (lookahead)
     val y: MatchCtx => Boolean =
       ctx => ctx.next(1) != null && v(ctx.next(1)) < v(ctx.row)
-    val ys = MatchRecognize.measuresCtx(df, "k", "ord", "Y", Map("Y" -> y), "v")
-      .collect().toSeq.sortBy(_.start_ord)
+    val ys = measuresOf(df, "Y", Map("Y" -> y)).sortBy(_.start_ord)
     assert(ys.map(_.start_ord) == Seq(3L)) // only 4 → 1 falls
   }
 
   test("ctx DEFINE: running FIRST/LAST over a SUBSET union") {
     val spk = spark
     import spk.implicits._
-    import MatchRecognize.MatchCtx
     val df = Seq[Double](10, 9, 8, 11).zipWithIndex
       .map { case (v, i) => Tick(1L, i.toLong, v) }.toDF()
     def v(r: Row): Double = if (r == null) Double.NaN else r.getAs[Double]("v")
@@ -395,9 +571,8 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rec: MatchCtx => Boolean = ctx =>
       ctx.first("W") != null && v(ctx.row) > v(ctx.first("W")) &&
         ctx.last("D") != null && v(ctx.row) > v(ctx.last("D"))
-    val ms = MatchRecognize.measuresCtx(df, "k", "ord", "D+ R",
-      Map("D" -> down, "R" -> rec), "v",
-      subsets = Map("W" -> Set("D", "R"))).collect().toSeq
+    val ms = measuresOf(df, "D+ R", Map("D" -> down, "R" -> rec),
+      subsets = Map("W" -> Set("D", "R")))
     // match = falls at ord 1,2 then 11 > first(W)=9 and > last(D)=8
     assert(ms.map(m => (m.start_ord, m.end_ord, m.n_rows, m.first_val, m.last_val))
       == Seq((1L, 3L, 3L, 9.0, 11.0)))
@@ -406,7 +581,6 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("AFTER MATCH SKIP TO LAST resolves SUBSET union names") {
     val spk = spark
     import spk.implicits._
-    import MatchRecognize.MatchCtx
     val df = Seq[Double](5, 4, 6, 5, 7).zipWithIndex
       .map { case (v, i) => Tick(1L, i.toLong, v) }.toDF()
     def v(r: Row): Double = if (r == null) Double.NaN else r.getAs[Double]("v")
@@ -416,9 +590,8 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       ctx => ctx.prev(1) != null && v(ctx.row) > v(ctx.prev(1))
     val defs = Map("D" -> down, "U" -> up)
     def run(skip: MatchRecognize.SkipMode) =
-      MatchRecognize.measuresCtx(df, "k", "ord", "D U", defs, "v",
-        skip = skip, subsets = Map("W" -> Set("D", "U")))
-        .collect().toSeq.sortBy(_.start_ord).map(m => (m.start_ord, m.end_ord))
+      measuresOf(df, "D U", defs, skip = skip, subsets = Map("W" -> Set("D", "U")))
+        .sortBy(_.start_ord).map(m => (m.start_ord, m.end_ord))
     // W's last row IS U's last row, so both skips resume identically
     assert(run(MatchRecognize.SkipMode.ToLast("W")) ==
       run(MatchRecognize.SkipMode.ToLast("U")))
@@ -434,9 +607,9 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map { case (v, i) => Tick(1L, i.toLong, v) }.toDF()
     val up: (Row, Row) => Boolean =
       (p, c) => p != null && c.getAs[Double]("v") > p.getAs[Double]("v")
-    val rows = MatchRecognize.allRowsWithUnmatched(df, "k", "ord", "U{2,}",
-        Map("U" -> up), "v")
-      .collect().toSeq.sortBy(_.ord)
+    val rows = allRowsOf(df, "U{2,}", MatchRecognize.wrapSimple(Map("U" -> up)),
+        withUnmatched = true)
+      .as[MrDetailOrNull].collect().toSeq.sortBy(_.ord)
     assert(rows.map(_.ord) == Seq(0L, 1L, 2L, 3L, 4L, 5L)) // each row once
     assert(rows.filter(_.match_no.isDefined).map(_.ord) == Seq(1L, 2L))
     val matched = rows.filter(_.match_no.isDefined)
@@ -458,10 +631,7 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map { case (v, i) => Tick(1L, i.toLong, v) }.toDF()
     val down: (Row, Row) => Boolean =
       (p, c) => p != null && c.getAs[Double]("v") < p.getAs[Double]("v")
-    val rows = MatchRecognize.matchesShowEmpty(df, "k", "ord", "D*",
-        Map("D" -> down))
-      .collect().toSeq.sortBy(_.match_no)
-      .map(r => (r.match_no, r.anchor_ord, r.n_rows, r.classifier))
+    val rows = shownMatches(df, "D*", Map("D" -> down))
     assert(rows == Seq(
       (1L, 0L, 0L, None),
       (2L, 1L, 2L, Some("DD")),
@@ -497,13 +667,10 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map { case (v, i) => Tick(1L, i.toLong, v) }.toDF()
     val down: (Row, Row) => Boolean =
       (p, c) => p != null && c.getAs[Double]("v") < p.getAs[Double]("v")
-    val anchored = MatchRecognize.matchesShowEmpty(df, "k", "ord", "^ D*",
-        Map("D" -> down))
-      .collect().toSeq.sortBy(_.match_no)
-      .map(r => (r.match_no, r.anchor_ord, r.n_rows))
+    val anchored = shownMatches(df, "^ D*", Map("D" -> down))
+      .map(r => (r._1, r._2, r._3))
     assert(anchored == Seq((1L, 0L, 0L)))
-    val unanchored = MatchRecognize.matchesShowEmpty(df, "k", "ord", "D*",
-        Map("D" -> down)).collect()
+    val unanchored = shownMatches(df, "D*", Map("D" -> down))
     assert(unanchored.length == 3)
   }
 
@@ -526,9 +693,8 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (p, c) => p != null && c.getAs[Double]("v") < p.getAs[Double]("v")
     val up: (Row, Row) => Boolean =
       (p, c) => p != null && c.getAs[Double]("v") > p.getAs[Double]("v")
-    val rows = MatchRecognize.aggMeasures(df, "k", "ord", "D+ U+",
-        Map("D" -> down, "U" -> up), "v")
-      .collect().toSeq.sortBy(_.var_name)
+    val rows = aggRows(df, "D+ U+", Map("D" -> down, "U" -> up), Seq("D", "U"))
+      .sortBy(_.var_name)
       .map(r => (r.var_name, r.var_rows, r.sum_val, r.avg_val, r.min_val,
         r.max_val, r.start_ord, r.end_ord))
     assert(rows == Seq(
@@ -547,9 +713,8 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (p, c) => p != null && c.getAs[Double]("v") < p.getAs[Double]("v")
     val up: (Row, Row) => Boolean =
       (p, c) => p != null && c.getAs[Double]("v") > p.getAs[Double]("v")
-    val star = MatchRecognize.aggMeasures(df, "k", "ord", "D U+",
-        Map("D" -> down, "U" -> up), "v")
-      .collect().filter(_.var_name == "*").head
+    val star = aggRows(df, "D U+", Map("D" -> down, "U" -> up), Seq("D", "U"))
+      .filter(_.var_name == "*").head
     assert(star.var_rows == 3L && star.sum_val == 0.6) // not 0.6000000000000001
   }
 }

@@ -295,6 +295,21 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cnt == Map(1 -> 0L, 2 -> 1L))
   }
 
+  test("dynamic ROWS frames: NaN partition keys form one group") {
+    val spk = spark
+    import spk.implicits._
+    // Spark's window PARTITION BY puts every NaN key in one partition;
+    // the frames here span the whole 3-row NaN group
+    val df = Seq((Double.NaN, 1, 1L, 1L, 10L), (Double.NaN, 2, 1L, 1L, 20L),
+      (Double.NaN, 3, 1L, 1L, 30L), (2.0, 1, 1L, 1L, 5L))
+      .toDF("g", "ord", "lo", "hi", "v")
+    val got = graft.operators.DynamicFrames
+      .rowsFrameAgg(df, Seq("g"), Seq("ord"), "lo", "hi", "v", "sum", "a")
+      .collect().map(r => (r.getDouble(0).isNaN, r.getInt(1)) -> r.get(5)).toMap
+    assert(got == Map((true, 1) -> 30L, (true, 2) -> 60L, (true, 3) -> 50L,
+      (false, 1) -> 5L))
+  }
+
   // ---------------------------- DynamicFrames GROUPS / RANGE modes
   // (reference operator/window/GroupsFraming.java / RangeFraming.java
   // semantics over the same spillable buffer)

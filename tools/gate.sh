@@ -2,8 +2,9 @@
 # Pre-commit gate: the minimum proof that HEAD is shippable.
 # Usage: tools/gate.sh [--full]
 #   default: Test/compile + benchmark compile + EntrySmoke + the
-#            dialect suites (~1.5 min)
-#   --full : also runs the whole ScalaTest suite (~2.5 min)
+#            dialect suites and MatchRecognizeSpec (~1.7 min on 4
+#            cores; the suites step ~50 s)
+#   --full : also runs the whole ScalaTest suite (~10 min on 4 cores)
 # Rounds 6 and 7 shipped a non-compiling HEAD; nothing in the round
 # protocol ran the compiler before snapshot. This script is that gate —
 # run it before EVERY commit.
@@ -28,9 +29,11 @@ if [ "${rows:-0}" -le 0 ]; then
 fi
 echo "[gate] entry rows=$rows"
 
-# the SQL front end: dialect vectors and the translate() properties
+# the SQL front end: dialect vectors, the translate() properties and
+# the MATCH_RECOGNIZE operator spec (its builders all run through
+# MatchRecognizeSql)
 echo "[gate] dialect suites"
-sbt -batch "testOnly graft.DialectSpec graft.PropertiesSpec" > /tmp/gate_dialect.log 2>&1 || {
+sbt -batch "testOnly graft.DialectSpec graft.PropertiesSpec graft.MatchRecognizeSpec" > /tmp/gate_dialect.log 2>&1 || {
   echo "[gate] DIALECT SUITES FAILED"; grep -E '\*\*\* FAILED' /tmp/gate_dialect.log | head -20
   tail -20 /tmp/gate_dialect.log; exit 1; }
 

@@ -61,9 +61,8 @@ object Bench {
     * read from cache by every later one. Either makes the query rebuild
     * per sample; otherwise samples re-execute the optimized plan of this
     * build. Jobs are counted on a second build when the first started
-    * any: first-build work that does not recur (a table's schema
-    * inference on its first read, a fixture written once per session)
-    * is setup, not part of the query. */
+    * any: first-build work that does not recur (a fixture written once
+    * per session) is setup, not part of the query. */
   private[graft] def prepare(spark: SparkSession, build: () => DataFrame): Prepared = {
     val first = PlanExec.jobsStartedBy(spark)(build())
     val (df, jobs) = if (first._2 == 0) first else PlanExec.jobsStartedBy(spark)(build())

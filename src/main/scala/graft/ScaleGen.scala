@@ -55,7 +55,7 @@ object ScaleGen {
     val spark = graft.engine.Graft.session("graft-scalegen", 16)
     spark.sparkContext.setLogLevel("WARN")
 
-    def read(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
+    def read(name: String): DataFrame = graft.engine.Graft.readParquet(spark, s"$src/$name.parquet")
 
     // one span per key GROUP, from the max over every table carrying it
     val spans: Map[String, Long] = factKeys.toSeq

@@ -22,8 +22,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Tables are served as Spark's own V2 ParquetTable, so scans get the
   * full native read path — pushdown, pruning, vectorization — not a
-  * wrapper. Read-only: DDL methods throw (the corpus is immutable
-  * input; writes go through the sink surfaces).
+  * wrapper. The table's schema is read from one footer on the driver
+  * at lookup ([[graft.engine.Graft.parquetSchema]]), so resolving a
+  * three-part name runs no schema-inference job. Read-only: DDL
+  * methods throw (the corpus is immutable input; writes go through the
+  * sink surfaces).
   */
 class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
@@ -63,12 +66,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     if (!new java.io.File(path).exists())
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         Seq(catalogName) ++ ident.namespace() :+ ident.name())
+    val spark = SparkSession.active
     org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
       ident.name(),
-      SparkSession.active,
+      spark,
       new CaseInsensitiveStringMap(Map("path" -> path).asJava),
       Seq(path),
-      None,
+      graft.engine.Graft.parquetSchema(spark, path),
       classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
   }
 

@@ -1,7 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Session + catalog bootstrap for the graft engine.
   *
@@ -114,13 +114,63 @@ object Graft {
     }
   }
 
-  /** Per-session relation cache: `spark.read.parquet` lists files and
-    * reads footers to infer the schema on EVERY call, and the query
-    * builders call load() afresh per query per execution — ~1000
-    * redundant schema inferences across a bench run, a real slice of
-    * the fixed per-query overhead. A real engine caches table metadata
-    * in its catalog (reference: metastore-backed ConnectorMetadata);
-    * this memoizes the analyzed relation per (session, dir, table).
+  /** A parquet table whose schema is resolved on the driver from ONE
+    * footer, without a Spark job. `spark.read.parquet` learns a schema
+    * through Spark's non-merging inference, which reads one footer too
+    * (the first summary file, else the first data file of the
+    * relation's file index) but always inside a one-task Spark job.
+    * The reference resolves table metadata on the coordinator at
+    * analysis time (`ConnectorMetadata.getTableMetadata`) and never
+    * runs a distributed job for it. The read carries the footer's
+    * schema as its user schema, so the relation (partition columns
+    * appended from the directory layout) is the one inference would
+    * build. A path without a data file (missing, or emptied by a
+    * mutation) goes to `spark.read.parquet` and fails as Spark does. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    parquetSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+
+  /** The data schema Spark's non-merging inference would give `path`,
+    * read from the same footer on the driver; None when the path has
+    * no data file or the session merges schemas across files
+    * (`spark.sql.parquet.mergeSchema`), where only inference is right. */
+  def parquetSchema(spark: SparkSession, path: String): Option[StructType] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(hadoopConf)
+    if (conf.isParquetSchemaMergingEnabled || !fs.exists(root)) return None
+    val files = new InMemoryFileIndex(spark, Seq(fs.makeQualified(root)), Map.empty, None)
+      .allFiles().sortBy(_.getPath.toString)
+    // inference's pick: a _common_metadata summary, else a _metadata
+    // summary, else the first data file by path
+    val (summaries, data) = files.partition(f =>
+      Set("_common_metadata", "_metadata").contains(f.getPath.getName))
+    summaries.sortBy(_.getPath.getName).headOption.orElse(data.headOption)
+      .map { f =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(conf))
+      }
+  }
+
+  /** Per-session relation cache: the query builders call load() afresh
+    * per query per execution, and a load lists the table's files and
+    * reads one footer on the driver ([[readParquet]]); the cache makes
+    * that one listing and one footer read per (session, table). A real
+    * engine caches table metadata in its catalog (reference:
+    * metastore-backed ConnectorMetadata); this memoizes the analyzed
+    * relation per (session, dir, table).
     * Stopped sessions are purged eagerly on the next load() — weak keys
     * would not work here because the cached DataFrames strongly
     * reference their SparkSession, keeping the key reachable. The
@@ -130,9 +180,11 @@ object Graft {
     new java.util.concurrent.ConcurrentHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]()
 
-  /** Read one test table. Filters/projections on the result are pushed
-    * into the parquet scan by Catalyst (verify via `PushedFilters` in
-    * `.explain("formatted")`).
+  /** Read one test table: the first load per (session, table) lists
+    * its files and reads one footer on the driver ([[readParquet]]);
+    * later loads return the cached relation. Filters/projections on the
+    * result are pushed into the parquet scan by Catalyst (verify via
+    * `PushedFilters` in `.explain("formatted")`).
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Defensive for sessions not built via session() (e.g. test harnesses).
@@ -142,7 +194,7 @@ object Graft {
     val perSession = relationCache.computeIfAbsent(spark,
       _ => new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
     perSession.computeIfAbsent((dir, name),
-      _ => normalizeSchema(spark.read.parquet(s"$dir/$name.parquet"), name))
+      _ => normalizeSchema(readParquet(spark, s"$dir/$name.parquet"), name))
   }
 
   /** Canonical LOGICAL column types per table — the types the whole

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.engine.Graft
+
 /** Materialized-view lifecycle — CREATE / read-with-staleness /
   * REFRESH (reference grammar `SqlBase.g4:92-98`
   * createMaterializedView / refreshMaterializedView /
@@ -84,7 +86,7 @@ object MaterializedView {
       gracePeriodMs: Long = Long.MaxValue): DataFrame = {
     createIfAbsent(s, storage, defining, sources)
     val f = freshness(storage, sources, gracePeriodMs)
-    if (f.fresh || f.withinGrace) s.read.parquet(storage)
+    if (f.fresh || f.withinGrace) Graft.readParquet(s, storage)
     else defining()
   }
 
@@ -101,6 +103,6 @@ object MaterializedView {
     val f = freshness(storage, sources, gracePeriodMs)
     if (!f.fresh && !f.withinGrace)
       refresh(s, storage, defining, sources)
-    s.read.parquet(storage)
+    Graft.readParquet(s, storage)
   }
 }

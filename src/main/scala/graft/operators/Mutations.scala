@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Graft
+
 /** Row-level mutation — DELETE / UPDATE / MERGE INTO — as
   * copy-on-write table rewrites (reference grammar `SqlBase.g4:68,
   * 176-182` delete/update/merge statements; executor
@@ -39,7 +41,10 @@ object Mutations {
   /** Commit `df` as the new content of `path`: stage to a sibling
     * directory, then swap via delete+rename (both metadata operations
     * on a real filesystem; on an object store a table-format snapshot
-    * commit replaces this step). Returns the re-read table. */
+    * commit replaces this step). Returns the re-read table: the write
+    * is the commit's only Spark job, because the re-read takes its
+    * schema from one footer of the new files on the driver
+    * ([[Graft.readParquet]]), as does every target read below. */
   def overwriteInPlace(s: SparkSession, df: DataFrame, path: String): DataFrame = {
     val staged = path + "__staging"
     df.write.mode("overwrite").parquet(staged)
@@ -47,13 +52,13 @@ object Mutations {
     fs.delete(new Path(path), true)
     if (!fs.rename(new Path(staged), new Path(path)))
       throw new IllegalStateException(s"mutation commit failed: rename $staged -> $path")
-    s.read.parquet(path)
+    Graft.readParquet(s, path)
   }
 
   /** DELETE FROM <path> WHERE `pred`. Rows where `pred` is NULL are
     * KEPT (SQL deletes only rows where the predicate IS TRUE). */
   def delete(s: SparkSession, path: String, pred: Column): DataFrame = {
-    val t = s.read.parquet(path)
+    val t = Graft.readParquet(s, path)
     overwriteInPlace(s, t.filter(!coalesce(pred, lit(false))), path)
   }
 
@@ -81,7 +86,7 @@ object Mutations {
     * name a real column. */
   def update(s: SparkSession, path: String,
       assignments: Map[String, Column], pred: Column): DataFrame = {
-    val t = s.read.parquet(path)
+    val t = Graft.readParquet(s, path)
     val assigns = resolveAssignments(t.columns.toSeq, assignments)
     val hit = coalesce(pred, lit(false))
     val projected = t.select(t.columns.map { c =>
@@ -116,7 +121,7 @@ object Mutations {
     * dynamic-partition-pruning subquery broadcasts. */
   def deletePartitionScoped(s: SparkSession, path: String,
       partCol: String, pred: Column): DataFrame = {
-    val t = s.read.parquet(path)
+    val t = Graft.readParquet(s, path)
     val schema = t.schema
     val affected = t.filter(coalesce(pred, lit(false)))
       .select(col(partCol)).distinct().collect().map(_.get(0))
@@ -156,7 +161,7 @@ object Mutations {
     // If the delete emptied the whole table no data files remain and
     // the re-read cannot infer a schema; commit an explicit empty
     // table state (schema-only parquet) instead.
-    try s.read.parquet(path)
+    try Graft.readParquet(s, path)
     catch {
       case _: org.apache.spark.sql.AnalysisException =>
         overwriteInPlace(s,
@@ -180,7 +185,7 @@ object Mutations {
     * side by plain column name. */
   def mergeInto(s: SparkSession, targetPath: String, source: DataFrame,
       targetKey: String, sourceKey: String, clauses: MergeClauses): DataFrame = {
-    val target = s.read.parquet(targetPath)
+    val target = Graft.readParquet(s, targetPath)
     val overlap = source.columns.toSet.intersect(target.columns.toSet)
     require(overlap.isEmpty,
       s"mergeInto needs disjoint source/target column names, both have: $overlap")

@@ -555,7 +555,7 @@ object Pipeline {
     t(s, dir, "documents")
       .filter(size(split(col("text"), " ")) >= 20)
       .write.mode("overwrite").partitionBy("lang").parquet(out)
-    s.read.parquet(out)
+    Graft.readParquet(s, out)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("docs"),
         sum(col("n_chars")).cast("long").as("chars"),
@@ -632,7 +632,7 @@ object Pipeline {
     if (!new java.io.File(out, "_SUCCESS").exists())
       t(s, dir, "customer")
         .write.mode("overwrite").partitionBy("c_nationkey").parquet(out)
-    val fact = s.read.parquet(out)
+    val fact = Graft.readParquet(s, out)
     val dim = broadcast(t(s, dir, "nation").filter(col("n_regionkey") === 2))
     fact.join(dim, col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))

@@ -240,9 +240,10 @@ object MatchRecognizeSql {
     }
     // Measure bodies may also be ARITHMETIC over the primitives
     // (`LAST(ts_ns) - FIRST(ts_ns) AS dur`): the NFA emits each
-    // distinct primitive as a hidden column and CATALYST computes the
-    // expression over them — Long arithmetic stays exact (a Double
-    // path would corrupt epoch-nanos differences past 2^53).
+    // distinct primitive that is not itself a declared measure as a
+    // hidden column and CATALYST computes the expression over them —
+    // Long arithmetic stays exact (a Double path would corrupt
+    // epoch-nanos differences past 2^53).
     val primFindRe = (measRe.pattern.pattern
       .stripPrefix("(?i)^").stripSuffix("\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)$"))
     val primGlobal = ("(?i)" + primFindRe).r
@@ -261,7 +262,14 @@ object MatchRecognizeSql {
       "(?:CLASSIFIER\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)?\\s*\\)|" +
       "(?:([A-Za-z_][A-Za-z0-9_]*)\\s*\\.\\s*)?([A-Za-z_][A-Za-z0-9_]*))" +
       "\\s*\\)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)$").r
-    SqlLex.splitTopLevel(measuresTxt, ',').map(_.trim).filter(_.nonEmpty).foreach { mtxt =>
+    val measureTxts = SqlLex.splitTopLevel(measuresTxt, ',').map(_.trim).filter(_.nonEmpty)
+    // a primitive inside an arithmetic measure that is also a declared
+    // measure reads that measure's column instead of folding a second,
+    // hidden accumulator of the same value
+    val declaredPrims: Map[SqlMeasure, String] = measureTxts
+      .flatMap(m => measRe.findFirstMatchIn(m).map(mm => primitiveOf(mm, m) -> mm.group(8)))
+      .distinctBy(_._1).toMap
+    measureTxts.foreach { mtxt =>
       (measRe.findFirstMatchIn(mtxt), arrayAggRe.findFirstMatchIn(mtxt)) match {
         case (Some(mm), _) =>
           direct += primitiveOf(mm, mtxt) -> mm.group(8)
@@ -301,17 +309,20 @@ object MatchRecognizeSql {
               val rewritten = arrayBrackets(
                 primGlobal.replaceAllIn(am.group(1), m => {
                   val p = primitiveOf(m, mtxt)
-                  hidden.getOrElseUpdate(p, s"__m${hidden.size}")
+                  declaredPrims.get(p).map(a => s"`$a`")
+                    .getOrElse(hidden.getOrElseUpdate(p, s"__m${hidden.size}"))
                 }))
-              // Catalyst computes the expression over the hidden
-              // primitive columns — any deterministic SCALAR expression
-              // is running-correct (the hidden columns already carry
+              // Catalyst computes the expression over the primitive
+              // columns — any deterministic SCALAR expression is
+              // running-correct (the primitive columns already carry
               // running values per row), so the allowlist covers
               // COALESCE, conditionals, LIKE, boolean logic, array
               // constructors/array_max-min, comparisons, and literals
               // (reference testDesugarArrayConstructor/DesugarLike/
               // SimplifyExpressions)
-              val leftover = rewritten.replaceAll("__m\\d+", "")
+              val leftover = declaredPrims.values
+                .foldLeft(rewritten)((t, a) => t.replace(s"`$a`", ""))
+                .replaceAll("__m\\d+", "")
                 .replaceAll("'[^']*'", "")
                 .replaceAll("(?i)\\b(COALESCE|ARRAY_MAX|ARRAY_MIN|ARRAY|IF|" +
                   "LIKE|OR|AND|NOT|TRUE|FALSE|CASE|WHEN|THEN|ELSE|END)\\b", "")

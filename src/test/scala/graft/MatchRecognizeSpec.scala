@@ -523,6 +523,44 @@ class MatchRecognizeSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((true, 2L, 1L)))
   }
 
+  test("an arithmetic measure reads declared primitives, not hidden copies") {
+    val spk = spark
+    import spk.implicits._
+    val df = Seq((1L, 0L, 1.0), (1L, 1L, 2.5), (1L, 2L, 4.0), (1L, 3L, 0.5),
+      (2L, 0L, 3.0), (2L, 1L, 7.0), (2L, 2L, 8.0)).toDF("k", "ord", "value")
+    def withMeasures(measures: String): DataFrame =
+      graft.sqlcompat.MatchRecognizeSql.translate(
+        s"""SELECT * FROM t MATCH_RECOGNIZE (
+           |  PARTITION BY k ORDER BY ord
+           |  MEASURES $measures
+           |  ONE ROW PER MATCH
+           |  PATTERN (U{2,})
+           |  DEFINE U AS value > PREV(value))""".stripMargin, _ => df)
+    def rows(d: DataFrame) = d.orderBy("k").collect().map(_.toSeq).toSeq
+    // hidden accumulator columns anywhere in the plan (the operator's
+    // output), not only in the projected result
+    def hidden(d: DataFrame) = d.queryExecution.analyzed
+      .collect { case n => n.output.map(_.name) }.flatten.filter(_.startsWith("__m"))
+    // the gain alone folds its primitives into hidden columns
+    val gainDf = withMeasures("LAST(value) - FIRST(value) AS gain")
+    assert(hidden(gainDf).distinct.size == 2)
+    val gainOnly = rows(gainDf)
+    val primsOnly = rows(withMeasures("FIRST(value) AS first_val, LAST(value) AS last_val"))
+    assert(gainOnly == Seq(Seq(1L, 1.5), Seq(2L, 1.0)))
+    for (measures <- Seq(
+        "FIRST(value) AS first_val, LAST(value) AS last_val, " +
+          "LAST(value) - FIRST(value) AS gain",
+        "LAST(value) - FIRST(value) AS gain, " +
+          "FIRST(value) AS first_val, LAST(value) AS last_val")) {
+      val out = withMeasures(measures)
+      assert(hidden(out).isEmpty, out.queryExecution.analyzed.toString)
+      val declared = measures.split(" AS ").tail.map(_.takeWhile(_ != ','))
+      assert(out.columns.toSeq == "k" +: declared.toSeq)
+      assert(rows(out.select("k", "gain")) == gainOnly)
+      assert(rows(out.select("k", "first_val", "last_val")) == primsOnly)
+    }
+  }
+
   test("reluctant +? stops at the FIRST viable continuation, greedy at the last") {
     val spk = spark
     import spk.implicits._

@@ -39,7 +39,7 @@ object Graft {
     */
   def session(appName: String = "graft",
               cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = SparkSession.builder()
+    SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -85,22 +85,10 @@ object Graft {
       // with ANSI DIVIDE_BY_ZERO before IeeeDoubleDivide can lower it.
       .config("spark.sql.parser.eagerEvalOfUnresolvedInlineTable", "false")
       .config("spark.ui.enabled", "false")
-      // function registry: native expressions + sketch aggregates
-      // (≈ the reference's SystemFunctionBundle registration)
+      // the whole function surface and the plan rules; every session
+      // of this context, newSession() included, gets the same registry
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
-    // Session-property overrides (≈ the reference's `SET SESSION x = y`
-    // surface, SystemSessionProperties.java): `SPARK_GRAFT_CONF` holds
-    // `key=value;key=value` pairs applied last, so a driver/operator can
-    // tune one session without a code change. Used by the perf probes.
-    sys.env.get("SPARK_GRAFT_CONF").foreach { s =>
-      s.split(';').iterator.map(_.trim).filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      }
-    }
-    graft.functions.GraftFunctions.registerUdfs(spark)
-    spark
   }
 
   /** Run `body` with `confs` set, restoring prior values after. */

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.udf
 
 /** Date/time compatibility layer (SURVEY §2.9 date/time gap-fill):
   *
@@ -220,54 +220,47 @@ object DateTimeCompat {
     java.sql.Timestamp.from(ldt.toInstant(java.time.ZoneOffset.UTC))
   }
 
-  def register(spark: SparkSession): Unit = {
+  def define(t: FunctionTable): Unit = {
     // date_format / date_parse (MySQL %-patterns in the reference).
     // DUAL-MODE guard: a pattern WITHOUT any '%' is interpreted as a
     // Spark/java.time pattern (the reference would render it as
     // literal text, which no real query wants) so native Spark
     // queries that used the builtin keep working.
-    spark.udf.register("date_format",
-      (ts: java.sql.Timestamp, p: String) =>
-        if (ts == null || p == null) null
-        else if (p.contains('%')) dateFormatMysql(ts, p)
-        else try java.time.format.DateTimeFormatter
-          .ofPattern(p, java.util.Locale.ENGLISH)
-          .withZone(java.time.ZoneOffset.UTC).format(ts.toInstant)
-        catch {
-          // not a java pattern either → the reference renders a
-          // %-free pattern as literal text
-          case _: IllegalArgumentException => p
-        })
-    spark.udf.register("date_parse",
-      (s: String, p: String) =>
-        if (s == null || p == null) null else dateParseMysql(s, p))
-    spark.udf.register("format_datetime",
-      (ts: java.sql.Timestamp, jodaPattern: String) => {
-        if (ts == null || jodaPattern == null) null
-        else java.time.format.DateTimeFormatter
-          .ofPattern(translateJodaPattern(jodaPattern))
-          .withZone(java.time.ZoneOffset.UTC)
-          .format(ts.toInstant)
-      })
-    spark.udf.register("parse_datetime",
-      (s: String, jodaPattern: String) =>
-        if (s == null || jodaPattern == null) null
-        else parseDatetime(s, jodaPattern))
-    // to_iso8601 is injected as a type-dispatching expression in
-    // CompatAliases (DATE → 'yyyy-MM-dd', timestamp → 'T'-form): a UDF
-    // can't see the static input type once Date has been coerced.
-    spark.udf.register("from_iso8601_timestamp",
-      (s: String) => if (s == null) null else fromIso8601Timestamp(s))
-    spark.udf.register("from_iso8601_date",
-      (s: String) =>
-        if (s == null) null
-        else java.sql.Date.valueOf(java.time.LocalDate.parse(s)))
-    spark.udf.register("time_of_day_nanos",
-      (ts: java.sql.Timestamp) =>
-        if (ts == null) null.asInstanceOf[java.lang.Long]
-        else java.lang.Long.valueOf(timeOfDayNanos(
-          ts.getTime * 1000L + (ts.getNanos / 1000 % 1000))))
-    spark.udf.register("nanos_to_time_string",
-      (n: java.lang.Long) => if (n == null) null else nanosToTimeString(n))
+    t.udf("date_format", udf((ts: java.sql.Timestamp, p: String) =>
+      if (ts == null || p == null) null
+      else if (p.contains('%')) dateFormatMysql(ts, p)
+      else try java.time.format.DateTimeFormatter
+        .ofPattern(p, java.util.Locale.ENGLISH)
+        .withZone(java.time.ZoneOffset.UTC).format(ts.toInstant)
+      catch {
+        // not a java pattern either → the reference renders a
+        // %-free pattern as literal text
+        case _: IllegalArgumentException => p
+      }))
+    t.udf("date_parse", udf((s: String, p: String) =>
+      if (s == null || p == null) null else dateParseMysql(s, p)))
+    t.udf("format_datetime", udf((ts: java.sql.Timestamp, jodaPattern: String) =>
+      if (ts == null || jodaPattern == null) null
+      else java.time.format.DateTimeFormatter
+        .ofPattern(translateJodaPattern(jodaPattern))
+        .withZone(java.time.ZoneOffset.UTC)
+        .format(ts.toInstant)))
+    t.udf("parse_datetime", udf((s: String, jodaPattern: String) =>
+      if (s == null || jodaPattern == null) null
+      else parseDatetime(s, jodaPattern)))
+    // to_iso8601 is a type-dispatching expression in CompatAliases
+    // (DATE → 'yyyy-MM-dd', timestamp → 'T'-form): a UDF can't see the
+    // static input type once Date has been coerced.
+    t.udf("from_iso8601_timestamp", udf((s: String) =>
+      if (s == null) null else fromIso8601Timestamp(s)))
+    t.udf("from_iso8601_date", udf((s: String) =>
+      if (s == null) null
+      else java.sql.Date.valueOf(java.time.LocalDate.parse(s))))
+    t.udf("time_of_day_nanos", udf((ts: java.sql.Timestamp) =>
+      if (ts == null) null.asInstanceOf[java.lang.Long]
+      else java.lang.Long.valueOf(timeOfDayNanos(
+        ts.getTime * 1000L + (ts.getNanos / 1000 % 1000)))))
+    t.udf("nanos_to_time_string", udf((n: java.lang.Long) =>
+      if (n == null) null else nanosToTimeString(n)))
   }
 }

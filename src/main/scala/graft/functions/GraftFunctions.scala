@@ -1,285 +1,91 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, EqualTo, Expression, ExpressionInfo, FromUTCTimestamp, If, LastDay, Literal, ParseUrl, RegExpExtract, ToUTCTimestamp}
-import org.apache.spark.sql.types.{LongType, StringType}
+import java.lang.reflect.Modifier
 
-/** The engine's function registry (≈ the reference's
-  * `metadata/SystemFunctionBundle.java:350`, which assembles 460
-  * @ScalarFunction declarations): native Catalyst expressions and
-  * custom aggregates are injected through [[SparkSessionExtensions]]
-  * (Spark's public plugin point), and pure-Scala gap-fill scalars are
-  * registered as session UDFs.
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, FromUTCTimestamp, LastDay, ToUTCTimestamp}
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.graft.PlanExec
+
+/** The engine's function table (≈ the reference's
+  * `metadata/SystemFunctionBundle.java:350`, which assembles the
+  * @ScalarFunction declarations once for every session): each name
+  * maps to the builder its calls resolve to. Two kinds of entry share
+  * it:
+  *   - [[fn]]: a builder of native Catalyst expressions — codegen'd
+  *     expressions and aggregates, or a lowering onto Spark's own nodes;
+  *   - [[udf]]: a Scala function, called as a named `ScalaUDF`. UDFs
+  *     do not codegen, so they serve low-volume columns; a hot-path
+  *     scalar gets a native expression instead.
+  * A name is added once; a second add fails when the table is built.
+  * [[inject]] hands every entry to `SparkSessionExtensions.injectFunction`,
+  * which registers it in each session's function registry, replacing a
+  * Spark builtin of the same name (`typeof`, `chr`, `date_format`, …).
+  */
+final class FunctionTable {
+  private val entries = mutable.LinkedHashMap
+    .empty[String, (ExpressionInfo, Seq[Expression] => Expression)]
+
+  /** Adds `name`. DESCRIBE FUNCTION names the concrete expression class
+    * the builder's result type names (`CosineSimilarity`, `ScalaUDF`,
+    * `Cast`, …), else [[GraftExtensions]]. */
+  def fn[E <: Expression](name: String, builder: Seq[Expression] => E)(
+      implicit result: ClassTag[E]): Unit = {
+    require(!entries.contains(name), s"function '$name' is added twice")
+    val c = result.runtimeClass
+    val cls: Class[_] =
+      if (Modifier.isAbstract(c.getModifiers)) classOf[GraftExtensions] else c
+    entries(name) = (new ExpressionInfo(cls.getName, name), builder)
+  }
+
+  def udf(name: String, f: UserDefinedFunction): Unit =
+    fn(name, PlanExec.scalaUdf(f.withName(name)))
+
+  def names: Seq[String] = entries.keys.toSeq
+
+  def inject(e: SparkSessionExtensions): Unit =
+    entries.foreach { case (name, (info, builder)) =>
+      e.injectFunction((FunctionIdentifier(name), info, builder))
+    }
+}
+
+/** Functions of the engine's own (SURVEY §2.11), beside the
+  * exact-name compatibility pack ([[CompatAliases]]) and the
+  * date/time layer ([[DateTimeCompat]]).
   *
-  * Native (codegen) expressions — hot-path, stay inside whole-stage
-  * codegen: cosine_similarity, simhash64, qdigest_agg /
-  * value_at_quantile, approx_most_frequent.
+  * Native (codegen) expressions carry the hot paths and the
+  * type-dispatching or stateful functions: the vector and hash kernels
+  * (cosine_similarity, dot_product, simhash64, spooky_hash_v2_*), the
+  * sketch and quantile aggregates, word_stem, word_ngrams and the
+  * console-color family.
   *
-  * UDF gap-fill (reference file in parens): word_stem
-  * (WordStemFunction.java), lang_id (capability-add for the LLM
-  * pipeline), ngrams (ArrayFunctions ngrams), wilson_interval_lower/
-  * upper (WilsonInterval.java), url_encode/url_decode
-  * (UrlFunctions.java), ip_prefix_contains (IpAddressFunctions.java),
-  * luhn_check (LuhnCheckFunction.java). UDFs don't codegen, so they
-  * are reserved for low-volume columns; anything on the 100 TB hot
-  * path gets a native expression instead.
+  * Scala UDFs (reference file in parens) cover the low-volume rest:
+  * lang_id (capability-add for the LLM pipeline), ngrams
+  * (ArrayFunctions), wilson_interval_lower/upper (WilsonInterval.java),
+  * the url_* family (UrlFunctions.java), ip_prefix_contains
+  * (IpAddressFunctions.java), the JSON functions (JsonFunctions.java
+  * and the SQL/JSON 2016 clause forms) and the UUID / IPADDRESS cast
+  * emulation ([[UuidIpCompat]]).
   */
 object GraftFunctions {
 
-  // ---------------------------------------------------------- injection
+  /** Every function the engine adds or overrides, built once per JVM. */
+  lazy val table: FunctionTable = {
+    val t = new FunctionTable
+    define(t)
+    CompatAliases.define(t)
+    DateTimeCompat.define(t)
+    t
+  }
+
+  /** The whole function surface and the plan rules, for one session. */
   def inject(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
-      (children: Seq[Expression]) => CosineSimilarity(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNGrams].getName, "word_ngrams"),
-      (children: Seq[Expression]) => WordNGrams(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (children: Seq[Expression]) => SimHash64(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("qdigest_agg"),
-      new ExpressionInfo(classOf[QuantileSketchAgg].getName, "qdigest_agg"),
-      // reference overloads (QuantileDigestAggregationFunction.java):
-      // (v), (v, weight), (v, weight, accuracy) — accuracy must fold
-      (children: Seq[Expression]) => children match {
-        case Seq(v) => QuantileSketchAgg(v)
-        case Seq(v, w) => QuantileSketchAgg(v, weight = Some(w))
-        case Seq(v, w, acc) =>
-          require(acc.foldable, "qdigest_agg accuracy must be a constant")
-          val a = acc.eval() match {
-            case d: org.apache.spark.sql.types.Decimal => d.toDouble
-            case n: Number => n.doubleValue()
-          }
-          QuantileSketchAgg(v, alpha = a, weight = Some(w))
-        case _ => throw new IllegalArgumentException(
-          "qdigest_agg takes 1-3 arguments")
-      }))
-    e.injectFunction((
-      FunctionIdentifier("tz_wall"),
-      new ExpressionInfo(classOf[TzWall].getName, "tz_wall"),
-      (children: Seq[Expression]) => TzWall(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("tz_to_utc"),
-      new ExpressionInfo(classOf[TzToUtc].getName, "tz_to_utc"),
-      (children: Seq[Expression]) => TzToUtc(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("tz_iso8601"),
-      new ExpressionInfo(classOf[TzIso8601].getName, "tz_iso8601"),
-      (children: Seq[Expression]) => TzIso8601(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("u_trim"),
-      new ExpressionInfo(classOf[UTrimBoth].getName, "u_trim"),
-      (children: Seq[Expression]) => UTrimBoth(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("u_ltrim"),
-      new ExpressionInfo(classOf[UTrimLeft].getName, "u_ltrim"),
-      (children: Seq[Expression]) => UTrimLeft(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("u_rtrim"),
-      new ExpressionInfo(classOf[UTrimRight].getName, "u_rtrim"),
-      (children: Seq[Expression]) => UTrimRight(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("spooky_hash_v2_32"),
-      new ExpressionInfo(classOf[SpookyHashV232].getName, "spooky_hash_v2_32"),
-      (children: Seq[Expression]) => SpookyHashV232(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("spooky_hash_v2_64"),
-      new ExpressionInfo(classOf[SpookyHashV264].getName, "spooky_hash_v2_64"),
-      (children: Seq[Expression]) => SpookyHashV264(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("value_at_quantile"),
-      new ExpressionInfo(classOf[ValueAtQuantile].getName, "value_at_quantile"),
-      (children: Seq[Expression]) => ValueAtQuantile(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("quantile_at_value"),
-      new ExpressionInfo(classOf[QuantileAtValue].getName, "quantile_at_value"),
-      (children: Seq[Expression]) => QuantileAtValue(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("values_at_quantiles"),
-      new ExpressionInfo(classOf[ValuesAtQuantiles].getName, "values_at_quantiles"),
-      (children: Seq[Expression]) => ValuesAtQuantiles(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("tdigest_agg"),
-      new ExpressionInfo(classOf[TDigestAgg].getName, "tdigest_agg"),
-      (children: Seq[Expression]) =>
-        if (children.length > 1) TDigestAgg(children.head, weight = Some(children(1)))
-        else TDigestAgg(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("trimmed_mean"),
-      new ExpressionInfo(classOf[TrimmedMean].getName, "trimmed_mean"),
-      (children: Seq[Expression]) =>
-        TrimmedMean(children(0), children(1), children(2))))
-    e.injectFunction((
-      FunctionIdentifier("approx_most_frequent"),
-      new ExpressionInfo(classOf[ApproxMostFrequentAgg].getName, "approx_most_frequent"),
-      (children: Seq[Expression]) => ApproxMostFrequentAgg(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("numeric_histogram"),
-      new ExpressionInfo(classOf[NumericHistogramAgg].getName, "numeric_histogram"),
-      (children: Seq[Expression]) => NumericHistogramAgg(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("map_union"),
-      new ExpressionInfo(classOf[MapUnionAgg].getName, "map_union"),
-      (children: Seq[Expression]) => MapUnionAgg(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("multimap_agg"),
-      new ExpressionInfo(classOf[MultimapAgg].getName, "multimap_agg"),
-      (children: Seq[Expression]) => MultimapAgg(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("merge"),
-      new ExpressionInfo(classOf[MergeSketchAgg].getName, "merge"),
-      (children: Seq[Expression]) => MergeSketchAgg(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("media_probe"),
-      new ExpressionInfo(classOf[MediaProbe].getName, "media_probe"),
-      (children: Seq[Expression]) => MediaProbe(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("audio_probe"),
-      new ExpressionInfo(classOf[AudioProbe].getName, "audio_probe"),
-      (children: Seq[Expression]) => AudioProbe(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("token_weight_sum"),
-      new ExpressionInfo(classOf[TokenWeightSum].getName, "token_weight_sum"),
-      (children: Seq[Expression]) => TokenWeightSum(children.head)))
-    // reference-contract skewness/kurtosis (CentralMoments.scala):
-    // the dialect renames reference-SQL spellings onto these; Spark's
-    // builtins stay untouched for DataFrame users
-    e.injectFunction((
-      FunctionIdentifier("graft_skewness"),
-      new ExpressionInfo(classOf[CentralMomentsAgg].getName, "graft_skewness"),
-      (children: Seq[Expression]) =>
-        CentralMomentsAgg(children.head, isKurtosis = false)))
-    e.injectFunction((
-      FunctionIdentifier("graft_kurtosis"),
-      new ExpressionInfo(classOf[CentralMomentsAgg].getName, "graft_kurtosis"),
-      (children: Seq[Expression]) =>
-        CentralMomentsAgg(children.head, isKurtosis = true)))
-    // reference map_from_entries raises on NULL entries/keys and
-    // DUPLICATE keys (MapFromEntriesFunction.java) — the session's
-    // LAST_WIN dedup policy (map_concat's last-map-wins contract)
-    // would otherwise silently keep the last value
-    e.injectFunction((
-      FunctionIdentifier("map_from_entries"),
-      new ExpressionInfo(classOf[CheckUniqueKeys].getName, "map_from_entries"),
-      (children: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.MapFromEntries(
-          CheckUniqueKeys(children.head))))
-    e.injectFunction((
-      FunctionIdentifier("min_by_n"),
-      new ExpressionInfo(classOf[MinByN].getName, "min_by_n"),
-      (children: Seq[Expression]) =>
-        MinByN(children(0), children(1), children(2))))
-    e.injectFunction((
-      FunctionIdentifier("max_by_n"),
-      new ExpressionInfo(classOf[MaxByN].getName, "max_by_n"),
-      (children: Seq[Expression]) =>
-        MaxByN(children(0), children(1), children(2))))
-    e.injectFunction((
-      FunctionIdentifier("exact_quantiles"),
-      new ExpressionInfo(classOf[ExactQuantiles].getName, "exact_quantiles"),
-      (children: Seq[Expression]) => ExactQuantiles(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("kmv_set_digest"),
-      new ExpressionInfo(classOf[KmvDigestAgg].getName, "kmv_set_digest"),
-      (children: Seq[Expression]) => KmvDigestAgg(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("jaccard_index"),
-      new ExpressionInfo(classOf[JaccardIndex].getName, "jaccard_index"),
-      (children: Seq[Expression]) => JaccardIndex(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("intersection_cardinality"),
-      new ExpressionInfo(classOf[IntersectionCardinality].getName, "intersection_cardinality"),
-      (children: Seq[Expression]) => IntersectionCardinality(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_date_add"),
-      new ExpressionInfo(classOf[TrinoDateAdd].getName, "graft_date_add"),
-      (children: Seq[Expression]) => TrinoDateAdd(children(0), children(1), children(2))))
-    // at_timezone / with_timezone (reference `scalar/timestamptz/
-    // AtTimeZone.java:30`, `WithTimeZone.java`): Spark's timestamp is
-    // an instant with no carried zone id (SURVEY §1.3 documents the
-    // loss), so the zone-preserving half degrades to the local-clock
-    // shift — at_timezone(ts, tz) renders the instant on tz's wall
-    // clock (≡ from_utc_timestamp under the UTC session), and
-    // with_timezone(ts, tz) reads a wall-clock ts as tz local time and
-    // returns the instant (≡ to_utc_timestamp). Both are Catalyst
-    // codegen expressions, not UDFs.
-    e.injectFunction((
-      FunctionIdentifier("at_timezone"),
-      new ExpressionInfo(classOf[FromUTCTimestamp].getName, "at_timezone"),
-      (children: Seq[Expression]) => FromUTCTimestamp(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier("with_timezone"),
-      new ExpressionInfo(classOf[ToUTCTimestamp].getName, "with_timezone"),
-      (children: Seq[Expression]) => ToUTCTimestamp(children(0), children(1))))
-    // url_extract_* family: registered as UDFs over java.net.URI in
-    // registerUdfs — the reference's contract (UrlFunctions.java:182
-    // `slice(nullToEmpty(...))`) distinguishes INVALID URL (every
-    // extractor NULL) from ABSENT component (empty string), which
-    // Catalyst's ParseUrl cannot express (it returns NULL for both).
-    // duration family (reference `scalar/DateTimeFunctions.java`
-    // to_milliseconds / `ParseDurationFunction`) + last_day_of_month
-    // as a name-alias of Spark's codegen LastDay (same semantics).
-    e.injectFunction((
-      FunctionIdentifier("parse_duration"),
-      new ExpressionInfo(classOf[ParseDuration].getName, "parse_duration"),
-      (children: Seq[Expression]) => ParseDuration(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("to_milliseconds"),
-      new ExpressionInfo(classOf[ToMilliseconds].getName, "to_milliseconds"),
-      (children: Seq[Expression]) => ToMilliseconds(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("last_day_of_month"),
-      new ExpressionInfo(classOf[LastDay].getName, "last_day_of_month"),
-      (children: Seq[Expression]) => LastDay(children.head)))
-    e.injectFunction((
-      FunctionIdentifier("rolling_fingerprint"),
-      new ExpressionInfo(classOf[RollingFingerprint].getName, "rolling_fingerprint"),
-      (children: Seq[Expression]) =>
-        RollingFingerprint(children(0), children(1), children(2))))
-    // console-rendering color family (reference ColorFunctions.java;
-    // COLOR type maps to BIGINT — see ConsoleColor.scala)
-    e.injectFunction((
-      FunctionIdentifier("color"),
-      new ExpressionInfo(classOf[ColorFn].getName, "color"),
-      (children: Seq[Expression]) => ColorFn(children)))
-    e.injectFunction((
-      FunctionIdentifier("rgb"),
-      new ExpressionInfo(classOf[RgbFn].getName, "rgb"),
-      (children: Seq[Expression]) => RgbFn(children)))
-    e.injectFunction((
-      FunctionIdentifier("bar"),
-      new ExpressionInfo(classOf[BarFn].getName, "bar"),
-      (children: Seq[Expression]) => BarFn(children)))
-    e.injectFunction((
-      FunctionIdentifier("render"),
-      new ExpressionInfo(classOf[RenderFn].getName, "render"),
-      (children: Seq[Expression]) => RenderFn(children)))
-    e.injectFunction((
-      FunctionIdentifier("word_stem"),
-      new ExpressionInfo(classOf[WordStem].getName, "word_stem"),
-      (children: Seq[Expression]) => WordStem(children)))
-    e.injectFunction((
-      FunctionIdentifier("contains_sequence"),
-      new ExpressionInfo(classOf[ContainsSequence].getName, "contains_sequence"),
-      (children: Seq[Expression]) => ContainsSequence(children(0), children(1))))
-    // typeof: OVERRIDES Spark's builtin of the same name — renders
-    // the reference dialect's type names (integer/varchar/row(...)),
-    // not Spark's (int/string/struct<...>); folds to a literal
-    e.injectFunction((
-      FunctionIdentifier("typeof"),
-      new ExpressionInfo(classOf[TrinoTypeOf].getName, "typeof"),
-      (children: Seq[Expression]) => TrinoTypeOf(children.head)))
-    // exact-name compatibility pack (r13 registry audit)
-    CompatAliases.inject(e)
+    table.inject(e)
     // optimizer extension surface (Rule[LogicalPlan])
     // One FUSED resolution rule carries all reference-semantics
     // rewrites (subscripts, IEEE division, NaN-aware min/max, map
@@ -301,109 +107,177 @@ object GraftFunctions {
     e.injectOptimizerRule(_ => graft.plans.ConstantIndexElementAt)
   }
 
-  // --------------------------------------------------------- UDF layer
-  def registerUdfs(spark: SparkSession): Unit = {
-    CompatAliases.registerUdfs(spark)
+  private def define(t: FunctionTable): Unit = {
+    // ---- native expressions
+    t.fn("cosine_similarity", c => CosineSimilarity(c(0), c(1)))
+    t.fn("dot_product", c => DotProduct(c(0), c(1)))
+    t.fn("word_ngrams", c => WordNGrams(c(0), c(1)))
+    t.fn("simhash64", c => SimHash64(c.head))
+    // reference overloads (QuantileDigestAggregationFunction.java):
+    // (v), (v, weight), (v, weight, accuracy) — accuracy must fold
+    t.fn("qdigest_agg", {
+      case Seq(v) => QuantileSketchAgg(v)
+      case Seq(v, w) => QuantileSketchAgg(v, weight = Some(w))
+      case Seq(v, w, acc) =>
+        require(acc.foldable, "qdigest_agg accuracy must be a constant")
+        val a = acc.eval() match {
+          case d: org.apache.spark.sql.types.Decimal => d.toDouble
+          case n: Number => n.doubleValue()
+        }
+        QuantileSketchAgg(v, alpha = a, weight = Some(w))
+      case _ => throw new IllegalArgumentException(
+        "qdigest_agg takes 1-3 arguments")
+    })
+    t.fn("tz_wall", c => TzWall(c(0), c(1)))
+    t.fn("tz_to_utc", c => TzToUtc(c(0), c(1)))
+    t.fn("tz_iso8601", c => TzIso8601(c(0), c(1)))
+    t.fn("u_trim", c => UTrimBoth(c.head))
+    t.fn("u_ltrim", c => UTrimLeft(c.head))
+    t.fn("u_rtrim", c => UTrimRight(c.head))
+    t.fn("spooky_hash_v2_32", c => SpookyHashV232(c.head))
+    t.fn("spooky_hash_v2_64", c => SpookyHashV264(c.head))
+    t.fn("value_at_quantile", c => ValueAtQuantile(c(0), c(1)))
+    t.fn("quantile_at_value", c => QuantileAtValue(c(0), c(1)))
+    t.fn("values_at_quantiles", c => ValuesAtQuantiles(c(0), c(1)))
+    t.fn("tdigest_agg", c =>
+      if (c.length > 1) TDigestAgg(c.head, weight = Some(c(1)))
+      else TDigestAgg(c.head))
+    t.fn("trimmed_mean", c => TrimmedMean(c(0), c(1), c(2)))
+    t.fn("approx_most_frequent", c => ApproxMostFrequentAgg(c(0), c(1)))
+    t.fn("numeric_histogram", c => NumericHistogramAgg(c(0), c(1)))
+    t.fn("map_union", c => MapUnionAgg(c.head))
+    t.fn("multimap_agg", c => MultimapAgg(c(0), c(1)))
+    t.fn("merge", c => MergeSketchAgg(c.head))
+    t.fn("media_probe", c => MediaProbe(c.head))
+    t.fn("audio_probe", c => AudioProbe(c.head))
+    t.fn("token_weight_sum", c => TokenWeightSum(c.head))
+    // reference-contract skewness/kurtosis (CentralMoments.scala):
+    // the dialect renames reference-SQL spellings onto these; Spark's
+    // builtins stay untouched for DataFrame users
+    t.fn("graft_skewness", c => CentralMomentsAgg(c.head, isKurtosis = false))
+    t.fn("graft_kurtosis", c => CentralMomentsAgg(c.head, isKurtosis = true))
+    // reference map_from_entries raises on NULL entries/keys and
+    // DUPLICATE keys (MapFromEntriesFunction.java) — the session's
+    // LAST_WIN dedup policy (map_concat's last-map-wins contract)
+    // would otherwise silently keep the last value
+    t.fn("map_from_entries", c =>
+      org.apache.spark.sql.catalyst.expressions.MapFromEntries(CheckUniqueKeys(c.head)))
+    t.fn("min_by_n", c => MinByN(c(0), c(1), c(2)))
+    t.fn("max_by_n", c => MaxByN(c(0), c(1), c(2)))
+    t.fn("exact_quantiles", c => ExactQuantiles(c(0), c(1)))
+    t.fn("kmv_set_digest", c => KmvDigestAgg(c.head))
+    t.fn("jaccard_index", c => JaccardIndex(c(0), c(1)))
+    t.fn("intersection_cardinality", c => IntersectionCardinality(c(0), c(1)))
+    t.fn("graft_date_add", c => TrinoDateAdd(c(0), c(1), c(2)))
+    // at_timezone / with_timezone (reference `scalar/timestamptz/
+    // AtTimeZone.java:30`, `WithTimeZone.java`): Spark's timestamp is
+    // an instant with no carried zone id (SURVEY §1.3 documents the
+    // loss), so the zone-preserving half degrades to the local-clock
+    // shift — at_timezone(ts, tz) renders the instant on tz's wall
+    // clock (≡ from_utc_timestamp under the UTC session), and
+    // with_timezone(ts, tz) reads a wall-clock ts as tz local time and
+    // returns the instant (≡ to_utc_timestamp). Both are Catalyst
+    // codegen expressions, not UDFs.
+    t.fn("at_timezone", c => FromUTCTimestamp(c(0), c(1)))
+    t.fn("with_timezone", c => ToUTCTimestamp(c(0), c(1)))
+    // duration family (reference `scalar/DateTimeFunctions.java`
+    // to_milliseconds / `ParseDurationFunction`) + last_day_of_month
+    // as a name-alias of Spark's codegen LastDay (same semantics).
+    t.fn("parse_duration", c => ParseDuration(c.head))
+    t.fn("to_milliseconds", c => ToMilliseconds(c.head))
+    t.fn("last_day_of_month", c => LastDay(c.head))
+    t.fn("rolling_fingerprint", c => RollingFingerprint(c(0), c(1), c(2)))
+    // console-rendering color family (reference ColorFunctions.java;
+    // COLOR type maps to BIGINT — see ConsoleColor.scala)
+    t.fn("color", c => ColorFn(c))
+    t.fn("rgb", c => RgbFn(c))
+    t.fn("bar", c => BarFn(c))
+    t.fn("render", c => RenderFn(c))
+    t.fn("word_stem", c => WordStem(c))
+    t.fn("contains_sequence", c => ContainsSequence(c(0), c(1)))
+    // typeof: OVERRIDES Spark's builtin of the same name — renders
+    // the reference dialect's type names (integer/varchar/row(...)),
+    // not Spark's (int/string/struct<...>); folds to a literal
+    t.fn("typeof", c => TrinoTypeOf(c.head))
+
+    // ---- Scala UDFs
     // version() (reference VersionFunction.java — returns the node
     // version; ours reports the engine + Spark runtime version)
-    spark.udf.register("version",
-      () => s"graft (spark ${org.apache.spark.SPARK_VERSION})")
-    // word_stem moved to an injected expression (2-arg language form;
-    // see functions/ArrayConformance.scala WordStem)
-    spark.udf.register("lang_id", (s: String) => langId(s))
-    spark.udf.register("ngrams",
-      (words: Seq[String], n: Int) => ngrams(words, n))
-    spark.udf.register("wilson_interval_lower",
-      (pos: Long, n: Long, z: Double) => wilsonLower(pos, n, z))
-    spark.udf.register("wilson_interval_upper",
-      (pos: Long, n: Long, z: Double) => wilsonUpper(pos, n, z))
-    spark.udf.register("url_encode", (s: String) => urlEncode(s))
-    spark.udf.register("url_decode", (s: String) => urlDecode(s))
+    t.udf("version", udf(() => s"graft (spark ${org.apache.spark.SPARK_VERSION})"))
+    t.udf("lang_id", udf((s: String) => langId(s)))
+    t.udf("ngrams", udf((words: Seq[String], n: Int) => ngrams(words, n)))
+    t.udf("wilson_interval_lower",
+      udf((pos: Long, n: Long, z: Double) => wilsonLower(pos, n, z)))
+    t.udf("wilson_interval_upper",
+      udf((pos: Long, n: Long, z: Double) => wilsonUpper(pos, n, z)))
+    t.udf("url_encode", udf((s: String) => urlEncode(s)))
+    t.udf("url_decode", udf((s: String) => urlDecode(s)))
     // url_extract_* (reference UrlFunctions.java): invalid URL → NULL
     // for every extractor; a VALID url with an absent component → ''
-    // (port: absent → NULL). java.net.URI is the same parser the
-    // reference delegates to.
-    spark.udf.register("url_extract_protocol",
-      (u: String) => urlComponent(u, "protocol"))
-    spark.udf.register("url_extract_host",
-      (u: String) => urlComponent(u, "host"))
-    spark.udf.register("url_extract_path",
-      (u: String) => urlComponent(u, "path"))
-    spark.udf.register("url_extract_query",
-      (u: String) => urlComponent(u, "query"))
-    spark.udf.register("url_extract_fragment",
-      (u: String) => urlComponent(u, "fragment"))
-    spark.udf.register("url_extract_port", (u: String) => urlPort(u))
-    spark.udf.register("url_extract_parameter",
-      (u: String, k: String) => urlParameter(u, k))
-    spark.udf.register("ip_prefix_contains",
-      (cidr: String, ip: String) => ipPrefixContains(cidr, ip))
+    // (port: absent → NULL) — the reference's `slice(nullToEmpty(...))`
+    // contract, which Catalyst's ParseUrl cannot express (it returns
+    // NULL for both). java.net.URI is the same parser the reference
+    // delegates to.
+    t.udf("url_extract_protocol", udf((u: String) => urlComponent(u, "protocol")))
+    t.udf("url_extract_host", udf((u: String) => urlComponent(u, "host")))
+    t.udf("url_extract_path", udf((u: String) => urlComponent(u, "path")))
+    t.udf("url_extract_query", udf((u: String) => urlComponent(u, "query")))
+    t.udf("url_extract_fragment", udf((u: String) => urlComponent(u, "fragment")))
+    t.udf("url_extract_port", udf((u: String) => urlPort(u)))
+    t.udf("url_extract_parameter",
+      udf((u: String, k: String) => urlParameter(u, k)))
+    t.udf("ip_prefix_contains",
+      udf((cidr: String, ip: String) => ipPrefixContains(cidr, ip)))
     // string-emulated UUID / IPADDRESS casts (UuidIpCompat;
     // Dialect castAsUuidIpPass routes CAST/TRY_CAST/typed literals)
-    spark.udf.register("graft_uuid",
-      (s: String) => UuidIpCompat.uuidCanon(s))
-    spark.udf.register("graft_uuid_try",
-      (s: String) => UuidIpCompat.uuidCanonOrNull(s))
-    spark.udf.register("graft_uuid_bin",
-      (b: Array[Byte]) => UuidIpCompat.uuidFromBytes(b))
-    spark.udf.register("graft_ipaddress",
-      (s: String) => UuidIpCompat.ipCanon(s))
-    spark.udf.register("graft_ipaddress_try",
-      (s: String) => UuidIpCompat.ipCanonOrNull(s))
-    spark.udf.register("graft_ipaddress_bin",
-      (b: Array[Byte]) => UuidIpCompat.ipFromBytes(b))
+    t.udf("graft_uuid", udf((s: String) => UuidIpCompat.uuidCanon(s)))
+    t.udf("graft_uuid_try", udf((s: String) => UuidIpCompat.uuidCanonOrNull(s)))
+    t.udf("graft_uuid_bin", udf((b: Array[Byte]) => UuidIpCompat.uuidFromBytes(b)))
+    t.udf("graft_ipaddress", udf((s: String) => UuidIpCompat.ipCanon(s)))
+    t.udf("graft_ipaddress_try", udf((s: String) => UuidIpCompat.ipCanonOrNull(s)))
+    t.udf("graft_ipaddress_bin", udf((b: Array[Byte]) => UuidIpCompat.ipFromBytes(b)))
     // value-form VARBINARY casts: CAST(uuid/ip AS VARBINARY) yields
     // the 16-byte value, not the text bytes (TestUuidOperators /
     // TestIpAddressOperators varbinary rows)
-    spark.udf.register("graft_uuid_to_bin",
-      (s: String) => UuidIpCompat.uuidBytes(s))
-    spark.udf.register("graft_ipaddress_to_bin",
-      (s: String) => UuidIpCompat.ipBytesOrNullIn(s))
+    t.udf("graft_uuid_to_bin", udf((s: String) => UuidIpCompat.uuidBytes(s)))
+    t.udf("graft_ipaddress_to_bin", udf((s: String) => UuidIpCompat.ipBytesOrNullIn(s)))
     // LISTAGG ON OVERFLOW finishing kernel over the ordered-agg array
     // (ListaggOverflow; Dialect lowers the ON OVERFLOW clause onto it)
-    spark.udf.register("graft_listagg_finish",
-      (arr: Seq[String], sep: String, isError: Boolean, filler: String,
+    t.udf("graft_listagg_finish",
+      udf((arr: Seq[String], sep: String, isError: Boolean, filler: String,
         withCount: Boolean) =>
-        ListaggOverflow.finish(arr, sep, isError, filler, withCount))
-    // NOTE: luhn_check is NOT registered — Spark 4 ships a codegen'd
+        ListaggOverflow.finish(arr, sep, isError, filler, withCount)))
+    // NOTE: luhn_check is NOT added — Spark 4 ships a codegen'd
     // builtin of the same name/semantics; luhnCheck below stays as the
     // documented reference implementation (unit-tested).
-    spark.udf.register("normalize", (s: String, f: String) => normalizeStr(s, f))
-    spark.udf.register("hamming_distance",
-      (a: String, b: String) => hammingDistance(a, b))
-    spark.udf.register("combinations",
-      (a: Seq[String], n: Int) => combinations(a, n))
-    // contains_sequence moved to an injected generic expression
-    // (functions/ArrayConformance.scala ContainsSequence)
-    spark.udf.register("split_to_multimap",
-      (s: String, ed: String, kd: String) => splitToMultimap(s, ed, kd))
-    spark.udf.register("format_number", (v: Double) => formatNumber(v))
-    spark.udf.register("parse_data_size", (s: String) => parseDataSize(s))
+    t.udf("normalize", udf((s: String, f: String) => normalizeStr(s, f)))
+    t.udf("hamming_distance", udf((a: String, b: String) => hammingDistance(a, b)))
+    t.udf("combinations", udf((a: Seq[String], n: Int) => combinations(a, n)))
+    t.udf("split_to_multimap",
+      udf((s: String, ed: String, kd: String) => splitToMultimap(s, ed, kd)))
+    t.udf("format_number", udf((v: Double) => formatNumber(v)))
+    t.udf("parse_data_size", udf((s: String) => parseDataSize(s)))
     // legacy spelling kept by the reference for compatibility
-    spark.udf.register("parse_presto_data_size", (s: String) => parseDataSize(s))
-    spark.udf.register("human_readable_seconds",
-      (d: Double) => humanReadableSeconds(d))
-    spark.udf.register("hmac_sha256",
-      (data: Array[Byte], key: Array[Byte]) => hmacSha256(data, key))
-    spark.udf.register("to_base32", (b: Array[Byte]) => toBase32(b))
-    spark.udf.register("from_base32", (s: String) => fromBase32(s))
-    spark.udf.register("normal_cdf",
-      (m: Double, sd: Double, x: Double) => StatFunctions.normalCdf(m, sd, x))
-    spark.udf.register("inverse_normal_cdf",
-      (m: Double, sd: Double, p: Double) => StatFunctions.inverseNormalCdf(m, sd, p))
-    spark.udf.register("beta_cdf",
-      (a: Double, b: Double, x: Double) => StatFunctions.betaCdf(a, b, x))
-    spark.udf.register("inverse_beta_cdf",
-      (a: Double, b: Double, p: Double) => StatFunctions.inverseBetaCdf(a, b, p))
-    spark.udf.register("json_size", (j: String, path: String) => jsonSize(j, path))
-    spark.udf.register("json_parse", (s: String) => jsonParse(s))
-    spark.udf.register("json_format", (s: String) => jsonParse(s))
-    spark.udf.register("json_exists",
-      (j: String, path: String) => jsonExists(j, path))
-    spark.udf.register("json_value",
-      (j: String, path: String) => jsonValue(j, path))
-    spark.udf.register("json_query",
-      (j: String, path: String) => jsonQuery(j, path))
+    t.udf("parse_presto_data_size", udf((s: String) => parseDataSize(s)))
+    t.udf("human_readable_seconds", udf((d: Double) => humanReadableSeconds(d)))
+    t.udf("hmac_sha256",
+      udf((data: Array[Byte], key: Array[Byte]) => hmacSha256(data, key)))
+    t.udf("to_base32", udf((b: Array[Byte]) => toBase32(b)))
+    t.udf("from_base32", udf((s: String) => fromBase32(s)))
+    t.udf("normal_cdf",
+      udf((m: Double, sd: Double, x: Double) => StatFunctions.normalCdf(m, sd, x)))
+    t.udf("inverse_normal_cdf",
+      udf((m: Double, sd: Double, p: Double) => StatFunctions.inverseNormalCdf(m, sd, p)))
+    t.udf("beta_cdf",
+      udf((a: Double, b: Double, x: Double) => StatFunctions.betaCdf(a, b, x)))
+    t.udf("inverse_beta_cdf",
+      udf((a: Double, b: Double, p: Double) => StatFunctions.inverseBetaCdf(a, b, p)))
+    t.udf("json_size", udf((j: String, path: String) => jsonSize(j, path)))
+    t.udf("json_parse", udf((s: String) => jsonParse(s)))
+    t.udf("json_format", udf((s: String) => jsonParse(s)))
+    t.udf("json_exists", udf((j: String, path: String) => jsonExists(j, path)))
+    t.udf("json_value", udf((j: String, path: String) => jsonValue(j, path)))
+    t.udf("json_query", udf((j: String, path: String) => jsonQuery(j, path)))
     // SQL/JSON 2016 clause forms (PASSING / DEFAULT ... ON EMPTY|ERROR
     // / wrappers): status-struct variants the dialect's
     // sqlJsonClausePass lowers onto — status 0 ok, 1 empty, 2 error;
@@ -411,36 +285,33 @@ object GraftFunctions {
     // so defaults stay arbitrary SQL expressions. `vars` carries the
     // PASSING bindings as JSON-fragment text; a NULL map value is the
     // NULL FORMAT JSON empty-sequence binding.
-    spark.udf.register("graft_json_value_x",
-      (j: String, path: String, vars: Map[String, String]) =>
-        jsonValueX(j, path, vars))
-    spark.udf.register("graft_json_query_x",
-      (j: String, path: String, vars: Map[String, String],
-       wrapper: Int, omitQuotes: Boolean) =>
-        jsonQueryX(j, path, vars, wrapper, omitQuotes))
-    spark.udf.register("graft_json_exists_x",
-      (j: String, path: String, vars: Map[String, String]) =>
-        jsonExistsX(j, path, vars))
+    t.udf("graft_json_value_x",
+      udf((j: String, path: String, vars: Map[String, String]) =>
+        jsonValueX(j, path, vars)))
+    t.udf("graft_json_query_x",
+      udf((j: String, path: String, vars: Map[String, String],
+        wrapper: Int, omitQuotes: Boolean) =>
+        jsonQueryX(j, path, vars, wrapper, omitQuotes)))
+    t.udf("graft_json_exists_x",
+      udf((j: String, path: String, vars: Map[String, String]) =>
+        jsonExistsX(j, path, vars)))
+    // current_groups() (reference TestSessionFunctions): the session
+    // identity carries no groups here — constant empty array, like the
+    // reference's groups-less identity
+    t.udf("current_groups", udf(() => Seq.empty[String]))
     // SQL/JSON constructor support (reference TestJsonObject/
     // TestJsonArrayFunction): FORMAT JSON values re-parse through
     // Jackson — validates (malformed raises the reference's
     // conversion error), minifies, and collapses duplicate object
     // keys; encode/decode cover UTF-32, which Spark's own
     // encode()/decode() reject.
-    // current_groups() (reference TestSessionFunctions): the session
-    // identity carries no groups here — constant empty array, like the
-    // reference's groups-less identity
-    spark.udf.register("current_groups", () => Seq.empty[String])
-    spark.udf.register("graft_json_norm", (s: String) => jsonNorm(s))
-    spark.udf.register("graft_encode",
-      (s: String, cs: String) =>
-        if (s == null) null
-        else s.getBytes(java.nio.charset.Charset.forName(cs)))
-    spark.udf.register("graft_decode",
-      (b: Array[Byte], cs: String) =>
-        if (b == null) null
-        else new String(b, java.nio.charset.Charset.forName(cs)))
-    DateTimeCompat.register(spark)
+    t.udf("graft_json_norm", udf((s: String) => jsonNorm(s)))
+    t.udf("graft_encode", udf((s: String, cs: String) =>
+      if (s == null) null
+      else s.getBytes(java.nio.charset.Charset.forName(cs))))
+    t.udf("graft_decode", udf((b: Array[Byte], cs: String) =>
+      if (b == null) null
+      else new String(b, java.nio.charset.Charset.forName(cs))))
   }
 
   // ------------------------------------------------------ implementations
@@ -1130,7 +1001,13 @@ object GraftFunctions {
 
 /** Session-extension entry point: usable both programmatically
   * (`Graft.session` does `.withExtensions(new GraftExtensions)`) and
-  * via `spark.sql.extensions=graft.functions.GraftExtensions`. */
+  * via `spark.sql.extensions=graft.functions.GraftExtensions`. It
+  * carries the whole function surface ([[GraftFunctions.table]]) and
+  * the plan rules, so every session built with it, `newSession()`
+  * included, resolves the same functions. It does not carry the
+  * session confs `Graft.session` sets (UTC session time zone,
+  * `mapKeyDedupPolicy=LAST_WIN`, `parquet.nanosAsLong`, …): several
+  * functions need them for the reference's semantics. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = GraftFunctions.inject(e)
 }

@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType, NullType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit SimHash document fingerprinting.
@@ -63,17 +64,25 @@ object SimHashUtil {
   }
 }
 
-/** `simhash64(string) -> bigint` native expression (codegen). */
+/** `simhash64(string) -> bigint` native expression (codegen); an
+  * untyped NULL argument yields NULL. */
 case class SimHash64(child: Expression)
     extends UnaryExpression {
 
   override def dataType: DataType = LongType
 
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType.isInstanceOf[StringType] || child.dataType == NullType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"simhash64 takes STRING, got ${child.dataType.simpleString}")
+
   override protected def nullSafeEval(input: Any): Any =
     SimHashUtil.compute(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHashUtil.compute($c)")
+    if (child.dataType == NullType) Literal(null, dataType).genCode(ctx)
+    else defineCodeGen(ctx, ev, c => s"graft.functions.SimHashUtil.compute($c)")
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)

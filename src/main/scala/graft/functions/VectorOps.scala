@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, NullType}
 
 /** Static vector kernels called from both interpreted eval and
   * generated code (whole-stage codegen emits a plain static call, so
@@ -15,6 +16,20 @@ import org.apache.spark.sql.catalyst.util.ArrayData
   * across partitionings.
   */
 object VectorOps {
+
+  /** Whether a dense vector expression accepts an argument of type
+    * `t`: array<float>, array<double>, or an untyped NULL (which the
+    * null-intolerant expressions fold to NULL before any kernel runs). */
+  def isVector(t: DataType): Boolean = t match {
+    case ArrayType(FloatType | DoubleType, _) | NullType => true
+    case _ => false
+  }
+
+  /** Whether a dense vector argument has float elements. */
+  def isFloat(t: DataType): Boolean = t match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
 
   /** Sequential-fold dot product; each side is float or double typed
     * (the flags are codegen-time constants, so JIT folds the branch).
@@ -64,16 +79,17 @@ object VectorOps {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Sequential-fold cosine similarity over two float arrays. */
-  def cosineF(a: ArrayData, b: ArrayData): Double = {
+  /** Sequential-fold cosine similarity; each side is float or double
+    * typed, as in [[dot]]. */
+  def cosine(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0
     var na = 0.0
     var nb = 0.0
     var i = 0
     while (i < n) {
-      val x = a.getFloat(i).toDouble
-      val y = b.getFloat(i).toDouble
+      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
       dot += x * y
       na += x * x
       nb += y * y

@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedFunction}
 
 /** Minimal `private[sql]` bridge: re-plan an already-analyzed logical
   * plan in a FRESH QueryExecution.
@@ -86,4 +88,17 @@ object PlanExec {
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** Function-registry builder of a named scalar UDF: a `ScalaUDF` over
+    * the call's arguments, with the arity check Spark's own UDF
+    * registration applies (WRONG_NUM_ARGS at analysis). */
+  def scalaUdf(f: UserDefinedFunction): Seq[Expression] => ScalaUDF = {
+    val u = f.asInstanceOf[SparkUserDefinedFunction]
+    val arity = u.inputEncoders.size
+    children =>
+      if (children.length == arity)
+        org.apache.spark.sql.classic.UserDefinedFunctionUtils.toScalaUDF(u, children)
+      else throw org.apache.spark.sql.errors.QueryCompilationErrors
+        .wrongNumArgsError(u.name, Seq(arity), children.length)
+  }
 }

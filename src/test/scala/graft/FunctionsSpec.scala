@@ -489,8 +489,8 @@ class FunctionsSpec extends AnyFunSuite {
         nb += b(i).toDouble * b(i).toDouble
       }
       val expected = dot / (math.sqrt(na) * math.sqrt(nb))
-      val got = VectorOps.cosineF(
-        ArrayData.toArrayData(a), ArrayData.toArrayData(b))
+      val got = VectorOps.cosine(
+        ArrayData.toArrayData(a), ArrayData.toArrayData(b), true, true)
       assert(got == expected)
       assert(got >= -1.0000001 && got <= 1.0000001)
     }

@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.graft.PlanExec
+
 /** Counts Spark jobs per execution of a query (construction jobs and
   * execution jobs separately) and dumps a plan excerpt — the
   * measurement tool behind the r21 p27/p28 job-floor work (VERDICT #6
@@ -15,21 +17,12 @@ object JobsProbe {
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val spark = graft.engine.Graft.session("graft-jobs-probe", 8)
     spark.sparkContext.setLogLevel("ERROR")
-    @volatile var jobs = 0
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        synchronized { jobs += 1 }
-    })
     val fn = graft.SparkEntry.queries(name)
     for (r <- 1 to reps) {
-      jobs = 0
-      val df = fn(spark, sfDir)
-      Thread.sleep(300) // let queued listener events drain
-      val cJobs = jobs
-      df.queryExecution.toRdd.foreachPartition(it => while (it.hasNext) it.next())
-      Thread.sleep(300) // let queued listener events drain
-      println(s"JOBS|$name|rep=$r|construction=$cJobs|execution=${jobs - cJobs}|total=$jobs")
+      val (df, cJobs) = PlanExec.jobsStartedBy(spark)(fn(spark, sfDir))
+      val (_, eJobs) = PlanExec.jobsStartedBy(spark)(
+        df.queryExecution.toRdd.foreachPartition(it => while (it.hasNext) it.next()))
+      println(s"JOBS|$name|rep=$r|construction=$cJobs|execution=$eJobs|total=${cJobs + eJobs}")
       if (r == 1) {
         val p = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

@@ -2,7 +2,8 @@
 # Pre-commit gate: the minimum proof that HEAD is shippable.
 # Usage: tools/gate.sh [--full]
 #   default: Test/compile + benchmark compile + EntrySmoke + the
-#            dialect suites, MatchRecognizeSpec and ParquetSchemaSpec
+#            dialect suites, MatchRecognizeSpec, ParquetSchemaSpec and
+#            FunctionRegistrySpec
 #            (~1.7 min on 4 cores; the suites step ~50 s)
 #   --full : also runs the whole ScalaTest suite (~10 min on 4 cores)
 # Rounds 6 and 7 shipped a non-compiling HEAD; nothing in the round
@@ -31,10 +32,11 @@ echo "[gate] entry rows=$rows"
 
 # the SQL front end: dialect vectors, the translate() properties and
 # the MATCH_RECOGNIZE operator spec (its builders all run through
-# MatchRecognizeSql); and the driver-side parquet schema resolution
-# every table read goes through
+# MatchRecognizeSql); the driver-side parquet schema resolution
+# every table read goes through; and the one function registry every
+# session gets
 echo "[gate] dialect suites"
-sbt -batch "testOnly graft.DialectSpec graft.PropertiesSpec graft.MatchRecognizeSpec graft.ParquetSchemaSpec" > /tmp/gate_dialect.log 2>&1 || {
+sbt -batch "testOnly graft.DialectSpec graft.PropertiesSpec graft.MatchRecognizeSpec graft.ParquetSchemaSpec graft.FunctionRegistrySpec" > /tmp/gate_dialect.log 2>&1 || {
   echo "[gate] DIALECT SUITES FAILED"; grep -E '\*\*\* FAILED' /tmp/gate_dialect.log | head -20
   tail -20 /tmp/gate_dialect.log; exit 1; }
 

@@ -2,102 +2,34 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.graft.QueryProfile
 
-/** EXPLAIN ANALYZE analogue (reference `operator/
-  * ExplainAnalyzeOperator.java`, grammar `SqlBase.g4:142-143`): execute
-  * a query, then render the FINAL physical plan (post-AQE) with each
-  * operator's runtime SQLMetrics — rows produced, shuffle bytes,
-  * spill, peak memory, operator time — plus a per-query rollup line.
-  * Static plan snapshots (graft.Explain) show the intended shape; this
-  * shows what actually happened at run time, which is where
-  * spill/skew/misestimation problems surface first at scale.
+/** Writes the `EXPLAIN ANALYZE` profile ([[QueryProfile]]) of declared
+  * queries to `<outDir>/<name>.metrics.txt`: planning phase times, job
+  * counts, one line per stage and the post-AQE operator tree with its
+  * run-time metrics. Static plan snapshots (graft.Explain) show the
+  * intended shape; these show what ran.
   *
   * Usage: runMain graft.Analyze [sfDir] [outDir] [nameRegex]
-  * Default set: the bench headline queries (q1..q22 + composites).
-  * Artifacts land beside the static snapshots as
-  * plans/analyze/<name>.metrics.txt.
+  * Default set: the bench headline queries ([[SparkEntry.headline]]).
   */
 object Analyze {
-
-  private val Composites =
-    Set("p9_corpus_pipeline", "x1_yoy_growth", "x2_market_basket")
-
-  /** Rollup keys: SQLMetric identifiers that sum meaningfully across
-    * operators. */
-  private val RollupKeys = Seq(
-    "numOutputRows", "spillSize", "shuffleBytesWritten", "dataSize",
-    "localBytesRead", "remoteBytesRead")
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("plans/analyze")
-    val pat = args.lift(2).map(_.r)
+    val selected = args.lift(2).fold(
+      SparkEntry.queries.keys.filter(SparkEntry.headline).toSeq.sorted)(
+      SparkEntry.select("analyze", _))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = graft.engine.Graft.session("graft-analyze", cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    // Stress shape (r15 verdict Next #10): SPARK_GRAFT_STRESS_PARTITIONS
-    // re-runs the set with the shuffle fan-out of a much larger
-    // cluster/input, as standing evidence that the headline plans keep
-    // their shape (partial/final split, broadcast sides, pushdown) when
-    // the exchange count is two orders of magnitude higher than the
-    // local default. Per-operator spill/peak-memory land in the same
-    // metrics artifacts.
-    sys.env.get("SPARK_GRAFT_STRESS_PARTITIONS").foreach { p =>
-      spark.conf.set("spark.sql.shuffle.partitions", p)
-      System.err.println(s"[analyze] STRESS shape: shuffle.partitions=$p")
-    }
     Files.createDirectories(Paths.get(outDir))
-    val selected = (pat match {
-      case Some(r) =>
-        SparkEntry.queries.keys.filter(n => r.findFirstIn(n).isDefined)
-      case None =>
-        SparkEntry.queries.keys.filter(n =>
-          n.matches("q\\d+_.*") || Composites(n))
-    }).toSeq.sorted
-    if (selected.isEmpty) {
-      System.err.println(s"[analyze] no query matches '${args(2)}'")
-      spark.stop()
-      sys.exit(2)
-    }
     selected.foreach { name =>
       try {
-        val t0 = System.nanoTime()
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        // execute THIS DataFrame's QueryExecution (a noop write would
-        // plan a separate one, leaving these metrics empty) without
-        // materializing rows on the driver
-        df.queryExecution.toRdd.foreach(_ => ())
-        val wallS = (System.nanoTime() - t0) / 1e9
-        val sb = new StringBuilder
-        val totals = scala.collection.mutable.LinkedHashMap[String, Long]()
-        def walk(p: SparkPlan, depth: Int): Unit = {
-          val shown = p.metrics.toSeq.sortBy(_._1)
-            .filter(_._2.value > 0)
-            .map { case (k, m) => s"$k=${m.value}" }
-          sb.append("  " * depth).append(p.nodeName)
-          if (shown.nonEmpty) sb.append("  [").append(shown.mkString(", ")).append("]")
-          sb.append('\n')
-          p.metrics.foreach { case (k, m) =>
-            if (RollupKeys.contains(k) && m.value > 0)
-              totals.update(k, totals.getOrElse(k, 0L) + m.value)
-          }
-          p match {
-            case a: AdaptiveSparkPlanExec => walk(a.executedPlan, depth + 1)
-            case q: QueryStageExec => walk(q.plan, depth + 1)
-            case other => other.children.foreach(walk(_, depth + 1))
-          }
-        }
-        walk(df.queryExecution.executedPlan, 0)
-        val header =
-          f"== runtime metrics: $name%s  wall=$wallS%.3fs  sf=$sfDir%s%n" +
-            RollupKeys.flatMap(k => totals.get(k).map(v => s"total $k=$v"))
-              .mkString("== rollup: ", ", ", "\n")
-        Files.writeString(Paths.get(s"$outDir/$name.metrics.txt"), header + sb)
-        System.err.println(f"[analyze] $name%-28s wall=$wallS%.3fs " +
-          s"spill=${totals.getOrElse("spillSize", 0L)} " +
-          s"shuffleWrite=${totals.getOrElse("shuffleBytesWritten", 0L)}")
+        val profile = QueryProfile.of(spark)(SparkEntry.queries(name)(spark, sfDir))
+        Files.writeString(Paths.get(s"$outDir/$name.metrics.txt"),
+          s"== $name  sf=$sfDir\n$profile")
+        System.err.println(s"[analyze] $name")
       } catch {
         case e: Throwable =>
           System.err.println(s"[analyze] $name failed: ${e.getMessage}")

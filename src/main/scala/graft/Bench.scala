@@ -74,45 +74,54 @@ object Bench {
     }
   }
 
+  /** Per-query DuckDB medians from a `tools/duck_bench.py --save`
+    * baseline; empty when the file is missing or unreadable. With
+    * `sfDir` given, a baseline recorded for another sf dir is refused
+    * too: regenerated testdata or a different SF would fabricate
+    * ratios. */
+  private def duckBaseline(path: String, sfDir: Option[String]): Map[String, Double] = {
+    val f = new java.io.File(path)
+    if (!f.exists) Map.empty
+    else try {
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+      val sf = node.path("sf").asText()
+      if (sfDir.exists(_ != sf)) {
+        System.err.println(s"[bench] duck baseline $path is for $sf, " +
+          s"not ${sfDir.get} — ratios omitted")
+        Map.empty
+      } else {
+        val it = node.get("queries").fields()
+        val b = Map.newBuilder[String, Double]
+        while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
+        b.result()
+      }
+    } catch {
+      case e: Exception =>
+        System.err.println(s"[bench] duck baseline $path unreadable: ${e.getMessage}")
+        Map.empty
+    }
+  }
+
   private def materialize(df: DataFrame): Unit =
     df.queryExecution.toRdd.foreachPartition(it => while (it.hasNext) it.next())
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Local-iteration aid (driver passes no args): an optional regex
+    // restricts the run to the query names it matches in full.
+    val queries = SparkEntry.queries
+    val selected = args.headOption.fold(queries.keys.toSeq.sorted)(
+      SparkEntry.select("bench", _)).map(n => n -> queries(n))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = graft.engine.Graft.session("graft-bench", cpus)
     spark.sparkContext.setLogLevel("WARN")
 
-    // Local-iteration aid (driver passes no args): an optional regex
-    // restricts the run to matching query names. find() (substring
-    // match), not matches(): a partial pattern like "p14" silently
-    // benching nothing (nq:0) cost a judge run in r8.
-    val only = args.headOption.map(_.r)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
-    if (selected.isEmpty) {
-      System.err.println(s"[bench] no query matches '${args.head}' — " +
-        s"known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
-      spark.stop()
-      sys.exit(2)
-    }
-
     // Read the PRIOR comparator baseline before --save overwrites it:
     // the adjudication block below computes this window's comparator
     // drift against it (r21, VERDICT #2).
-    val duckPrev: Map[String, Double] = {
-      val f = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_DUCK_JSON",
-        s"tools/duck_baseline_${new java.io.File(sfDir).getName}.json"))
-      if (!f.exists) Map.empty
-      else try {
-        val q = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-          .get("queries")
-        val it = q.fields()
-        val b = Map.newBuilder[String, Double]
-        while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
-        b.result()
-      } catch { case _: Exception => Map.empty }
-    }
+    val duckJson = sys.env.getOrElse("SPARK_GRAFT_DUCK_JSON",
+      s"tools/duck_baseline_${new java.io.File(sfDir).getName}.json")
+    val duckPrev = duckBaseline(duckJson, None)
 
     // Same-window comparator pairing (r15 verdict Next #5): two rounds
     // were poisoned by host-load drift between the Spark bench and a
@@ -255,13 +264,9 @@ object Bench {
     // f-interpolator would emit "1,234" and break the JSON contract.
     def r3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val composites = Set("p9_corpus_pipeline", "x1_yoy_growth", "x2_market_basket")
-    val headline = timed.filter { case (k, _) =>
-      k.matches("q\\d+_.*") || composites(k)
-    }
+    val (headline, rest) = timed.partition { case (k, _) => SparkEntry.headline(k) }
     val family = "^([a-z]+).*".r
-    val groups = timed
-      .filterNot { case (k, _) => k.matches("q\\d+_.*") || composites(k) }
+    val groups = rest
       .groupBy { case (k, _) => k match { case family(p) => p } }
       .toSeq.sortBy(_._1)
       .map { case (p, xs) => p -> xs.map(_._2).sum }
@@ -274,33 +279,9 @@ object Bench {
     // --save records the DuckDB per-query medians for this SF; when a
     // matching baseline exists, the JSON carries spark/duck ratios so
     // ONE query drifting past the 2x bar is visible even while the
-    // suite total is comfortably under it. Stale-baseline guard: the
-    // recorded sf dir must equal this run's (regenerated testdata or a
-    // different SF silently mismatching would fabricate ratios).
-    val duckTimes: Map[String, Double] = {
-      val path = sys.env.getOrElse("SPARK_GRAFT_DUCK_JSON",
-        s"tools/duck_baseline_${new java.io.File(sfDir).getName}.json")
-      val f = new java.io.File(path)
-      if (!f.exists) Map.empty
-      else try {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-        if (node.get("sf").asText() != sfDir) {
-          System.err.println(s"[bench] duck baseline $path is for " +
-            s"${node.get("sf").asText()}, not $sfDir — ratios omitted")
-          Map.empty
-        } else {
-          val q = node.get("queries")
-          val it = q.fields()
-          val b = Map.newBuilder[String, Double]
-          while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
-          b.result()
-        }
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[bench] duck baseline unreadable: ${e.getMessage}")
-          Map.empty
-      }
-    }
+    // suite total is comfortably under it. The baseline must have been
+    // recorded for this run's sf dir.
+    val duckTimes = duckBaseline(duckJson, Some(sfDir))
     val common = timed.filter { case (k, _) => duckTimes.contains(k) }
     val ratioOf: ((String, Double)) => (String, Double) = {
       case (k, v) => k -> v / math.max(duckTimes(k), 1e-4)
@@ -333,10 +314,7 @@ object Bench {
     // needs a measurable baseline on both sides.
     val ratioWorst = common.filter(x => duckTimes(x._1) >= 0.05).map(ratioOf)
       .sortBy(-_._2).take(5)
-    val headlineRatios = common.filter { case (k, _) =>
-      k.matches("q\\d+_.*") || Set("p9_corpus_pipeline", "x1_yoy_growth",
-        "x2_market_basket")(k)
-    }.map(ratioOf)
+    val headlineRatios = common.filter { case (k, _) => SparkEntry.headline(k) }.map(ratioOf)
     def ratioJson: String = ratioTotal match {
       case None => ""
       case Some(rt) =>

@@ -36,18 +36,15 @@ object Isolate {
   }
 
   def main(args: Array[String]): Unit = {
-    val pattern = args.headOption.getOrElse("x5_channel_rollup").r
+    val selected = SparkEntry.select("isolate", args.headOption.getOrElse("x5_channel_rollup"))
     val samplesN = args.lift(1).map(_.toInt).getOrElse(5)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.engine.Graft.session("graft-isolate", cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    val selected = SparkEntry.queries.filter(e =>
-      pattern.pattern.matcher(e._1).matches()).toSeq.sortBy(_._1)
-    require(selected.nonEmpty, s"no query matches ${pattern.pattern}")
-
-    for ((name, fn) <- selected) {
+    for (name <- selected) {
+      val fn = SparkEntry.queries(name)
       // pre-optimize once and warm codegen once
       val opt = fn(spark, sfDir).queryExecution.optimizedPlan
       materialize(PlanExec.ofPreOptimized(spark, opt))

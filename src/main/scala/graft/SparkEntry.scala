@@ -36,4 +36,26 @@ object SparkEntry {
       Sketches.oracle ++ Multimodal.oracle ++ Analytics.oracle ++
       CatalogOps.oracle ++ Temporal.oracle ++ DialectQueries.oracle ++
       Decimals.oracle ++ MutationQueries.oracle
+
+  /** The bench headline set: the 22 TPC-H shapes and the composite
+    * pipelines. `Bench` reports these one by one and rolls the rest up
+    * per family; `Analyze` profiles them by default. */
+  def headline(name: String): Boolean =
+    name.matches("q\\d+_.*") ||
+      Set("p9_corpus_pipeline", "x1_yoy_growth", "x2_market_basket")(name)
+
+  /** The declared query names `pattern` matches in full, sorted, for the
+    * harness mains (`Bench`, `Analyze`, `Verify`, `Isolate`). An empty
+    * selection exits 2 and lists the known names: a run over nothing
+    * would read as a pass. */
+  def select(tool: String, pattern: String): Seq[String] = {
+    val known = queries.keys.toSeq.sorted
+    val selected = known.filter(_.matches(pattern))
+    if (selected.isEmpty) {
+      System.err.println(s"[$tool] no query matches '$pattern' in full — " +
+        s"known: ${known.mkString(", ")}")
+      sys.exit(2)
+    }
+    selected
+  }
 }

@@ -10,20 +10,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Local-iteration aid (driver passes 2 args): an optional regex
-    // restricts the dump to matching query names for fast targeted
-    // oracle checks. oracle_sql.json is filtered to match so
+    // restricts the dump to the query names it matches in full, for fast
+    // targeted oracle checks. oracle_sql.json is filtered to match so
     // tools/local_oracle.py only replays the selected queries.
-    val only = args.lift(2).map(_.r)
-    def keep(name: String): Boolean =
-      only.forall(_.pattern.matcher(name).matches())
+    val keep: String => Boolean = args.lift(2).fold((_: String) => true)(
+      SparkEntry.select("verify", _).toSet)
     val selected = SparkEntry.queries.filter(e => keep(e._1))
-    // An empty selection would write an empty dump whose replay passes
-    // vacuously: refuse it.
-    if (selected.isEmpty) {
-      System.err.println(s"[verify] no query matches '${args(2)}' — " +
-        s"known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
-      sys.exit(2)
-    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = graft.engine.Graft.session("graft-verify", cpus)
     spark.sparkContext.setLogLevel("WARN")

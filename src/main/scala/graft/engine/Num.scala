@@ -126,16 +126,10 @@ object Num {
     limbsToDecimal(hi, lo, scale)
   }
 
-  /** Window-frame variant: the two limb sums run as two primitive long
-    * aggregates inside the same WindowExec pass. */
-  def decSumOver(c: Column, scale: Int,
-                 w: org.apache.spark.sql.expressions.WindowSpec): Column = {
-    val (hi, lo) = sumLimbs(c)
-    limbsToDecimal(hi.over(w), lo.over(w), scale)
-  }
-
   /** Window-frame exact sum of a 2-dp double column via
-    * [[unscaled2dp]] — no per-row Decimal in the window buffer. */
+    * [[unscaled2dp]]: the two limb sums run as two primitive long
+    * aggregates inside the same WindowExec pass, with no per-row Decimal
+    * in the window buffer. */
   def decSumOver2dp(c: Column,
                     w: org.apache.spark.sql.expressions.WindowSpec): Column = {
     val (hi, lo) = sumLimbsLong(unscaled2dp(c))

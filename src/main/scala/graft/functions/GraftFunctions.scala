@@ -316,14 +316,6 @@ object GraftFunctions {
 
   // ------------------------------------------------------ implementations
 
-  /** Porter stemmer, original 1980 rules — see [[PorterStemmer]].
-    * The reference's WordStemFunction wraps Snowball's EnglishStemmer
-    * (Porter2), whose rules diverge on some words (e.g. Porter2 stems
-    * "faithfulness"→"faith" where Porter1 yields "faithful"), and also
-    * accepts a language argument; this implementation is English-only
-    * Porter1, documented as such. */
-  def wordStem(s: String): String = PorterStemmer.stem(s)
-
   private val stopProfiles: Map[String, Set[String]] = Map(
     "en" -> Set("the", "and", "of", "to", "in", "is", "that", "it", "for", "with"),
     "de" -> Set("der", "die", "das", "und", "ist", "nicht", "ein", "zu", "mit", "auf"),

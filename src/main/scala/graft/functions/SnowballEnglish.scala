@@ -5,9 +5,9 @@ package graft.functions
   * english/stemmer.html) — the algorithm behind the reference's
   * `word_stem` (`operator/scalar/WordStemFunction.java` binds Lucene's
   * generated EnglishStemmer for the `'en'` / default overloads;
-  * vectors in `TestWordStemFunction.java`). [[PorterStemmer]] remains
-  * the classic Porter (1980) kernel; this is its successor with the
-  * revised suffix tables, R1/R2 regions and exception lists.
+  * vectors in `TestWordStemFunction.java`): the successor of the
+  * classic Porter (1980) algorithm, with revised suffix tables, R1/R2
+  * regions and exception lists.
   *
   * Input is assumed lowercase (like the reference — no case folding).
   */

@@ -277,9 +277,9 @@ object Analytics {
     // is sid for EVERY row (null branch falls through to the coalesce
     // fallback), references event_type so the pruned schema stays
     // wide, and survives the optimizer (arithmetic guards like
-    // sid + 0*length(event_type) get absorbed; GuardProbe measured
-    // the survivors). X4NullGuardSpec pins both properties on a
-    // NULL-bearing fixture.
+    // sid + 0*length(event_type) get absorbed; `EXPLAIN (TYPE
+    // LOGICAL)` shows the optimized aggregate). X4NullGuardSpec pins
+    // both properties on a NULL-bearing fixture.
     val nSess = sess.groupBy(col("user_id"))
       .agg(max(coalesce(when(col("event_type").isNotNull, col("sid")),
           col("sid")))

@@ -1,6 +1,10 @@
 package graft.sqlcompat
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.QueryProfile
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType, StructField, StructType}
 
 /** Statement-level front-end (reference grammar `SqlBase.g4:166-173`
   * SET SESSION / RESET SESSION): session properties map onto Spark
@@ -44,6 +48,10 @@ object Statements {
   // FORMAT ...), which Spark's parser cannot read
   private val explainOptsRe =
     "(?is)^\\s*EXPLAIN\\s*\\(([^()]*)\\)\\s*(.+)$".r
+  // EXPLAIN ANALYZE [VERBOSE] (grammar `SqlBase.g4:142-143`), which
+  // Spark's parser rejects
+  private val explainAnalyzeRe =
+    "(?is)^\\s*EXPLAIN\\s+ANALYZE\\s+(?:VERBOSE\\s+)?(.+)$".r
 
   private def preparedKey(name: String) = s"graft.prepared.$name"
 
@@ -86,6 +94,12 @@ object Statements {
     * construction, no global registry. */
   def execute(s: SparkSession, sql: String): DataFrame = sql match {
     case explainOptsRe(opts, body) => explainWithOptions(s, opts, body)
+    // EXPLAIN ANALYZE (reference `operator/ExplainAnalyzeOperator.java`)
+    // executes the query and returns its run-time profile as one
+    // `Query Plan` row. VERBOSE renders the same text.
+    case explainAnalyzeRe(body) =>
+      oneRow(s, "Query Plan",
+        QueryProfile.of(s)(s.sql(Dialect.translate(body))), StringType)
     case prepareRe(name, body) =>
       s.conf.set(preparedKey(name), body.trim)
       s.emptyDataFrame
@@ -303,9 +317,6 @@ object Statements {
     * scope). */
   private def explainWithOptions(s: SparkSession, opts: String,
       body: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
     val tpe = "(?i)\\bTYPE\\s+(VALIDATE|LOGICAL|DISTRIBUTED|IO)".r
       .findFirstMatchIn(opts).map(_.group(1).toUpperCase)
       .getOrElse {
@@ -316,15 +327,12 @@ object Statements {
       }
     // s.sql analyzes eagerly, so constructing the frame IS validation
     val df = s.sql(Dialect.translate(body))
-    def one(col: String, v: Any, t: org.apache.spark.sql.types.DataType) =
-      s.createDataFrame(Seq(Row(v)).asJava,
-        StructType(Seq(StructField(col, t, nullable = false))))
     tpe match {
-      case "VALIDATE" => one("Valid", true, BooleanType)
+      case "VALIDATE" => oneRow(s, "Valid", true, BooleanType)
       case "LOGICAL" =>
-        one("Query Plan", df.queryExecution.optimizedPlan.toString, StringType)
+        oneRow(s, "Query Plan", df.queryExecution.optimizedPlan.toString, StringType)
       case "DISTRIBUTED" =>
-        one("Query Plan", df.queryExecution.executedPlan.toString, StringType)
+        oneRow(s, "Query Plan", df.queryExecution.executedPlan.toString, StringType)
       case "IO" =>
         val tables = df.queryExecution.analyzed.collect {
           case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
@@ -343,9 +351,14 @@ object Statements {
         val json = tables.sorted
           .map(t => s"""{"table":{"table":"${t.replace("\"", "\\\"")}"}}""")
           .mkString("""{"inputTableColumnInfos":[""", ",", "]}")
-        one("Query Plan", json, StringType)
+        oneRow(s, "Query Plan", json, StringType)
     }
   }
+
+  /** A one-row, one-column result, the shape of the EXPLAIN forms. */
+  private def oneRow(s: SparkSession, col: String, v: Any, t: DataType): DataFrame =
+    s.createDataFrame(Seq(Row(v)).asJava,
+      StructType(Seq(StructField(col, t, nullable = false))))
 
   private def showStats(s: SparkSession, tbl: String): DataFrame = {
     import s.implicits._

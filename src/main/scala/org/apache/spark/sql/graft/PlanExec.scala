@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.scheduler.SparkListener
 import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
@@ -42,24 +43,29 @@ object PlanExec {
       org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(qe.analyzed.schema))
   }
 
-  /** Run `body` and count the Spark jobs it started. The listener bus is
-    * flushed before the listener is added (so an earlier job's queued
-    * start event is not charged to `body`) and again before the count
-    * is read (so a job `body` started is not missed). */
-  def jobsStartedBy[T](spark: SparkSession)(body: => T): (T, Int) = {
+  /** Run `body` with `listener` on the context's listener bus. The bus
+    * is flushed before the listener is added (so an earlier job's queued
+    * events are not charged to `body`) and again before it is removed
+    * (so no event of a job `body` started is missed). */
+  def listening[T](spark: SparkSession, listener: SparkListener)(body: => T): T = {
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     sc.listenerBus.waitUntilEmpty()
     sc.addSparkListener(listener)
     try {
       val result = body
       sc.listenerBus.waitUntilEmpty()
-      (result, jobs.get)
+      result
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Run `body` and count the Spark jobs it started. */
+  def jobsStartedBy[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val result = listening(spark, new SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })(body)
+    (result, jobs.get)
   }
 
   /** True when `plan` (subqueries included) reads a locally checkpointed

@@ -611,6 +611,30 @@ class DialectSpec extends AnyFunSuite with BeforeAndAfterAll {
       "EXPLAIN (TYPE BOGUS) SELECT 1"))
   }
 
+  test("EXPLAIN ANALYZE [VERBOSE] executes the query and reports its own stages and operator metrics (ExplainAnalyzeOperator.java)") {
+    import graft.sqlcompat.Statements
+    val q = "SELECT l_returnflag, sum(l_quantity) AS qty FROM lineitem GROUP BY l_returnflag"
+    val stageRe = "(?m)^stage (\\d+): tasks=\\d+ span=\\d+ ms".r
+    def profile(sql: String): (String, Seq[Int]) = {
+      val out = Statements.execute(spark, sql)
+      assert(out.columns.toSeq == Seq("Query Plan"))
+      val rows = out.collect()
+      assert(rows.length == 1)
+      val text = rows(0).getString(0)
+      (text, stageRe.findAllMatchIn(text).map(_.group(1).toInt).toSeq)
+    }
+    val (text, stages) = profile(s"EXPLAIN ANALYZE $q")
+    assert(stages.nonEmpty, text)
+    val scanRows = "(?m)^\\s*Scan parquet.*\\bnumOutputRows=(\\d+)".r
+      .findFirstMatchIn(text).map(_.group(1).toLong)
+    val count = spark.sql("SELECT count(*) FROM lineitem").head().getLong(0)
+    assert(scanRows.contains(count), text)
+    // VERBOSE is accepted; a second profile in the same session shows
+    // only the stages its own execution ran
+    val (again, stages2) = profile(s"EXPLAIN ANALYZE VERBOSE $q")
+    assert(stages2.size == stages.size && stages2.min > stages.max, again)
+  }
+
   test("DESCRIBE INPUT/OUTPUT, SHOW FUNCTIONS, SHOW CREATE TABLE (reference testDescribeInput/Output)") {
     import graft.sqlcompat.Statements
     spark.sql(

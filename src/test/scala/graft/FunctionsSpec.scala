@@ -20,29 +20,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(!GraftFunctions.luhnCheck("12a4"))
   }
 
-  // ------------------------------------------------------------- stem
-  test("word_stem is the full Porter algorithm (paper vectors)") {
-    // step 1 mechanics
-    assert(GraftFunctions.wordStem("caresses") == "caress")
-    assert(GraftFunctions.wordStem("ponies") == "poni")
-    assert(GraftFunctions.wordStem("cats") == "cat")
-    assert(GraftFunctions.wordStem("feed") == "feed")
-    assert(GraftFunctions.wordStem("agreed") == "agre")
-    assert(GraftFunctions.wordStem("motoring") == "motor")
-    assert(GraftFunctions.wordStem("hopping") == "hop") // double-consonant undouble
-    assert(GraftFunctions.wordStem("filing") == "file") // cvc restores the e
-    assert(GraftFunctions.wordStem("happy") == "happi")
-    // steps 2-5 chains
-    assert(GraftFunctions.wordStem("relational") == "relat")
-    assert(GraftFunctions.wordStem("conditional") == "condit")
-    assert(GraftFunctions.wordStem("triplicate") == "triplic")
-    assert(GraftFunctions.wordStem("dependent") == "depend")
-    assert(GraftFunctions.wordStem("adjustable") == "adjust")
-    assert(GraftFunctions.wordStem("effective") == "effect")
-    assert(GraftFunctions.wordStem("controller") == "control") // -er then -ll
-    assert(GraftFunctions.wordStem("class") == "class")
-  }
-
   // ----------------------------------------------------------- wilson
   test("wilson interval brackets the sample proportion") {
     for (pos <- Seq(0L, 1L, 5L, 10L, 19L, 20L)) {

@@ -1,10 +1,11 @@
 #!/usr/bin/env bash
 # Pre-commit gate: the minimum proof that HEAD is shippable.
 # Usage: tools/gate.sh [--full]
-#   default: Test/compile + benchmark compile + EntrySmoke + the
-#            dialect suites, MatchRecognizeSpec, ParquetSchemaSpec and
+#   default: Test/compile + benchmark compile + EntrySmoke + one
+#            graft.Analyze profile + the dialect suites,
+#            MatchRecognizeSpec, ParquetSchemaSpec and
 #            FunctionRegistrySpec
-#            (~1.7 min on 4 cores; the suites step ~50 s)
+#            (~2 min on 4 cores; the suites step ~50 s)
 #   --full : also runs the whole ScalaTest suite (~10 min on 4 cores)
 # Rounds 6 and 7 shipped a non-compiling HEAD; nothing in the round
 # protocol ran the compiler before snapshot. This script is that gate —
@@ -29,6 +30,20 @@ if [ "${rows:-0}" -le 0 ]; then
   echo "[gate] ENTRY SMOKE FAILED (rows=$rows)"; exit 1
 fi
 echo "[gate] entry rows=$rows"
+
+# graft.Analyze writes the EXPLAIN ANALYZE profile (QueryProfile) to a
+# file; no suite runs that main, so check that its artifact carries
+# stage lines and the scan's row count
+echo "[gate] Analyze"
+rm -rf /tmp/gate_analyze
+sbt -batch "runMain graft.Analyze /root/testdata/sf0.001 /tmp/gate_analyze q1_pricing_summary" \
+  > /tmp/gate_analyze.log 2>&1 || {
+  echo "[gate] ANALYZE FAILED"; tail -20 /tmp/gate_analyze.log; exit 1; }
+profile=/tmp/gate_analyze/q1_pricing_summary.metrics.txt
+if ! grep -qE '^stage [0-9]+: tasks=' "$profile" 2>/dev/null ||
+   ! grep -qE 'Scan parquet.*numOutputRows=' "$profile"; then
+  echo "[gate] ANALYZE PROFILE INCOMPLETE"; cat "$profile" 2>/dev/null; tail -20 /tmp/gate_analyze.log; exit 1
+fi
 
 # the SQL front end: dialect vectors, the translate() properties and
 # the MATCH_RECOGNIZE operator spec (its builders all run through

@@ -20,7 +20,7 @@ object Analyze {
     val selected = args.lift(2).fold(
       SparkEntry.queries.keys.filter(SparkEntry.headline).toSeq.sorted)(
       SparkEntry.select("analyze", _))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = SparkEntry.cpus
     val spark = graft.engine.Graft.session("graft-analyze", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))

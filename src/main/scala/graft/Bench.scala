@@ -112,7 +112,7 @@ object Bench {
     val queries = SparkEntry.queries
     val selected = args.headOption.fold(queries.keys.toSeq.sorted)(
       SparkEntry.select("bench", _)).map(n => n -> queries(n))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = SparkEntry.cpus
     val spark = graft.engine.Graft.session("graft-bench", cpus)
     spark.sparkContext.setLogLevel("WARN")
 

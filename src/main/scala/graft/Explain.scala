@@ -6,7 +6,9 @@ import java.nio.file.{Files, Paths}
   * reference's golden plan tests, `testing/trino-tests/.../tpch/q01.plan
   * .txt`): dumps `explain("formatted")` for every SparkEntry query so
   * plan regressions (broadcast vs shuffle flips, lost filter pushdown,
-  * lost WindowGroupLimit) show up in review diffs.
+  * lost WindowGroupLimit) show up in review diffs. The session has a
+  * fixed 4 local cores, not `SparkEntry.cpus`: the snapshots must not
+  * depend on the host they are regenerated on.
   *
   * Usage: runMain graft.Explain [sfDir] [outDir]
   */

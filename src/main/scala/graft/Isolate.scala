@@ -39,7 +39,7 @@ object Isolate {
     val selected = SparkEntry.select("isolate", args.headOption.getOrElse("x5_channel_rollup"))
     val samplesN = args.lift(1).map(_.toInt).getOrElse(5)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = SparkEntry.cpus
     val spark = graft.engine.Graft.session("graft-isolate", cpus)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -37,6 +37,11 @@ object SparkEntry {
       CatalogOps.oracle ++ Temporal.oracle ++ DialectQueries.oracle ++
       Decimals.oracle ++ MutationQueries.oracle
 
+  /** Local cores for the sessions of the harness mains (`Bench`,
+    * `Verify`, `Analyze`, `Isolate`): `SPARK_GRAFT_CPUS`, default 4.
+    * `Explain` keeps a fixed 4 so its snapshots do not depend on it. */
+  lazy val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
   /** The bench headline set: the 22 TPC-H shapes and the composite
     * pipelines. `Bench` reports these one by one and rolls the rest up
     * per family; `Analyze` profiles them by default. */

@@ -16,7 +16,7 @@ object Verify {
     val keep: String => Boolean = args.lift(2).fold((_: String) => true)(
       SparkEntry.select("verify", _).toSet)
     val selected = SparkEntry.queries.filter(e => keep(e._1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = SparkEntry.cpus
     val spark = graft.engine.Graft.session("graft-verify", cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -143,6 +143,8 @@ object GraftFunctions {
       if (c.length > 1) TDigestAgg(c.head, weight = Some(c(1)))
       else TDigestAgg(c.head))
     t.fn("trimmed_mean", c => TrimmedMean(c(0), c(1), c(2)))
+    // the UNNEST relation's generator; Dialect.translate emits the calls
+    t.fn("graft_unnest", Unnest.build)
     t.fn("approx_most_frequent", c => ApproxMostFrequentAgg(c(0), c(1)))
     t.fn("numeric_histogram", c => NumericHistogramAgg(c(0), c(1)))
     t.fn("map_union", c => MapUnionAgg(c.head))

@@ -179,13 +179,19 @@ object DialectQueries {
       |  'U' AS cls, run_pos, run_min, run_max, first_eid, value
       |FROM m WHERE n_run >= 2""".stripMargin
 
-  /** SQL-text UNNEST WITH ORDINALITY (reference `SqlBase.g4:331-333`) —
-    * the relation-level construct the function-rename dialect pass
-    * cannot express, lowered by `sqlcompat/RelationSql` onto
-    * `Ops.unnestWithOrdinality`. The select list and WHERE fragment run
-    * through the dialect pass too (a reference user's spellings work
-    * inside them). The oracle runs DuckDB's native UNNEST WITH
-    * ORDINALITY equivalents. */
+  /** `sql` (reference dialect) through `Dialect.translate` over a temp
+    * view of `table` alone: the relation-level builders below read one
+    * table each, so they register it rather than the whole catalog. */
+  private def overView(s: SparkSession, dir: String, sql: String, table: String): DataFrame = {
+    Graft.load(s, dir, table).createOrReplaceTempView(table)
+    s.sql(Dialect.translate(sql))
+  }
+
+  /** SQL-text UNNEST WITH ORDINALITY (reference `SqlBase.g4:331-333`),
+    * lowered by `Dialect.translate` onto one `LATERAL VIEW` generator
+    * (1-based BIGINT ordinality). The select list and WHERE run through
+    * the same translation (`strpos` → `instr`). The oracle runs DuckDB's
+    * UNNEST with generate_subscripts. */
   val dx5Reference: String =
     """SELECT doc_id, term, ord, strpos(term, 'e') AS e_pos
       |FROM documents
@@ -193,8 +199,7 @@ object DialectQueries {
       |WHERE doc_id < 40""".stripMargin
 
   def dx5(s: SparkSession, dir: String): DataFrame =
-    graft.sqlcompat.RelationSql.translate(
-      dx5Reference, name => Graft.load(s, dir, name))
+    overView(s, dir, dx5Reference, "documents")
 
   val dx5Sql: String =
     """SELECT doc_id,
@@ -204,7 +209,8 @@ object DialectQueries {
       |FROM documents WHERE doc_id < 40""".stripMargin
 
   /** SQL-text TABLESAMPLE (reference `SqlBase.g4:331-333`
-    * sampledRelation) lowered onto `DataFrame.sample`. Engines use
+    * sampledRelation) lowered onto Spark's `TABLESAMPLE (p PERCENT)`
+    * with a fixed seed. Engines use
     * different RNGs, so like smp1 this is a rows-only gate entry (no
     * oracle); the binomial-bounds assertion lives in the test suite. */
   val dx6Reference: String =
@@ -212,8 +218,7 @@ object DialectQueries {
       |FROM orders TABLESAMPLE BERNOULLI(15)""".stripMargin
 
   def dx6(s: SparkSession, dir: String): DataFrame =
-    graft.sqlcompat.RelationSql.translate(
-      dx6Reference, name => Graft.load(s, dir, name))
+    overView(s, dir, dx6Reference, "orders")
 
   /** String comparisons in DEFINE (r13 DefineParser widening): the
     * funnel-shaped MATCH_RECOGNIZE a reference user actually writes —
@@ -399,9 +404,9 @@ object DialectQueries {
 
   /** SQL-text `ORDER BY … FETCH FIRST n ROWS WITH TIES` (reference
     * grammar `SqlBase.g4` queryNoWith / `ImplementLimitWithTies.java`)
-    * lowered onto `Ops.limitWithTies` — rank-filter form, planned as
-    * WindowGroupLimit, so each partition pre-prunes to ~n rows before
-    * the exchange. The sort key (o_orderdate) is deliberately
+    * lowered by `Dialect.translate` onto a rank filter in pipe syntax,
+    * planned as WindowGroupLimit, so each partition pre-prunes to ~n
+    * rows before the exchange. The sort key (o_orderdate) is deliberately
     * tie-heavy: the result keeps EVERY order on the boundary date, so
     * the clause's semantics (not just top-n) are what the oracle's
     * rank()<=n rewrite checks (the comparator has no WITH TIES). */
@@ -413,8 +418,7 @@ object DialectQueries {
       |FETCH FIRST 50 ROWS WITH TIES""".stripMargin
 
   def dx11(s: SparkSession, dir: String): DataFrame =
-    graft.sqlcompat.RelationSql.translate(
-      dx11Reference, name => Graft.load(s, dir, name))
+    overView(s, dir, dx11Reference, "orders")
 
   val dx11Sql: String =
     """SELECT o_orderkey, o_custkey, o_orderdate FROM (
@@ -426,8 +430,8 @@ object DialectQueries {
   /** Multi-argument UNNEST (reference `UnnestOperator.java` /
     * `SqlBase.g4` UNNEST relation primary): arguments zip positionally
     * and shorter arrays pad with nulls. Spark's `arrays_zip` has
-    * exactly those pad semantics, so the lowering is
-    * zip → posexplode → projection; the oracle's multi-unnest SELECT
+    * exactly those pad semantics, so the lowering is one generator over
+    * the zipped array; the oracle's multi-unnest SELECT
     * zips identically. Documents have varying word counts, so padding
     * is exercised in both directions against the fixed 3-element
     * array. */
@@ -438,8 +442,7 @@ object DialectQueries {
       |WHERE doc_id < 20""".stripMargin
 
   def dx12(s: SparkSession, dir: String): DataFrame =
-    graft.sqlcompat.RelationSql.translate(
-      dx12Reference, name => Graft.load(s, dir, name))
+    overView(s, dir, dx12Reference, "documents")
 
   val dx12Sql: String =
     """SELECT doc_id, unnest(string_split(text, ' ')) AS w,
@@ -459,8 +462,7 @@ object DialectQueries {
       |WHERE doc_id < 40""".stripMargin
 
   def dx13(s: SparkSession, dir: String): DataFrame =
-    graft.sqlcompat.RelationSql.translate(
-      dx13Reference, name => Graft.load(s, dir, name))
+    overView(s, dir, dx13Reference, "documents")
 
   val dx13Sql: String =
     """WITH f AS (
@@ -837,8 +839,7 @@ object DialectQueries {
   /** r14 promotion: the reference's join-relation UNNEST
     * (`CROSS JOIN UNNEST(expr) AS t(c)`) inside GENERAL SQL — with a
     * WHERE, GROUP BY and HAVING around it — lowered onto Spark's
-    * LATERAL VIEW explode by the dialect layer (the standalone
-    * relation form stays with RelationSql/dx5). Scale shape: the
+    * LATERAL VIEW explode by the dialect layer. Scale shape: the
     * generator is narrow (no shuffle); only the word-count aggregate
     * exchanges. */
   val dx21Reference: String =

@@ -6,10 +6,13 @@ import SqlLex.{LitIdx, LitP, closeParen, cre, openParen, repAll, splitTopLevel}
 
 /** Reference-dialect → Spark SQL translation (SURVEY §7.1 `sqlcompat`):
   * lets a user of the reference engine run their existing SQL against
-  * this engine. Covers the mechanical dialect gaps — function renames,
-  * cast-type spellings, and operator sugar — conservatively: only
-  * whole-word function-name rewrites outside string literals, so
-  * anything already valid Spark SQL passes through untouched.
+  * this engine. The input is the reference dialect, not Spark SQL: the
+  * function renames rewrite calls that Spark also spells, with the
+  * reference's meaning (`split(`, `substr(`, `greatest(`, `repeat(`,
+  * `format(` and others), so a valid Spark query can change meaning
+  * here. Covers function renames, cast-type spellings, operator sugar
+  * and the relation-level forms (UNNEST, TABLESAMPLE, OFFSET / FETCH);
+  * every rewrite matches whole words outside string literals.
   *
   * Rename table sources: reference function inventory in
   * `metadata/SystemFunctionBundle.java:350` vs Spark's
@@ -536,106 +539,6 @@ object Dialect {
     out
   }
 
-  /** Collection-constructor sugar (grammar `SqlBase.g4` primaryExpression
-    * ARRAY/ROW/MAP rules): `ARRAY[e1, …]` → `array(e1, …)`,
-    * `ROW(e1, …)` → `struct(e1, …)` (Spark compares structs
-    * lexicographically regardless of field names, matching row
-    * comparison semantics), and the two-array-literal map constructor
-    * `MAP(ARRAY[…], ARRAY[…])` → `map_from_arrays(array(…), array(…))`.
-    *
-    * ARRAY brackets nest and may hold string literals (`ARRAY['a',
-    * 'b']`), which are bracket-free sentinels on canonical text, so one
-    * bracket-matching scan does it (a stack distinguishes ARRAY-literal
-    * `[` from subscript `[`, which subscriptPass lowers onto
-    * element_at). `CAST(x AS ROW(…))` targets translate to Spark
-    * `STRUCT<…>` spellings via rowTypePass/sparkType (r14; the
-    * pre-r14 posture was fail-loud). */
-  /** General quantified comparison predicates `x op ALL|ANY|SOME
-    * (subquery)` (grammar `SqlBase.g4` comparisonQuantifier). Spark
-    * has no quantified syntax, so each form lowers onto a three-valued CASE
-    * over counting scalar subqueries, reproducing SQL:2016 §8.9
-    * exactly (replayed against the reference's own 72
-    * quantified-comparison corner-case vectors in
-    * ReferenceSqlVectorsSpec):
-    *
-    *   x op ALL (S) → TRUE when S is empty; NULL when x is NULL;
-    *     FALSE when any non-null s fails `x op s`; NULL when no
-    *     failure but S contains a NULL; else TRUE.
-    *   x op ANY (S) → FALSE when S is empty; NULL when x is NULL;
-    *     TRUE when any non-null s satisfies; NULL when no success but
-    *     S contains a NULL; else FALSE.
-    *
-    * The subquery text is repeated across the CASE arms —
-    * Catalyst's MergeScalarSubqueries/ReuseSubquery collapse the
-    * duplicates, and uncorrelated forms execute as one-row scalar
-    * subqueries, so the plan cost is one evaluation of S. The LHS
-    * operand is captured textually: a parenthesized group (with an
-    * optional function head, e.g. `CAST(...)`) or one
-    * identifier/literal/number token. Anything else is left
-    * untranslated for Spark to reject loudly. */
-  /** `CROSS JOIN UNNEST(e) [AS] a(c…)` / `LEFT JOIN UNNEST(e) [AS]
-    * a(c…) ON TRUE` inside GENERAL SQL (the reference's join-relation
-    * unnest, grammar `SqlBase.g4` relation UNNEST; the relation-level
-    * front-end RelationSql covers the standalone form) — lowered onto
-    * Spark's LATERAL VIEW [OUTER] explode. Single collection argument
-    * only, and 1 output column (array) or 2 (map → key, value);
-    * multi-argument zip and WITH ORDINALITY stay with RelationSql —
-    * here they pass through untranslated for Spark to reject loudly. */
-  private def unnestJoinPass(canon0: String): String = {
-    val re = cre("(?i)\\b(CROSS|LEFT(?:\\s+OUTER)?)\\s+JOIN\\s+UNNEST\\s*\\(")
-    var out = canon0
-    var guard = 0
-    var m = re.findFirstMatchIn(out)
-    while (m.isDefined && guard < 32) {
-      guard += 1
-      val mm = m.get
-      val outer = mm.group(1).toUpperCase.startsWith("LEFT")
-      val close = closeParen(out, mm.end - 1)
-      val args = out.substring(mm.end, close)
-      val topComma = splitTopLevel(args, ',').length > 1
-      val tail = out.substring(close + 1)
-      val aliasRe = cre("(?is)^\\s*(?:AS\\s+)?([A-Za-z_]\\w*)\\s*\\(([^)]*)\\)")
-      val am = aliasRe.findFirstMatchIn(tail)
-      val ordinality = cre("(?is)^\\s*WITH\\s+ORDINALITY").findFirstIn(tail).isDefined
-      // unsupported form (multi-arg zip, WITH ORDINALITY, no alias):
-      // stop rewriting — the text passes through and Spark rejects it
-      // loudly, same fail-loud posture as the rest of the dialect
-      if (topComma || ordinality) return out
-      // alias forms: `AS a(c1[, c2])`, a bare `[AS] a` (columns
-      // synthesized), or nothing at all (alias and column synthesized —
-      // SELECT * consumers see the value under a generated name)
-      val bareAliasRe =
-        cre("(?is)^\\s*(?:AS\\s+)?([A-Za-z_]\\w*)(?!\\s*\\()(?![\\w])")
-      val keywordish = Set("on", "where", "group", "order", "limit", "join",
-        "inner", "left", "right", "full", "cross", "union", "having", "lateral")
-      val (alias, cols, aliasEnd) = am match {
-        case Some(a) =>
-          val cs = a.group(2).split(",").map(_.trim).filter(_.nonEmpty)
-          require(cs.length >= 1 && cs.length <= 2,
-            s"UNNEST join supports 1 (array) or 2 (map) output columns, got ${cs.length}")
-          (a.group(1), cs.toSeq, a.end)
-        case None =>
-          bareAliasRe.findFirstMatchIn(tail) match {
-            case Some(b) if !keywordish(b.group(1).toLowerCase) =>
-              (b.group(1), Seq("__uc"), b.end)
-            case _ => ("__unnest", Seq("__uc"), 0)
-          }
-      }
-      var rest = tail.substring(aliasEnd)
-      if (outer) {
-        val onRe = cre("(?is)^\\s*ON\\s+TRUE")
-        val om = onRe.findFirstIn(rest)
-        require(om.isDefined, "LEFT JOIN UNNEST requires ON TRUE")
-        rest = rest.substring(om.get.length)
-      }
-      val lateral = s" LATERAL VIEW ${if (outer) "OUTER " else ""}explode($args) " +
-        s"$alias AS ${cols.mkString(", ")}"
-      out = out.substring(0, mm.start) + lateral + rest
-      m = re.findFirstMatchIn(out)
-    }
-    out
-  }
-
   /** Projected (value-context) IN-subquery: Spark plans `x IN (SELECT
     * …)` in a SELECT list as an ExistenceJoin, whose output is
     * 2-VALUED — rows that should yield NULL (no match but the subquery
@@ -692,6 +595,29 @@ object Dialect {
   private def operandChar(c: Char): Boolean =
     c.isLetterOrDigit || c == '_' || c == '.' || SqlLex.isSentinel(c)
 
+  /** General quantified comparison predicates `x op ALL|ANY|SOME
+    * (subquery)` (grammar `SqlBase.g4` comparisonQuantifier). Spark
+    * has no quantified syntax, so each form lowers onto a three-valued CASE
+    * over counting scalar subqueries, reproducing SQL:2016 §8.9
+    * exactly (replayed against the reference's own 72
+    * quantified-comparison corner-case vectors in
+    * ReferenceSqlVectorsSpec):
+    *
+    *   x op ALL (S) → TRUE when S is empty; NULL when x is NULL;
+    *     FALSE when any non-null s fails `x op s`; NULL when no
+    *     failure but S contains a NULL; else TRUE.
+    *   x op ANY (S) → FALSE when S is empty; NULL when x is NULL;
+    *     TRUE when any non-null s satisfies; NULL when no success but
+    *     S contains a NULL; else FALSE.
+    *
+    * The subquery text is repeated across the CASE arms —
+    * Catalyst's MergeScalarSubqueries/ReuseSubquery collapse the
+    * duplicates, and uncorrelated forms execute as one-row scalar
+    * subqueries, so the plan cost is one evaluation of S. The LHS
+    * operand is captured textually: a parenthesized group (with an
+    * optional function head, e.g. `CAST(...)`) or one
+    * identifier/literal/number token. Anything else is left
+    * untranslated for Spark to reject loudly. */
   private def quantifiedPass(canon0: String): String = {
     val re = cre("(?i)(<=|>=|<>|!=|=|<|>)\\s*(ALL|ANY|SOME)\\s*\\(")
     var out = canon0
@@ -977,60 +903,6 @@ object Dialect {
       out = out.substring(0, typeStart) +
         sparkType(out.substring(typeStart, close + 1)) +
         out.substring(close + 1)
-      m = re.findFirstMatchIn(out)
-    }
-    out
-  }
-
-  /** Standalone relation-position `FROM UNNEST(array)` (one argument,
-    * no ordinality — `SqlBase.g4` relationPrimary UNNEST) → Spark's
-    * `explode` table-valued function, which has exactly that shape
-    * (optional `AS t(c)` alias rides along untouched). Multi-argument
-    * zip, maps, and WITH ORDINALITY stay with RelationSql.translate's
-    * full grammar; the text passes through untouched for Spark to
-    * reject loudly. */
-  private def unnestRelationPass(canon0: String): String = {
-    val re = cre("(?i)\\bFROM\\s+(UNNEST)\\s*\\(")
-    var out = canon0
-    var guard = 0
-    var m = re.findFirstMatchIn(out)
-    while (m.isDefined && guard < 32) {
-      guard += 1
-      val open = out.indexOf('(', m.get.start(1))
-      val close = closeParen(out, open)
-      // the split is bracket-aware: ARRAY[...] literals still carry
-      // brackets at this point in the chain
-      val args = splitTopLevel(out.substring(open + 1, close), ',')
-        .map(ws)
-      val ord = cre("(?is)^\\s*WITH\\s+ORDINALITY")
-        .findFirstIn(out.substring(close + 1)).isDefined
-      if (ord) return out
-      // an argument is a ROW array when its canonical text says so —
-      // `array(struct(...))` literals or a cast to ARRAY<STRUCT<...>>;
-      // the reference expands row fields into separate output columns
-      // (TestUnnest testUnnestArrayRows), which is Spark's `inline`
-      def rowish(a: String): Boolean =
-        a.matches("(?is)^array\\s*[\\(\\[]\\s*(null\\s*,\\s*)*" +
-          "(cast\\s*\\(\\s*)?struct\\s*\\(.*") ||
-          a.matches("(?is).*\\bARRAY\\s*<\\s*STRUCT\\s*<.*")
-      if (args.length == 1) {
-        val fn = if (rowish(args.head)) "inline" else "explode"
-        out = out.substring(0, m.get.start(1)) + fn +
-          out.substring(m.get.start(1) + 6)
-      } else if (args.forall(rowish)) {
-        // multi-argument zip of row arrays: zip (shorter sides pad
-        // with null rows), explode, then expand every slot's fields
-        val zipped = s"arrays_zip(${args.mkString(", ")})"
-        val expand = args.indices.map(i => s"__u.`$i`.*").mkString(", ")
-        val repl = s"FROM (SELECT $expand FROM " +
-          s"(SELECT explode($zipped) AS __u))"
-        out = out.substring(0, m.get.start) + repl + out.substring(close + 1)
-      } else if (!args.exists(rowish)) {
-        // multi-argument zip of scalar arrays: slot per argument
-        val zipped = s"arrays_zip(${args.mkString(", ")})"
-        val repl = s"FROM (SELECT __u.* FROM (SELECT explode($zipped) AS __u))"
-        out = out.substring(0, m.get.start) + repl + out.substring(close + 1)
-      } else return out // mixed row/scalar args: loud pass-through
       m = re.findFirstMatchIn(out)
     }
     out
@@ -2160,6 +2032,170 @@ object Dialect {
     out
   }
 
+  // ---- relation lowering -------------------------------------------
+  // The reference's relation-level forms have no Spark spelling: the
+  // UNNEST relation (grammar `SqlBase.g4` relationPrimary UNNEST),
+  // sampledRelation, and the queryNoWith OFFSET / FETCH clauses. Each
+  // lowers here onto a Spark form, so every statement through
+  // translate() gets them; a form outside the subset below stays as
+  // written and Spark rejects it.
+
+  private val relIdentP = "(?:[A-Za-z_]\\w*|\uE002\\d+\uE004)"
+  private val unnestRe = cre(("(?i)(?:\\b(FROM)\\s+|(,)\\s*|" +
+    "\\b(CROSS|LEFT(?:\\s+OUTER)?|INNER)?\\s*\\bJOIN\\s+)UNNEST\\s*\\("))
+  private val unnestTailRe = cre(("(?is)\\A(\\s+WITH\\s+ORDINALITY)?(?:\\s*(?:AS\\s+)?" +
+    "(?!(?:ON|WHERE|GROUP|ORDER|LIMIT|OFFSET|FETCH|JOIN|INNER|LEFT|RIGHT|FULL|CROSS|" +
+    s"NATURAL|UNION|INTERSECT|EXCEPT|HAVING|LATERAL|WINDOW|TABLESAMPLE)\\b)($relIdentP)" +
+    "(?:\\s*\\(([^()]*)\\))?)?"))
+  private val onTrueRe = cre("(?is)\\A\\s*ON\\s+TRUE\\b")
+
+  /** `UNNEST(e1[, e2, …]) [WITH ORDINALITY] [[AS] a[(c1, …)]]` after
+    * FROM, a comma, CROSS JOIN, or `[INNER | LEFT [OUTER]] JOIN … ON
+    * TRUE` (the LEFT form keeps rows whose collections are empty or
+    * NULL). Every
+    * form calls the one generator `graft_unnest(ordinality, e1, …)`
+    * ([[graft.functions.Unnest]]), which reads the argument types:
+    * the join forms become `LATERAL VIEW [OUTER] graft_unnest(…) a AS
+    * c1, …`, the FROM form `FROM (SELECT graft_unnest(…)) a(c1, …)`.
+    * Spark checks the column list against the generator's output, so
+    * a count mismatch fails at analysis. LATERAL VIEW follows every
+    * join of its FROM clause, so an UNNEST joined before another
+    * relation does not parse. */
+  private def unnestPass(canon0: String): String = {
+    if (!canon0.toLowerCase.contains("unnest")) return canon0
+    var out = canon0
+    var m = unnestRe.findFirstMatchIn(out)
+    while (m.isDefined) {
+      val mm = m.get
+      val close = closeParen(out, mm.end - 1)
+      val tm = unnestTailRe.findPrefixMatchOf(out.substring(close + 1)).get
+      val call = s"graft_unnest(${tm.group(1) != null}, ${out.substring(mm.end, close)})"
+      val alias = Option(tm.group(2))
+      val cols = Option(tm.group(3))
+      var rest = out.substring(close + 1 + tm.end)
+      val rep = if (mm.group(1) != null) {
+        s"FROM (SELECT $call)" + alias.fold("")(a => s" $a" + cols.fold("")(c => s"($c)"))
+      } else {
+        val kind =
+          if (mm.group(2) != null) "CROSS"
+          else Option(mm.group(3)).map(_.toUpperCase).getOrElse("INNER")
+        if (kind != "CROSS") {
+          val on = onTrueRe.findPrefixMatchOf(rest)
+          require(on.isDefined, s"$kind JOIN UNNEST requires ON TRUE")
+          rest = rest.substring(on.get.end)
+        }
+        val outer = if (kind.startsWith("LEFT")) "OUTER " else ""
+        s" LATERAL VIEW $outer$call ${alias.getOrElse("__unnest")}" + cols.fold("")(c => s" AS $c")
+      }
+      out = out.substring(0, mm.start) + rep + rest
+      m = unnestRe.findFirstMatchIn(out)
+    }
+    out
+  }
+
+  private val sampleRe = cre(
+    "(?i)\\bTABLESAMPLE\\s+(?:BERNOULLI|SYSTEM)\\s*\\(\\s*(\\d+(?:\\.\\d*)?|\\.\\d+)\\s*\\)")
+  private val sampleAliasRe = cre(s"(?is)\\s+(?:AS\\s+)?$relIdentP\\s*\\z")
+  private val relationStartRe = cre("(?is)(?:\\bFROM|\\bJOIN|,|\\()\\s*\\z")
+
+  /** `r [AS a] TABLESAMPLE BERNOULLI | SYSTEM (p)` → `r TABLESAMPLE
+    * (p PERCENT) REPEATABLE (42) [AS a]`: Spark writes the sample
+    * before the alias. Both methods sample rows (Spark has no block
+    * sampling), which gives the same row-count distribution as
+    * SYSTEM. The fixed seed makes a rerun of one statement return the
+    * same rows; Spark rejects a percentage outside [0, 100]. */
+  private def samplePass(canon0: String): String = {
+    if (!canon0.toLowerCase.contains("tablesample")) return canon0
+    var out = canon0
+    var m = sampleRe.findFirstMatchIn(out)
+    while (m.isDefined) {
+      val mm = m.get
+      val sample = s"TABLESAMPLE (${mm.group(1)} PERCENT) REPEATABLE (42)"
+      val before = out.substring(0, mm.start)
+      val aliasAt = sampleAliasRe.findFirstMatchIn(before)
+        .filter(a => relationStartRe.findFirstIn(before.substring(0, a.start)).isEmpty)
+        .map(_.start)
+      out = aliasAt match {
+        case Some(at) =>
+          out.substring(0, at) + " " + sample + before.substring(at) + out.substring(mm.end)
+        case None => before + sample + out.substring(mm.end)
+      }
+      m = sampleRe.findFirstMatchIn(out)
+    }
+    out
+  }
+
+  private val rowCountP = "(\\d+|\\([^()]*\\))"
+  private val fetchRe = cre("(?i)\\b(?:OFFSET|FETCH)\\b")
+  private val fetchTailRe = cre(("(?is)\\A(?:OFFSET\\s+" + rowCountP + "(?:\\s+ROWS?\\b)?\\s*)?" +
+    "(?:LIMIT\\s+(\\d+|ALL\\b|\\([^()]*\\))|FETCH\\s+(?:FIRST|NEXT)\\s+(?:" + rowCountP +
+    "\\s+)?ROWS?\\s+(ONLY|WITH\\s+TIES)\\b)?"))
+  private val orderByRe = cre("(?i)ORDER\\s+BY\\b")
+  private val emptyOrderByRe = cre("(?is)\\bORDER\\s+BY\\s*\\z")
+  private val ordinalKeyRe = cre("(?is)\\A\\s*\\d+(\\s+(ASC|DESC))?(\\s+NULLS\\s+(FIRST|LAST))?\\s*\\z")
+
+  /** `[OFFSET k [ROW | ROWS]] [LIMIT n | FETCH FIRST | NEXT [n] ROW |
+    * ROWS ONLY]` → Spark's `[LIMIT n] [OFFSET k]` (Spark writes LIMIT
+    * first; FETCH without a count takes one row), and
+    * `ORDER BY k FETCH FIRST n ROWS WITH TIES` → `(<query>) |> EXTEND
+    * rank() OVER (ORDER BY k) AS __rk |> WHERE __rk <= n |> DROP __rk
+    * |> ORDER BY k`, the rank-filter form Spark plans as
+    * WindowGroupLimit. The rank runs over the query's output, so the
+    * WITH TIES sort keys must name output columns (a key that is not
+    * one fails at analysis; an ordinal would rank every row equal, so
+    * it is refused here), and OFFSET with WITH TIES is refused. A
+    * malformed FETCH clause stays as written. */
+  private def fetchPass(canon0: String): String = {
+    val low = canon0.toLowerCase
+    if (!low.contains("fetch") && !low.contains("offset")) return canon0
+    var out = canon0
+    def next(from: Int): Int =
+      fetchRe.findFirstMatchIn(out.substring(from)).fold(-1)(_.start + from)
+    var at = next(0)
+    while (at >= 0) {
+      val tm = fetchTailRe.findPrefixMatchOf(out.substring(at)).get
+      val offset = Option(tm.group(1))
+      val fetch = Option(tm.group(4)).map(_.toUpperCase)
+      val limit = Option(tm.group(2)).orElse(fetch.map(_ => Option(tm.group(3)).getOrElse("1")))
+      if (fetch.isDefined)
+        require(emptyOrderByRe.findFirstIn(out.substring(0, at)).isEmpty,
+          "ORDER BY requires at least one sort key")
+      if (tm.end == 0) at = next(at + 1) // not a clause, or a malformed FETCH
+      else if (!fetch.exists(_.startsWith("WITH"))) {
+        val rep = limit.fold("")(n => s"LIMIT $n") + offset.fold("")(k => s" OFFSET $k")
+        out = out.substring(0, at) + rep + out.substring(at + tm.end)
+        at = next(at + rep.length)
+      } else {
+        require(offset.isEmpty, "OFFSET with FETCH FIRST ... WITH TIES is not supported")
+        val qStart = openParen(out, at) + 1
+        val ob = SqlLex.lastTopLevelIndexOf(out, orderByRe, qStart, at)
+        require(ob >= 0, "FETCH FIRST ... WITH TIES requires ORDER BY")
+        val keys = ws(out.substring(ob + orderByRe.findPrefixMatchOf(out.substring(ob)).get.end, at))
+        require(!splitTopLevel(keys, ',').exists(k => ordinalKeyRe.findFirstIn(k).isDefined),
+          "FETCH FIRST ... WITH TIES sorts by output columns, not ordinals")
+        val rep = s"(${ws(out.substring(qStart, ob))}) |> EXTEND rank() OVER (ORDER BY $keys) " +
+          s"AS __rk |> WHERE __rk <= ${limit.get} |> DROP __rk |> ORDER BY $keys"
+        out = out.substring(0, qStart) + rep + out.substring(at + tm.end)
+        at = next(qStart + rep.length)
+      }
+    }
+    out
+  }
+
+  /** Collection-constructor sugar (grammar `SqlBase.g4` primaryExpression
+    * ARRAY/ROW/MAP rules): `ARRAY[e1, …]` → `array(e1, …)`,
+    * `ROW(e1, …)` → `struct(e1, …)` (Spark compares structs
+    * lexicographically regardless of field names, matching row
+    * comparison semantics), and the two-array-literal map constructor
+    * `MAP(ARRAY[…], ARRAY[…])` → `map_from_arrays(array(…), array(…))`.
+    *
+    * ARRAY brackets nest and may hold string literals (`ARRAY['a',
+    * 'b']`), which are bracket-free sentinels on canonical text, so one
+    * bracket-matching scan does it (a stack distinguishes ARRAY-literal
+    * `[` from subscript `[`, which subscriptPass lowers onto
+    * element_at). `CAST(x AS ROW(…))` targets translate to Spark
+    * `STRUCT<…>` spellings via rowTypePass/sparkType (r14; the
+    * pre-r14 posture was fail-loud). */
   private def constructorPass(canon: String, lex: SqlLex.Lexed): String = {
     var out = canon
     // map constructor first, so its ARRAY args are still spelled ARRAY
@@ -2178,13 +2214,13 @@ object Dialect {
     out = rowTypePass(out)
     out = valuesRowPass(out)
     out = repAll(out, "(?i)\\bROW\\s*\\(", "struct(")
-    out = unnestJoinPass(out)
+    out = unnestPass(out)
+    out = samplePass(out)
     out = projectedInPass(out)
     out = quantifiedPass(out)
     out = innerJoinOnSubqueryPass(out)
     out = inValuesPass(out)
     out = reduceAggPass(out)
-    out = unnestRelationPass(out)
     out = valuesLambdaPass(out)
     out = applyPass(out)
     out = ifTwoArgPass(out)
@@ -2199,6 +2235,7 @@ object Dialect {
     out = orderedAggPass(out)
     out = WindowFrameSql.pass(out, lex)
     out = unorderedRankingPass(out)
+    out = fetchPass(out)
     out = orderByNullsPass(out)
     out = castAsJsonPass(out)
     out = castAsUuidIpPass(out)
@@ -2208,11 +2245,9 @@ object Dialect {
     // limit"); Spark requires an INT literal, so clamp. Row counts
     // between 2^31 and 2^63 are indistinguishable from unlimited for
     // any result a driver could fetch.
-    out = cre("(?i)\\b(LIMIT|FETCH\\s+FIRST)\\s+(\\d{10,})")
+    out = cre("(?i)\\bLIMIT\\s+(\\d{10,})")
       .replaceAllIn(out, m =>
-        if (BigInt(m.group(2)) > Int.MaxValue)
-          java.util.regex.Matcher.quoteReplacement(s"${m.group(1)} ${Int.MaxValue}")
-        else m.matched)
+        if (BigInt(m.group(1)) > Int.MaxValue) s"LIMIT ${Int.MaxValue}" else m.matched)
     // LIMIT ALL (standard, testOrderByLimitAll): explicit no-limit —
     // Spark has no spelling for it, drop the clause.
     out = repAll(out, "(?i)\\bLIMIT\\s+ALL\\b", "")

@@ -874,68 +874,95 @@ class DialectSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("relation SQL: UNNEST WITH ORDINALITY + TABLESAMPLE lower onto operators") {
-    import graft.sqlcompat.RelationSql
+    import graft.sqlcompat.Statements
+    import org.apache.spark.sql.AnalysisException
     val spk = spark
     import spk.implicits._
-    val docs = Seq((1L, "a b c"), (2L, "x y")).toDF("doc_id", "text")
-    val r = RelationSql.translate(
+    Seq((1L, "a b c"), (2L, "x y")).toDF("doc_id", "text").createOrReplaceTempView("rel_docs")
+    Seq((1L, "x"), (1L, "y"), (2L, "z")).toDF("doc_id", "tag").createOrReplaceTempView("rel_tags")
+    def run(sql: String) = Statements.execute(spark, sql)
+    val r = run(
       """SELECT doc_id, term, ord
-        |FROM documents
+        |FROM rel_docs
         |CROSS JOIN UNNEST(split(text, ' ')) WITH ORDINALITY AS t(term, ord)
-        |WHERE doc_id < 2""".stripMargin,
-      _ => docs)
+        |WHERE doc_id < 2""".stripMargin)
     assert(r.orderBy("ord").collect().map(_.toSeq).toSeq ==
       Seq(Seq(1L, "a", 1L), Seq(1L, "b", 2L), Seq(1L, "c", 3L)))
-    // no-ordinality form is a plain explode
-    val r2 = RelationSql.translate(
-      "SELECT doc_id, term FROM documents CROSS JOIN UNNEST(split(text, ' ')) AS t(term)",
-      _ => docs)
+    // no-ordinality form is a plain explode; a comma joins like CROSS JOIN
+    val r2 = run(
+      "SELECT doc_id, term FROM rel_docs CROSS JOIN UNNEST(split(text, ' ')) AS t(term)")
     assert(r2.count() == 5)
+    assert(run("SELECT d.doc_id, t.term FROM rel_docs d, UNNEST(split(d.text, ' ')) t(term)")
+      .count() == 5)
+    // ordinality under a two-table join and GROUP BY: doc 1 meets two
+    // tags (3 words x 2), doc 2 one tag (2 words)
+    val g = run(
+      """SELECT d.doc_id, count(*) AS n, max(t.i) AS last_i
+        |FROM rel_docs d JOIN rel_tags g ON d.doc_id = g.doc_id
+        |CROSS JOIN UNNEST(split(d.text, ' ')) WITH ORDINALITY AS t(w, i)
+        |GROUP BY d.doc_id""".stripMargin)
+    assert(g.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
+      Set((1L, 6L, 3L), (2L, 2L, 2L)))
+    // EXPLAIN ANALYZE profiles the same lowering: one generator
+    val prof = run(
+      """EXPLAIN ANALYZE SELECT doc_id, term, ord FROM rel_docs
+        |CROSS JOIN UNNEST(split(text, ' ')) WITH ORDINALITY AS t(term, ord)""".stripMargin)
+      .head().getString(0)
+    assert("(?m)^\\s*Generate\\s+\\[numOutputRows=5\\]".r.findFirstIn(prof).isDefined, prof)
     // TABLESAMPLE: fraction within binomial bounds on a bigger input
-    val orders = graft.engine.Graft.load(spark, "/root/testdata/sf0.001", "orders")
-    val n = RelationSql.translate(
-      "SELECT o_orderkey FROM orders TABLESAMPLE BERNOULLI(20)",
-      _ => orders).count()
-    val total = orders.count()
+    val n = run("SELECT o_orderkey FROM orders TABLESAMPLE BERNOULLI(20)").count()
+    val total = spark.table("orders").count()
     val sigma = math.sqrt(total * 0.2 * 0.8)
     assert(math.abs(n - total * 0.2) <= 6 * sigma, s"sampled $n of $total")
-    // loud failures: missing alias, double column without ordinality,
-    // out-of-range percentage, trailing garbage
-    def bad(sql: String): Unit =
-      assertThrows[IllegalArgumentException](RelationSql.translate(sql, _ => docs))
-    bad("SELECT doc_id FROM documents CROSS JOIN UNNEST(split(text, ' '))")
-    bad("SELECT doc_id FROM documents CROSS JOIN UNNEST(split(text, ' ')) AS t(a, b)")
-    bad("SELECT doc_id FROM documents TABLESAMPLE BERNOULLI(150)")
-    bad("SELECT doc_id FROM documents TABLESAMPLE BERNOULLI(20) GROUP BY doc_id")
+    // inside a CTE, with the same fixed seed, the same rows
+    assert(run(
+      """WITH s AS (SELECT o_orderkey FROM orders TABLESAMPLE BERNOULLI(20))
+        |SELECT count(*) FROM s""".stripMargin).head().getLong(0) == n)
+    // an aliased relation samples before its alias
+    assert(run("SELECT count(*) FROM orders o TABLESAMPLE SYSTEM (20) WHERE o.o_orderkey >= 0")
+      .head().getLong(0) == n)
+    // the reference accepts an UNNEST without an alias, and a sampled
+    // relation under GROUP BY
+    assert(run("SELECT doc_id FROM rel_docs CROSS JOIN UNNEST(split(text, ' '))").count() == 5)
+    assert(run("SELECT doc_id FROM rel_docs TABLESAMPLE BERNOULLI(100) GROUP BY doc_id")
+      .count() == 2)
+    assert(run("SELECT doc_id FROM rel_docs TABLESAMPLE BERNOULLI(20) GROUP BY doc_id")
+      .count() <= 2)
+    // loud failures: column-count mismatch, out-of-range percentage
+    intercept[AnalysisException](run(
+      "SELECT doc_id FROM rel_docs CROSS JOIN UNNEST(split(text, ' ')) AS t(a, b)").collect())
+    intercept[AnalysisException](run(
+      "SELECT doc_id FROM rel_docs TABLESAMPLE BERNOULLI(150)").collect())
   }
 
   test("relation SQL: multi-argument UNNEST zips with null padding; MAP unnests to pairs") {
-    import graft.sqlcompat.RelationSql
+    import graft.sqlcompat.Statements
+    import org.apache.spark.sql.AnalysisException
     val spk = spark
     import spk.implicits._
-    val docs = Seq((1L, "a b c")).toDF("doc_id", "text")
+    Seq((1L, "a b c")).toDF("doc_id", "text").createOrReplaceTempView("rel_doc")
+    def run(sql: String) = Statements.execute(spark, sql)
     // two arrays of different lengths: shorter padded with nulls
-    val z = RelationSql.translate(
+    val z = run(
       """SELECT doc_id, w, n, ord
-        |FROM documents
-        |CROSS JOIN UNNEST(split(text, ' '), array(10, 20)) WITH ORDINALITY AS t(w, n, ord)""".stripMargin,
-      _ => docs).orderBy("ord").collect()
+        |FROM rel_doc
+        |CROSS JOIN UNNEST(split(text, ' '), array(10, 20)) WITH ORDINALITY AS t(w, n, ord)""".stripMargin)
+      .orderBy("ord").collect()
     assert(z.map(r => (r.getString(1), if (r.isNullAt(2)) -1 else r.getInt(2), r.getLong(3))).toSeq ==
       Seq(("a", 10, 1L), ("b", 20, 2L), ("c", -1, 3L)))
     // map argument → (key, value) pairs
-    val mp = RelationSql.translate(
+    val mp = run(
       """SELECT doc_id, k, v
-        |FROM documents
+        |FROM rel_doc
         |CROSS JOIN UNNEST(map('x', 1, 'y', 2)) AS t(k, v)
-        |WHERE doc_id = 1""".stripMargin,
-      _ => docs).collect()
+        |WHERE doc_id = 1""".stripMargin).collect()
     assert(mp.map(r => (r.getString(1), r.getInt(2))).toSet == Set(("x", 1), ("y", 2)))
     // a MAP argument inside a zip expands to (key, value) slots,
     // padded against the longer array
-    val mz = RelationSql.translate(
-      """SELECT k, v, w FROM documents
-        |CROSS JOIN UNNEST(map('x', 1), split(text, ' ')) AS t(k, v, w)""".stripMargin,
-      _ => docs.limit(1)).orderBy("w").collect()
+    val mz = run(
+      """SELECT k, v, w FROM rel_doc
+        |CROSS JOIN UNNEST(map('x', 1), split(text, ' ')) AS t(k, v, w)""".stripMargin)
+      .orderBy("w").collect()
     assert(mz.map(r => (if (r.isNullAt(0)) "-" else r.getString(0),
       if (r.isNullAt(1)) -1 else r.getInt(1), r.getString(2))).toSeq ==
       Seq(("x", 1, "a"), ("-", -1, "b"), ("-", -1, "c")))
@@ -943,102 +970,106 @@ class DialectSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (reference TestUnnestOperator.testUnnest: (2, [99], null) still
     // emits (2, 99, null, null)) — arrays_zip alone would return NULL
     // and emit zero rows for the whole row
-    val withNull = Seq((1L, Seq(99), null: Seq[String]))
-      .toDF("id", "nums", "strs")
-    val nz = RelationSql.translate(
-      """SELECT id, n, s FROM t
-        |CROSS JOIN UNNEST(nums, strs) AS u(n, s)""".stripMargin,
-      _ => withNull).collect()
+    Seq((1L, Seq(99), null: Seq[String])).toDF("id", "nums", "strs")
+      .createOrReplaceTempView("rel_nulls")
+    val nz = run("SELECT id, n, s FROM rel_nulls CROSS JOIN UNNEST(nums, strs) AS u(n, s)")
+      .collect()
     assert(nz.length == 1)
     assert(nz.head.getInt(1) == 99 && nz.head.isNullAt(2))
     // NULL map slot likewise pads with nulls against the longer array
-    val withNullMap = Seq((1L, Seq(7, 8), null: Map[String, Int]))
-      .toDF("id", "nums", "mp")
-    val nm = RelationSql.translate(
-      """SELECT id, n, k, v FROM t
-        |CROSS JOIN UNNEST(nums, mp) AS u(n, k, v)""".stripMargin,
-      _ => withNullMap).orderBy("n").collect()
+    Seq((1L, Seq(7, 8), null: Map[String, Int])).toDF("id", "nums", "mp")
+      .createOrReplaceTempView("rel_null_map")
+    val nm = run("SELECT id, n, k, v FROM rel_null_map CROSS JOIN UNNEST(nums, mp) AS u(n, k, v)")
+      .orderBy("n").collect()
     assert(nm.map(r => (r.getInt(1), r.isNullAt(2), r.isNullAt(3))).toSeq ==
       Seq((7, true, true), (8, true, true)))
     // arity mismatch fails loudly
-    assertThrows[IllegalArgumentException](RelationSql.translate(
-      "SELECT doc_id FROM documents CROSS JOIN UNNEST(split(text, ' '), array(1)) AS t(a)",
-      _ => docs))
+    intercept[AnalysisException](run(
+      "SELECT doc_id FROM rel_doc CROSS JOIN UNNEST(split(text, ' '), array(1)) AS t(a)").collect())
     // OUTER unnest: the empty-array row survives with null word AND
     // null ordinality; inner form drops it.
-    val two = Seq((1L, "a b"), (2L, "")).toDF("doc_id", "text")
-    val outer = RelationSql.translate(
-      """SELECT doc_id, w, ord FROM documents
+    Seq((1L, "a b"), (2L, "")).toDF("doc_id", "text").createOrReplaceTempView("rel_two")
+    val outer = run(
+      """SELECT doc_id, w, ord FROM rel_two
         |LEFT JOIN UNNEST(filter(split(text, ' '), x -> length(x) > 0))
-        |  WITH ORDINALITY AS t(w, ord) ON TRUE""".stripMargin,
-      _ => two).collect()
+        |  WITH ORDINALITY AS t(w, ord) ON TRUE""".stripMargin).collect()
     assert(outer.length == 3)
     val padded = outer.filter(_.getLong(0) == 2L)
     assert(padded.length == 1 && padded.head.isNullAt(1) && padded.head.isNullAt(2))
-    val inner = RelationSql.translate(
-      """SELECT doc_id, w FROM documents
-        |CROSS JOIN UNNEST(filter(split(text, ' '), x -> length(x) > 0)) AS t(w)""".stripMargin,
-      _ => two).collect()
+    val inner = run(
+      """SELECT doc_id, w FROM rel_two
+        |CROSS JOIN UNNEST(filter(split(text, ' '), x -> length(x) > 0)) AS t(w)""".stripMargin)
+      .collect()
     assert(inner.length == 2 && inner.forall(_.getLong(0) == 1L))
-    // LEFT JOIN UNNEST without ON TRUE fails loudly
-    assertThrows[IllegalArgumentException](RelationSql.translate(
-      "SELECT doc_id FROM documents LEFT JOIN UNNEST(split(text, ' ')) AS t(a)",
-      _ => two))
+    // [INNER] JOIN UNNEST … ON TRUE is the inner form; LEFT JOIN
+    // UNNEST without ON TRUE fails loudly
+    assert(run(
+      """SELECT doc_id, w FROM rel_two
+        |JOIN UNNEST(filter(split(text, ' '), x -> length(x) > 0)) AS t(w) ON TRUE""".stripMargin)
+      .count() == 2)
+    assertThrows[IllegalArgumentException](run(
+      "SELECT doc_id FROM rel_two LEFT JOIN UNNEST(split(text, ' ')) AS t(a)"))
     // array-of-ROWs flattens into one column per field (inline form),
     // composing with ordinality — and with a zipped plain array.
-    val rows = RelationSql.translate(
-      """SELECT doc_id, nm, sz, ord FROM documents
+    val rows = run(
+      """SELECT doc_id, nm, sz, ord FROM rel_doc
         |CROSS JOIN UNNEST(ARRAY[ROW('a', 1), ROW('b', 2)])
-        |  WITH ORDINALITY AS t(nm, sz, ord)""".stripMargin,
-      _ => docs.limit(1)).orderBy("ord").collect()
+        |  WITH ORDINALITY AS t(nm, sz, ord)""".stripMargin).orderBy("ord").collect()
     assert(rows.map(r => (r.getString(1), r.getInt(2), r.getLong(3))).toSeq ==
       Seq(("a", 1, 1L), ("b", 2, 2L)))
-    val rowZip = RelationSql.translate(
-      """SELECT nm, sz, x FROM documents
-        |CROSS JOIN UNNEST(ARRAY[ROW('a', 1)], array(7, 8)) AS t(nm, sz, x)""".stripMargin,
-      _ => docs.limit(1)).orderBy("x").collect()
+    val rowZip = run(
+      """SELECT nm, sz, x FROM rel_doc
+        |CROSS JOIN UNNEST(ARRAY[ROW('a', 1)], array(7, 8)) AS t(nm, sz, x)""".stripMargin)
+      .orderBy("x").collect()
     assert(rowZip.map(r => (if (r.isNullAt(0)) "-" else r.getString(0),
       if (r.isNullAt(1)) -1 else r.getInt(1), r.getInt(2))).toSeq ==
       Seq(("a", 1, 7), ("-", -1, 8)))
   }
 
   test("relation SQL: ORDER BY + OFFSET + FETCH lower onto sort/offset/limit/ties") {
-    import graft.sqlcompat.RelationSql
+    import graft.sqlcompat.Statements
+    import org.apache.spark.sql.AnalysisException
     val spk = spark
     import spk.implicits._
     val t = Seq[(Long, Option[Double])]((1L, Some(10.0)), (2L, Some(30.0)),
       (3L, Some(20.0)), (4L, Some(30.0)), (5L, None)).toDF("k", "v")
+    t.createOrReplaceTempView("rel_t")
+    def run(sql: String) = Statements.execute(spark, sql)
     // FETCH ONLY with OFFSET: rows 2..3 of the DESC order.
-    val only = RelationSql.translate(
-      "SELECT k, v FROM t ORDER BY v DESC OFFSET 1 ROWS FETCH NEXT 2 ROWS ONLY",
-      _ => t)
+    val only = run("SELECT k, v FROM rel_t ORDER BY v DESC OFFSET 1 ROWS FETCH NEXT 2 ROWS ONLY")
     // reference null ordering: DESC → nulls FIRST, so the null row is
     // rank 1 and the offset skips it.
     assert(only.collect().map(_.getLong(0)).toSet == Set(2L, 4L))
     // WITH TIES keeps every row tying with the n-th (both 30.0s).
-    val ties = RelationSql.translate(
-      "SELECT k, v FROM t WHERE v IS NOT NULL ORDER BY v DESC FETCH FIRST 1 ROWS WITH TIES",
-      _ => t)
+    val ties = run(
+      "SELECT k, v FROM rel_t WHERE v IS NOT NULL ORDER BY v DESC FETCH FIRST 1 ROWS WITH TIES")
     assert(ties.collect().map(_.getLong(0)).toSet == Set(2L, 4L))
+    assert(ties.queryExecution.executedPlan.toString.contains("WindowGroupLimit"))
+    // the result keeps the ORDER BY, and WITH TIES works in a subquery
+    assert(run("SELECT k, v FROM rel_t ORDER BY v FETCH FIRST 2 ROWS WITH TIES")
+      .collect().map(_.getLong(0)).toSeq == Seq(1L, 3L))
+    assert(run(
+      """SELECT count(*) FROM (SELECT k, v FROM rel_t WHERE v IS NOT NULL
+        |ORDER BY v DESC FETCH FIRST 1 ROWS WITH TIES) x""".stripMargin)
+      .head().getLong(0) == 2L)
     // ASC default puts nulls last (reference semantics, not Spark's).
-    val asc = RelationSql.translate(
-      "SELECT k FROM t ORDER BY v OFFSET 4 ROWS", _ => t)
+    val asc = run("SELECT k FROM rel_t ORDER BY v OFFSET 4 ROWS")
     assert(asc.collect().map(_.getLong(0)).toSeq == Seq(5L))
     // bare ORDER BY is a full sort
-    val sorted = RelationSql.translate(
-      "SELECT k FROM t WHERE v IS NOT NULL ORDER BY v ASC, k DESC", _ => t)
+    val sorted = run("SELECT k FROM rel_t WHERE v IS NOT NULL ORDER BY v ASC, k DESC")
     assert(sorted.collect().map(_.getLong(0)).toSeq == Seq(1L, 3L, 4L, 2L))
-    // loud failures: TIES without usable combination, garbage after FETCH
-    def bad(sql: String): Unit =
-      assertThrows[IllegalArgumentException](RelationSql.translate(sql, _ => t))
     // a clause keyword inside a quoted identifier is not a clause
-    val quoted = RelationSql.translate(
-      "SELECT k FROM t WHERE \"v ORDER BY\" IS NOT NULL ORDER BY k DESC",
-      _ => t.withColumn("v ORDER BY", org.apache.spark.sql.functions.col("v")))
+    t.withColumn("v ORDER BY", org.apache.spark.sql.functions.col("v"))
+      .createOrReplaceTempView("rel_tq")
+    val quoted = run("SELECT k FROM rel_tq WHERE \"v ORDER BY\" IS NOT NULL ORDER BY k DESC")
     assert(quoted.collect().map(_.getLong(0)).toSeq == Seq(4L, 3L, 2L, 1L))
-    bad("SELECT k FROM t ORDER BY v OFFSET 1 ROWS FETCH FIRST 2 ROWS WITH TIES")
-    bad("SELECT k FROM t ORDER BY v FETCH FIRST 2 ROWS")
-    bad("SELECT k FROM t ORDER BY FETCH FIRST 2 ROWS ONLY")
+    // loud failures: OFFSET with TIES, FETCH without ONLY / WITH TIES,
+    // an empty sort list
+    assertThrows[IllegalArgumentException](run(
+      "SELECT k FROM rel_t ORDER BY v OFFSET 1 ROWS FETCH FIRST 2 ROWS WITH TIES"))
+    intercept[AnalysisException](run("SELECT k FROM rel_t ORDER BY v FETCH FIRST 2 ROWS"))
+    assertThrows[IllegalArgumentException](run(
+      "SELECT k FROM rel_t ORDER BY FETCH FIRST 2 ROWS ONLY"))
   }
 
   test("MATCH_RECOGNIZE SQL: multi-column keys + ALL ROWS PER MATCH (dx4 surface)") {

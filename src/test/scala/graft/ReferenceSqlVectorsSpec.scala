@@ -4577,9 +4577,10 @@ class ReferenceSqlVectorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertVector(
       "SELECT * FROM UNNEST(ARRAY[ROW(1, 1.1), ROW(3, 3.3)], ARRAY[null, ROW('a', true), null])",
       "VALUES (1, 1.1, null, null), (3, 3.3, 'a', true), (null, null, null, null)")
-    // (join-form UNNEST over a row-array column — CROSS JOIN
-    // UNNEST(a) t(x, y) — needs the collection's type, unavailable at
-    // text-rewrite time; it fails loudly rather than mistranslating)
+    // join-form UNNEST over a row-array column flattens its fields too
+    assertVector(
+      "SELECT x, y FROM (VALUES (ARRAY[ROW(1, 'a'), ROW(2, 'b')])) t(a) CROSS JOIN UNNEST(a) u(x, y)",
+      "VALUES (1, 'a'), (2, 'b')")
     // row field names from the declared type are preserved
     assertVector(
       "SELECT x FROM UNNEST(CAST(ARRAY[ROW(1, 'a'), ROW(2, 'b')] as ARRAY(ROW(x int, y varchar))))",

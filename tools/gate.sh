@@ -2,7 +2,8 @@
 # Pre-commit gate: the minimum proof that HEAD is shippable.
 # Usage: tools/gate.sh [--full]
 #   default: Test/compile + benchmark compile + EntrySmoke + one
-#            graft.Analyze profile + the dialect suites,
+#            graft.Analyze profile + the relation-SQL builders
+#            against the DuckDB oracle + the dialect suites,
 #            MatchRecognizeSpec, ParquetSchemaSpec and
 #            FunctionRegistrySpec
 #            (~2 min on 4 cores; the suites step ~50 s)
@@ -44,6 +45,17 @@ if ! grep -qE '^stage [0-9]+: tasks=' "$profile" 2>/dev/null ||
    ! grep -qE 'Scan parquet.*numOutputRows=' "$profile"; then
   echo "[gate] ANALYZE PROFILE INCOMPLETE"; cat "$profile" 2>/dev/null; tail -20 /tmp/gate_analyze.log; exit 1
 fi
+
+# the relation-level dialect forms (UNNEST, TABLESAMPLE, FETCH … WITH
+# TIES) through their SQL-text builders, compared with the DuckDB oracle
+echo "[gate] relation SQL vs oracle"
+rm -rf /tmp/gate_verify
+sbt -batch "runMain graft.Verify /root/testdata/sf0.001 /tmp/gate_verify dx(5|6|11|12|13)_.*" \
+  > /tmp/gate_verify.log 2>&1 || {
+  echo "[gate] VERIFY FAILED"; tail -20 /tmp/gate_verify.log; exit 1; }
+python3 tools/local_oracle.py /root/testdata/sf0.001 /tmp/gate_verify > /tmp/gate_oracle.log 2>&1 || {
+  echo "[gate] ORACLE COMPARE FAILED"; cat /tmp/gate_oracle.log; exit 1; }
+tail -1 /tmp/gate_oracle.log
 
 # the SQL front end: dialect vectors, the translate() properties and
 # the MATCH_RECOGNIZE operator spec (its builders all run through
